@@ -45,10 +45,8 @@ from pyspark.sql.column import Column
 __all__ = [
     "simhash_np",
     "oph_densified_np",
-    "seq_dot_np",
     "simhash_bits_vec",
     "oph_signature_vec",
-    "seq_dot_vec",
 ]
 
 _I64MAX = np.iinfo(np.int64).max
@@ -162,44 +160,6 @@ def round_half_up_np(x: np.ndarray, digits: int) -> np.ndarray:
         )
         fast[idx] = exact
     return fast
-
-
-def seq_dot_np(a_arrs, b_arrs) -> np.ndarray:
-    """Per-row dot product replicating Spark's interpreted left fold
-    BIT-FOR-BIT: elementwise multiply then a strictly sequential
-    accumulation (numpy ``cumsum`` is defined sequentially, exactly the
-    ``aggregate(zip_with(a, b, *), 0.0, +)`` chain — same IEEE-754
-    doubles in the same order). A trailing ``+ 0.0`` mirrors the fold's
-    0.0 seed so an all-negative-zero row cannot diverge in zero sign.
-    """
-    n = len(a_arrs)
-    out = np.empty(n, np.float64)
-    # uniform-dim fast path (the embedding tables are fixed-dim)
-    try:
-        A = np.stack([np.asarray(x, np.float64) for x in a_arrs])
-        B = np.stack([np.asarray(x, np.float64) for x in b_arrs])
-        return np.cumsum(A * B, axis=1)[:, -1] + 0.0
-    except ValueError:  # ragged rows — per-row sequential fallback
-        for i in range(n):
-            a = np.asarray(a_arrs[i], np.float64)
-            b = np.asarray(b_arrs[i], np.float64)
-            out[i] = np.cumsum(a * b)[-1] + 0.0 if len(a) else 0.0
-        return out
-
-
-def seq_dot_vec(a_col, b_col) -> Column:
-    """Column: sequential-fold dot of two ``array<double>`` columns via
-    the numpy kernel — the Arrow-batched replacement for the
-    interpreted ``aggregate(zip_with(...))`` per-candidate scoring loop
-    (guide §4.2), bit-identical by construction (:func:`seq_dot_np`)."""
-
-    @F.pandas_udf("double")
-    def _dot(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series(seq_dot_np(a.tolist(), b.tolist()))
-
-    # non-deterministic for the §4.4 anti-duplication reason (pure in
-    # fact; the flag only stops optimizer cloning).
-    return _dot.asNondeterministic()(a_col, b_col)
 
 
 def simhash_bits_vec(hashes_col) -> Column:

@@ -22,8 +22,11 @@ from __future__ import annotations
 import hashlib
 import math
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions.npsig import round_half_up_np
 
 __all__ = [
     "cosine_col",
@@ -40,7 +43,6 @@ __all__ = [
     "knn_join_bruteforce",
     "ivf_probe_cells",
     "knn_join_ivf",
-    "knn_join_cells",
     "knn_join_indexed",
     "pq_train",
     "pq_encode",
@@ -51,9 +53,9 @@ __all__ = [
     "kmeans_assign",
 ]
 
-# PQ training sample size, shared by pq_train's default and the fused
-# numpy build (_ivfpq_build_frames_np) so the two paths can never
-# silently train on different samples (advisor note, r15).
+# PQ training sample size: pq_train's default and the row count of the
+# IVF-PQ build's fused centroid+sample collect (_ivfpq_build). The SQL
+# replay certificates (_pq_train_ctes) sample the same count.
 PQ_TRAIN_SAMPLE = 2048
 
 
@@ -244,9 +246,9 @@ def ivf_kmeans_centroids(
     docstring promises (this closes that gap; the probe path is
     untouched).
 
-    Each Lloyd iteration is fully distributed: one codegen assignment
-    projection (:func:`ivf_assign_cells` — max rounded dot against the
-    literal centroid matrix, no UDF) followed by a ``posexplode`` +
+    Each Lloyd iteration is fully distributed: one numpy assignment
+    pass (:func:`ivf_assign_cells` — max rounded dot against the
+    centroid matrix) followed by a ``posexplode`` +
     partial-aggregated per-(cell, dim) mean — the shuffle carries only
     n_cells·dim keys after map-side combine, and the ONLY driver
     materialization per iteration is the n_cells·dim updated means
@@ -295,14 +297,9 @@ def ivf_kmeans_centroids(
         train = df
     for _ in range(max(0, n_iters - 1)):
         upd = (
-            # r14: the numpy assignment kernel (bit-exact vs the
-            # interpreted ivf_assign_cells — pytest-asserted) also
-            # carries the training loop; the refinement passes were
-            # the last interpreted rows×cells scoring on the build
-            # path (guide §4.2)
-            # (input pruned to the vector column: mapInPandas ships
-            # every column it is handed — guide §4.1)
-            ivf_assign_cells_np(
+            # input pruned to the vector column: mapInPandas ships
+            # every column it is handed
+            ivf_assign_cells(
                 train.select(F.col(vec_col)), vec_col, cents, cell_col="__cell"
             )
             .select(
@@ -341,13 +338,79 @@ def _train_centroids(
     raise ValueError(f"unknown centroid method {method!r} (sample|kmeans)")
 
 
+def _normed(c: list[float]) -> list[float]:
+    """``c / |c|`` (a zero vector stays zero): driver-side centroid
+    normalization, so each cell score is one dot product."""
+    n = math.sqrt(sum(x * x for x in c)) or 1.0
+    return [x / n for x in c]
+
+
+def _f64_order_key(x):
+    """Monotone int64 key replicating java.lang.Double.compare ordering
+    (including -0.0 < 0.0 and NaN greatest) so numpy arg-reductions
+    order doubles exactly as the JVM does."""
+    b = np.ascontiguousarray(x, np.float64).view(np.int64)
+    return np.where(b < 0, b ^ np.int64(0x7FFFFFFFFFFFFFFF), b)
+
+
+def _argmax(S):
+    """Row-wise ``array_position(s, array_max(s)) - 1``: Spark's double
+    ordering (NaN greatest; ``+ 0.0`` folds -0.0 into 0.0, which the
+    SQL ordering treats as equal), ties to the lowest index."""
+    return np.argmax(_f64_order_key(S + 0.0), axis=1)
+
+
+def _fold_dots(V, M, seed=None):
+    """(len(V), len(M)) dot products of every row of ``V`` with every
+    row of ``M``, replicating ``aggregate(zip_with(v, m, *), seed, +)``
+    bit-for-bit: elementwise products, then a strictly sequential left
+    fold (numpy ``cumsum``). Without ``seed`` the fold starts at 0.0,
+    which the trailing ``+ 0.0`` mirrors (zero sign); a ``seed`` (one
+    start value per row of ``M``) is prepended to the fold."""
+    prods = V[:, None, :] * M[None, :, :]
+    if seed is None:
+        return np.cumsum(prods, axis=2)[:, :, -1] + 0.0
+    start = np.broadcast_to(seed[None, :, None], (len(V), len(M), 1))
+    return np.cumsum(np.concatenate([start, prods], axis=2), axis=2)[:, :, -1]
+
+
+def _score_blocks(V, M, reduce, digits: int | None = None, seed=None):
+    """The one rule by which a vector is scored against a centroid or
+    codebook matrix: :func:`_fold_dots`, HALF_UP-rounded to ``digits``
+    when given (Spark's ``round`` — npsig.round_half_up_np), then
+    ``reduce`` (an argmax or top-n over each row's scores). Runs over
+    ~32 MB row blocks so the (rows, len(M), dim) products stay bounded
+    at any batch size; returns the reduced blocks concatenated."""
+    step = max(1, (4 << 20) // max(1, M.size))
+    out = []
+    for s in range(0, len(V), step):
+        S = _fold_dots(V[s : s + step], M, seed)
+        out.append(reduce(S if digits is None else round_half_up_np(S, digits)))
+    return np.concatenate(out)
+
+
+def _map_vectors(df: DataFrame, vec_col: str, added: str, fn) -> DataFrame:
+    """``mapInPandas`` scaffold of the vector kernels: ``fn(pdf, V)``
+    gets each non-empty Arrow batch with its ``vec_col`` stacked as an
+    (n, dim) float64 matrix, and returns the output batch — the input
+    columns followed by the ``added`` ones (a DDL column list)."""
+
+    def kernel(batches):
+        for pdf in batches:
+            if len(pdf):
+                V = np.stack([np.asarray(v, np.float64) for v in pdf[vec_col]])
+                yield fn(pdf, V)
+
+    cols = ",".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
+    return df.mapInPandas(kernel, schema=f"{cols},{added}")
+
+
 def ivf_assign_cells(
     df: DataFrame, vec_col: str, centroids: list[list[float]], cell_col: str = "__cell"
 ) -> DataFrame:
-    """Assign each vector to its nearest centroid (max cosine), as a
-    pure codegen expression over the literal centroid matrix — no UDF,
-    no shuffle. At scale the result is persisted partitioned by cell so
-    probes prune partitions.
+    """Assign each vector to its nearest centroid (max cosine) in one
+    numpy ``mapInPandas`` pass — no shuffle. At scale the result is
+    persisted partitioned by cell so probes prune partitions.
 
     argmax_c cos(v, c) == argmax_c dot(v, c / |c|): the row norm is a
     positive constant across cells, so centroids are normalized
@@ -359,138 +422,47 @@ def ivf_assign_cells(
     pinned precision a SQL oracle reproduces exactly with
     ``round(list_inner_product(v, c_normalized), 8)`` (normalizing the
     centroid in SQL), so near-ulp float divergence between the two
-    engines' expressions cannot flip a near-tie assignment (rounded
-    ties break to the lowest cell on both sides via
-    ``array_position``'s first-match)."""
-
-    def _normed(c: list[float]) -> list[float]:
-        n = math.sqrt(sum(x * x for x in c)) or 1.0
-        return [x / n for x in c]
-
-    v = F.col(vec_col).cast("array<double>")
-    cents_lit = F.lit([_normed(c) for c in centroids])
-    sims = F.transform(
-        cents_lit,
-        lambda c: F.round(
-            F.aggregate(
-                F.zip_with(v, c, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-            ),
-            CELL_SCORE_DECIMALS,
-        ),
-    )
-    return df.withColumn(
-        cell_col, (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
-    )
-
-
-def ivf_assign_cells_np(
-    df: DataFrame, vec_col: str, centroids: list[list[float]], cell_col: str = "__cell"
-) -> DataFrame:
-    """Numpy ``mapInPandas`` form of :func:`ivf_assign_cells` —
-    bit-exact (pytest-asserted): per cell, the rounded sequential-fold
-    dot against the driver-normalized centroid (HALF_UP/shortest-repr
-    rounding via npsig.round_half_up_np), argmax under the
-    Double.compare total order (ties to the lowest cell). Replaces the
-    rows×cells interpreted-HOF scoring — the dominant index-build term
-    at scale — and the per-call centroid-literal tree construction
-    (guide §4.2)."""
-    import math as _math
-
-    import numpy as np
-
-    from ..functions.npsig import round_half_up_np
-
-    def _normed(c: list[float]) -> list[float]:
-        n = _math.sqrt(sum(x * x for x in c)) or 1.0
-        return [x / n for x in c]
-
+    engines cannot flip a near-tie assignment; rounded ties break to
+    the lowest cell on both sides (scoring rule: :func:`_score_blocks`)."""
     cn = np.array([_normed(c) for c in centroids], np.float64)
-    dim = cn.shape[1]
 
-    def kernel(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.stack([np.asarray(v, np.float64) for v in pdf[vec_col]])
-            n = len(V)
-            cell = np.empty(n, np.int32)
-            step = max(1, (4 << 20) // max(1, len(cn) * dim))
-            for s in range(0, n, step):
-                dots = (
-                    np.cumsum(V[s : s + step, None, :] * cn[None, :, :], axis=2)[
-                        :, :, -1
-                    ]
-                    + 0.0
-                )
-                sims = round_half_up_np(dots, CELL_SCORE_DECIMALS)
-                cell[s : s + step] = np.argmax(_f64_order_key(sims), axis=1)
-            out = pdf.copy()
-            out[cell_col] = cell.astype(np.int32)
-            yield out
+    def assign(pdf, V):
+        cell = _score_blocks(V, cn, _argmax, CELL_SCORE_DECIMALS)
+        return pdf.assign(**{cell_col: cell.astype(np.int32)})
 
-    schema = (
-        ",".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
-        + f",`{cell_col}` int"
-    )
-    return df.mapInPandas(kernel, schema=schema)
+    return _map_vectors(df, vec_col, f"`{cell_col}` int", assign)
 
 
-def ivf_probe_cells_np(
+def ivf_probe_cells(
     df: DataFrame,
     vec_col: str,
     centroids: list[list[float]],
     n_probe: int,
     cell_col: str = "__cell",
 ) -> DataFrame:
-    """Numpy ``mapInPandas`` form of :func:`ivf_probe_cells` —
-    bit-exact probe sets (pytest-asserted): same rounded dots as
-    :func:`ivf_assign_cells_np`, then the top-``n_probe`` cells under
-    the expression path's comparator semantics (rounded sim descending
-    with primitive float comparison — ``x + 0.0`` collapses the ±0.0
-    pair exactly as ``a > b`` treats it — ties to the lower cell id),
-    exploded to one output row per probed cell."""
-    import math as _math
+    """Per-row top-``n_probe`` nearest centroid cells, EXPLODED to one
+    row per (row, probed cell) — the query-side assignment of the
+    cell-keyed kNN join (:func:`knn_join_ivf`).
 
-    import numpy as np
-
-    from ..functions.npsig import round_half_up_np
-
-    def _normed(c: list[float]) -> list[float]:
-        n = _math.sqrt(sum(x * x for x in c)) or 1.0
-        return [x / n for x in c]
-
+    Cell scores are the same rounded normalized-centroid dots
+    :func:`ivf_assign_cells` uses, so an oracle's
+    ``round(list_inner_product(v, c_normalized), 8)`` ranking replays
+    the probe set exactly (near-ties cannot flip across engines);
+    higher score first, lower cell id on ties."""
     cn = np.array([_normed(c) for c in centroids], np.float64)
-    n_cells, dim = cn.shape
-    keep = min(n_probe, n_cells)
+    keep = min(n_probe, len(cn))
 
-    def kernel(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.stack([np.asarray(v, np.float64) for v in pdf[vec_col]])
-            n = len(V)
-            probes = np.empty((n, keep), np.int32)
-            step = max(1, (4 << 20) // max(1, n_cells * dim))
-            for s in range(0, n, step):
-                dots = (
-                    np.cumsum(V[s : s + step, None, :] * cn[None, :, :], axis=2)[
-                        :, :, -1
-                    ]
-                    + 0.0
-                )
-                sims = round_half_up_np(dots, CELL_SCORE_DECIMALS) + 0.0
-                # argsort(-sims) stable == sim desc, lower cell on ties
-                order = np.argsort(-sims, axis=1, kind="stable")
-                probes[s : s + step] = order[:, :keep]
-            rep = pdf.loc[pdf.index.repeat(keep)].reset_index(drop=True)
-            rep[cell_col] = probes.reshape(-1).astype(np.int32)
-            yield rep
+    def top_cells(S):
+        # stable argsort of -S == score desc, lower cell on ties
+        # (-0.0 and 0.0 compare equal, as in Spark's double ordering)
+        return np.argsort(-S, axis=1, kind="stable")[:, :keep]
 
-    schema = (
-        ",".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
-        + f",`{cell_col}` int"
-    )
-    return df.mapInPandas(kernel, schema=schema)
+    def probe(pdf, V):
+        cells = _score_blocks(V, cn, top_cells, CELL_SCORE_DECIMALS)
+        rep = pdf.loc[pdf.index.repeat(keep)].reset_index(drop=True)
+        return rep.assign(**{cell_col: cells.reshape(-1).astype(np.int32)})
+
+    return _map_vectors(df, vec_col, f"`{cell_col}` int", probe)
 
 
 def ivf_assign_cells_2level(
@@ -529,11 +501,6 @@ def ivf_assign_cells_2level(
     like the k-means build). Deterministic: pure function of the
     centroid matrix, so reruns and incremental appends agree.
     """
-
-    def _normed(c: list[float]) -> list[float]:
-        n = math.sqrt(sum(x * x for x in c)) or 1.0
-        return [x / n for x in c]
-
     n_cells = len(centroids)
     n_super = max(1, math.isqrt(n_cells))
     # deterministic super-centroid pick: smallest md5("s:<cell idx>")
@@ -619,11 +586,7 @@ def ivf_topk(
     probe = sorted(
         range(len(centroids)), key=lambda i: (-_cos_py(query, centroids[i]), i)
     )[:n_probe]
-    # r14: assignment via the bit-exact numpy kernel (same cells,
-    # pytest-asserted vs ivf_assign_cells) — drops the rows×cells
-    # interpreted-HOF scoring and the per-call centroid-literal tree
-    # construction from the per-query path (guide §4.2).
-    assigned = ivf_assign_cells_np(df, vec_col, centroids)
+    assigned = ivf_assign_cells(df, vec_col, centroids)
     return (
         assigned.filter(F.col("__cell").isin(probe))
         .select(F.col(id_col), cosine_col(F.col(vec_col), query).alias("score"))
@@ -669,71 +632,6 @@ def knn_join_bruteforce(
     )
     w = Window.partitionBy(left_id).orderBy(F.desc("score"), F.asc(right_id))
     return pairs.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k).drop("__rn")
-
-
-def ivf_probe_cells(
-    df: DataFrame,
-    vec_col: str,
-    centroids: list[list[float]],
-    n_probe: int,
-    cell_col: str = "__cell",
-) -> DataFrame:
-    """Per-row top-``n_probe`` nearest centroid cells, EXPLODED to one
-    row per (row, probed cell) — the query-side assignment of the
-    cell-keyed kNN join (:func:`knn_join_ivf`).
-
-    Pure codegen, no UDF: the normalized centroid matrix enters as a
-    single nested-array literal (same matrix-literal convention as the
-    PQ codebooks — one literal, not a per-element expression tree),
-    per-cell dot products are a ``transform``/``aggregate`` pass, and
-    the top-``n_probe`` pick is an ``array_sort`` over (sim, cell)
-    structs with a deterministic comparator (higher sim first, lower
-    cell id on ties). Cell scores are normalized-centroid dots rounded
-    to :data:`CELL_SCORE_DECIMALS` — the same pinned precision
-    :func:`ivf_assign_cells` uses, so an oracle's
-    ``round(list_inner_product(v, c_normalized), 8)`` ranking replays
-    the probe set exactly (near-ties cannot flip across engines). The
-    similarity array is materialized in its own projection first —
-    lambda-bearing expressions are excluded from Spark's subexpression
-    elimination, so referencing it twice unmaterialized would
-    recompute every dot product.
-    """
-
-    def _normed(c: list[float]) -> list[float]:
-        n = math.sqrt(sum(x * x for x in c)) or 1.0
-        return [x / n for x in c]
-
-    v = F.col(vec_col).cast("array<double>")
-    cents_lit = F.lit([_normed(c) for c in centroids])
-    sims = F.transform(
-        cents_lit,
-        lambda c: F.round(
-            F.aggregate(
-                F.zip_with(v, c, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-            ),
-            CELL_SCORE_DECIMALS,
-        ),
-    )
-    idxed = F.transform(
-        F.col("__sims"), lambda s, i: F.struct(s.alias("s"), i.alias("i"))
-    )
-    comp = lambda a, b: (  # noqa: E731
-        F.when(a["s"] > b["s"], F.lit(-1))
-        .when(a["s"] < b["s"], F.lit(1))
-        .otherwise(
-            F.signum(a["i"].cast("double") - b["i"].cast("double")).cast("int")
-        )
-    )
-    top = F.slice(F.array_sort(idxed, comp), 1, n_probe)
-    return (
-        df.withColumn("__sims", sims)
-        .withColumn("__probe", top)
-        .withColumn(
-            cell_col,
-            F.explode(F.transform("__probe", lambda st: st["i"].cast("int"))),
-        )
-        .drop("__sims", "__probe")
-    )
 
 
 def knn_join_ivf(
@@ -783,17 +681,14 @@ def knn_join_ivf(
         n_cells = ivf_default_cells(right.count())
     n_probe = n_cells if n_probe is None else n_probe
     centroids = _ivf_centroids(right, vec_col, right_id, n_cells)
-    # r14: assignment/probe via the bit-exact numpy kernels (same
-    # rounded scores, same tie semantics — pytest-asserted); the
-    # rows×cells interpreted scoring was the dominant per-call cost.
-    rv = ivf_assign_cells_np(
+    rv = ivf_assign_cells(
         right.select(
             F.col(right_id), F.col(vec_col).cast("array<double>").alias("__rv")
         ),
         "__rv",
         centroids,
     )
-    lv = ivf_probe_cells_np(
+    lv = ivf_probe_cells(
         left.select(
             F.col(left_id), F.col(vec_col).cast("array<double>").alias("__lv")
         ),
@@ -814,29 +709,35 @@ def knn_join_cells_cogrouped(
     right_id: str = "id_b",
     exclude_self: bool = False,
 ) -> DataFrame:
-    """Cell-cogrouped variant of :func:`knn_join_cells`: instead of a
-    cell equi-join whose output carries BOTH 64-dim vectors on every
-    candidate row (candidates = probes × occupancy — at sf0.1 already
-    1M pairs ≈ 1 GB through any downstream operator), the two sides are
-    cogrouped on the cell key and each cell's pair scores are computed
-    in one numpy kernel — every vector crosses the boundary ONCE per
-    cell (nl + nr rows, not nl × nr), the §8 "move heavy bytes once"
-    shape. Scores replicate the interpreted fold BIT-FOR-BIT
-    (elementwise products + sequential cumsum, sqrt, same division —
-    pytest-asserted against :func:`knn_join_cells` output), so ranking
-    and the oracle hash are unchanged. Shuffles are identical to the
-    join form (both sides exchange on the bounded cell key; the
-    per-left top-k window shuffles (id, id, score) rows). Memory is
-    bounded by chunking the probe side so each products block stays
-    ~32 MB regardless of occupancy.
+    """JOIN stage of the cell-keyed kNN join over PRE-ASSIGNED frames:
+    ``lv`` = probe rows exploded onto cells (``__cell`` + ``__lv``
+    vector, :func:`ivf_probe_cells`), ``rv`` = corpus rows with their
+    cell (``__cell`` + ``__rv``, :func:`ivf_assign_cells` — or a
+    persisted index, which stores exactly that shape partitioned by
+    cell). Cost is candidate volume (|lv|·occupancy) + one window per
+    left id: linear in corpus size when cells ∝ N and n_probe is fixed
+    (see tools/scale_stress.py::op_knn_join_ivf for the measured
+    decomposition and the two quadratic mis-configurations).
 
-    Used by :func:`knn_join_ivf` (assignments computed in-plan). The
-    persisted-index path (:func:`knn_join_indexed`) keeps the
-    equi-join form: its cell key is a parquet partition column and the
-    join is what lets dynamic partition pruning skip unprobed cell
-    directories — a cogroup would read every cell.
+    The two sides are cogrouped on the cell key and each cell's pair
+    scores are computed in one numpy kernel, instead of a cell
+    equi-join whose output carries BOTH 64-dim vectors on every
+    candidate row (candidates = probes × occupancy — at sf0.1 already
+    1M pairs ≈ 1 GB through any downstream operator): every vector
+    crosses the boundary ONCE per cell (nl + nr rows, not nl × nr),
+    the "move heavy bytes once" shape. Scores replicate the
+    interpreted cosine fold BIT-FOR-BIT (:func:`_fold_dots`, sqrt,
+    same division — pytest-asserted against the expression join form
+    kept in tests/), so ranking and the oracle hash match the SQL
+    replay. Both sides exchange on the bounded cell key; the per-left
+    top-k window shuffles (id, id, score) rows. Memory is bounded by
+    chunking the probe side so each products block stays ~32 MB
+    regardless of occupancy.
+
+    Used by :func:`knn_join_ivf` (assignments computed in-plan) and
+    :func:`knn_join_indexed` (corpus side read from the persisted
+    index, unprobed cells pruned at planning time).
     """
-    import numpy as np
     import pandas as pd
 
     a_type = dict(zip(lv.schema.names, lv.schema))[left_id].dataType.simpleString()
@@ -867,17 +768,13 @@ def knn_join_cells_cogrouped(
         # sqrt(aggregate(...)) (squares are +0.0, so no zero-sign edge)
         ln = np.sqrt(np.cumsum(A * A, axis=1)[:, -1] + 0.0)
         rn = np.sqrt(np.cumsum(B * B, axis=1)[:, -1] + 0.0)
-        nl, d = A.shape
-        nr = len(B)
-        kk = min(k, nr)
-        step = max(1, (4 << 20) // max(1, nr * d))  # ~32 MB f64 blocks
+        nl = len(A)
+        kk = min(k, len(B))
+        step = max(1, (4 << 20) // max(1, B.size))  # ~32 MB f64 blocks
         outs = []
         for s in range(0, nl, step):
             As = A[s : s + step]
-            # sequential cumsum over the dim axis == the interpreted
-            # left fold; trailing +0.0 mirrors the fold's 0.0 seed
-            dots = np.cumsum(As[:, None, :] * B[None, :, :], axis=2)[:, :, -1] + 0.0
-            score = dots / (ln[s : s + step, None] * rn[None, :])
+            score = _fold_dots(As, B) / (ln[s : s + step, None] * rn[None, :])
             okey = _f64_order_key(score)
             if exclude_self:
                 # self rows sink below every real candidate and are
@@ -904,66 +801,6 @@ def knn_join_cells_cogrouped(
         .cogroup(rv.groupBy("__cell"))
         .applyInPandas(score_cell, schema=schema)
     )
-    w = Window.partitionBy(left_id).orderBy(F.desc("score"), F.asc(right_id))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
-
-
-def knn_join_cells(
-    lv: DataFrame,
-    rv: DataFrame,
-    k: int,
-    left_id: str = "id_a",
-    right_id: str = "id_b",
-    exclude_self: bool = False,
-) -> DataFrame:
-    """JOIN stage of the cell-keyed kNN join over PRE-ASSIGNED frames:
-    ``lv`` = probe rows exploded onto cells (``__cell`` +
-    ``__lv`` vector), ``rv`` = corpus rows with their cell (``__cell``
-    + ``__rv``). This is the probe-time path when assignments come
-    from a persisted index (:func:`ivf_index_write` stores exactly the
-    ``rv`` shape partitioned by cell) — the per-call centroid scoring
-    in :func:`knn_join_ivf` is the index-BUILD cost, amortized across
-    probes. Cost is candidate volume (|lv|·occupancy) + one window
-    per left id: linear in corpus size when cells ∝ N and n_probe is
-    fixed (see tools/scale_stress.py::op_knn_join_ivf for the
-    measured decomposition and the two quadratic mis-configurations).
-    """
-    # merge hint on the index side: both sides carry vector arrays whose
-    # width the estimator cannot see (ArrayType.defaultSize = one
-    # element), so a corpus-scaled rv can sit under the broadcast
-    # threshold while its HashedRelation is GBs — the round-10
-    # broadcast_audit finding. Sort-merge on the bounded cell key is
-    # the spill-safe shape; at small SF AQE's coalescing keeps the two
-    # extra sorts cheap.
-    #
-    # r14: the vector norms are hoisted BELOW the join — one
-    # interpreted-HOF pass per input row instead of one per CANDIDATE
-    # (candidates = rows × n_probe × occupancy; the per-pair projection
-    # previously evaluated dot + BOTH norms, ~3× the lambda evals of
-    # the dot alone). Same expression over the same array → identical
-    # doubles → identical ranking; only the dot stays pair-side.
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    lvn = lv.withColumn("__ln", norm(F.col("__lv")))
-    rvn = rv.withColumn("__rn", norm(F.col("__rv")))
-    pairs = lvn.join(rvn.hint("merge"), "__cell")
-    if exclude_self:
-        pairs = pairs.filter(F.col(left_id) != F.col(right_id))
-    # per-pair dot via the Arrow-batched sequential-fold kernel —
-    # bit-identical to the interpreted aggregate(zip_with(...)) fold it
-    # replaces (functions/npsig.py::seq_dot_np, pytest-asserted), at a
-    # fraction of the per-candidate CPU (guide §4.2).
-    from ..functions.npsig import seq_dot_vec
-
-    dot = seq_dot_vec(F.col("__lv"), F.col("__rv"))
-    scored = pairs.withColumn(
-        "score", dot / (F.col("__ln") * F.col("__rn"))
-    ).select(left_id, right_id, "score")
     w = Window.partitionBy(left_id).orderBy(F.desc("score"), F.asc(right_id))
     return (
         scored.withColumn("__rn", F.row_number().over(w))
@@ -1014,8 +851,6 @@ def pq_train(
         .limit(sample)
         .collect()
     )
-    import numpy as np
-
     X = np.array([r.v for r in rows])  # (n, dim)
     return _pq_train_np(X, dim, n_sub, n_codes, iters, round_digits)
 
@@ -1032,8 +867,6 @@ def _pq_train_np(
     a caller that already holds the (md5-ordered) sample matrix can
     train without a second Spark job. Bit-identical to training on the
     collected sample: same init, same update order, same rounding."""
-    import numpy as np
-
     sub = dim // n_sub
     books: list[list[list[float]]] = []
     for s in range(n_sub):
@@ -1062,6 +895,39 @@ def _pq_train_np(
     return books
 
 
+def _pq_coder(codebooks: list[list[list[float]]], score_digits: int | None = None):
+    """Vectorized PQ encoder: maps an (n, dim) matrix to its (n, n_sub)
+    int32 codes. Per subspace, argmin over squared L2: ||x-c||² =
+    ||x||² - 2<x,c> + ||c||², and ||x||² is constant across codes, so
+    the argmax of <x,c> - ||c||²/2 — the fold seeded at -||c||²/2 (a
+    driver-python sequential sum), lowest code on ties.
+
+    ``score_digits`` pins that argmax the way CELL_SCORE_DECIMALS pins
+    IVF cell scores: the seeded fold and the oracle's
+    list_inner_product−norm/2 associate differently, so a last-ulp gap
+    between two CODES' scores could flip the assignment; on the 1e-8
+    grid both engines agree and ties break to the LOWEST code on both
+    sides (ORDER BY score DESC, c in SQL). Production default stays
+    None (unrounded)."""
+    sub = len(codebooks[0][0])
+    books = [np.array(book, np.float64) for book in codebooks]
+    seeds = [
+        -np.array([float(sum(x * x for x in c)) / 2.0 for c in book], np.float64)
+        for book in codebooks
+    ]
+
+    def encode(X):
+        return np.stack(
+            [
+                _score_blocks(X[:, s * sub : (s + 1) * sub], B, _argmax, score_digits, seed)
+                for s, (B, seed) in enumerate(zip(books, seeds))
+            ],
+            axis=1,
+        ).astype(np.int32)
+
+    return encode
+
+
 def pq_encode(
     df: DataFrame,
     vec_col: str,
@@ -1069,60 +935,19 @@ def pq_encode(
     code_col: str = "__pq",
     score_digits: int | None = None,
 ) -> DataFrame:
-    """Attach the PQ code (array<int>, one code per subspace) as a pure
-    codegen expression over the literal codebooks — no UDF, no shuffle.
+    """Attach the PQ code (array<int>, one code per subspace,
+    :func:`_pq_coder`) in one numpy ``mapInPandas`` pass — no shuffle.
 
     The encoded column is what gets persisted at scale: n_sub bytes a
     row instead of dim·4, a 64× compression at (64-dim float32,
     4×16 PQ), and every later query scans codes, not vectors.
     """
-    n_sub = len(codebooks)
-    sub = len(codebooks[0][0])
-    v = F.col(vec_col).cast("array<double>")
-    # two projections: materialize each subvector once as an attribute,
-    # then score — otherwise every one of the n_codes dot products
-    # re-evaluates its F.slice (lambda-bearing expressions are excluded
-    # from subexpression elimination; measured ~2× at sf0.1)
-    sliced = df.withColumns(
-        {f"__sv{s}": F.slice(v, s * sub + 1, sub) for s in range(n_sub)}
-    )
-    codes = []
-    for s in range(n_sub):
-        vs = F.col(f"__sv{s}")
-        # argmin over squared L2: ||x-c||² = ||x||² - 2<x,c> + ||c||²;
-        # ||x||² is constant across codes, so rank by <x,c> - ||c||²/2.
-        # The codebook enters as ONE nested-array literal iterated by
-        # zip_with, not n_codes separate expression subtrees: per-call
-        # wall time is dominated by driver-side plan analysis of the
-        # literal-laden tree (execution is ~0.1 s warm), and collapsing
-        # n_sub × n_codes × sub literal nodes into n_sub array literals
-        # measured 2.3× faster end-to-end at 8×16×8 (2.7 s → 1.2 s per
-        # fresh-plan call, identical output hash).
-        books_lit = F.lit([[float(x) for x in c] for c in codebooks[s]])
-        norms_lit = F.lit(
-            [float(sum(x * x for x in c)) / 2.0 for c in codebooks[s]]
-        )
-        scores = F.zip_with(
-            books_lit,
-            norms_lit,
-            lambda c, nrm: F.aggregate(
-                F.zip_with(vs, c, lambda a, b: a * b), -nrm, lambda acc, x: acc + x
-            ),
-        )
-        if score_digits is not None:
-            # pin the argmax the way CELL_SCORE_DECIMALS pins IVF cell
-            # scores: Spark's fold (acc starts at -||c||²/2) and the
-            # oracle's list_inner_product−norm/2 associate differently,
-            # so a last-ulp gap between two CODES' scores could flip
-            # the assignment; on the 1e-8 grid both engines agree and
-            # ties break to the LOWEST code on both sides
-            # (array_position-of-max here, ORDER BY score DESC, c in
-            # SQL). Production default stays None (unrounded).
-            scores = F.transform(scores, lambda x: F.round(x, score_digits))
-        codes.append((F.array_position(scores, F.array_max(scores)) - 1).cast("int"))
-    return sliced.withColumn(code_col, F.array(*codes)).drop(
-        *[f"__sv{s}" for s in range(n_sub)]
-    )
+    encode = _pq_coder(codebooks, score_digits)
+
+    def add_codes(pdf, V):
+        return pdf.assign(**{code_col: list(encode(V))})
+
+    return _map_vectors(df, vec_col, f"`{code_col}` array<int>", add_codes)
 
 
 def pq_topk(
@@ -1157,12 +982,7 @@ def pq_topk(
     if codebooks is None:
         codebooks = pq_train(df, vec_col, id_col, dim=len(query), n_sub=n_sub, n_codes=n_codes)
     sub = len(codebooks[0][0])
-    # production (unrounded) encode goes through the bit-exact numpy
-    # kernel; the pinned replay configs keep the expression path.
-    if score_digits is None:
-        encoded = pq_encode_frames_np(df, vec_col, codebooks)
-    else:
-        encoded = pq_encode(df, vec_col, codebooks, score_digits=score_digits)
+    encoded = pq_encode(df, vec_col, codebooks, score_digits=score_digits)
     approx = F.lit(0.0)
     for s in range(len(codebooks)):
         qs = query[s * sub : (s + 1) * sub]
@@ -1232,10 +1052,8 @@ def ivf_index_write(
     if n_cells is None:
         n_cells = ivf_default_cells(df.count())
     cents = _train_centroids(df, vec_col, id_col, n_cells, centroids)
-    # flat assignment via the bit-exact numpy kernel (r14): identical
-    # cells, vectorized rows×cells scoring (the dominant build term).
     assigner = {
-        "flat": ivf_assign_cells_np,
+        "flat": ivf_assign_cells,
         "2level": ivf_assign_cells_2level,
     }[assign]
     assigned = assigner(df, vec_col, cents, cell_col="cell")
@@ -1268,12 +1086,11 @@ def knn_join_indexed(
 ) -> DataFrame:
     """Batch kNN join served from the persisted IVF index
     (:func:`ivf_index_write`): left rows rank the STORED centroids
-    (pure expression), explode onto their ``n_probe`` nearest cells,
-    and equi-join the index table on its ``cell`` partition column —
-    so Spark's dynamic partition pruning can skip unprobed cell
-    directories at runtime when the probe set is selective, and the
-    only per-call cost is probe-side (the corpus assignment was paid
-    once at index build). This is the production form of
+    (:func:`ivf_probe_cells`), explode onto their ``n_probe`` nearest
+    cells, and only the probed ``cell`` partitions of the index are
+    read and cogrouped with them (:func:`knn_join_cells_cogrouped`) —
+    the only per-call cost is probe-side (the corpus assignment was
+    paid once at index build). This is the production form of
     :func:`knn_join_ivf` — identical results for the same centroids
     and probe count (pytest-gated in test_ann_index.py)."""
     import json
@@ -1283,11 +1100,10 @@ def knn_join_indexed(
 
     with open(os.path.join(path, "_centroids.json")) as f:
         centroids = json.load(f)
-    # r14: probe assignment via the numpy kernel (bit-exact probe sets,
-    # pytest-asserted vs ivf_probe_cells), materialized once — it feeds
-    # both the probed-cell listing and the scoring cogroup below.
+    # probe assignment materialized once — it feeds both the
+    # probed-cell listing and the scoring cogroup below.
     lv = truncate_lineage(
-        ivf_probe_cells_np(
+        ivf_probe_cells(
             left.select(
                 F.col(left_id), F.col(vec_col).cast("array<double>").alias("__lv")
             ),
@@ -1412,7 +1228,7 @@ def ivf_batch_drift(
     cells were trained on, so schedule a centroid re-train
     (``centroids="kmeans"`` rebuild) rather than letting partial-probe
     recall decay silently."""
-    assigned = ivf_assign_cells(batch_df, vec_col, centroids)
+    assigned = ivf_assign_cells(batch_df.select(vec_col), vec_col, centroids)
     cents_lit = F.lit([[float(x) for x in c] for c in centroids])
     own = F.element_at(cents_lit, F.col("__cell").cast("int") + 1)
     row = assigned.agg(
@@ -1443,9 +1259,9 @@ def kmeans_assign(
     - init: centroids are the ``k`` vectors with the smallest ids
       (seedless, rerun- and engine-stable — same discipline as
       :func:`_ivf_centroids`);
-    - assignment: argmin squared-L2 against a literal centroid matrix,
-      one codegen projection, ties to the lowest cluster id
-      (``array_position`` returns the first minimum);
+    - assignment: argmin squared-L2 against the centroid matrix, one
+      numpy ``mapInPandas`` pass (sequential-fold sum of squared
+      differences), ties to the lowest cluster id;
     - update: per-(cluster, dim) means via ``posexplode`` + partial
       aggregation — the shuffle carries only k·dim rows per map
       partition, the classic distributed-k-means reduce; the k·dim
@@ -1486,38 +1302,19 @@ def kmeans_assign(
         # double); np.argmin takes the FIRST minimum, exactly
         # array_position(d2, array_min(d2)); cluster ids map through
         # the same surviving-id list as element_at(ids_lit, pos).
-        import numpy as np
-
         cn = np.array([[float(x) for x in c] for c in cents], np.float64)
         ids = np.array(cluster_ids, np.int64)
-        dim = cn.shape[1]
+        step = max(1, (4 << 20) // max(1, cn.size))
 
-        def kernel(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.stack(
-                    [np.asarray(x, np.float64) for x in pdf[vec_col]]
-                )
-                n = len(V)
-                cl = np.empty(n, np.int64)
-                step = max(1, (4 << 20) // max(1, len(cn) * dim))
-                for s in range(0, n, step):
-                    diff = V[s : s + step, None, :] - cn[None, :, :]
-                    d2 = np.cumsum(diff * diff, axis=2)[:, :, -1]
-                    cl[s : s + step] = ids[np.argmin(d2, axis=1)]
-                out = pdf.copy()
-                out[out_col] = cl
-                yield out
+        def nearest(pdf, V):
+            cl = np.empty(len(V), np.int64)
+            for s in range(0, len(V), step):
+                diff = V[s : s + step, None, :] - cn[None, :, :]
+                d2 = np.cumsum(diff * diff, axis=2)[:, :, -1]
+                cl[s : s + step] = ids[np.argmin(d2, axis=1)]
+            return pdf.assign(**{out_col: cl})
 
-        schema = (
-            ",".join(
-                f"`{f.name}` {f.dataType.simpleString()}"
-                for f in frame.schema.fields
-            )
-            + f",`{out_col}` int"
-        )
-        return frame.mapInPandas(kernel, schema=schema)
+        return _map_vectors(frame, vec_col, f"`{out_col}` int", nearest)
 
     for it in range(n_iters - 1):
         upd = (
@@ -1541,224 +1338,6 @@ def kmeans_assign(
     return _assigned(df)
 
 
-def _f64_order_key(x):
-    """Monotone int64 key replicating java.lang.Double.compare ordering
-    (including -0.0 < 0.0 and NaN greatest) so a numpy argmax picks the
-    same element as Catalyst's array_position(arr, array_max(arr))."""
-    import numpy as np
-
-    b = np.ascontiguousarray(x, np.float64).view(np.int64)
-    return np.where(b < 0, b ^ np.int64(0x7FFFFFFFFFFFFFFF), b)
-
-
-def _ivfpq_build_frames_np(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    n_cells: int,
-    n_sub: int,
-    n_codes: int,
-    dim: int,
-):
-    """Numpy fast path of :func:`_ivfpq_build` for the PRODUCTION
-    configuration (sample centroids, flat assignment, no replay
-    rounding pins): normalize + cell-assign + residual + PQ-encode run
-    as two ``mapInPandas`` kernels instead of interpreted HOF
-    expression trees. ~1.2 s of per-call driver-side py4j expression
-    construction disappears along with the per-element interpreted
-    math; at scale the rows×cells assignment — the dominant index-build
-    term — is vectorized (guide §4.2).
-
-    BIT-EXACT with the expression path (pytest-asserted at sf0.001 and
-    sf0.1): sequential-fold sums via cumsum, cell scores rounded with
-    the HALF_UP/shortest-repr replication (npsig.round_half_up_np),
-    argmax under the Double.compare total order (ties to the lowest
-    cell/code), residual = unit vector minus the RAW collected
-    centroid — each the same IEEE-754 ops in the same order as the
-    expressions they replace.
-
-    ONE corpus pass, ONE bounded collect (r14, guide §1.2/§4): the
-    md5-ordered TakeOrdered that used to run twice (n_cells rows for
-    centroids, then again through a full corpus assign pass for
-    pq_train's 2048-row sample) now runs once for max(sample, n_cells)
-    rows; the sample's residuals and the codebooks train driver-side
-    with the same numpy ops the kernel applies (per-row math — chunking
-    and batching cannot change any value), and assignment + PQ encode
-    fuse into a single mapInPandas crossing, so the corpus crosses the
-    Arrow boundary once instead of three times (assign for the train
-    sample, assign again, then encode).
-    """
-    import math as _math
-
-    import numpy as np
-
-    # centroid pick + PQ train sample in ONE TakeOrdered job: the first
-    # n_cells rows of the md5 order are the centroids (same rows the
-    # separate limit(n_cells) collect returned), the first `sample`
-    # rows are pq_train's sample (same rows its collect over the
-    # assigned frame returned — the md5 order is on the id column,
-    # which the assign kernel carries through unchanged).
-    sample = PQ_TRAIN_SAMPLE
-    rows = (
-        df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("v"))
-        .orderBy(F.md5(F.col(id_col).cast("string")))
-        .limit(max(n_cells, sample))
-        .collect()
-    )
-
-    def _unit(v):
-        a = np.asarray(v, np.float64)
-        return a / _math.sqrt(float(np.cumsum(a * a)[-1] + 0.0))
-
-    cents = [[float(x) for x in _unit(r.v)] for r in rows[:n_cells]]
-
-    def _normed(c):
-        n = _math.sqrt(sum(x * x for x in c)) or 1.0
-        return [x / n for x in c]
-
-    cn = np.array([_normed(c) for c in cents], np.float64)  # (cells, dim)
-    craw = np.array(cents, np.float64)
-
-    def _assign(V):
-        """normalize + cell-assign + residual for a (n, dim) matrix —
-        the shared per-row math of the executor kernel and the
-        driver-side training sample (row-independent, so identical
-        wherever it runs)."""
-        from ..functions.npsig import round_half_up_np
-
-        nrm = np.sqrt(np.cumsum(V * V, axis=1)[:, -1:] + 0.0)
-        VN = V / nrm
-        # rows×cells sequential-fold dots, chunked to ~32 MB blocks
-        n = len(VN)
-        cell = np.empty(n, np.int32)
-        step = max(1, (4 << 20) // max(1, len(cn) * dim))
-        for s in range(0, n, step):
-            dots = (
-                np.cumsum(VN[s : s + step, None, :] * cn[None, :, :], axis=2)[
-                    :, :, -1
-                ]
-                + 0.0
-            )
-            sims = round_half_up_np(dots, CELL_SCORE_DECIMALS)
-            cell[s : s + step] = np.argmax(_f64_order_key(sims), axis=1)
-        res = VN - craw[cell]
-        return VN, cell, res
-
-    # codebooks train driver-side on the sample rows' residuals — the
-    # exact doubles the old corpus-pass collect returned (binary64
-    # survives the Arrow/py4j round trip; the kernel math is per-row).
-    Xs = np.stack([np.asarray(r.v, np.float64) for r in rows])
-    _, _, res_s = _assign(Xs)
-    books = _pq_train_np(res_s[:sample], dim, n_sub, n_codes)
-    sub = dim // n_sub
-    B = np.array(books, np.float64)  # (n_sub, n_codes, sub)
-    # the -||c||²/2 fold seed, with the SAME driver-python sequential
-    # sum pq_encode's norms_lit uses
-    seeds = np.array(
-        [
-            [float(sum(x * x for x in code)) / 2.0 for code in books[s]]
-            for s in range(n_sub)
-        ],
-        np.float64,
-    )
-
-    def kernel_assign_encode(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.stack([np.asarray(v, np.float64) for v in pdf[vec_col]])
-            VN, cell, res = _assign(V)
-            codes = _pq_codes_np(res, B, seeds, n_sub, n_codes, sub)
-            out = pdf.copy()
-            out["__vn"] = list(VN)
-            out["__cell"] = cell.astype(np.int32)
-            out["__pq"] = list(codes)
-            yield out
-
-    schema = (
-        ",".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
-        + ",`__vn` array<double>,`__cell` int,`__pq` array<int>"
-    )
-    encoded = df.mapInPandas(kernel_assign_encode, schema=schema)
-    return encoded, cents, books
-
-
-def _pq_codes_np(R, B, seeds, n_sub: int, n_codes: int, sub: int):
-    """PQ-encode a (n, dim) residual matrix against codebook tensor B
-    ((n_sub, n_codes, sub)) with fold seeds -||c||²/2 — the shared
-    per-row math of :func:`pq_encode_frames_np` and the fused build
-    kernel. Returns (n, n_sub) int32 codes."""
-    import numpy as np
-
-    n = len(R)
-    codes = np.empty((n, n_sub), np.int32)
-    for s in range(n_sub):
-        Rs = R[:, s * sub : (s + 1) * sub]
-        prods = Rs[:, None, :] * B[s][None, :, :]
-        full = np.concatenate(
-            [
-                np.broadcast_to(-seeds[s], (n, n_codes))[:, :, None],
-                prods,
-            ],
-            axis=2,
-        )
-        scores = np.cumsum(full, axis=2)[:, :, -1]
-        codes[:, s] = np.argmax(_f64_order_key(scores), axis=1)
-    return codes
-
-
-def pq_encode_frames_np(
-    df: DataFrame,
-    vec_col: str,
-    codebooks: list[list[list[float]]],
-    code_col: str = "__pq",
-    drop_vec: bool = False,
-) -> DataFrame:
-    """Numpy ``mapInPandas`` form of :func:`pq_encode` for the
-    production (unrounded) configuration — bit-exact with the
-    expression path (pytest-asserted): per subspace, score = the
-    sequential fold seeded at -||c||²/2 (cumsum over a prepended seed
-    column), argmax under the Double.compare total order (ties to the
-    lowest code). Removes both the interpreted per-element scoring and
-    the per-call driver-side construction of the codebook literal
-    trees (guide §4.2)."""
-    import numpy as np
-
-    n_sub = len(codebooks)
-    n_codes = len(codebooks[0])
-    sub = len(codebooks[0][0])
-    B = np.array(codebooks, np.float64)
-    # the -||c||²/2 fold seed, with the SAME driver-python sequential
-    # sum pq_encode's norms_lit uses
-    seeds = np.array(
-        [
-            [float(sum(x * x for x in code)) / 2.0 for code in codebooks[s]]
-            for s in range(n_sub)
-        ],
-        np.float64,
-    )
-
-    def kernel_encode(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            R = np.stack([np.asarray(v, np.float64) for v in pdf[vec_col]])
-            codes = _pq_codes_np(R, B, seeds, n_sub, n_codes, sub)
-            out = (pdf.drop(columns=[vec_col]) if drop_vec else pdf).copy()
-            out[code_col] = list(codes)
-            yield out
-
-    schema = (
-        ",".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in df.schema.fields
-            if not (drop_vec and f.name == vec_col)
-        )
-        + f",`{code_col}` array<int>"
-    )
-    return df.mapInPandas(kernel_encode, schema=schema)
-
-
 def _ivfpq_build(
     df: DataFrame,
     vec_col: str,
@@ -1771,60 +1350,99 @@ def _ivfpq_build(
     assign: str = "flat",
     pq_round_digits: int | None = None,
     score_digits: int | None = None,
-    _force_exprs: bool = False,
 ):
     """Shared IVF-PQ build: L2-normalize, assign coarse cells, train
     residual codebooks, PQ-encode. Returns (encoded_df, centroids,
     codebooks); ``encoded_df`` keeps the original columns plus
     ``__vn`` (unit vector), ``__cell``, ``__pq``.
-    ``centroid_method="kmeans"`` swaps the coarse-quantizer training
-    for the distributed Lloyd refinement (see :func:`ivf_index_write`).
 
     Normalization matters: on unit vectors squared-L2 ADC ordering IS
     cosine ordering (||q̂−v̂||² = 2−2cos) — without it L2-ranked
     candidates drop cosine-top rows (measured recall 0.8 → 1.0 at
     full probe on the bench corpus).
 
-    The production configuration (sample centroids, flat assignment, no
-    replay rounding pins) routes through the bit-exact numpy kernels
-    (:func:`_ivfpq_build_frames_np`); the pinned replay configs keep
-    the expression path the oracle certificates were built against.
-    ``_force_exprs`` is the test hook that pins the expression path so
-    the equivalence suite can compare the two.
+    The default build (sample centroids, flat assignment) is ONE
+    bounded collect and ONE corpus pass: a single
+    md5-ordered TakeOrdered returns max(n_cells, PQ_TRAIN_SAMPLE) rows
+    — the first n_cells are the :func:`_ivf_centroids` pick, the first
+    PQ_TRAIN_SAMPLE are :func:`pq_train`'s sample (the md5 order is on
+    the id, which assignment carries through unchanged). The sample's
+    residuals and the codebooks are computed driver-side with the same
+    per-row numpy math the executor kernel applies (chunking and
+    batching cannot change any value), and normalize + assign +
+    residual + encode fuse into one ``mapInPandas`` crossing. Residual
+    = unit vector minus the RAW centroid.
+
+    ``centroid_method="kmeans"`` trains the centroids with
+    :func:`ivf_kmeans_centroids` on the unit vectors (see
+    :func:`ivf_index_write`); ``assign="2level"`` takes each row's cell
+    from :func:`ivf_assign_cells_2level`, and the training sample is
+    then collected from the assigned frame, cells included. Both feed
+    the same kernel. ``pq_round_digits`` / ``score_digits`` are the
+    replay pins of :func:`pq_train` / :func:`pq_encode`.
     """
-    if (
-        not _force_exprs
-        and centroid_method == "sample"
-        and assign == "flat"
-        and pq_round_digits is None
-        and score_digits is None
-    ):
-        return _ivfpq_build_frames_np(
-            df, vec_col, id_col, n_cells, n_sub, n_codes, dim
+    if assign not in ("flat", "2level"):
+        raise ValueError(f"unknown assign {assign!r} (flat|2level)")
+    two_level = assign == "2level"
+    src, cents = df, None
+    if centroid_method != "sample" or two_level:
+        # k-means training and the 2-level assigner read the unit
+        # vectors as a column
+        v = F.col(vec_col).cast("array<double>")
+        nrm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
+        df_n = df.withColumn("__vn", F.transform(v, lambda x: x / nrm))
+        cents = _train_centroids(df_n, "__vn", id_col, n_cells, centroid_method)
+        if two_level:
+            src = ivf_assign_cells_2level(df_n, "__vn", cents).drop("__vn")
+    rows = (
+        src.select(
+            F.col(id_col),
+            F.col(vec_col).cast("array<double>").alias("v"),
+            *([F.col("__cell")] if two_level else []),
         )
-    v_raw = F.col(vec_col).cast("array<double>")
-    nrm = F.sqrt(F.aggregate(v_raw, F.lit(0.0), lambda acc, x: acc + x * x))
-    df_n = df.withColumn("__vn", F.transform(v_raw, lambda x: x / nrm))
-    centroids = _train_centroids(df_n, "__vn", id_col, n_cells, centroid_method)
-    assigner = {"flat": ivf_assign_cells, "2level": ivf_assign_cells_2level}[assign]
-    assigned = assigner(df_n, "__vn", centroids)
-    cents_lit = F.lit([[float(x) for x in c] for c in centroids])
-    r_df = assigned.withColumn(
-        "__res",
-        F.zip_with(
-            F.col("__vn"),
-            F.element_at(cents_lit, F.col("__cell") + 1),
-            lambda a, b: a - b,
-        ),
+        .orderBy(F.md5(F.col(id_col).cast("string")))
+        .limit(max(n_cells, PQ_TRAIN_SAMPLE) if cents is None else PQ_TRAIN_SAMPLE)
+        .collect()
     )
-    books = pq_train(
-        r_df, "__res", id_col, dim=dim, n_sub=n_sub, n_codes=n_codes,
-        round_digits=pq_round_digits,
+
+    def unit(V):
+        return V / np.sqrt(np.cumsum(V * V, axis=1)[:, -1:] + 0.0)
+
+    X = np.array([r.v for r in rows], np.float64)
+    if cents is None:
+        cents = unit(X[:n_cells]).tolist()
+    cn = np.array([_normed(c) for c in cents], np.float64)
+    craw = np.array(cents, np.float64)
+
+    def residuals(V, cell):
+        """unit vectors, cells (flat-assigned when not given), residuals
+        — the per-row math shared by the kernel and the sample."""
+        VN = unit(V)
+        if cell is None:
+            cell = _score_blocks(VN, cn, _argmax, CELL_SCORE_DECIMALS)
+        return VN, cell, VN - craw[cell]
+
+    _, _, res = residuals(
+        X[:PQ_TRAIN_SAMPLE],
+        np.array([r["__cell"] for r in rows]) if two_level else None,
     )
-    encoded = pq_encode(
-        r_df, "__res", books, score_digits=score_digits
-    ).drop("__res")
-    return encoded, centroids, books
+    books = _pq_train_np(res, dim, n_sub, n_codes, round_digits=pq_round_digits)
+    encode = _pq_coder(books, score_digits)
+
+    def assign_encode(pdf, V):
+        VN, cell, res = residuals(V, pdf["__cell"].to_numpy() if two_level else None)
+        return pdf.assign(
+            __vn=list(VN), __cell=cell.astype(np.int32), __pq=list(encode(res))
+        )
+
+    cell_ddl = "" if two_level else "`__cell` int,"
+    added = f"`__vn` array<double>,{cell_ddl}`__pq` array<int>"
+    encoded = _map_vectors(src, vec_col, added, assign_encode)
+    if two_level:
+        # the 2-level cells arrive as an input column: restore the flat
+        # build's column order
+        encoded = encoded.select(*df.columns, "__vn", "__cell", "__pq")
+    return encoded, cents, books
 
 
 def _ivfpq_scan(
@@ -1848,12 +1466,10 @@ def _ivfpq_scan(
     ``score_digits`` pins the ADC rerank cut to a fixed decimal grid
     (replay-certificate discipline, see :func:`pq_topk`); production
     default None."""
-    import math as _math
-
     dim = len(query)
     n_sub = len(books)
     sub = dim // n_sub
-    q_nrm = _math.sqrt(sum(x * x for x in query)) or 1.0
+    q_nrm = math.sqrt(sum(x * x for x in query)) or 1.0
     qn = [x / q_nrm for x in query]
 
     probe = sorted(
@@ -1922,15 +1538,16 @@ def ivfpq_topk(
       is partition pruning;
     - residual PQ: codebooks train on ``v − centroid[cell]``
       (residuals are what PQ quantizes well — centered,
-      low-variance), encoding is the usual literal-matrix codegen;
+      low-variance); assignment and encoding are one numpy pass
+      (:func:`_ivfpq_build`);
     - ADC per probed cell: the LUT depends on the cell (the query
       residual differs per cell), so the scan carries ``n_probe``
       LUTs as ONE nested literal indexed by the row's cell rank;
       approximate distance = Σ_s LUT[cell][s][code_s], then
       ``rerank`` best candidates pay the exact cosine.
 
-    Everything after codebook training (bounded driver sample, see
-    :func:`pq_train`) is whole-stage codegen; nothing corpus-sized is
+    The build's only driver materialization is the bounded centroid +
+    training sample (see :func:`pq_train`); nothing corpus-sized is
     collected or shuffled.
     """
     encoded, centroids, books = _ivfpq_build(

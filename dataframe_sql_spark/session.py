@@ -49,11 +49,16 @@ _RUNTIME_CONFS = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Dims like region/nation/supplier stay broadcast at fact scale.
     "spark.sql.autoBroadcastJoinThreshold": "64MB",
-    # Honest scan-size estimates: compressed parquet decodes to ~3-10×
-    # its file bytes in memory, and the default factor of 1.0 let a
-    # column-pruned FACT scan slip under the broadcast threshold
-    # (r12 sf1 A/B: Catalyst broadcast 6M-row lineitem — ~2× wall at
-    # sf1, OOM-class at 100 TB). See the builder comment in get_spark.
+    # Honest scan-size estimates (r12 sf1 A/B catch): Spark's
+    # file-size-based sizeInBytes treats compressed+encoded parquet
+    # bytes as in-memory bytes, so a column-pruned FACT scan (6M-row
+    # lineitem, 3 cols) estimated under the 64MB threshold and Catalyst
+    # BROADCAST THE FACT TABLE — ~2× wall on every multi-join shape at
+    # sf1 (q_join_multi 3.98→1.97 s, tpch_q5 4.00→1.97 s) and an
+    # OOM-class plan at 100 TB. 3× is the conservative end of parquet's
+    # measured 3-10× decode expansion; with honest sizes the static
+    # planner keeps big sides on SMJ and AQE still builds the genuinely
+    # small side from REAL post-shuffle bytes at runtime.
     "spark.sql.sources.fileCompressionFactor": "3.0",
     # Shuffled hash join over sort-merge when a side's honest estimate
     # fits a per-partition hash map (canBuildLocalHashMap: size <
@@ -75,6 +80,11 @@ _RUNTIME_CONFS = {
 }
 
 
+def _cpus() -> str:
+    """Local core count: ``SPARK_GRAFT_CPUS``, else ``os.cpu_count()``."""
+    return os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
+
+
 def tune_session(spark: SparkSession) -> None:
     """Apply the engine's required runtime-settable confs to an
     externally-built session (idempotent, best-effort per key).
@@ -94,58 +104,20 @@ def tune_session(spark: SparkSession) -> None:
     # are handled by tune_for_scale/AQE coalescing instead.
     try:
         if spark.conf.get("spark.master", "").startswith("local"):
-            cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
-            spark.conf.set("spark.sql.shuffle.partitions", cpus)
+            spark.conf.set("spark.sql.shuffle.partitions", _cpus())
     except Exception:  # pragma: no cover
         pass
 
 
 def get_spark(app_name: str = "dataframe_sql_spark") -> SparkSession:
-    """Return (building if needed) the tuned SparkSession."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.default.parallelism", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.ui.enabled", "false")
-        # Broadcast threshold: dims like region/nation/supplier stay
-        # broadcast even at 100 TB fact scale.
-        .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        # Honest scan-size estimates (r12 sf1 A/B catch): Spark's
-        # file-size-based sizeInBytes treats compressed+encoded
-        # parquet bytes as in-memory bytes, so a column-pruned FACT
-        # scan (6M-row lineitem, 3 cols) estimated under the 64MB
-        # threshold and Catalyst BROADCAST THE FACT TABLE — ~2× wall
-        # on every multi-join shape at sf1 (q_join_multi 3.98→1.97 s,
-        # tpch_q5 4.00→1.97 s) and an OOM-class plan at 100 TB. 3×
-        # is the conservative end of parquet's measured 3-10×
-        # decode expansion; with honest sizes the static planner
-        # keeps big sides on SMJ and AQE still builds the genuinely
-        # small side from REAL post-shuffle bytes at runtime —
-        # size-based decisions stay correct at every scale instead
-        # of only below the estimate error.
-        .config("spark.sql.sources.fileCompressionFactor", "3.0")
-        # Hash join without the sort passes wherever a side's honest
-        # estimate fits a per-partition build (measured 10-20% on sf1
-        # join shapes, SCALE.md r12); merge hints on width-blind
-        # corpus joins outrank this. AQE's runtime SMJ→SHJ conversion
-        # from observed partition bytes backs up the static choice.
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64MB")
-        # Order-by-ordinal + case-insensitive resolution match the
-        # reference dialect (SURVEY.md §1, §2.7 O5).
-        .config("spark.sql.caseSensitive", "false")
-        # events.parquet stores TIMESTAMP(NANOS); read as long and let
-        # sources.io.read_table convert to microsecond timestamps
-        # JVM-side (no driver materialization).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    """Return (building if needed) the tuned SparkSession: the
+    ``_RUNTIME_CONFS`` plus the builder-only confs below."""
+    cpus = _cpus()
+    builder_only = {
+        "spark.sql.shuffle.partitions": cpus,
+        "spark.default.parallelism": cpus,
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+        "spark.ui.enabled": "false",
         # The lineage-truncation operators (operators/lineage.py) eagerly
         # localCheckpoint intermediate frames; their blocks are freed by
         # the ContextCleaner only after a JVM GC collects the RDD object
@@ -163,10 +135,14 @@ def get_spark(app_name: str = "dataframe_sql_spark") -> SparkSession:
         # foreign session. Env-overridable so the interval can be
         # A/B-isolated (r15) and tuned per deployment without a code
         # edit; the default stays the measured local/bench value.
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "1min"),
-        )
+        "spark.cleaner.periodicGC.interval": os.environ.get(
+            "SPARK_GRAFT_PERIODIC_GC", "1min"
+        ),
+    }
+    builder = (
+        SparkSession.builder.master(f"local[{cpus}]")
+        .appName(app_name)
+        .config(map={**_RUNTIME_CONFS, **builder_only})
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,0 +1,249 @@
+"""Expression-form references for the numpy vector kernels in
+``operators/similarity.py``.
+
+Each function here is the pure Spark-expression formulation of a
+library kernel — the same math the DuckDB replay certificates mirror
+in SQL (``round(list_inner_product(...), 8)`` cell scores,
+first-match argmax, seeded PQ folds). The parity tests in
+``test_ann_index.py`` compare the library's numpy output against
+these bit-for-bit; nothing in the library calls them.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import functions as F
+
+from dataframe_sql_spark.operators.similarity import (
+    CELL_SCORE_DECIMALS,
+    _ivf_centroids,
+    _normed,
+    ivf_assign_cells_2level,
+    pq_train,
+)
+
+
+def _dot(v: Column, c: Column) -> Column:
+    """Interpreted sequential-fold dot: aggregate(zip_with(v, c, *), 0.0, +)."""
+    return F.aggregate(
+        F.zip_with(v, c, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
+    )
+
+
+def _cell_sims(vec_col: str, centroids: list[list[float]]) -> Column:
+    """Per-cell scores: normalized-centroid dot rounded to
+    CELL_SCORE_DECIMALS, the centroid matrix as ONE nested literal."""
+    v = F.col(vec_col).cast("array<double>")
+    cents_lit = F.lit([_normed(c) for c in centroids])
+    return F.transform(cents_lit, lambda c: F.round(_dot(v, c), CELL_SCORE_DECIMALS))
+
+
+def ivf_assign_cells_expr(
+    df: DataFrame, vec_col: str, centroids: list[list[float]], cell_col: str = "__cell"
+) -> DataFrame:
+    """Reference for ``ivf_assign_cells``: argmax of the rounded cell
+    scores, lowest cell on ties (``array_position``'s first match)."""
+    sims = _cell_sims(vec_col, centroids)
+    return df.withColumn(
+        cell_col, (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
+    )
+
+
+def ivf_probe_cells_expr(
+    df: DataFrame,
+    vec_col: str,
+    centroids: list[list[float]],
+    n_probe: int,
+    cell_col: str = "__cell",
+) -> DataFrame:
+    """Reference for ``ivf_probe_cells``: top-``n_probe`` cells by an
+    ``array_sort`` over (sim, cell) structs (higher sim first, lower
+    cell on ties), exploded to one row per probed cell. The similarity
+    array is materialized in its own projection first — lambda-bearing
+    expressions are excluded from subexpression elimination."""
+    idxed = F.transform(
+        F.col("__sims"), lambda s, i: F.struct(s.alias("s"), i.alias("i"))
+    )
+    comp = lambda a, b: (  # noqa: E731
+        F.when(a["s"] > b["s"], F.lit(-1))
+        .when(a["s"] < b["s"], F.lit(1))
+        .otherwise(
+            F.signum(a["i"].cast("double") - b["i"].cast("double")).cast("int")
+        )
+    )
+    top = F.slice(F.array_sort(idxed, comp), 1, n_probe)
+    return (
+        df.withColumn("__sims", _cell_sims(vec_col, centroids))
+        .withColumn("__probe", top)
+        .withColumn(
+            cell_col,
+            F.explode(F.transform("__probe", lambda st: st["i"].cast("int"))),
+        )
+        .drop("__sims", "__probe")
+    )
+
+
+def ivf_kmeans_centroids_expr(
+    df: DataFrame,
+    vec_col: str,
+    id_col: str,
+    n_cells: int,
+    n_iters: int = 3,
+    round_digits: int = 4,
+    train_occupancy: int = 256,
+) -> list[list[float]]:
+    """Reference for ``ivf_kmeans_centroids``: the same md5 init,
+    md5-coin training sample and rounded per-(cell, dim) means, with
+    every Lloyd assignment done by :func:`ivf_assign_cells_expr`."""
+    cents = _ivf_centroids(df, vec_col, id_col, n_cells)
+    n_rows = df.count()
+    cap = train_occupancy * n_cells
+    train = df
+    if n_rows > cap:
+        h = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(":ivfkm")))
+        coin = F.conv(F.substring(h, 1, 8), 16, 10).cast("double") / F.lit(
+            4294967296.0
+        )
+        train = df.filter(coin < F.lit(cap / n_rows))
+    for _ in range(max(0, n_iters - 1)):
+        upd = (
+            ivf_assign_cells_expr(train, vec_col, cents)
+            .select(
+                "__cell",
+                F.posexplode(F.col(vec_col).cast("array<double>")).alias(
+                    "__dim", "__x"
+                ),
+            )
+            .groupBy("__cell", "__dim")
+            .agg(F.round(F.avg("__x"), round_digits).alias("__m"))
+            .collect()
+        )
+        by_cell: dict[int, dict[int, float]] = {}
+        for r in upd:
+            by_cell.setdefault(r[0], {})[r[1]] = r[2]
+        cents = [
+            [by_cell[c][d] for d in range(len(cents[0]))] if c in by_cell else cents[c]
+            for c in range(len(cents))
+        ]
+    return cents
+
+
+def pq_encode_expr(
+    df: DataFrame,
+    vec_col: str,
+    codebooks: list[list[list[float]]],
+    code_col: str = "__pq",
+    score_digits: int | None = None,
+) -> DataFrame:
+    """Reference for ``pq_encode``: per subspace, argmax of the fold
+    seeded at -||c||²/2 over <x_s, c>, optionally rounded to
+    ``score_digits``, lowest code on ties."""
+    n_sub = len(codebooks)
+    sub = len(codebooks[0][0])
+    v = F.col(vec_col).cast("array<double>")
+    # materialize each subvector once; a lambda-bearing F.slice would
+    # otherwise be re-evaluated by every code's dot product
+    sliced = df.withColumns(
+        {f"__sv{s}": F.slice(v, s * sub + 1, sub) for s in range(n_sub)}
+    )
+    codes = []
+    for s in range(n_sub):
+        vs = F.col(f"__sv{s}")
+        books_lit = F.lit([[float(x) for x in c] for c in codebooks[s]])
+        norms_lit = F.lit(
+            [float(sum(x * x for x in c)) / 2.0 for c in codebooks[s]]
+        )
+        scores = F.zip_with(
+            books_lit,
+            norms_lit,
+            lambda c, nrm: F.aggregate(
+                F.zip_with(vs, c, lambda a, b: a * b), -nrm, lambda acc, x: acc + x
+            ),
+        )
+        if score_digits is not None:
+            scores = F.transform(scores, lambda x: F.round(x, score_digits))
+        codes.append((F.array_position(scores, F.array_max(scores)) - 1).cast("int"))
+    return sliced.withColumn(code_col, F.array(*codes)).drop(
+        *[f"__sv{s}" for s in range(n_sub)]
+    )
+
+
+def ivfpq_build_expr(
+    df: DataFrame,
+    vec_col: str,
+    id_col: str,
+    n_cells: int,
+    n_sub: int,
+    n_codes: int,
+    dim: int,
+    centroid_method: str = "sample",
+    assign: str = "flat",
+    pq_round_digits: int | None = None,
+    score_digits: int | None = None,
+):
+    """Reference for ``_ivfpq_build``: expression normalize, centroid
+    training (:func:`ivf_kmeans_centroids_expr` for ``"kmeans"``),
+    assignment, residual, ``pq_train`` over the residual column and
+    :func:`pq_encode_expr`. Returns (encoded_df, centroids, codebooks)
+    with the same columns in the same order. The md5 sample pick, the
+    2-level assigner and ``pq_train`` have no numpy twin and are the
+    library's own."""
+    v_raw = F.col(vec_col).cast("array<double>")
+    nrm = F.sqrt(F.aggregate(v_raw, F.lit(0.0), lambda acc, x: acc + x * x))
+    df_n = df.withColumn("__vn", F.transform(v_raw, lambda x: x / nrm))
+    trainer = {"sample": _ivf_centroids, "kmeans": ivf_kmeans_centroids_expr}[
+        centroid_method
+    ]
+    centroids = trainer(df_n, "__vn", id_col, n_cells)
+    assigner = {"flat": ivf_assign_cells_expr, "2level": ivf_assign_cells_2level}[
+        assign
+    ]
+    assigned = assigner(df_n, "__vn", centroids)
+    cents_lit = F.lit([[float(x) for x in c] for c in centroids])
+    r_df = assigned.withColumn(
+        "__res",
+        F.zip_with(
+            F.col("__vn"),
+            F.element_at(cents_lit, F.col("__cell") + 1),
+            lambda a, b: a - b,
+        ),
+    )
+    books = pq_train(
+        r_df, "__res", id_col, dim=dim, n_sub=n_sub, n_codes=n_codes,
+        round_digits=pq_round_digits,
+    )
+    encoded = pq_encode_expr(r_df, "__res", books, score_digits=score_digits).drop(
+        "__res"
+    )
+    return encoded, centroids, books
+
+
+def knn_join_cells_expr(
+    lv: DataFrame,
+    rv: DataFrame,
+    k: int,
+    left_id: str = "id_a",
+    right_id: str = "id_b",
+    exclude_self: bool = False,
+) -> DataFrame:
+    """Reference for ``knn_join_cells_cogrouped``: the cell equi-join
+    with per-pair cosine as the interpreted fold (norms hoisted below
+    the join — same expression over the same array, same doubles) and
+    a per-left top-k window."""
+    norm = lambda c: F.sqrt(  # noqa: E731
+        F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x)
+    )
+    lvn = lv.withColumn("__ln", norm(F.col("__lv")))
+    rvn = rv.withColumn("__rn", norm(F.col("__rv")))
+    pairs = lvn.join(rvn.hint("merge"), "__cell")
+    if exclude_self:
+        pairs = pairs.filter(F.col(left_id) != F.col(right_id))
+    scored = pairs.withColumn(
+        "score", _dot(F.col("__lv"), F.col("__rv")) / (F.col("__ln") * F.col("__rn"))
+    ).select(left_id, right_id, "score")
+    w = Window.partitionBy(left_id).orderBy(F.desc("score"), F.asc(right_id))
+    return (
+        scored.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
+        .drop("__rn")
+    )

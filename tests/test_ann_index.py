@@ -581,21 +581,18 @@ def test_ivf_ingest_soak_and_drift_trigger(spark, tmp_path):
 
 
 def test_knn_join_cogrouped_matches_join_form(spark):
-    """knn_join_cells_cogrouped (the kNN-join form knn_join_ivf uses:
-    per-cell numpy pair scoring, vectors cross the Arrow boundary once
-    per cell) must be BIT-identical — ids AND score doubles — to the
-    cell equi-join + sequential-fold form it replaced, including the
-    exclude_self path."""
-    from pyspark.sql import functions as F
-
+    """knn_join_cells_cogrouped (the kNN-join form knn_join_ivf and
+    knn_join_indexed use: per-cell numpy pair scoring, vectors cross
+    the Arrow boundary once per cell) must be BIT-identical — ids AND
+    score doubles — to the cell equi-join + interpreted-fold reference,
+    including the exclude_self path."""
     from dataframe_sql_spark.operators.similarity import (
         _ivf_centroids,
         ivf_assign_cells,
         ivf_probe_cells,
-        knn_join_cells,
         knn_join_cells_cogrouped,
     )
-    from tests.conftest import SF_DIR
+    from tests.sim_reference import knn_join_cells_expr
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     cents = _ivf_centroids(emb, "embedding", "vec_id", 8)
@@ -618,7 +615,7 @@ def test_knn_join_cogrouped_matches_join_form(spark):
     )
     for excl in (False, True):
         a = (
-            knn_join_cells(lv, rv, 3, exclude_self=excl)
+            knn_join_cells_expr(lv, rv, 3, exclude_self=excl)
             .toPandas()
             .sort_values(["id_a", "id_b"])
             .reset_index(drop=True)
@@ -633,99 +630,101 @@ def test_knn_join_cogrouped_matches_join_form(spark):
 
 
 def test_ivfpq_numpy_build_matches_expressions(spark):
-    """The numpy IVF-PQ build kernels (_ivfpq_build_frames_np /
-    pq_encode_frames_np) must be BIT-identical to the expression path —
-    centroids, codebooks, and every cell/code/unit-vector value —
-    including the HALF_UP cell-score rounding and argmax tie
-    semantics. This is what keeps the ANN results unchanged through
-    the vectorized production path."""
+    """The numpy IVF-PQ build (_ivfpq_build) and pq_encode must be
+    BIT-identical to the expression references in tests/sim_reference.py
+    — centroids, codebooks, and every cell/code/unit-vector value —
+    including the HALF_UP cell-score rounding, the argmax tie
+    semantics and the replay pins: the default build, the pinned
+    configuration sim_ann_ivfpq_verified replays (pq_round_digits=4,
+    score_digits=8), k-means centroids (the reference runs its own
+    Lloyd loop on the expression assigner) and 2-level assignment
+    (ivf_assign_cells_2level has no twin, so both sides share it)."""
     import numpy as np
 
     from dataframe_sql_spark.operators.similarity import (
         _ivfpq_build,
         pq_encode,
-        pq_encode_frames_np,
         pq_train,
     )
-    from tests.conftest import SF_DIR
+    from tests.sim_reference import ivfpq_build_expr, pq_encode_expr
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    e1, c1, b1 = _ivfpq_build(
-        emb, "embedding", "vec_id", 8, 4, 16, 64, _force_exprs=True
-    )
-    e2, c2, b2 = _ivfpq_build(emb, "embedding", "vec_id", 8, 4, 16, 64)
-    assert [list(map(float, c)) for c in c1] == [list(map(float, c)) for c in c2]
-    assert b1 == b2
-    p1 = e1.toPandas().sort_values("vec_id").reset_index(drop=True)
-    p2 = e2.toPandas().sort_values("vec_id").reset_index(drop=True)
-    assert list(p1.columns) == list(p2.columns)
-    for col in p1.columns:
-        if p1[col].dtype == object:
-            for x, y in zip(p1[col], p2[col]):
-                ax, ay = np.asarray(x), np.asarray(y)
-                assert ax.tobytes() == ay.tobytes(), col
-        else:
-            assert (p1[col].to_numpy() == p2[col].to_numpy()).all(), col
+    for cfg in (
+        {},
+        {"pq_round_digits": 4, "score_digits": 8},
+        {"centroid_method": "kmeans"},
+        {"assign": "2level"},
+    ):
+        e1, c1, b1 = ivfpq_build_expr(emb, "embedding", "vec_id", 8, 4, 16, 64, **cfg)
+        e2, c2, b2 = _ivfpq_build(emb, "embedding", "vec_id", 8, 4, 16, 64, **cfg)
+        assert [list(map(float, c)) for c in c1] == [
+            list(map(float, c)) for c in c2
+        ], cfg
+        assert b1 == b2, cfg
+        p1 = e1.toPandas().sort_values("vec_id").reset_index(drop=True)
+        p2 = e2.toPandas().sort_values("vec_id").reset_index(drop=True)
+        assert list(p1.columns) == list(p2.columns), cfg
+        for col in p1.columns:
+            if p1[col].dtype == object:
+                for x, y in zip(p1[col], p2[col]):
+                    ax, ay = np.asarray(x), np.asarray(y)
+                    assert ax.tobytes() == ay.tobytes(), (cfg, col)
+            else:
+                assert (p1[col].to_numpy() == p2[col].to_numpy()).all(), (cfg, col)
 
-    books = pq_train(emb, "embedding", "vec_id", dim=64, n_sub=4, n_codes=16)
-    a = (
-        pq_encode(emb, "embedding", books)
-        .select("vec_id", "__pq")
-        .toPandas()
-        .sort_values("vec_id")
-        .reset_index(drop=True)
+    # production (unrounded) and sim_ann_pq_verified's pinned config,
+    # then books whose code 1 is code 0 shifted by 1e-12: the two score
+    # within ~1e-12 of each other, so only an applied 8dp pin turns
+    # them into ties that resolve to the lower code
+    raw = pq_train(emb, "embedding", "vec_id", dim=64, n_sub=4, n_codes=16)
+    pinned = pq_train(
+        emb, "embedding", "vec_id", dim=64, n_sub=4, n_codes=16, round_digits=4
     )
-    b = (
-        pq_encode_frames_np(emb, "embedding", books)
-        .select("vec_id", "__pq")
-        .toPandas()
-        .sort_values("vec_id")
-        .reset_index(drop=True)
-    )
-    assert (a["vec_id"] == b["vec_id"]).all()
-    for x, y in zip(a["__pq"], b["__pq"]):
-        assert (np.asarray(x) == np.asarray(y)).all()
+    near_tie = [[b[0], [x + 1e-12 for x in b[0]], *b[2:]] for b in pinned]
+    for books, digits in ((raw, None), (pinned, 8), (near_tie, 8)):
+        a, b = (
+            enc(emb, "embedding", books, score_digits=digits)
+            .select("vec_id", "__pq")
+            .toPandas()
+            .sort_values("vec_id")
+            .reset_index(drop=True)
+            for enc in (pq_encode_expr, pq_encode)
+        )
+        assert (a["vec_id"] == b["vec_id"]).all()
+        for x, y in zip(a["__pq"], b["__pq"]):
+            assert (np.asarray(x) == np.asarray(y)).all(), digits
 
 
 def test_ivf_assign_probe_numpy_match_expressions(spark):
-    """ivf_assign_cells_np / ivf_probe_cells_np must produce EXACTLY
-    the expression path's cell assignments and probe sets (same rounded
-    scores, same tie semantics) — these feed the oracle-replayed
-    probed-ANN entries, so any divergence is a correctness break."""
-    from pyspark.sql import functions as F
-
+    """ivf_assign_cells / ivf_probe_cells must produce EXACTLY the
+    expression references' cell assignments and probe sets (same
+    rounded scores, same tie semantics) — these feed the
+    oracle-replayed probed-ANN entries, so any divergence is a
+    correctness break."""
     from dataframe_sql_spark.operators.similarity import (
         _ivf_centroids,
         ivf_assign_cells,
-        ivf_assign_cells_np,
         ivf_probe_cells,
-        ivf_probe_cells_np,
     )
-    from tests.conftest import SF_DIR
+    from tests.sim_reference import ivf_assign_cells_expr, ivf_probe_cells_expr
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     cents = _ivf_centroids(emb, "v", "vec_id", 16)
-    a = {
-        r["vec_id"]: r["__cell"]
-        for r in ivf_assign_cells(emb, "v", cents).select("vec_id", "__cell").collect()
-    }
-    b = {
-        r["vec_id"]: r["__cell"]
-        for r in ivf_assign_cells_np(emb, "v", cents)
-        .select("vec_id", "__cell")
-        .collect()
-    }
-    assert a == b
-    pa = sorted(
-        (r["vec_id"], r["__cell"])
-        for r in ivf_probe_cells(emb, "v", cents, 4).select("vec_id", "__cell").collect()
+    a, b = (
+        {
+            r["vec_id"]: r["__cell"]
+            for r in fn(emb, "v", cents).select("vec_id", "__cell").collect()
+        }
+        for fn in (ivf_assign_cells_expr, ivf_assign_cells)
     )
-    pb = sorted(
-        (r["vec_id"], r["__cell"])
-        for r in ivf_probe_cells_np(emb, "v", cents, 4)
-        .select("vec_id", "__cell")
-        .collect()
+    assert a == b
+    pa, pb = (
+        sorted(
+            (r["vec_id"], r["__cell"])
+            for r in fn(emb, "v", cents, 4).select("vec_id", "__cell").collect()
+        )
+        for fn in (ivf_probe_cells_expr, ivf_probe_cells)
     )
     assert pa == pb

@@ -1,25 +1,49 @@
-"""Dump formatted physical plans for the headline catalog entries.
+"""Dump `.explain("formatted")` physical plans.
 
-Writes PLANS.md: the `.explain("formatted")` output for a curated set
-of operators, so plan-shape claims (broadcast joins, pushed filters,
-partial aggregation, no Python in the pipe, no single-partition
-stages) can be read without running anything. Regenerate after plan-
-affecting changes:
+Per-round before/after dumps: writes ``<round_dir>/<name>_<tag>.txt``
+for every bench-tracked query (the BASELINE set + TPCH_SHAPES +
+PIPELINE_OPS, at sf0.1) or only the names given — which may also be
+catalog-only entries — so before/after plan claims are checkable
+without running Spark:
 
-    python tools/dump_plans.py
+    python tools/dump_plans.py plans/r16 before [names...]
+    python tools/dump_plans.py plans/r16 after  [names...]
+
+Ledger guard (a `_before` dump captured at a HEAD that already
+contained the change was once committed as evidence):
+
+- every plan file starts with a provenance header recording the git
+  HEAD (and dirty state) it was dumped at, so before/after pairs are
+  auditable against the commit history;
+- an existing `_before` file is never overwritten (re-running the tool
+  after the optimization landed would silently replace the genuine
+  before-plan with an after-plan under the wrong name). Delete the
+  file explicitly if a re-capture at the right commit is intended.
+
+Headline plans: ``--headliners OUT.md`` writes the curated set below
+(at sf0.001) as one markdown file with a reading guide per plan — the
+form of the committed PLANS.md:
+
+    python tools/dump_plans.py --headliners PLANS.md
 """
 
 from __future__ import annotations
 
+import argparse
+import subprocess
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
-import __spark_entry__ as entrymod  # noqa: E402
+from bench import PIPELINE_OPS, QUERIES, TPCH_SHAPES  # noqa: E402
+from dataframe_sql_spark.registry import engine_for, spark_queries  # noqa: E402
 from dataframe_sql_spark.session import get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
+# per-round dumps: the bench scale factor
+ROUND_SF_DIR = str(Path(SF_DIR).with_name("sf0.1"))
 
 # entry -> one-line reading guide (what to look for in the plan)
 HEADLINERS: dict[str, str] = {
@@ -70,10 +94,54 @@ HEADLINERS: dict[str, str] = {
 }
 
 
-def main() -> None:
-    spark = get_spark("dump_plans")
-    qs = entrymod.queries()
-    out = [
+def _plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def _git_provenance() -> str:
+    def git(*args: str) -> str:
+        return subprocess.run(
+            ["git", "-C", str(REPO), *args], capture_output=True, text=True
+        ).stdout.strip()
+
+    dirty = " (dirty tree)" if git("status", "--porcelain") else ""
+    return f"-- dumped at git {git('rev-parse', '--short', 'HEAD')}{dirty}\n"
+
+
+def dump_round(spark, out_dir: Path, tag: str, only: set[str]) -> None:
+    out_dir.mkdir(parents=True, exist_ok=True)
+    provenance = _git_provenance()
+    eng = engine_for(spark, ROUND_SF_DIR)
+    qs = spark_queries()
+
+    def dump(name: str, df) -> None:
+        target = out_dir / f"{name}_{tag}.txt"
+        if tag == "before" and target.exists():
+            print(f"REFUSING to overwrite existing before-plan {target}")
+            return
+        target.write_text(provenance + _plan(df))
+
+    for name, sql in QUERIES.items():
+        if not only or name in only:
+            dump(name, eng.query(sql))
+    for name in TPCH_SHAPES + PIPELINE_OPS:
+        if not only or name in only:
+            dump(name, qs[name](spark, ROUND_SF_DIR))
+    # names outside the bench dicts (catalog-only entries) are accepted
+    # explicitly
+    for name in sorted(only - set(QUERIES) - set(TPCH_SHAPES) - set(PIPELINE_OPS)):
+        if name in qs:
+            dump(name, qs[name](spark, ROUND_SF_DIR))
+        else:
+            print(f"unknown query name {name!r}", file=sys.stderr)
+    print(f"wrote {out_dir}/*_{tag}.txt")
+
+
+def dump_headliners(spark, out: Path) -> None:
+    qs = spark_queries()
+    lines = [
         "# PLANS — formatted physical plans for the headline operators",
         "",
         "Generated by `tools/dump_plans.py` at sf0.001 (plan shapes are",
@@ -84,15 +152,26 @@ def main() -> None:
         "",
     ]
     for name, note in HEADLINERS.items():
-        df = qs[name](spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        out += [f"## {name}", "", f"*{note}*", "", "```", plan.rstrip(), "```", ""]
-    Path(__file__).resolve().parent.parent.joinpath("PLANS.md").write_text(
-        "\n".join(out)
-    )
-    print(f"wrote PLANS.md ({len(HEADLINERS)} plans)")
+        plan = _plan(qs[name](spark, SF_DIR))
+        lines += [f"## {name}", "", f"*{note}*", "", "```", plan.rstrip(), "```", ""]
+    out.write_text("\n".join(lines))
+    print(f"wrote {out} ({len(HEADLINERS)} plans)")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("round_dir", nargs="?", type=Path)
+    ap.add_argument("tag", nargs="?", choices=("before", "after"))
+    ap.add_argument("names", nargs="*")
+    ap.add_argument("--headliners", type=Path, metavar="OUT.md")
+    args = ap.parse_args()
+    if (args.headliners is None) == (args.tag is None):
+        ap.error("give either ROUND_DIR {before,after} [names...] or --headliners OUT.md")
+    spark = get_spark("dump_plans")
+    if args.headliners is not None:
+        dump_headliners(spark, args.headliners)
+    else:
+        dump_round(spark, args.round_dir, args.tag, set(args.names))
     spark.stop()
 
 

@@ -524,14 +524,15 @@ def _knn_prepare(spark: SparkSession, r: int):
 
 
 def op_knn_join_ivf_joinstage(spark: SparkSession, r: int) -> int:
-    """The cell equi-join + per-query top-k ONLY, over prebuilt
-    assignments (`knn_join_cells`) — the probe-time cost of the
-    persisted-index deployment, isolated from the per-call centroid
-    scoring that dominates op_knn_join_ivf's end-to-end number."""
+    """The cell-cogrouped pair scoring + per-query top-k ONLY, over
+    prebuilt assignments (`knn_join_cells_cogrouped`, the join stage
+    knn_join_indexed runs) — the probe-time cost of the persisted-index
+    deployment, isolated from the per-call centroid scoring that
+    dominates op_knn_join_ivf's end-to-end number."""
     lv, rv = _knn_prepare(spark, r)
-    from dataframe_sql_spark.operators.similarity import knn_join_cells
+    from dataframe_sql_spark.operators.similarity import knn_join_cells_cogrouped
 
-    return _force(knn_join_cells(lv, rv, k=3))
+    return _force(knn_join_cells_cogrouped(lv, rv, k=3))
 
 
 op_knn_join_ivf_joinstage.prepare = _knn_prepare
