@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.scalars import const_array
+
 __all__ = [
     "token_count",
     "bpe_token_estimate",
@@ -68,7 +70,7 @@ def quality_features(text: Column) -> dict[str, Column]:
     chars = F.length(t).cast("double")
     words = _words(t)
     n_words = F.size(words).cast("double")
-    stop_arr = F.array(*[F.lit(w) for w in _STOPWORDS["en"]])
+    stop_arr = const_array(_STOPWORDS["en"], "string")
     return {
         "n_chars": F.length(t).cast("bigint"),
         "n_words": F.size(words).cast("bigint"),
@@ -233,7 +235,7 @@ def lang_id(text: Column) -> Column:
     when nothing matches. One projection, no shuffle."""
     words = _words(text)
     def hit_counter(sw: list[str]):
-        arr = F.array(*[F.lit(s) for s in sw])
+        arr = const_array(sw, "string")
         return lambda w: F.array_contains(arr, w)
 
     hits = {

@@ -217,7 +217,9 @@ def bloom_prefilter_join(
     LAZY: no driver collect, no literal (an early version collected
     the words into an ``F.lit(list)`` — per-element py4j conversion
     made literal CREATION cost ~0.5 ms/element, 8+ s at 16K words,
-    dwarfing the job itself). Probe: each row tests its k bit
+    dwarfing the job itself; driver-side constants now go through
+    :func:`~.scalars.const_array`, one plan node, but a collect would
+    still be an eager job). Probe: each row tests its k bit
     positions against the broadcast array with shift/mask expressions
     in whole-stage codegen, before the join's exchange.
 
@@ -395,10 +397,21 @@ def sorted_neighborhood_pairs(
     attribute (e.g. edit distance on the sort key itself) get both
     sides' values without re-joining the source table per side (r15:
     two broadcast joins + one extra scan dropped from the
-    x_sorted_neighborhood plan).
+    x_sorted_neighborhood plan). A carry column must not be ``id_col``,
+    start with ``__`` (the operator's own columns), or alias onto an
+    output column (``id``/``pos`` would become ``id_a``…); such names
+    raise ``ValueError`` naming the column.
     """
     from .lineage import truncate_lineage
     from .rank import global_rank
+
+    for c in carry_cols:
+        if c == id_col or c.startswith("__") or c in ("id", "pos"):
+            raise ValueError(
+                f"sorted_neighborhood_pairs: carry column {c!r} collides with "
+                f"id_col {id_col!r}, an internal __ column, or the "
+                "id_a/id_b/pos_a/pos_b outputs"
+            )
 
     order = [(c, True) for c in sort_cols] + [(id_col, True)]
     # r14: materialize the (id, pos) rank table once — it feeds BOTH

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .lineage import truncate_lineage
+from .scalars import const_array
 
 __all__ = ["global_rank"]
 
@@ -75,7 +76,8 @@ def global_rank(
     for pid in range(n):
         offsets.append(acc)
         acc += per.get(pid, 0)
-    off_arr = F.array(*[F.lit(o) for o in offsets])
+    # bigint: the offsets are row counts, which may pass 2^31
+    off_arr = const_array(offsets, "bigint")
 
     w = Window.partitionBy("__pid").orderBy(*sort_exprs)
     local = F.dense_rank().over(w) if dense else F.rank().over(w)

@@ -285,13 +285,13 @@ def negative_pairs(df: DataFrame, id_col: str, k: int = 4) -> DataFrame:
 
     idx = global_rank(df.select(id_col), [(id_col, True)], out_col="pos")
     n1 = idx.agg(F.count("*").alias("__n"))
-    from .scalars import broadcast_attach
+    from .scalars import broadcast_attach, const_array
 
     probes = broadcast_attach(idx, n1).select(
         id_col,
         "pos",
         "__n",
-        F.explode(F.array(*[F.lit(j) for j in range(1, k + 1)])).alias("j"),
+        F.explode(const_array(range(1, k + 1), "int")).alias("j"),
     )
     h = F.conv(
         F.substring(

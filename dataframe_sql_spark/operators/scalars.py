@@ -17,13 +17,19 @@ whitelisting ten benign scalar attachments.
 Also correct for a small-but-multi-row side (e.g. a quantile list):
 the constant key makes every (row, small-row) pair, i.e. exactly the
 cross product, still hash-planned.
+
+:func:`const_array` is the one way the package puts a driver-side list
+(query vector, LUTs, centroids, stopwords, salt buckets) into a plan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F, types as T
+import json
+import numbers
 
-__all__ = ["broadcast_attach"]
+from pyspark.sql import Column, DataFrame, functions as F, types as T
+
+__all__ = ["broadcast_attach", "const_array"]
 
 _KEY = "__attach_key"
 
@@ -71,3 +77,44 @@ def broadcast_attach(df: DataFrame, small: DataFrame) -> DataFrame:
         .join(F.broadcast(small.withColumn(_KEY, _key(small))), _KEY)
         .drop(_KEY)
     )
+
+
+_INT_RANGE = {"int": 1 << 31, "bigint": 1 << 63}
+
+
+def _checked(value, ddl: str):
+    """``value`` as a JSON-ready Python object of Spark type ``ddl``
+    (``double``, ``int``, ``bigint``, ``string`` or ``array<…>`` of
+    those); raises where ``from_json`` would silently yield NULL."""
+    if ddl.startswith("array<") and ddl.endswith(">"):
+        if isinstance(value, (str, bytes, dict)) or not hasattr(value, "__iter__"):
+            raise TypeError(f"const_array: {value!r} is not an {ddl}")
+        return [_checked(v, ddl[6:-1]) for v in value]
+    if ddl == "double" and isinstance(value, numbers.Real) and not isinstance(value, bool):
+        return float(value)
+    if ddl in _INT_RANGE and isinstance(value, numbers.Integral) and not isinstance(value, bool):
+        if -_INT_RANGE[ddl] <= int(value) < _INT_RANGE[ddl]:
+            return int(value)
+        raise ValueError(f"const_array: {value!r} is out of range for {ddl}")
+    if ddl == "string" and isinstance(value, str):
+        return value
+    raise TypeError(f"const_array: {value!r} is not a {ddl}")
+
+
+def const_array(values, elem: str) -> Column:
+    """A (nested) constant array of element type ``elem`` (Spark DDL,
+    e.g. ``"double"`` or ``"array<array<double>>"``) as ONE plan node.
+
+    ``F.lit(list)`` is ``array(lit(x), …)`` in pyspark: one py4j call
+    and one ``CreateArray`` child per element, and every copy of the
+    tree is analyzed again — a 4×4×16 LUT cost ~110 ms of plan
+    building. Here the values cross as one JSON string parsed by
+    ``from_json``, which ConstantFolding turns into a single array
+    ``Literal``, so optimized and physical plans carry the same values
+    the per-element form did. JSON keeps doubles bit-exact (Python
+    writes the shortest round-trip repr, the JVM parses it correctly
+    rounded; -0.0, subnormals, NaN and ±Infinity included). Values are
+    checked against ``elem`` first: ``from_json`` would turn a
+    mistyped or out-of-range value into a NULL array."""
+    ddl = f"array<{elem}>"
+    return F.from_json(F.lit(json.dumps(_checked(values, ddl))), ddl)

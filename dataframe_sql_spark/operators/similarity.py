@@ -20,13 +20,16 @@ Scale design:
 from __future__ import annotations
 
 import hashlib
+import json
 import math
+import os
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from ..functions.npsig import round_half_up_np
+from .scalars import const_array
 
 __all__ = [
     "cosine_col",
@@ -62,12 +65,11 @@ PQ_TRAIN_SAMPLE = 2048
 def cosine_col(vec: Column, query: list[float]) -> Column:
     """Cosine similarity of an array column against a constant query
     vector, as a single codegen'd expression (no UDF). The query enters
-    as ONE array literal (not dim separate literal nodes): per-query
-    cost is dominated by driver-side plan analysis, and collapsing
-    literal-per-element trees measured 2.3× on the PQ path (same
-    pattern throughout this module)."""
+    as ONE plan node (:func:`~.scalars.const_array`), not ``dim``
+    literal children: per-query cost is dominated by driver-side plan
+    analysis (same pattern throughout this module)."""
     q_norm = math.sqrt(sum(x * x for x in query)) or 1.0
-    q = F.lit([float(x) for x in query])
+    q = const_array(query, "double")
     v = vec.cast("array<double>")
     dot = F.aggregate(F.zip_with(v, q, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x)
     v_norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
@@ -109,8 +111,8 @@ def lsh_signature_col(vec: Column, planes: list[list[float]]) -> Column:
     (plan stays ~constant-size in num_bits; same dot products in the
     same order as the per-plane unrolled form, bit-identical output)."""
     v = vec.cast("array<double>")
-    planes_lit = F.lit([[float(x) for x in plane] for plane in planes])
-    pow2_lit = F.lit([1 << i for i in range(len(planes))])
+    planes_lit = const_array(planes, "array<double>")
+    pow2_lit = const_array([1 << i for i in range(len(planes))], "bigint")
     bits = F.zip_with(
         planes_lit,
         pow2_lit,
@@ -529,9 +531,11 @@ def ivf_assign_cells_2level(
             kids.append(super_ids[s])
 
     v = F.col(vec_col).cast("array<double>")
-    supers_lit = F.lit(supers)
-    kids_ids_lit = F.lit([[int(c) for c in kids] for kids in children])
-    kids_cents_lit = F.lit([[normed[c] for c in kids] for kids in children])
+    supers_lit = const_array(supers, "array<double>")
+    kids_ids_lit = const_array(children, "array<int>")
+    kids_cents_lit = const_array(
+        [[normed[c] for c in kids] for kids in children], "array<array<double>>"
+    )
 
     def scores(cands: Column) -> Column:
         return F.transform(
@@ -986,8 +990,8 @@ def pq_topk(
     approx = F.lit(0.0)
     for s in range(len(codebooks)):
         qs = query[s * sub : (s + 1) * sub]
-        lut = F.lit(
-            [float(sum(a * b for a, b in zip(qs, c))) for c in codebooks[s]]
+        lut = const_array(
+            [sum(a * b for a, b in zip(qs, c)) for c in codebooks[s]], "double"
         )
         approx = approx + F.element_at(lut, F.element_at(F.col("__pq"), s + 1) + 1)
     if score_digits is not None:
@@ -1019,7 +1023,9 @@ def ivf_index_write(
     """Build and persist the IVF index: assign every vector to its
     nearest centroid cell and write parquet PARTITIONED BY cell, with
     the centroid matrix stored alongside (``_centroids.json`` — the
-    leading underscore keeps Spark's reader from treating it as data).
+    leading underscore keeps Spark's reader from treating it as data)
+    and the read schema in ``_schema.json``, so probes skip schema
+    inference (:func:`_write_index`).
 
     This is the deployment shape for ANN at scale: the expensive
     assignment pass runs once, and every probe afterwards reads only
@@ -1046,9 +1052,6 @@ def ivf_index_write(
     Cell-boundary rows may land in a near-best cell (partial-probe
     recall trade); full probe stays exact.
     """
-    import json
-    import os
-
     if n_cells is None:
         n_cells = ivf_default_cells(df.count())
     cents = _train_centroids(df, vec_col, id_col, n_cells, centroids)
@@ -1056,22 +1059,52 @@ def ivf_index_write(
         "flat": ivf_assign_cells,
         "2level": ivf_assign_cells_2level,
     }[assign]
-    assigned = assigner(df, vec_col, cents, cell_col="cell")
-    # r14: shuffle by cell BEFORE the partitioned write (guide §6).
-    # Without it every map task writes a file into every cell
-    # directory it touches — M·cells files (measured: 1004 files for
-    # 1801 rows/16 cells at sf0.1, and M·4096 at the cell cap). One
-    # exchange of the payload for a run-once build buys exactly one
-    # occupancy-sized file per cell, and every partition-pruned probe
-    # afterwards lists/opens one file per probed cell instead of M.
-    # The shuffle partition count follows the session's shuffle
-    # parallelism (AQE-coalesced), not a local constant.
-    assigned.repartition(F.col("cell")).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(path)
+    _write_index(assigner(df, vec_col, cents, cell_col="cell"), path)
     with open(os.path.join(path, "_centroids.json"), "w") as f:
         json.dump(cents, f)
     return cents
+
+
+# Read schema of a cell-partitioned index, written beside its data by
+# _write_index (the leading underscore keeps Spark's reader off it).
+_INDEX_SCHEMA = "_schema.json"
+
+
+def _write_index(out: DataFrame, path: str) -> None:
+    """Write ``out`` as a parquet index PARTITIONED BY its ``cell``
+    column, with its read schema in ``_schema.json``.
+
+    r14: shuffle by cell BEFORE the partitioned write (guide §6).
+    Without it every map task writes a file into every cell directory
+    it touches — M·cells files (measured: 1004 files for 1801 rows/16
+    cells at sf0.1, and M·4096 at the cell cap). One exchange of the
+    payload for a run-once build buys exactly one occupancy-sized file
+    per cell, and every partition-pruned probe afterwards lists/opens
+    one file per probed cell instead of M. The shuffle partition count
+    follows the session's shuffle parallelism (AQE-coalesced), not a
+    local constant.
+
+    The recorded schema is what inference returns for the directory
+    (the data columns, then the partition column as ``cell int``),
+    derived from ``out.schema`` without a job."""
+    out.repartition(F.col("cell")).write.mode("overwrite").partitionBy(
+        "cell"
+    ).parquet(path)
+    schema = T.StructType(
+        [f for f in out.schema.fields if f.name != "cell"]
+        + [T.StructField("cell", T.IntegerType())]
+    )
+    with open(os.path.join(path, _INDEX_SCHEMA), "w") as f:
+        f.write(schema.json())
+
+
+def _read_index(spark, path: str) -> DataFrame:
+    """The index at ``path`` (:func:`_write_index`) read with its
+    recorded schema: no schema-inference job, which a plain
+    ``spark.read.parquet`` runs on every call. The ``cell`` partition
+    filters of the probes still prune directories at planning time."""
+    with open(os.path.join(path, _INDEX_SCHEMA)) as f:
+        return spark.read.schema(T.StructType.fromJson(json.load(f))).parquet(path)
 
 
 def knn_join_indexed(
@@ -1093,9 +1126,6 @@ def knn_join_indexed(
     paid once at index build). This is the production form of
     :func:`knn_join_ivf` — identical results for the same centroids
     and probe count (pytest-gated in test_ann_index.py)."""
-    import json
-    import os
-
     from .lineage import truncate_lineage
 
     with open(os.path.join(path, "_centroids.json")) as f:
@@ -1129,7 +1159,7 @@ def knn_join_indexed(
         r["__cell"] for r in lv.select("__cell").distinct().collect()
     )
     idx = (
-        spark.read.parquet(path)
+        _read_index(spark, path)
         .filter(F.col("cell").isin([int(c) for c in cells]))
         .select(
             F.col(right_id),
@@ -1153,9 +1183,6 @@ def ivf_topk_indexed(
     driver-side (n_cells dot products), scan ONLY the probed cell
     partitions, exact-cosine rerank. The ``cell`` filter is a partition
     filter, so unprobed cells never leave the file listing."""
-    import json
-    import os
-
     with open(os.path.join(path, "_centroids.json")) as f:
         centroids = json.load(f)
 
@@ -1163,7 +1190,7 @@ def ivf_topk_indexed(
         range(len(centroids)), key=lambda i: (-_cos_py(query, centroids[i]), i)
     )[:n_probe]
     return (
-        spark.read.parquet(path)
+        _read_index(spark, path)
         .filter(F.col("cell").isin(probe))
         .select(F.col(id_col), cosine_col(F.col(vec_col), query).alias("score"))
         .orderBy(F.desc("score"), F.asc(id_col))
@@ -1197,13 +1224,10 @@ def ivf_index_health(spark, path: str, vec_col: str = "embedding") -> DataFrame:
     (index-wide, or per appended batch via :func:`ivf_batch_drift`)
     is the re-train trigger; occupancy skew is the partition-size
     alarm. One scan of the index, one n_cells-row aggregate."""
-    import json
-    import os
-
     with open(os.path.join(path, "_centroids.json")) as f:
         centroids = json.load(f)
-    cents_lit = F.lit([[float(x) for x in c] for c in centroids])
-    df = spark.read.parquet(path)
+    cents_lit = const_array(centroids, "array<double>")
+    df = _read_index(spark, path)
     own = F.element_at(cents_lit, F.col("cell").cast("int") + 1)
     return (
         df.groupBy("cell")
@@ -1229,7 +1253,7 @@ def ivf_batch_drift(
     (``centroids="kmeans"`` rebuild) rather than letting partial-probe
     recall decay silently."""
     assigned = ivf_assign_cells(batch_df.select(vec_col), vec_col, centroids)
-    cents_lit = F.lit([[float(x) for x in c] for c in centroids])
+    cents_lit = const_array(centroids, "array<double>")
     own = F.element_at(cents_lit, F.col("__cell").cast("int") + 1)
     row = assigned.agg(
         F.avg(
@@ -1488,8 +1512,8 @@ def _ivfpq_scan(
                 ]
             )
         luts.append(lut_c)
-    probe_lit = F.lit([int(c) for c in probe])
-    luts_lit = F.lit(luts)
+    probe_lit = const_array(probe, "int")
+    luts_lit = const_array(luts, "array<array<double>>")
     cell_lut = F.element_at(
         luts_lit, F.array_position(probe_lit, F.col(cell_col)).cast("int")
     )
@@ -1573,7 +1597,7 @@ def ivfpq_index_write(
     """Build and persist the IVF-PQ index: PQ codes + unit vectors
     written parquet PARTITIONED BY cell, centroids and codebooks in
     ``_ivfpq_meta.json`` alongside (underscore-prefixed so Spark's
-    reader skips it).
+    reader skips it), the read schema in ``_schema.json``.
 
     Build-once/probe-many: the expensive parts (assignment pass,
     codebook training, encode) run once; every later query is a
@@ -1583,22 +1607,16 @@ def ivfpq_index_write(
     co-partitioned table and join the ``rerank`` candidates only.
     Returns (centroids, codebooks).
     """
-    import json
-    import os
-
     encoded, cents, books = _ivfpq_build(
         df, vec_col, id_col, n_cells, n_sub, n_codes, dim,
         centroid_method=centroids, assign=assign,
     )
-    out = encoded.withColumnRenamed("__cell", "cell").withColumnRenamed(
-        "__pq", "pq"
+    # the cell shuffle before the write measured 514→~cells files and
+    # −1.7 s on the build at sf0.1 (r14)
+    _write_index(
+        encoded.withColumnRenamed("__cell", "cell").withColumnRenamed("__pq", "pq"),
+        path,
     )
-    # r14: shuffle by cell before the partitioned write — same
-    # M·cells file-explosion fix as ivf_index_write (guide §6);
-    # measured 514→~cells files and −1.7 s on the build at sf0.1.
-    out.repartition(F.col("cell")).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(path)
     with open(os.path.join(path, "_ivfpq_meta.json"), "w") as f:
         json.dump({"centroids": cents, "codebooks": books}, f)
     return cents, books
@@ -1618,12 +1636,9 @@ def ivfpq_topk_indexed(
     the stored centroids, ONLY the probed cell partitions scanned
     (partition filter — unprobed cells never leave the file listing),
     ADC over stored codes, exact rerank over the stored vectors."""
-    import json
-    import os
-
     with open(os.path.join(path, "_ivfpq_meta.json")) as f:
         meta = json.load(f)
-    encoded = spark.read.parquet(path)
+    encoded = _read_index(spark, path)
     return _ivfpq_scan(
         encoded,
         meta["centroids"],

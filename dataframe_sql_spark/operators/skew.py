@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .scalars import const_array
+
 __all__ = ["with_salt", "salted_agg", "salted_join"]
 
 
@@ -85,6 +87,6 @@ def salted_join(
         )
     p = with_salt(probe, buckets)
     b = build.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(buckets)]))
+        "__salt", F.explode(const_array(range(buckets), "int"))
     )
     return p.join(b, on=[*on, "__salt"], how=how).drop("__salt")

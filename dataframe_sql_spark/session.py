@@ -15,11 +15,14 @@ chosen so the same code is correct on a 1000-executor cluster reading
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "tune_session", "tune_for_scale"]
+
+log = logging.getLogger(__name__)
 
 # Runtime-settable confs the engine depends on for CORRECTNESS (not just
 # speed) on *any* session, including one built elsewhere and passed in
@@ -85,28 +88,35 @@ def _cpus() -> str:
     return os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
 
 
-def tune_session(spark: SparkSession) -> None:
+def tune_session(spark: SparkSession) -> list[str]:
     """Apply the engine's required runtime-settable confs to an
     externally-built session (idempotent, best-effort per key).
 
     This is the guard against the works-locally/dies-in-driver class of
     bug: get_spark() bakes these into the builder, but a session handed
     to entry()/engine_for() has whatever confs its owner chose.
+
+    Returns the keys that could not be applied; each is also logged as
+    a warning.
     """
+    failed = []
     for key, value in _RUNTIME_CONFS.items():
         try:
             if spark.conf.get(key, None) != value:
                 spark.conf.set(key, value)
-        except Exception:  # pragma: no cover - conf missing in a future Spark
-            pass
+        except Exception as exc:
+            log.warning("tune_session: could not set %s=%s: %s", key, value, exc)
+            failed.append(key)
     # Local-mode sessions default to 200 shuffle partitions — a 6×
     # slowdown on a 32-core box. Match the core count; real clusters
     # are handled by tune_for_scale/AQE coalescing instead.
     try:
         if spark.conf.get("spark.master", "").startswith("local"):
             spark.conf.set("spark.sql.shuffle.partitions", _cpus())
-    except Exception:  # pragma: no cover
-        pass
+    except Exception as exc:
+        log.warning("tune_session: could not set spark.sql.shuffle.partitions: %s", exc)
+        failed.append("spark.sql.shuffle.partitions")
+    return failed
 
 
 def get_spark(app_name: str = "dataframe_sql_spark") -> SparkSession:
@@ -138,6 +148,16 @@ def get_spark(app_name: str = "dataframe_sql_spark") -> SparkSession:
         "spark.cleaner.periodicGC.interval": os.environ.get(
             "SPARK_GRAFT_PERIODIC_GC", "1min"
         ),
+        # Generated-class cache. The session's working set is larger
+        # than Spark's default 100 entries: one pipeline_curation pass
+        # (six curation ops, an IVF-PQ index write, eight probes; sf0.1,
+        # local[2] on a 4-core host) compiles ~225 distinct classes, so
+        # at 100 every later pass recompiled all of them, and the JIT
+        # work behind those compiles took 3.5-6 CPU s of a 17-19 s pass.
+        # At 1000 a later pass compiles none. Memory bound in SCALE.md.
+        # Static conf: CodeGenerator sizes its cache once per JVM, so it
+        # is builder-only and tune_session cannot retrofit it.
+        "spark.sql.codegen.cache.maxEntries": "1000",
     }
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -146,6 +166,18 @@ def get_spark(app_name: str = "dataframe_sql_spark") -> SparkSession:
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # If the session already existed, only its runtime SQL confs took
+    # the values above; the rest kept what the SparkContext started
+    # with (getOrCreate still copies them into the session conf, so read
+    # those from the context).
+    started = spark.sparkContext.getConf()
+    for key, value in builder_only.items():
+        if spark.conf.isModifiable(key):
+            got = spark.conf.get(key, None)
+        else:
+            got = started.get(key, None)
+        if got != value:
+            log.warning("get_spark: %s is %s on this session, not %s", key, got, value)
     return spark
 
 

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from dataframe_sql_spark.operators.joins import (
@@ -163,6 +164,17 @@ def test_sorted_neighborhood_carry_cols_match_rejoin(spark):
     for (a, b), (pa, pb, na, nb) in carried.items():
         assert (pa, pb) == plain[(a, b)]
         assert na == names[a] and nb == names[b]
+
+
+@pytest.mark.parametrize("carry", ["rid", "id", "pos", "__pos"])
+def test_sorted_neighborhood_rejects_colliding_carry_cols(spark, carry):
+    """A carry column equal to id_col, aliasing onto id_a/id_b/pos_a/
+    pos_b, or shadowing an internal __ column is rejected up front."""
+    from dataframe_sql_spark.operators.joins import sorted_neighborhood_pairs
+
+    df = spark.createDataFrame([(1, "aaa", 0, 0, 0)], ["rid", "name", "id", "pos", "__pos"])
+    with pytest.raises(ValueError, match=repr(carry)):
+        sorted_neighborhood_pairs(df, ["name"], "rid", carry_cols=("name", carry))
 
 
 def test_sorted_neighborhood_candidate_volume_is_linear(spark):

@@ -188,9 +188,13 @@ def test_aqe_splits_skewed_join(spark):
             "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
             "spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.shuffle.partitions",
         )
     }
     try:
+        # pinned: with few shuffle partitions (4 at local[4]) the hot
+        # partition never reaches 2x the median and nothing is split
+        spark.conf.set("spark.sql.shuffle.partitions", "32")
         spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
         spark.conf.set(
             "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8KB"

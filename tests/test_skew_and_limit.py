@@ -85,6 +85,17 @@ def test_salted_join_flattens_adversarial_skew(spark):
     salted plan must flatten it (hot key spread over the salt
     buckets), while returning exactly the plain join's rows on the
     same adversarial input."""
+    # pinned: the 16 salted groups need more partitions than a small
+    # host's core count to spread over (4 partitions held 43k rows)
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        _check_salted_join_flattens(spark)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+
+
+def _check_salted_join_flattens(spark):
     from dataframe_sql_spark.operators.skew import salted_join, with_salt
 
     N = int(spark.conf.get("spark.sql.shuffle.partitions"))
