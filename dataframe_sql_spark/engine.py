@@ -21,10 +21,17 @@ from .session import get_spark
 
 __all__ = [
     "SparkSqlEngine",
+    "plan_string",
     "query",
     "register_temp_table",
     "remove_temp_table",
 ]
+
+
+def plan_string(df: DataFrame, mode: str = "formatted") -> str:
+    """``df``'s query plan as ``df.explain(mode)`` prints it, returned
+    as a string (modes: simple, extended, codegen, cost, formatted)."""
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
 
 
 class SparkSqlEngine:
@@ -114,10 +121,7 @@ class SparkSqlEngine:
         dialect shim), as a string — the scale-debugging entry point:
         check PushedFilters / ReadSchema / join strategy / Exchanges
         before a query ships to a large cluster."""
-        df = self.query(sql)
-        return df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), mode
-        )
+        return plan_string(self.query(sql), mode)
 
     def _schema_lookup(self, table_name: str) -> list[str]:
         return self.spark.table(table_name).columns

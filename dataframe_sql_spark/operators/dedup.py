@@ -1078,132 +1078,93 @@ def simhash_dedup(
 # --------------------------------------------------------------------------
 
 
-def _cosine(a: Column, b: Column) -> Column:
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-    norm = lambda v: F.sqrt(  # noqa: E731
-        F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    return dot / (norm(a) * norm(b))
-
-
 def embedding_cosine_pairs(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    block_col: str | None,
+    block_col: str,
     threshold: float = 0.95,
 ) -> DataFrame:
-    """Pairs (id_a, id_b, cosine) with cosine ≥ threshold.
-
-    ``block_col`` is the blocking key (e.g. a cluster/LSH bucket id):
-    the self-join shuffles on it, keeping the pair space per-block.
-    With ``block_col=None`` this is the exact quadratic join — only
-    for small inputs or broadcast-side dimensions.
+    """Pairs (id_a, id_b, cosine), id_a < id_b in the same
+    ``block_col`` block (e.g. a cluster/LSH bucket id), with
+    cosine ≥ threshold. ``id_col`` must be integral: the kernel orders
+    pairs by numpy int comparison, identical to Spark's; any other id
+    type raises ``TypeError``.
 
     Input invariants (r15, advisor note): rows with a null id, a null
-    block key, or an empty vector are EXCLUDED up front — the
-    self-join form never pairs them anyway (null comparisons are
-    filtered), and the explicit filter makes the numpy kernel path
-    (where a null group IS pairable and empty vectors crash
-    ``np.stack``) agree with it by construction. Vectors must share
-    one dimensionality; ragged inputs raise inside the kernel rather
-    than silently dropping (the join form nulls them out). Zero-norm
-    vectors yield NaN cosine, which PASSES the threshold on both
-    paths (Spark orders NaN greatest; the kernel keeps
-    ``~(cos < threshold)``).
+    block key, or an empty vector are EXCLUDED up front (a self-join
+    never pairs them, and empty vectors crash ``np.stack``). Vectors
+    must share one dimensionality; ragged inputs raise inside the
+    kernel rather than silently dropping. A zero-norm vector's NaN
+    cosine PASSES the threshold (the kernel keeps
+    ``~(cos < threshold)``) and leaves the kernel as a null
+    ``cosine``: Arrow carries pandas NaN as null.
+
+    r14 (guide §4.2/§8): per-block pairs through ONE numpy
+    applyInPandas kernel instead of a self-join whose output carries
+    BOTH dim-wide vectors on every candidate row and evaluates the
+    interpreted cosine fold per pair (measured 11-12 s of the sf0.1
+    funnel wall; the kernel form is ~1 s). Vectors cross the Arrow
+    boundary once per block (n rows, not n² pairs); scores replicate
+    the expression fold BIT-FOR-BIT (:func:`~.similarity._fold_dots`
+    over :func:`~.similarity._fold_norms`, same division order —
+    pytest-asserted against the self-join form kept in tests/), and
+    only pairs that pass the threshold leave the kernel.
     """
+    import numpy as np
+    import pandas as pd
     from pyspark.sql.types import IntegralType
 
-    sel = [F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")]
-    if block_col:
-        sel.append(F.col(block_col).alias("__blk"))
-    base = df.select(*sel).filter(
-        F.col(id_col).isNotNull() & (F.size("__v") > 0)
+    from .similarity import _fold_dots, _fold_norms, _row_blocks
+
+    base = df.select(
+        F.col(id_col),
+        F.col(vec_col).cast("array<double>").alias("__v"),
+        F.col(block_col).alias("__blk"),
+    ).filter(
+        F.col(id_col).isNotNull() & (F.size("__v") > 0) & F.col("__blk").isNotNull()
     )
-    if block_col:
-        base = base.filter(F.col("__blk").isNotNull())
     id_type = dict(zip(base.schema.names, base.schema))[id_col].dataType
-    if block_col and isinstance(id_type, IntegralType):
-        # r14 (guide §4.2/§8): per-block pairs through ONE numpy
-        # applyInPandas kernel instead of a self-join whose output
-        # carries BOTH dim-wide vectors on every candidate row and
-        # evaluates the interpreted cosine fold per pair (measured
-        # 11-12 s of the sf0.1 funnel wall; the kernel form is ~1 s).
-        # Vectors cross the Arrow boundary once per block (n rows, not
-        # n² pairs); scores replicate the fold BIT-FOR-BIT (elementwise
-        # products + sequential cumsum + trailing +0.0, sqrt, same
-        # division order — the knn_join_cells_cogrouped discipline,
-        # pytest-asserted there), and only pairs that pass the
-        # threshold leave the kernel. Integral ids only: the kernel
-        # orders pairs by numpy int comparison, identical to Spark's;
-        # other id types keep the join form below.
-        import numpy as np
-        import pandas as pd
+    if not isinstance(id_type, IntegralType):
+        raise TypeError(
+            f"embedding_cosine_pairs: id column {id_col!r} is "
+            f"{id_type.simpleString()}, not an integral type"
+        )
 
-        def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-            n = len(pdf)
-            if n < 2:
-                return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-            ids = pdf[id_col].to_numpy()
-            order = np.argsort(ids, kind="stable")
-            ids = ids[order]
-            V = np.stack(
-                [np.asarray(v, np.float64) for v in pdf["__v"].to_numpy()[order]]
+    def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+        n = len(pdf)
+        if n < 2:
+            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
+        ids = pdf[id_col].to_numpy()
+        order = np.argsort(ids, kind="stable")
+        ids = ids[order]
+        V = np.stack([np.asarray(v, np.float64) for v in pdf["__v"].to_numpy()[order]])
+        nrm = _fold_norms(V)
+        pos = np.arange(n)
+        outs = []
+        for rows in _row_blocks(n, V):
+            cos = _fold_dots(V[rows], V) / (nrm[rows, None] * nrm[None, :])
+            # upper triangle by id order: row r pairs with every column
+            # c > r — id uniqueness makes sorted index order the id
+            # order. ~(cos < t), not (cos >= t): NaN (zero-norm
+            # vectors) must PASS (advisor note, r15)
+            r_idx, c_idx = np.nonzero(
+                (pos[None, :] > pos[rows, None]) & ~(cos < threshold)
             )
-            nrm = np.sqrt(np.cumsum(V * V, axis=1)[:, -1] + 0.0)
-            d = V.shape[1]
-            step = max(1, (4 << 20) // max(1, n * d))
-            outs = []
-            for s in range(0, n, step):
-                Vs = V[s : s + step]
-                dots = (
-                    np.cumsum(Vs[:, None, :] * V[None, :, :], axis=2)[:, :, -1]
-                    + 0.0
+            outs.append(
+                pd.DataFrame(
+                    {
+                        "id_a": ids[rows][r_idx],
+                        "id_b": ids[c_idx],
+                        "cosine": cos[r_idx, c_idx],
+                    }
                 )
-                cos = dots / (nrm[s : s + step, None] * nrm[None, :])
-                # upper triangle by id order: row (global r) pairs with
-                # every column c > r — id uniqueness makes sorted index
-                # order the id order
-                # ~(cos < t), not (cos >= t): NaN (zero-norm vectors)
-                # must PASS, matching Spark's NaN-greatest ordering on
-                # the expression path (advisor note, r15)
-                r_idx, c_idx = np.nonzero(
-                    (np.arange(n)[None, :] > (s + np.arange(len(Vs)))[:, None])
-                    & ~(cos < threshold)
-                )
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "id_a": ids[s + r_idx],
-                            "id_b": ids[c_idx],
-                            "cosine": cos[r_idx, c_idx],
-                        }
-                    )
-                )
-            return pd.concat(outs, ignore_index=True)
+            )
+        return pd.concat(outs, ignore_index=True)
 
-        t = id_type.simpleString()
-        return base.groupBy("__blk").applyInPandas(
-            block_pairs, schema=f"`id_a` {t}, `id_b` {t}, `cosine` double"
-        )
-    # merge hint: the vector side's width is estimator-blind
-    # (ArrayType.defaultSize counts one element), so a corpus-scaled
-    # embedding side can slip under the broadcast threshold while being
-    # GBs in memory — the round-10 broadcast_audit class
-    a, b = base.alias("a"), base.hint("merge").alias("b")
-    cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-    if block_col:
-        cond = cond & (F.col("a.__blk") == F.col("b.__blk"))
-    return (
-        a.join(b, cond)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            _cosine(F.col("a.__v"), F.col("b.__v")).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
+    t = id_type.simpleString()
+    return base.groupBy("__blk").applyInPandas(
+        block_pairs, schema=f"`id_a` {t}, `id_b` {t}, `cosine` double"
     )
 
 
@@ -1211,7 +1172,7 @@ def embedding_dedup(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    block_col: str | None = None,
+    block_col: str,
     threshold: float = 0.95,
 ) -> DataFrame:
     """Greedy min-id survivorship over cosine near-duplicate pairs."""

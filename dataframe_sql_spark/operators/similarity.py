@@ -13,8 +13,19 @@ Scale design:
   set pays the exact-cosine cost. Approximate, sublinear candidate
   cost; the 100 TB path (also the basis of an IVF-style variant:
   partition by signature prefix = coarse cell).
-- knn join: broadcast the smaller side; per-row top-k via window over
-  the blocked pair set.
+- knn join: an equi-join on IVF cells (never a cartesian product),
+  each cell's pairs scored in one numpy kernel; per-row top-k via
+  window. The brute-force cross join is the pytest reference in
+  tests/sim_reference.py.
+
+Every numpy kernel here replicates the interpreted expression fold
+bit-for-bit through one helper per idiom: :func:`_fold_dots` (dot
+products), :func:`_fold_norms` (row norms), :func:`_row_blocks`
+(~32 MB product blocks), :func:`_md5_sample` (the seedless build
+sample) and :func:`_lloyd_means` (one distributed Lloyd update);
+the expression side is :func:`_dot_col` / :func:`_norm_col` /
+:func:`_cosine_cols`. ``operators/dedup.py``'s pair kernel reuses
+them.
 """
 
 from __future__ import annotations
@@ -43,7 +54,6 @@ __all__ = [
     "ivf_index_write",
     "ivf_kmeans_centroids",
     "ivf_topk_indexed",
-    "knn_join_bruteforce",
     "ivf_probe_cells",
     "knn_join_ivf",
     "knn_join_indexed",
@@ -71,9 +81,24 @@ def cosine_col(vec: Column, query: list[float]) -> Column:
     q_norm = math.sqrt(sum(x * x for x in query)) or 1.0
     q = const_array(query, "double")
     v = vec.cast("array<double>")
-    dot = F.aggregate(F.zip_with(v, q, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x)
-    v_norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
-    return dot / (v_norm * F.lit(q_norm))
+    return _dot_col(v, q) / (_norm_col(v) * F.lit(q_norm))
+
+
+def _dot_col(v: Column, c: Column) -> Column:
+    """Interpreted sequential-fold dot: ``aggregate(zip_with(v, c, *), 0.0, +)``."""
+    return F.aggregate(F.zip_with(v, c, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _norm_col(v: Column) -> Column:
+    """L2 norm of an array<double> column as the sequential fold of
+    squares (the expression :func:`_fold_norms` replicates)."""
+    return F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
+
+
+def _cosine_cols(a: Column, b: Column) -> Column:
+    """Cosine between two array<double> COLUMNS (e.g. each row's own
+    cell centroid): the fold dot over the two fold norms."""
+    return _dot_col(a, b) / (_norm_col(a) * _norm_col(b))
 
 
 def cosine_topk(
@@ -116,15 +141,9 @@ def lsh_signature_col(vec: Column, planes: list[list[float]]) -> Column:
     bits = F.zip_with(
         planes_lit,
         pow2_lit,
-        lambda plane, p2: F.when(
-            F.aggregate(
-                F.zip_with(v, plane, lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            > 0,
-            p2.cast("long"),
-        ).otherwise(F.lit(0).cast("long")),
+        lambda plane, p2: F.when(_dot_col(v, plane) > 0, p2.cast("long")).otherwise(
+            F.lit(0).cast("long")
+        ),
     )
     return F.aggregate(bits, F.lit(0).cast("long"), lambda acc, x: acc + x)
 
@@ -225,13 +244,23 @@ def _ivf_centroids(
     the driver; at 100 TB this is the precomputed index-build step
     (replace with distributed k-means there; the probe path is
     unchanged)."""
-    rows = (
-        df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("v"))
+    return [list(r.v) for r in _md5_sample(df, vec_col, id_col, n_cells)]
+
+
+def _md5_sample(df: DataFrame, vec_col: str, id_col: str, n: int, *extra: str) -> list:
+    """The ``n`` rows with the smallest ``md5(id)`` as (id, ``v`` =
+    the vector as array<double>, ``extra`` columns): the seedless
+    sample every index build draws, one bounded TakeOrdered collect."""
+    return (
+        df.select(
+            F.col(id_col),
+            F.col(vec_col).cast("array<double>").alias("v"),
+            *[F.col(c) for c in extra],
+        )
         .orderBy(F.md5(F.col(id_col).cast("string")))
-        .limit(n_cells)
+        .limit(n)
         .collect()
     )
-    return [list(r.v) for r in rows]
 
 
 def ivf_kmeans_centroids(
@@ -298,31 +327,41 @@ def ivf_kmeans_centroids(
     else:
         train = df
     for _ in range(max(0, n_iters - 1)):
-        upd = (
-            # input pruned to the vector column: mapInPandas ships
-            # every column it is handed
-            ivf_assign_cells(
-                train.select(F.col(vec_col)), vec_col, cents, cell_col="__cell"
-            )
-            .select(
-                F.col("__cell"),
-                F.posexplode(F.col(vec_col).cast("array<double>")).alias(
-                    "__dim", "__x"
-                ),
-            )
-            .groupBy("__cell", "__dim")
-            .agg(F.round(F.avg("__x"), round_digits).alias("__m"))
-            .collect()
+        # input pruned to the vector column: mapInPandas ships every
+        # column it is handed
+        means = _lloyd_means(
+            ivf_assign_cells(train.select(F.col(vec_col)), vec_col, cents),
+            "__cell",
+            vec_col,
+            round_digits,
         )
-        by_cell: dict[int, dict[int, float]] = {}
-        for r in upd:
-            by_cell.setdefault(r[0], {})[r[1]] = r[2]
-        dim = len(cents[0])
-        cents = [
-            [by_cell[c][d] for d in range(dim)] if c in by_cell else cents[c]
-            for c in range(len(cents))
-        ]
+        cents = [means.get(c, cents[c]) for c in range(len(cents))]
     return cents
+
+
+def _lloyd_means(
+    assigned: DataFrame, cell_col: str, vec_col: str, round_digits: int
+) -> dict[int, list[float]]:
+    """One Lloyd update: ``{cell: mean vector}`` over the rows of
+    ``assigned`` (a vector column plus its ``cell_col``), each
+    coordinate the ``posexplode`` + per-(cell, dim) ``avg`` rounded to
+    ``round_digits``. The shuffle carries only cells·dim keys after
+    map-side combine, and the cells·dim means are the only driver
+    collect. Cells without rows are absent: the caller decides whether
+    an empty cell keeps its old centroid or drops out."""
+    upd = (
+        assigned.select(
+            F.col(cell_col),
+            F.posexplode(F.col(vec_col).cast("array<double>")).alias("__dim", "__x"),
+        )
+        .groupBy(cell_col, "__dim")
+        .agg(F.round(F.avg("__x"), round_digits).alias("__m"))
+        .collect()
+    )
+    by_cell: dict[int, dict[int, float]] = {}
+    for r in upd:
+        by_cell.setdefault(r[0], {})[r[1]] = r[2]
+    return {c: [m[d] for d in range(len(m))] for c, m in by_cell.items()}
 
 
 def _train_centroids(
@@ -376,17 +415,31 @@ def _fold_dots(V, M, seed=None):
     return np.cumsum(np.concatenate([start, prods], axis=2), axis=2)[:, :, -1]
 
 
+def _fold_norms(V):
+    """Row L2 norms replicating ``sqrt(aggregate(v, 0.0, acc + x*x))``
+    (:func:`_norm_col`) bit-for-bit: a sequential fold of squares (the
+    squares are +0.0 or positive, so no zero-sign edge)."""
+    return np.sqrt(np.cumsum(V * V, axis=1)[:, -1] + 0.0)
+
+
+def _row_blocks(n: int, M):
+    """Row slices of an ``n``-row matrix scored against every row of
+    ``M``: each block's (rows, len(M), dim) float64 products stay
+    ~32 MB at any batch size."""
+    step = max(1, (4 << 20) // max(1, M.size))
+    for s in range(0, n, step):
+        yield slice(s, s + step)
+
+
 def _score_blocks(V, M, reduce, digits: int | None = None, seed=None):
     """The one rule by which a vector is scored against a centroid or
     codebook matrix: :func:`_fold_dots`, HALF_UP-rounded to ``digits``
     when given (Spark's ``round`` — npsig.round_half_up_np), then
-    ``reduce`` (an argmax or top-n over each row's scores). Runs over
-    ~32 MB row blocks so the (rows, len(M), dim) products stay bounded
-    at any batch size; returns the reduced blocks concatenated."""
-    step = max(1, (4 << 20) // max(1, M.size))
+    ``reduce`` (an argmax or top-n over each row's scores), over
+    :func:`_row_blocks`; returns the reduced blocks concatenated."""
     out = []
-    for s in range(0, len(V), step):
-        S = _fold_dots(V[s : s + step], M, seed)
+    for rows in _row_blocks(len(V), M):
+        S = _fold_dots(V[rows], M, seed)
         out.append(reduce(S if digits is None else round_half_up_np(S, digits)))
     return np.concatenate(out)
 
@@ -538,17 +591,7 @@ def ivf_assign_cells_2level(
     )
 
     def scores(cands: Column) -> Column:
-        return F.transform(
-            cands,
-            lambda c: F.round(
-                F.aggregate(
-                    F.zip_with(v, c, lambda a, b: a * b),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                CELL_SCORE_DECIMALS,
-            ),
-        )
+        return F.transform(cands, lambda c: F.round(_dot_col(v, c), CELL_SCORE_DECIMALS))
 
     s_scores = scores(supers_lit)
     s_pos = F.array_position(s_scores, F.array_max(s_scores)).cast("int")
@@ -599,45 +642,6 @@ def ivf_topk(
     )
 
 
-def knn_join_bruteforce(
-    left: DataFrame,
-    right: DataFrame,
-    k: int,
-    left_id: str = "id_a",
-    right_id: str = "id_b",
-    vec_col: str = "embedding",
-    block_col: str | None = None,
-) -> DataFrame:
-    """For every left row, its k nearest right rows by cosine.
-
-    right is broadcast when small (Catalyst decides under the 64 MB
-    threshold); ``block_col`` turns the cross product into a per-block
-    join for the large-large case. Top-k per left id via window.
-    """
-    lv = left.select(
-        F.col(left_id), F.col(vec_col).cast("array<double>").alias("__lv"),
-        *([F.col(block_col).alias("__blk_l")] if block_col else []),
-    )
-    rv = right.select(
-        F.col(right_id), F.col(vec_col).cast("array<double>").alias("__rv"),
-        *([F.col(block_col).alias("__blk_r")] if block_col else []),
-    )
-    cond = F.lit(True) if not block_col else (F.col("__blk_l") == F.col("__blk_r"))
-    dot = F.aggregate(
-        F.zip_with("__lv", "__rv", lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    pairs = (
-        lv.join(rv, cond)
-        .withColumn("score", dot / (norm(F.col("__lv")) * norm(F.col("__rv"))))
-        .select(left_id, right_id, "score")
-    )
-    w = Window.partitionBy(left_id).orderBy(F.desc("score"), F.asc(right_id))
-    return pairs.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k).drop("__rn")
-
-
 def knn_join_ivf(
     left: DataFrame,
     right: DataFrame,
@@ -666,7 +670,7 @@ def knn_join_ivf(
     With ``n_probe == n_cells`` (the default) every query probes every
     cell, the candidate set is EXACTLY all pairs (each right row lives
     in exactly one cell, so no pair duplicates either), and the result
-    is provably identical to :func:`knn_join_bruteforce` — while the
+    is provably identical to the brute-force cross join — while the
     plan is still the hash equi-join. The differential oracle
     certifies the full-probe config; partial-probe recall is
     pytest-gated like :func:`ivf_topk`'s.
@@ -768,30 +772,26 @@ def knn_join_cells_cogrouped(
         # it without overflow) is exactly (score desc, id_b asc).
         border = np.argsort(ids_b, kind="stable")
         B, ids_b = B[border], ids_b[border]
-        # norms: sequential fold of squares, exactly the hoisted-JVM
-        # sqrt(aggregate(...)) (squares are +0.0, so no zero-sign edge)
-        ln = np.sqrt(np.cumsum(A * A, axis=1)[:, -1] + 0.0)
-        rn = np.sqrt(np.cumsum(B * B, axis=1)[:, -1] + 0.0)
-        nl = len(A)
+        ln = _fold_norms(A)
+        rn = _fold_norms(B)
         kk = min(k, len(B))
-        step = max(1, (4 << 20) // max(1, B.size))  # ~32 MB f64 blocks
         outs = []
-        for s in range(0, nl, step):
-            As = A[s : s + step]
-            score = _fold_dots(As, B) / (ln[s : s + step, None] * rn[None, :])
+        for rows in _row_blocks(len(A), B):
+            As = A[rows]
+            score = _fold_dots(As, B) / (ln[rows, None] * rn[None, :])
             okey = _f64_order_key(score)
             if exclude_self:
                 # self rows sink below every real candidate and are
                 # dropped after selection (scores are finite, so
                 # int64 min never collides with a real key)
                 okey = np.where(
-                    ids_b[None, :] == ids_a[s : s + step, None],
+                    ids_b[None, :] == ids_a[rows, None],
                     np.int64(-(2**63)),
                     okey,
                 )
             sel = np.argsort(~okey, axis=1, kind="stable")[:, :kk]
             srows = np.arange(len(As))[:, None]
-            ia = np.repeat(ids_a[s : s + step], kk)
+            ia = np.repeat(ids_a[rows], kk)
             ib = ids_b[sel].ravel()
             sc = score[srows, sel].ravel()
             if exclude_self:
@@ -849,13 +849,7 @@ def pq_train(
     Returns ``codebooks[s][c] = centroid vector`` (len dim/n_sub).
     """
     assert dim % n_sub == 0, "dim must divide evenly into n_sub subspaces"
-    rows = (
-        df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("v"))
-        .orderBy(F.md5(F.col(id_col).cast("string")))
-        .limit(sample)
-        .collect()
-    )
-    X = np.array([r.v for r in rows])  # (n, dim)
+    X = np.array([r.v for r in _md5_sample(df, vec_col, id_col, sample)])  # (n, dim)
     return _pq_train_np(X, dim, n_sub, n_codes, iters, round_digits)
 
 
@@ -1198,18 +1192,6 @@ def ivf_topk_indexed(
     )
 
 
-def _cosine_cols(v: Column, c: Column) -> Column:
-    """Cosine between two array COLUMNS (cosine_col's constant-query
-    fast path doesn't apply — here the 'query' varies per row, e.g.
-    each row's own cell centroid)."""
-    dot = F.aggregate(
-        F.zip_with(v, c, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-    )
-    nv = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
-    nc = F.sqrt(F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x))
-    return dot / (nv * nc)
-
-
 def ivf_index_health(spark, path: str, vec_col: str = "embedding") -> DataFrame:
     """Operational health of a persisted IVF index: per-cell occupancy
     and the mean cosine of each vector to its OWN cell centroid.
@@ -1328,37 +1310,26 @@ def kmeans_assign(
         # the same surviving-id list as element_at(ids_lit, pos).
         cn = np.array([[float(x) for x in c] for c in cents], np.float64)
         ids = np.array(cluster_ids, np.int64)
-        step = max(1, (4 << 20) // max(1, cn.size))
 
         def nearest(pdf, V):
             cl = np.empty(len(V), np.int64)
-            for s in range(0, len(V), step):
-                diff = V[s : s + step, None, :] - cn[None, :, :]
+            for rows in _row_blocks(len(V), cn):
+                diff = V[rows, None, :] - cn[None, :, :]
                 d2 = np.cumsum(diff * diff, axis=2)[:, :, -1]
-                cl[s : s + step] = ids[np.argmin(d2, axis=1)]
+                cl[rows] = ids[np.argmin(d2, axis=1)]
             return pdf.assign(**{out_col: cl})
 
         return _map_vectors(frame, vec_col, f"`{out_col}` int", nearest)
 
-    for it in range(n_iters - 1):
-        upd = (
-            # the update pass needs only (cluster, vec): pruning the
-            # kernel's input to the vector column keeps every other
-            # column off the Arrow boundary (guide §4.1)
-            _assigned(df.select(F.col(vec_col)))
-            .select(F.col(out_col), F.posexplode(v).alias("dim", "x"))
-            .groupBy(out_col, "dim")
-            .agg(F.round(F.avg("x"), round_digits).alias("m"))
-            .collect()
+    for _ in range(n_iters - 1):
+        # the update pass needs only (cluster, vec): pruning the
+        # kernel's input to the vector column keeps every other column
+        # off the Arrow boundary (guide §4.1)
+        means = _lloyd_means(
+            _assigned(df.select(F.col(vec_col))), out_col, vec_col, round_digits
         )
-        by_cluster: dict[int, dict[int, float]] = {}
-        for r in upd:
-            by_cluster.setdefault(r[0], {})[r[1]] = r[2]
-        cluster_ids = sorted(by_cluster)
-        dim = len(cents[0])
-        cents = [
-            [by_cluster[c][d] for d in range(dim)] for c in cluster_ids
-        ]
+        cluster_ids = sorted(means)
+        cents = [means[c] for c in cluster_ids]
     return _assigned(df)
 
 
@@ -1413,24 +1384,21 @@ def _ivfpq_build(
         # k-means training and the 2-level assigner read the unit
         # vectors as a column
         v = F.col(vec_col).cast("array<double>")
-        nrm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
+        nrm = _norm_col(v)
         df_n = df.withColumn("__vn", F.transform(v, lambda x: x / nrm))
         cents = _train_centroids(df_n, "__vn", id_col, n_cells, centroid_method)
         if two_level:
             src = ivf_assign_cells_2level(df_n, "__vn", cents).drop("__vn")
-    rows = (
-        src.select(
-            F.col(id_col),
-            F.col(vec_col).cast("array<double>").alias("v"),
-            *([F.col("__cell")] if two_level else []),
-        )
-        .orderBy(F.md5(F.col(id_col).cast("string")))
-        .limit(max(n_cells, PQ_TRAIN_SAMPLE) if cents is None else PQ_TRAIN_SAMPLE)
-        .collect()
+    rows = _md5_sample(
+        src,
+        vec_col,
+        id_col,
+        max(n_cells, PQ_TRAIN_SAMPLE) if cents is None else PQ_TRAIN_SAMPLE,
+        *(["__cell"] if two_level else []),
     )
 
     def unit(V):
-        return V / np.sqrt(np.cumsum(V * V, axis=1)[:, -1:] + 0.0)
+        return V / _fold_norms(V)[:, None]
 
     X = np.array([r.v for r in rows], np.float64)
     if cents is None:

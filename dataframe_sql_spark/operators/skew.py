@@ -16,7 +16,7 @@ helpers cover the two cases AQE doesn't:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .scalars import const_array

@@ -717,45 +717,10 @@ def _make_runner(spec: QuerySpec) -> Callable[[SparkSession, str], DataFrame]:
 
 
 # Export order for queries()/oracle_sql(). The driver evaluates entries
-# in dict order and scores only the first 50 — so the window rotates
-# each round until every catalog entry has a driver-green CORRECTNESS
-# row. Everything below position 50 still ships; nothing is dropped.
-#
-# ATTESTATION ROTATION SCHEDULE (updated 2026-08-15, round 9). Driver-
-# green history per entry is in COVERAGE.md's "driver round" column.
-#   r6+r7 (scored twice, identical): §2 grammar core — 41 entries
-#       (p_/d_/j_/a_/w_/o_/u_/q_) + 2 dialect stresses + 7 anchors.
-#   r8: streaming st_* (7), time-series ts_* (5), functions f_* (17 —
-#       16 green; f_array_setops errored in the driver's canonicalizer
-#       on raw array output, fixed + re-staged below), extended joins
-#       (6), set-op variants (2), window variants (2),
-#       p_null_semantics, q_recursive_cte, dd_substring_remove
-#       → 41 banked + 8 anchors. Cumulative after r8: 153/234.
-#   r9 (this file, positions 1-50): 8 anchors + f_array_setops
-#       (serialized fix, kept in-window to bank it) + the 14
-#       never-attested a_* aggregates + x_* part 1 (27 entries).
-#       Whole block pre-validated strict at sf0.1 (commits fee2f23/
-#       f0cab31: 49/49) and re-swept at sf0.01 this round.
-#   r10 (positions 51+, staged in order): x_* part 2 (x_pagerank,
-#       x_profile, x_snapshot_diff — the 3 heaviest, each judge- or
-#       sweep-verified at sf0.1), the never-attested dd_* block
-#       (incl. the r8 replay certificates dd_minhash_banded_verified /
-#       dd_simhash_probed_verified / dd_incremental_verified and the
-#       rows-only production configs), sim_/emb_ (incl. the fixed
-#       emb_quantize_int8, sim_ann_pq_verified, sim_ann_ivf_2level_
-#       probed, hash-certified sim_ann_lsh), the txt_* tail, and
-#       mm_decode_stub, plus x_dsir_weights (added late in r9) — 41
-#       entries; window = 8 anchors + 41 + f_array_setops = 50. After
-#       r10 every catalog entry has a driver attestation (rows-only
-#       entries get the weaker rows-check; their hash coverage is the
-#       certificate entries).
-# The rotation is DATA-DRIVEN (round 9): PRIORITY is assembled from
-# named blocks, so rotating the next window into scoring position is a
-# one-line reorder of the block sum below — no hand-editing of a
-# 200-line literal in a possibly-degraded session (round 7 died before
-# committing its rotation; this removes the failure mode).
-# tests/test_driver_contract.py pins the window; the schedule comment
-# above stays the narrative source of truth.
+# in dict order and scores only the first 50, so the head of PRIORITY is
+# the scored window; every CATALOG entry not listed follows in
+# definition order and still ships. Per-entry driver-green history is
+# the attestation ledger in COVERAGE.md (tools/attestation_ledger.py).
 
 # Anchors: driver-green r2-r8 continuously; every window keeps them so
 # it always contains known-good entries spanning TPC-H, dedup,
@@ -771,9 +736,186 @@ _ANCHORS: list[str] = [
     "w_rank",
 ]
 
-# r9 window block (round 9, scored this round): the fixed
-# f_array_setops + the 14 never-attested a_* aggregates + x_* part 1.
-_R9_BLOCK: list[str] = [
+# Rotate the next window in by replacing this literal with the output of
+#   python tools/attestation_ledger.py --propose-window
+# (the anchors, the 42 stalest attestations, then the rest in the current
+# order). tests/test_driver_contract.py pins the window.
+PRIORITY: list[str] = [
+    "tpch_q1_pricing",
+    "tpch_q3_shipping",
+    "tpch_q5_revenue",
+    "dd_exact",
+    "dd_minhash_verified",
+    "sim_knn_join",
+    "pipe_curation",
+    "w_rank",
+    "a_cube",
+    "a_grouping_sets",
+    "w_rank_multi",
+    "w_dense_rank",
+    "w_frames",
+    "w_lag_lead",
+    "w_analytics",
+    "o_limit_offset",
+    "o_orderby_ordinal",
+    "u_union_all",
+    "u_intersect",
+    "u_except",
+    "u_intersect_all",
+    "u_except_all",
+    "q_subquery_nested",
+    "q_scalar_subquery",
+    "q_in_subquery",
+    "q_exists_correlated",
+    "p_mixed_case_schema",
+    "p_spaced_columns",
+    "dd_substring_remove",
+    "st_tumbling",
+    "st_sliding",
+    "st_session",
+    "st_static_join",
+    "st_rollup_multires",
+    "st_stream_join",
+    "st_dedup",
+    "ts_gapfill",
+    "ts_anomaly_mad",
+    "ts_anomaly",
+    "ts_ohlc_resample",
+    "ts_ewma",
+    "j_asof",
+    "q_recursive_cte",
+    "j_semi",
+    "j_anti",
+    "u_symdiff",
+    "j_salted",
+    "p_null_semantics",
+    "w_time_range",
+    "j_hint_broadcast",
+    "j_bloom_prefilter",
+    "j_interval_overlap",
+    "a_hll_sketch_rollup",
+    "a_hll_intersect_cert",
+    "a_cms_heavy_hitters",
+    "x_cohort_retention",
+    "x_temperature_mix",
+    "x_record_linkage",
+    "g_triangles",
+    "mm_audio_chunks",
+    "mm_video_frames",
+    "pipe_dedup_funnel",
+    "tpch_q7_volume",
+    "tpch_q9_profit",
+    "tpch_q13_custdist",
+    "tpch_q15_top_supplier",
+    "tpch_q17_small_qty",
+    "tpch_q19_disjunctive",
+    "tpch_q21_waiting",
+    "tpch_q20_share_suppliers",
+    "p_project_alias",
+    "p_autonaming",
+    "p_arith",
+    "p_string_literal",
+    "p_cast",
+    "p_filter_predicates",
+    "p_between_in",
+    "p_distinct",
+    "d_timestamp_fn",
+    "j_inner",
+    "j_left",
+    "j_right",
+    "j_full",
+    "j_cross",
+    "j_comma_implicit",
+    "j_self_alias",
+    "a_global",
+    "a_groupby_bare",
+    "a_groupby_having",
+    "a_having_no_groupby",
+    "a_count_distinct",
+    "a_rollup",
+    "o_orderby_limit",
+    "p_select_star",
+    "p_case",
+    "w_rank_partition",
+    "u_union",
+    "q_cte",
+    "tpch_q6_forecast",
+    "tpch_q12_priority_counts",
+    "tpch_q14_promo",
+    "tpch_q10_returns",
+    "x_sessionize",
+    "x_funnel",
+    "mm_blob_meta",
+    "tpch_q2_min_supplier",
+    "tpch_q4_priority",
+    "tpch_q8_mktshare",
+    "tpch_q11_value_parts",
+    "tpch_q16_supplier_cnt",
+    "tpch_q22_idle_custs",
+    "tpch_q18_big_orders",
+    "dd_exact_normalized",
+    "dd_fingerprint",
+    "dd_ngram_jaccard",
+    "dd_clusters_verified",
+    "dd_embedding",
+    "dd_substring_spans",
+    "dd_decontaminate",
+    "dd_prefix_pairs",
+    "dd_bloom_cert",
+    "dd_minhash_est_cert",
+    "dd_fuzzy_decontaminate",
+    "sim_topk",
+    "sim_knn_join_probed",
+    "sim_ann_ivf",
+    "sim_ann_ivf_probed",
+    "sim_ann_recall_cert",
+    "txt_stats",
+    "txt_quality",
+    "txt_pii_scrub",
+    "txt_bpe_roundtrip",
+    "txt_chunks",
+    "txt_word_rarity",
+    "x_pagerank",
+    "x_profile",
+    "x_snapshot_diff",
+    "dd_minhash_banded_verified",
+    "dd_simhash_probed_verified",
+    "dd_incremental_verified",
+    "dd_url_dedup",
+    "dd_lines",
+    "dd_containment",
+    "dd_overlap_matrix",
+    "dd_incremental",
+    "dd_minhash",
+    "dd_minhash_pairs",
+    "dd_clusters",
+    "dd_simhash",
+    "dd_simhash_probed",
+    "dd_semantic",
+    "sim_ann_pq_verified",
+    "sim_ann_ivf_2level_probed",
+    "sim_ann_lsh",
+    "sim_ann_pq",
+    "sim_ann_ivfpq",
+    "sim_ann_ivfpq_verified",
+    "emb_quantize_int8",
+    "emb_standardize",
+    "emb_kmeans",
+    "txt_tfidf",
+    "txt_bm25",
+    "txt_pmi",
+    "txt_lm_score",
+    "txt_inverted_index",
+    "txt_repetition",
+    "txt_char_entropy",
+    "txt_len_histogram",
+    "txt_langid",
+    "txt_langid_golden",
+    "txt_winnow_fingerprint",
+    "txt_winnow_maponly",
+    "txt_bpe_tokens",
+    "mm_decode_stub",
+    "x_dsir_weights",
     "f_array_setops",
     "a_percentile",
     "a_salted_agg",
@@ -818,305 +960,15 @@ _R9_BLOCK: list[str] = [
     "x_skew_report",
 ]
 
-# r10 staged block (rotate into scoring position next round by moving
-# this term ahead of _R9_BLOCK in PRIORITY): x_* part 2, the dd_*
-# tail incl. the r8/r9 replay certificates, sim_/emb_ incl. the fixed
-# emb_quantize_int8 and the composed sim_ann_ivfpq_verified, the
-# txt_* tail, mm_decode_stub. Pre-validated strict at sf0.1 in round
-# 9 (29 hash + 11 rows-only green, zero failures).
-_R10_BLOCK: list[str] = [
-    "x_pagerank",
-    "x_profile",
-    "x_snapshot_diff",
-    "dd_minhash_banded_verified",
-    "dd_simhash_probed_verified",
-    "dd_incremental_verified",
-    "dd_url_dedup",
-    "dd_lines",
-    "dd_containment",
-    "dd_overlap_matrix",
-    "dd_incremental",
-    "dd_minhash",
-    "dd_minhash_pairs",
-    "dd_clusters",
-    "dd_simhash",
-    "dd_simhash_probed",
-    "dd_semantic",
-    "sim_ann_pq_verified",
-    "sim_ann_ivf_2level_probed",
-    "sim_ann_lsh",
-    "sim_ann_pq",
-    "sim_ann_ivfpq",
-    "sim_ann_ivfpq_verified",
-    "emb_quantize_int8",
-    "emb_standardize",
-    "emb_kmeans",
-    "txt_tfidf",
-    "txt_bm25",
-    "txt_pmi",
-    "txt_lm_score",
-    "txt_inverted_index",
-    "txt_repetition",
-    "txt_char_entropy",
-    "txt_len_histogram",
-    "txt_langid",
-    "txt_langid_golden",
-    "txt_winnow_fingerprint",
-    "txt_winnow_maponly",
-    "txt_bpe_tokens",
-    "mm_decode_stub",
-    "x_dsir_weights",
-]
-
-# r11 staged block — FIRST OLDEST-FIRST window (policy switch, round
-# 10). With the never-attested backlog retired by the r10 rotation,
-# the rotation metric changes from coverage to attestation AGE: each
-# round's window = the 8 anchors + the 42 entries whose latest
-# driver-green row is stalest (never first, then ascending last-green
-# round, ties by catalog order), so a regression in a long-green entry
-# cannot hide indefinitely behind an ancient attestation. The block
-# below is the deterministic output of
-#   python tools/attestation_ledger.py --propose-window --assume-current-green
-# at the r10 HEAD (assumes the pre-validated r10 window goes green;
-# if any r10 entry comes back red, it re-enters by the same rule —
-# red rows don't refresh age — so re-run the tool before swapping).
-# r11's first commit: move this term ahead of _R10_BLOCK in PRIORITY
-# and regenerate COVERAGE.md.
-_R11_BLOCK: list[str] = [
-    "o_orderby_limit",  # last green: r2
-    "p_select_star",  # last green: r3
-    "p_case",  # last green: r3
-    "w_rank_partition",  # last green: r3
-    "u_union",  # last green: r3
-    "q_cte",  # last green: r3
-    "tpch_q6_forecast",  # last green: r3
-    "tpch_q12_priority_counts",  # last green: r3
-    "tpch_q14_promo",  # last green: r3
-    "tpch_q10_returns",  # last green: r4
-    "x_sessionize",  # last green: r4
-    "x_funnel",  # last green: r4
-    "mm_blob_meta",  # last green: r4
-    "tpch_q2_min_supplier",  # last green: r4
-    "tpch_q4_priority",  # last green: r4
-    "tpch_q8_mktshare",  # last green: r4
-    "tpch_q11_value_parts",  # last green: r4
-    "tpch_q16_supplier_cnt",  # last green: r4
-    "tpch_q22_idle_custs",  # last green: r4
-    "tpch_q18_big_orders",  # last green: r5
-    "dd_exact_normalized",  # last green: r5
-    "dd_fingerprint",  # last green: r5
-    "dd_ngram_jaccard",  # last green: r5
-    "dd_clusters_verified",  # last green: r5
-    "dd_embedding",  # last green: r5
-    "dd_substring_spans",  # last green: r5
-    "dd_decontaminate",  # last green: r5
-    "dd_prefix_pairs",  # last green: r5
-    "dd_bloom_cert",  # last green: r5
-    "dd_minhash_est_cert",  # last green: r5
-    "dd_fuzzy_decontaminate",  # last green: r5
-    "sim_topk",  # last green: r5
-    "sim_knn_join_probed",  # last green: r5
-    "sim_ann_ivf",  # last green: r5
-    "sim_ann_ivf_probed",  # last green: r5
-    "sim_ann_recall_cert",  # last green: r5
-    "txt_stats",  # last green: r5
-    "txt_quality",  # last green: r5
-    "txt_pii_scrub",  # last green: r5
-    "txt_bpe_roundtrip",  # last green: r5
-    "txt_chunks",  # last green: r5
-    "txt_word_rarity",  # last green: r5
-]
-
-# §2 grammar core + previously-green entries (driver rounds in
-# COVERAGE.md); everything not listed follows in definition order via
-# _ordered_names().
-_PRIOR_GREEN: list[str] = [
-    "p_project_alias",
-    "p_autonaming",
-    "p_arith",
-    "p_string_literal",
-    "p_cast",
-    "p_filter_predicates",
-    "p_between_in",
-    "p_distinct",
-    "d_timestamp_fn",
-    "j_inner",
-    "j_left",
-    "j_right",
-    "j_full",
-    "j_cross",
-    "j_comma_implicit",
-    "j_self_alias",
-    "a_global",
-    "a_groupby_bare",
-    "a_groupby_having",
-    "a_having_no_groupby",
-    "a_count_distinct",
-    "a_rollup",
-    "a_cube",
-    "a_grouping_sets",
-    "w_rank_multi",
-    "w_dense_rank",
-    "w_frames",
-    "w_lag_lead",
-    "w_analytics",
-    "o_limit_offset",
-    "o_orderby_ordinal",
-    "u_union_all",
-    "u_intersect",
-    "u_except",
-    "u_intersect_all",
-    "u_except_all",
-    "q_subquery_nested",
-    "q_scalar_subquery",
-    "q_in_subquery",
-    "q_exists_correlated",
-    "p_mixed_case_schema",
-    "p_spaced_columns",
-    "p_select_star",
-    "p_case",
-    "w_rank_partition",
-    "u_union",
-    "q_cte",
-    "o_orderby_limit",
-]
-
-# ROUND 11 ROTATION (executed): first OLDEST-FIRST window — 8 anchors
-# + the 42 stalest attestations (r2–r5 cohort). Verified against the
-# REAL CORRECTNESS_r10.json via a fresh
-#   python tools/attestation_ledger.py --propose-window
-# (no --assume flag; rows-only r10 rows count green per _row_green —
-# they were attested in the r10 window with certificates green in the
-# same window) — the fresh proposal matched the staged block exactly,
-# 42/42 names in order.
-# ROUND 12 ROTATION (executed): deterministic output of
-#   python tools/attestation_ledger.py --propose-window
-# against the REAL CORRECTNESS_r11.json (50/50 green, so no red
-# re-entries). Refresh targets: the r5-era join/sketch/tpch cohort
-# plus the head of the r6/r7 dialect/join/agg block — exactly the
-# stalest-42 by last-green round, ties by catalog order.
-# ROUND 13 RECIPE: re-run --propose-window once CORRECTNESS_r12
-# exists, stage _R13_BLOCK, and set
-#   PRIORITY = _ANCHORS + _R13_BLOCK + _R12_BLOCK + ... + _PRIOR_GREEN
-# ROUND 14 ROTATION (executed): deterministic output of
-#   python tools/attestation_ledger.py --propose-window
-# against the REAL CORRECTNESS_r13.json (50/50 green, so no red
-# re-entries). Refresh targets: the r7 window/setop/subquery tail
-# plus the r8 streaming/timeseries/join block — exactly the
-# stalest-42 by last-green round, ties by catalog order. This
-# executes the rotation r13 staged-but-skipped (VERDICT r13 item 1).
-_R14_BLOCK: list[str] = [
-    "a_cube",  # last green: r7
-    "a_grouping_sets",  # last green: r7
-    "w_rank_multi",  # last green: r7
-    "w_dense_rank",  # last green: r7
-    "w_frames",  # last green: r7
-    "w_lag_lead",  # last green: r7
-    "w_analytics",  # last green: r7
-    "o_limit_offset",  # last green: r7
-    "o_orderby_ordinal",  # last green: r7
-    "u_union_all",  # last green: r7
-    "u_intersect",  # last green: r7
-    "u_except",  # last green: r7
-    "u_intersect_all",  # last green: r7
-    "u_except_all",  # last green: r7
-    "q_subquery_nested",  # last green: r7
-    "q_scalar_subquery",  # last green: r7
-    "q_in_subquery",  # last green: r7
-    "q_exists_correlated",  # last green: r7
-    "p_mixed_case_schema",  # last green: r7
-    "p_spaced_columns",  # last green: r7
-    "dd_substring_remove",  # last green: r8
-    "st_tumbling",  # last green: r8
-    "st_sliding",  # last green: r8
-    "st_session",  # last green: r8
-    "st_static_join",  # last green: r8
-    "st_rollup_multires",  # last green: r8
-    "st_stream_join",  # last green: r8
-    "st_dedup",  # last green: r8
-    "ts_gapfill",  # last green: r8
-    "ts_anomaly_mad",  # last green: r8
-    "ts_anomaly",  # last green: r8
-    "ts_ohlc_resample",  # last green: r8
-    "ts_ewma",  # last green: r8
-    "j_asof",  # last green: r8
-    "q_recursive_cte",  # last green: r8
-    "j_semi",  # last green: r8
-    "j_anti",  # last green: r8
-    "u_symdiff",  # last green: r8
-    "j_salted",  # last green: r8
-    "p_null_semantics",  # last green: r8
-    "w_time_range",  # last green: r8
-    "j_hint_broadcast",  # last green: r8
-]
-
-_R12_BLOCK: list[str] = [
-    "j_bloom_prefilter",  # last green: r5
-    "j_interval_overlap",  # last green: r5
-    "a_hll_sketch_rollup",  # last green: r5
-    "a_hll_intersect_cert",  # last green: r5
-    "a_cms_heavy_hitters",  # last green: r5
-    "x_cohort_retention",  # last green: r5
-    "x_temperature_mix",  # last green: r5
-    "x_record_linkage",  # last green: r5
-    "g_triangles",  # last green: r5
-    "mm_audio_chunks",  # last green: r5
-    "mm_video_frames",  # last green: r5
-    "pipe_dedup_funnel",  # last green: r5
-    "tpch_q7_volume",  # last green: r5
-    "tpch_q9_profit",  # last green: r5
-    "tpch_q13_custdist",  # last green: r5
-    "tpch_q15_top_supplier",  # last green: r5
-    "tpch_q17_small_qty",  # last green: r5
-    "tpch_q19_disjunctive",  # last green: r5
-    "tpch_q21_waiting",  # last green: r5
-    "tpch_q20_share_suppliers",  # last green: r5
-    "p_project_alias",  # last green: r7
-    "p_autonaming",  # last green: r7
-    "p_arith",  # last green: r7
-    "p_string_literal",  # last green: r7
-    "p_cast",  # last green: r7
-    "p_filter_predicates",  # last green: r7
-    "p_between_in",  # last green: r7
-    "p_distinct",  # last green: r7
-    "d_timestamp_fn",  # last green: r7
-    "j_inner",  # last green: r7
-    "j_left",  # last green: r7
-    "j_right",  # last green: r7
-    "j_full",  # last green: r7
-    "j_cross",  # last green: r7
-    "j_comma_implicit",  # last green: r7
-    "j_self_alias",  # last green: r7
-    "a_global",  # last green: r7
-    "a_groupby_bare",  # last green: r7
-    "a_groupby_having",  # last green: r7
-    "a_having_no_groupby",  # last green: r7
-    "a_count_distinct",  # last green: r7
-    "a_rollup",  # last green: r7
-]
-
-PRIORITY: list[str] = (
-    _ANCHORS
-    + _R14_BLOCK
-    + _R12_BLOCK
-    + _R11_BLOCK
-    + _R10_BLOCK
-    + _R9_BLOCK
-    + _PRIOR_GREEN
-)
-
 
 def _ordered_names() -> list[str]:
     from . import registry_ext, registry_tpch  # noqa: F401  (extend CATALOG on import)
 
     missing = [n for n in PRIORITY if n not in CATALOG]
     assert not missing, f"PRIORITY names not in CATALOG: {missing}"
-    # first occurrence wins: oldest-first blocks (r11+) intentionally
-    # repeat names already listed in older blocks / _PRIOR_GREEN, so a
-    # rotation stays a one-line block reorder with no hand-deduping
-    head = list(dict.fromkeys(PRIORITY))
-    rest = [n for n in CATALOG if n not in set(head)]
-    return head + rest
+    assert len(set(PRIORITY)) == len(PRIORITY), "PRIORITY repeats a name"
+    listed = set(PRIORITY)
+    return PRIORITY + [n for n in CATALOG if n not in listed]
 
 
 def spark_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

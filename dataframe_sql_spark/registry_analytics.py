@@ -13,19 +13,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.text import (
-    annotate_documents,
-    bpe_token_estimate,
-    fingerprint,
-    lang_id,
-    token_count,
-)
+from .functions.text import token_count
 from .operators.joins import (
-    asof_join,
     best_match_linkage,
-    range_join,
     sorted_neighborhood_pairs,
-    symmetric_difference,
 )
 from .operators.packing import pack_sequences
 from .operators.sampling import (
@@ -36,8 +27,8 @@ from .operators.sampling import (
     hex_threshold,
     stratified_hash_sample,
 )
-from .operators.similarity import cosine_topk, ivf_topk, knn_join_ivf, lsh_topk
-from .registry import CATALOG, QuerySpec, engine_for
+from .operators.similarity import knn_join_ivf
+from .registry import engine_for
 
 from .registry_common import (  # noqa: F401
     _BUCKET_SQL,

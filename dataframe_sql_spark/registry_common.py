@@ -11,17 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from .operators.dedup import (
-    blocked_ngram_jaccard,
-    embedding_dedup,
-    exact_dedup,
-    hashed_shingle_frame,
-    minhash_candidate_pairs,
-    minhash_dedup,
     ngram_jaccard_pairs,
-    oph_densify_rotation,
-    oph_raw_lanes,
     shingle_frame,
-    simhash_dedup,
 )
 from .registry import CATALOG, QuerySpec, engine_for
 

@@ -11,13 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.text import (
-    annotate_documents,
-    bpe_token_estimate,
-    fingerprint,
-    lang_id,
-    token_count,
-)
+from .functions.text import fingerprint
 from .operators.dedup import (
     blocked_ngram_jaccard,
     embedding_dedup,
@@ -31,7 +25,7 @@ from .operators.dedup import (
     shingle_frame,
     simhash_dedup,
 )
-from .registry import CATALOG, QuerySpec, engine_for
+from .registry import engine_for
 
 from .registry_common import (  # noqa: F401
     _KM_CTE,

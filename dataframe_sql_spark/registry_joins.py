@@ -12,12 +12,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from .operators.joins import (
     asof_join,
-    best_match_linkage,
     range_join,
-    sorted_neighborhood_pairs,
     symmetric_difference,
 )
-from .registry import CATALOG, QuerySpec, engine_for
+from .registry import engine_for
 
 from .registry_common import (  # noqa: F401
     _events,

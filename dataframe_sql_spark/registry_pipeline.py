@@ -12,10 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.text import (
-    annotate_documents,
-    bpe_token_estimate,
     fingerprint,
-    lang_id,
     token_count,
 )
 from .multimodal.binary import (
@@ -24,26 +21,10 @@ from .multimodal.binary import (
     decode_image_batch,
     sample_video_frames,
 )
-from .operators.dedup import (
-    blocked_ngram_jaccard,
-    embedding_dedup,
-    exact_dedup,
-    hashed_shingle_frame,
-    minhash_candidate_pairs,
-    minhash_dedup,
-    ngram_jaccard_pairs,
-    oph_densify_rotation,
-    oph_raw_lanes,
-    shingle_frame,
-    simhash_dedup,
-)
+from .operators.dedup import exact_dedup
 from .operators.sampling import (
-    dataset_mix,
-    global_shuffle,
-    hash_sample,
     hash_split,
     hex_threshold,
-    stratified_hash_sample,
 )
 
 from .registry_common import (  # noqa: F401

@@ -42,8 +42,8 @@ _reg(
     "sim_knn_join",
     # cell-keyed kNN join (knn_join_ivf): candidates come from an IVF
     # cell EQUI-join, never a cartesian product — the plan here is the
-    # 100-TB plan (the brute-force all-pairs form stays available as
-    # similarity.py::knn_join_bruteforce for pytest baselines). Full
+    # 100-TB plan (the brute-force all-pairs form is the pytest
+    # baseline in tests/sim_reference.py::knn_join_bruteforce). Full
     # probe (n_probe == n_cells) is provably exact, so the brute-force
     # DuckDB oracle below certifies it; partial-probe recall is
     # pytest-gated (test_operators.py::test_knn_join_ivf_partial_probe).

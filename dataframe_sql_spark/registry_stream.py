@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from .registry import CATALOG, QuerySpec, engine_for
+from .registry import engine_for
 from .streaming.pipeline import (
     dimension_enriched_counts,
     purchase_attribution,

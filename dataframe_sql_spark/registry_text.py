@@ -12,9 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.text import (
-    annotate_documents,
     bpe_token_estimate,
-    fingerprint,
     lang_id,
     token_count,
 )

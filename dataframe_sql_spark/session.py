@@ -142,12 +142,8 @@ def get_spark(app_name: str = "dataframe_sql_spark") -> SparkSession:
         # standard recommendation for iterative/streaming apps at any
         # cluster size. Builder-time only: ContextCleaner reads it at
         # SparkContext start, so tune_session cannot retrofit it onto a
-        # foreign session. Env-overridable so the interval can be
-        # A/B-isolated (r15) and tuned per deployment without a code
-        # edit; the default stays the measured local/bench value.
-        "spark.cleaner.periodicGC.interval": os.environ.get(
-            "SPARK_GRAFT_PERIODIC_GC", "1min"
-        ),
+        # foreign session.
+        "spark.cleaner.periodicGC.interval": "1min",
         # Generated-class cache. The session's working set is larger
         # than Spark's default 100 entries: one pipeline_curation pass
         # (six curation ops, an IVF-PQ index write, eight probes; sf0.1,

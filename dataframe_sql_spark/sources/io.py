@@ -99,10 +99,6 @@ def scan_fan_out(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     """
     import os
 
-    # kill-switch for A/B isolation and deployments where the input
-    # layout already guarantees scan parallelism (default on)
-    if os.environ.get("SPARK_GRAFT_FAN_OUT", "1") == "0":
-        return df
     try:
         if os.path.isdir(path):
             n_bytes = sum(

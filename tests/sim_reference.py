@@ -1,12 +1,13 @@
 """Expression-form references for the numpy vector kernels in
-``operators/similarity.py``.
+``operators/similarity.py`` and ``operators/dedup.py``.
 
 Each function here is the pure Spark-expression formulation of a
 library kernel — the same math the DuckDB replay certificates mirror
 in SQL (``round(list_inner_product(...), 8)`` cell scores,
-first-match argmax, seeded PQ folds). The parity tests in
-``test_ann_index.py`` compare the library's numpy output against
-these bit-for-bit; nothing in the library calls them.
+first-match argmax, seeded PQ folds, self-join cosine). The parity
+tests in ``test_ann_index.py``, ``test_dedup.py`` and
+``test_operators.py`` compare the library's output against these
+bit-for-bit; nothing in the library calls them.
 """
 
 from __future__ import annotations
@@ -16,18 +17,15 @@ from pyspark.sql import functions as F
 
 from dataframe_sql_spark.operators.similarity import (
     CELL_SCORE_DECIMALS,
+    _cosine_cols,
+    _dot_col,
     _ivf_centroids,
+    _lloyd_means,
+    _norm_col,
     _normed,
     ivf_assign_cells_2level,
     pq_train,
 )
-
-
-def _dot(v: Column, c: Column) -> Column:
-    """Interpreted sequential-fold dot: aggregate(zip_with(v, c, *), 0.0, +)."""
-    return F.aggregate(
-        F.zip_with(v, c, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-    )
 
 
 def _cell_sims(vec_col: str, centroids: list[list[float]]) -> Column:
@@ -35,7 +33,7 @@ def _cell_sims(vec_col: str, centroids: list[list[float]]) -> Column:
     CELL_SCORE_DECIMALS, the centroid matrix as ONE nested literal."""
     v = F.col(vec_col).cast("array<double>")
     cents_lit = F.lit([_normed(c) for c in centroids])
-    return F.transform(cents_lit, lambda c: F.round(_dot(v, c), CELL_SCORE_DECIMALS))
+    return F.transform(cents_lit, lambda c: F.round(_dot_col(v, c), CELL_SCORE_DECIMALS))
 
 
 def ivf_assign_cells_expr(
@@ -106,25 +104,10 @@ def ivf_kmeans_centroids_expr(
         )
         train = df.filter(coin < F.lit(cap / n_rows))
     for _ in range(max(0, n_iters - 1)):
-        upd = (
-            ivf_assign_cells_expr(train, vec_col, cents)
-            .select(
-                "__cell",
-                F.posexplode(F.col(vec_col).cast("array<double>")).alias(
-                    "__dim", "__x"
-                ),
-            )
-            .groupBy("__cell", "__dim")
-            .agg(F.round(F.avg("__x"), round_digits).alias("__m"))
-            .collect()
+        means = _lloyd_means(
+            ivf_assign_cells_expr(train, vec_col, cents), "__cell", vec_col, round_digits
         )
-        by_cell: dict[int, dict[int, float]] = {}
-        for r in upd:
-            by_cell.setdefault(r[0], {})[r[1]] = r[2]
-        cents = [
-            [by_cell[c][d] for d in range(len(cents[0]))] if c in by_cell else cents[c]
-            for c in range(len(cents))
-        ]
+        cents = [means.get(c, cents[c]) for c in range(len(cents))]
     return cents
 
 
@@ -189,7 +172,7 @@ def ivfpq_build_expr(
     2-level assigner and ``pq_train`` have no numpy twin and are the
     library's own."""
     v_raw = F.col(vec_col).cast("array<double>")
-    nrm = F.sqrt(F.aggregate(v_raw, F.lit(0.0), lambda acc, x: acc + x * x))
+    nrm = _norm_col(v_raw)
     df_n = df.withColumn("__vn", F.transform(v_raw, lambda x: x / nrm))
     trainer = {"sample": _ivf_centroids, "kmeans": ivf_kmeans_centroids_expr}[
         centroid_method
@@ -230,20 +213,75 @@ def knn_join_cells_expr(
     with per-pair cosine as the interpreted fold (norms hoisted below
     the join — same expression over the same array, same doubles) and
     a per-left top-k window."""
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    lvn = lv.withColumn("__ln", norm(F.col("__lv")))
-    rvn = rv.withColumn("__rn", norm(F.col("__rv")))
+    lvn = lv.withColumn("__ln", _norm_col(F.col("__lv")))
+    rvn = rv.withColumn("__rn", _norm_col(F.col("__rv")))
     pairs = lvn.join(rvn.hint("merge"), "__cell")
     if exclude_self:
         pairs = pairs.filter(F.col(left_id) != F.col(right_id))
     scored = pairs.withColumn(
-        "score", _dot(F.col("__lv"), F.col("__rv")) / (F.col("__ln") * F.col("__rn"))
+        "score", _dot_col(F.col("__lv"), F.col("__rv")) / (F.col("__ln") * F.col("__rn"))
     ).select(left_id, right_id, "score")
     w = Window.partitionBy(left_id).orderBy(F.desc("score"), F.asc(right_id))
     return (
         scored.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= k)
         .drop("__rn")
+    )
+
+
+def knn_join_bruteforce(
+    left: DataFrame,
+    right: DataFrame,
+    k: int,
+    left_id: str = "id_a",
+    right_id: str = "id_b",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """For every left row, its k nearest right rows by cosine over the
+    full cross product, top-k per left id by window: the exact answer
+    a full-probe ``knn_join_ivf`` must equal."""
+    lv = left.select(F.col(left_id), F.col(vec_col).cast("array<double>").alias("__lv"))
+    rv = right.select(F.col(right_id), F.col(vec_col).cast("array<double>").alias("__rv"))
+    pairs = (
+        lv.join(rv, F.lit(True))
+        .withColumn("score", _cosine_cols(F.col("__lv"), F.col("__rv")))
+        .select(left_id, right_id, "score")
+    )
+    w = Window.partitionBy(left_id).orderBy(F.desc("score"), F.asc(right_id))
+    return pairs.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k).drop("__rn")
+
+
+def embedding_cosine_pairs_expr(
+    df: DataFrame, id_col: str, vec_col: str, block_col: str, threshold: float = 0.95
+) -> DataFrame:
+    """Reference for ``dedup.embedding_cosine_pairs``: the blocked
+    self-join (``a.id < b.id`` within a block) with the interpreted
+    cosine fold, after the same null-id / null-block / empty-vector
+    exclusion. A pair with a zero-norm vector is kept with a null
+    cosine, as the kernel keeps it: its NaN passes ``~(cos < t)`` and
+    Arrow carries NaN out of pandas as null. (A bare ``dot / norms``
+    would raise DIVIDE_BY_ZERO under ANSI, or give null and drop the
+    pair without it.)"""
+    base = df.select(
+        F.col(id_col),
+        F.col(vec_col).cast("array<double>").alias("__v"),
+        F.col(block_col).alias("__blk"),
+    ).filter(
+        F.col(id_col).isNotNull() & (F.size("__v") > 0) & F.col("__blk").isNotNull()
+    )
+    a, b = base.alias("a"), base.hint("merge").alias("b")
+    cond = (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")) & (
+        F.col("a.__blk") == F.col("b.__blk")
+    )
+    va, vb = F.col("a.__v"), F.col("b.__v")
+    return (
+        a.join(b, cond)
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            F.when(_norm_col(va) * _norm_col(vb) != 0, _cosine_cols(va, vb)).alias(
+                "cosine"
+            ),
+        )
+        .filter(F.col("cosine").isNull() | (F.col("cosine") >= threshold))
     )

@@ -24,6 +24,7 @@ import re
 
 import pytest
 
+from dataframe_sql_spark.engine import plan_string
 from dataframe_sql_spark.registry import spark_queries
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -50,9 +51,7 @@ def plans(spark):
         # hashpartitioning(doc_hash#12, 32)`), which the key-level
         # assertions below need; "formatted" hoists them into a
         # separate Arguments section
-        out[name] = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "simple"
-        )
+        out[name] = plan_string(df, "simple")
     return out
 
 
@@ -181,9 +180,7 @@ def bench_plans(spark):
     out = {}
     for name in BENCH_KEYS:
         df = qs[name](spark, SF_DIR)
-        out[name] = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "simple"
-        )
+        out[name] = plan_string(df, "simple")
     return out
 
 

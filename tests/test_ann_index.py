@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from dataframe_sql_spark.engine import plan_string
 from dataframe_sql_spark.operators.similarity import (
     ivf_index_write,
     ivf_topk,
@@ -38,9 +39,7 @@ def test_indexed_probe_prunes_partitions(spark, tmp_path):
     path = str(tmp_path / "ivf_index")
     ivf_index_write(emb, path, "embedding", "vec_id", n_cells=16)
     probe = ivf_topk_indexed(spark, path, QUERY, k=10, n_probe=4)
-    plan = probe._sc._jvm.PythonSQLUtils.explainString(
-        probe._jdf.queryExecution(), "formatted"
-    )
+    plan = plan_string(probe)
     # the cell predicate must be a PartitionFilters entry on the scan
     # (file-listing-level pruning), not a pushed/post-scan data filter
     assert "PartitionFilters" in plan
@@ -251,9 +250,7 @@ def test_ivfpq_indexed_parity_and_partition_pruning(spark, tmp_path):
     # same centroids/codebooks (deterministic build) -> identical result
     assert [i for i, _ in inline] == [i for i, _ in indexed]
     # probe must prune partitions at the file listing level
-    plan = indexed_df._sc._jvm.PythonSQLUtils.explainString(
-        indexed_df._jdf.queryExecution(), "formatted"
-    )
+    plan = plan_string(indexed_df)
     assert "PartitionFilters" in plan
     pf_line = next(
         line for line in plan.splitlines() if "PartitionFilters" in line
@@ -422,9 +419,7 @@ def test_2level_no_udf_in_plan(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     cents = _ivf_centroids(emb, "embedding", "vec_id", n_cells=16)
     df = ivf_assign_cells_2level(emb, "embedding", cents, cell_col="c")
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = plan_string(df)
     assert "EvalPython" not in plan
 
 

@@ -2,17 +2,8 @@
 
 from __future__ import annotations
 
-import io
-from contextlib import redirect_stdout
-
+from dataframe_sql_spark.engine import plan_string
 from dataframe_sql_spark.sources.io import write_bucketed
-
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def test_bucketed_join_has_no_exchange(spark, engine):
@@ -30,7 +21,7 @@ def test_bucketed_join_has_no_exchange(spark, engine):
         .hint("merge")  # force sort-merge so broadcast doesn't mask bucketing
         .join(spark.table("b_lineitem"), "o_orderkey")
     )
-    plan = _plan(joined)
+    plan = plan_string(joined)
     assert "Exchange" not in plan, plan  # co-located: no shuffle on either side
     assert "SortMergeJoin" in plan
     assert joined.count() > 0

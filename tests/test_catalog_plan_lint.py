@@ -11,11 +11,14 @@ here even if its sf0.01 oracle row is green.
 
 from __future__ import annotations
 
+import ast
 import re
+from pathlib import Path
 
 import pytest
 
 import __spark_entry__ as entrymod
+from dataframe_sql_spark.engine import plan_string
 from tests.conftest import SF_DIR
 
 # Entries whose construction itself runs Spark jobs (bounded: offset
@@ -74,12 +77,6 @@ _CARTESIAN_OK = {
 _ROW_PYTHON_OK: set[str] = set()
 
 
-def _formatted(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 @pytest.fixture(scope="module")
 def _built(spark):
     fmt: dict[str, str] = {}
@@ -88,7 +85,7 @@ def _built(spark):
     for name, fn in entrymod.queries().items():
         try:
             df = fn(spark, SF_DIR)
-            fmt[name] = _formatted(df)
+            fmt[name] = plan_string(df)
             tree[name] = df._jdf.queryExecution().executedPlan().toString()
             schemas[name] = df.schema
         except Exception as e:  # surface build breakage as lint failure
@@ -235,3 +232,34 @@ def test_no_exchange_keyed_on_raw_text(trees):
         f"exchange keyed on raw document text (shuffle volume scales "
         f"with corpus bytes, not row count): {bad}"
     )
+
+
+def test_no_unused_imports():
+    """Source lint: every import in the library is used, listed in its
+    module's ``__all__``, or marked ``# noqa`` (a deliberate re-export
+    or import side effect)."""
+    pkg = Path(__file__).resolve().parent.parent / "dataframe_sql_spark"
+    hits = []
+    for p in sorted(pkg.rglob("*.py")):
+        src = p.read_text()
+        lines = src.splitlines()
+        tree = ast.parse(src)
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for n in tree.body:
+            if isinstance(n, ast.Assign) and "__all__" in [
+                getattr(t, "id", None) for t in n.targets
+            ]:
+                used |= {e.value for e in n.value.elts}
+        for n in ast.walk(tree):
+            if not isinstance(n, (ast.Import, ast.ImportFrom)):
+                continue
+            if getattr(n, "module", None) == "__future__" or any(
+                "noqa" in line for line in lines[n.lineno - 1 : n.end_lineno]
+            ):
+                continue
+            hits += [
+                f"{p.relative_to(pkg.parent)}:{n.lineno}: {a.asname or a.name}"
+                for a in n.names
+                if (a.asname or a.name).split(".")[0] not in used
+            ]
+    assert hits == [], "\n".join(hits)

@@ -258,3 +258,85 @@ def test_vectorized_signatures_match_expressions(spark):
             ).collect()
         }
         assert oref == ovec, value_bits
+
+
+def _pair_bits(df) -> list[tuple]:
+    """(id_a, id_b, cosine as its float64 bit pattern or None), sorted."""
+    import struct
+
+    def bits(x):
+        return None if x is None else struct.unpack("<q", struct.pack("<d", x))[0]
+
+    return sorted(
+        ((r.id_a, r.id_b, bits(r.cosine)) for r in df.collect()),
+        key=lambda t: (t[0], t[1]),
+    )
+
+
+def test_embedding_cosine_pairs_kernel_matches_self_join_semantic_blocks(spark):
+    """The numpy pair kernel equals the blocked self-join reference bit
+    for bit on dd_semantic's shape: sf0.001 embeddings blocked by
+    k-means clusters, threshold 0.4."""
+    from tests.conftest import SF_DIR
+
+    from dataframe_sql_spark.operators.dedup import embedding_cosine_pairs
+    from dataframe_sql_spark.operators.similarity import kmeans_assign
+    from dataframe_sql_spark.sources.io import read_table
+    from tests.sim_reference import embedding_cosine_pairs_expr
+
+    emb = read_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+    clustered = kmeans_assign(emb, "vec_id", "embedding", k=8, n_iters=2)
+    args = (clustered, "vec_id", "embedding", "cluster", 0.4)
+    kernel = _pair_bits(embedding_cosine_pairs(*args))
+    assert len(kernel) > 0
+    assert kernel == _pair_bits(embedding_cosine_pairs_expr(*args))
+
+
+def test_embedding_cosine_pairs_kernel_matches_self_join_edge_cases(spark):
+    """Zero vector (its NaN passes and leaves the kernel as a null
+    cosine), duplicate vectors, a near-identical pair split across
+    blocks (never paired), and null id / null block / empty vector rows
+    (excluded). 512 dims of full-precision doubles: wide enough that a
+    BLAS dot (blocked summation) differs from the sequential fold."""
+    import numpy as np
+
+    from dataframe_sql_spark.operators.dedup import embedding_cosine_pairs
+    from tests.sim_reference import embedding_cosine_pairs_expr
+
+    rng = np.random.default_rng(7)
+    x, y, z = (rng.standard_normal(512).tolist() for _ in range(3))
+    near = (np.array(x) + 0.05 * rng.standard_normal(512)).tolist()
+    rows = [
+        (1, 0, [0.0] * 512),
+        (2, 0, x),
+        (3, 0, x),
+        (4, 0, y),
+        (10, 0, near),
+        (5, 1, x),
+        (6, 1, z),
+        (7, 2, near),
+        (None, 0, x),
+        (8, None, x),
+        (9, 0, []),
+    ]
+    df = spark.createDataFrame(rows, "vec_id bigint, blk int, embedding array<double>")
+    args = (df, "vec_id", "embedding", "blk", 0.9)
+    kernel = _pair_bits(embedding_cosine_pairs(*args))
+    assert kernel == _pair_bits(embedding_cosine_pairs_expr(*args))
+    got = {(a, b): c for a, b, c in kernel}
+    assert [got.get(p, 0) for p in [(1, 2), (1, 3), (1, 4), (1, 10)]] == [None] * 4
+    assert {(2, 3), (2, 10), (3, 10)} <= set(got)  # duplicates, near-dups
+    assert not any(b in (5, 7) for _, b in got)  # cross-block
+    assert not {8, 9} & {i for p in got for i in p}
+
+
+def test_embedding_cosine_pairs_rejects_non_integral_ids(spark):
+    import pytest
+
+    from dataframe_sql_spark.operators.dedup import embedding_cosine_pairs
+
+    df = spark.createDataFrame(
+        [("a", 0, [1.0, 0.0])], "doc_key string, blk int, embedding array<double>"
+    )
+    with pytest.raises(TypeError, match="doc_key"):
+        embedding_cosine_pairs(df, "doc_key", "embedding", "blk")

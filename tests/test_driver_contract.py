@@ -86,3 +86,14 @@ def test_entry_and_queries_on_vanilla_session():
     )
     assert proc.returncode == 0, f"stdout:\n{proc.stdout}\nstderr:\n{proc.stderr[-4000:]}"
     assert "DRIVER-SIM-PASS" in proc.stdout
+
+
+def test_export_order_is_priority_then_catalog():
+    """queries()/oracle_sql() order: no name twice, every CATALOG entry
+    present, and the scored window opens with the anchors."""
+    from dataframe_sql_spark.registry import _ANCHORS, CATALOG, _ordered_names
+
+    names = _ordered_names()
+    assert len(names) == len(set(names))
+    assert set(names) == set(CATALOG)
+    assert names[: len(_ANCHORS)] == _ANCHORS

@@ -9,6 +9,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from dataframe_sql_spark.engine import plan_string
 from dataframe_sql_spark.functions.text import annotate_documents, lang_id, token_count
 from dataframe_sql_spark.multimodal.binary import (
     attach_blob_metadata,
@@ -127,10 +128,8 @@ def test_knn_join_ivf_partial_probe(spark, engine):
     """Cell-keyed kNN join: full probe must equal brute force pair-for-
     pair (the exactness the oracle relies on); partial probe keeps
     majority recall; the plan must contain no cartesian/BNLJ."""
-    from dataframe_sql_spark.operators.similarity import (
-        knn_join_bruteforce,
-        knn_join_ivf,
-    )
+    from dataframe_sql_spark.operators.similarity import knn_join_ivf
+    from tests.sim_reference import knn_join_bruteforce
 
     emb = engine.spark.table("embeddings")
     left = emb.filter(F.col("label") == 0).select(
@@ -143,9 +142,7 @@ def test_knn_join_ivf_partial_probe(spark, engine):
         (r.id_a, r.id_b) for r in knn_join_bruteforce(left, right, k=3).collect()
     }
     full_df = knn_join_ivf(left, right, k=3, n_cells=16)
-    plan = full_df._sc._jvm.PythonSQLUtils.explainString(
-        full_df._jdf.queryExecution(), "formatted"
-    )
+    plan = plan_string(full_df)
     assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
     full = {(r.id_a, r.id_b) for r in full_df.collect()}
     assert full == brute

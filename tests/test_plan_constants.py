@@ -230,14 +230,14 @@ def test_get_spark_warns_when_existing_session_keeps_a_builder_conf(spark, monke
     existing session; the conf that did not take is logged."""
     from dataframe_sql_spark.session import get_spark
 
-    key = "spark.cleaner.periodicGC.interval"
+    key = "spark.driver.memory"
     started = spark.sparkContext.getConf().get(key)
     shown = spark.conf.get(key, None)
-    monkeypatch.setenv("SPARK_GRAFT_PERIODIC_GC", "7min")
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "7g")
     try:
         with caplog.at_level(logging.WARNING, logger="dataframe_sql_spark.session"):
             assert get_spark("tests") is spark
-        assert key in caplog.text and "7min" in caplog.text
+        assert key in caplog.text and "7g" in caplog.text
     finally:
         # getOrCreate copied the unused value into the session conf
         spark._jsparkSession.sessionState().conf().setConfString(key, shown or started)

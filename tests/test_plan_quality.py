@@ -8,15 +8,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-
-def _formatted(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+from dataframe_sql_spark.engine import plan_string
 
 
 def test_filter_pushed_to_parquet_scan(engine):
-    plan = _formatted(
+    plan = plan_string(
         engine.query("select l_orderkey from lineitem where l_quantity > 45")
     )
     assert "PushedFilters: [" in plan
@@ -24,7 +20,7 @@ def test_filter_pushed_to_parquet_scan(engine):
 
 
 def test_column_pruning_reaches_scan(engine):
-    plan = _formatted(engine.query("select l_orderkey, l_quantity from lineitem"))
+    plan = plan_string(engine.query("select l_orderkey, l_quantity from lineitem"))
     # ReadSchema must carry only the projected columns, not all 16
     read = next(l for l in plan.splitlines() if "ReadSchema" in l)
     assert "l_orderkey" in read and "l_quantity" in read
@@ -32,7 +28,7 @@ def test_column_pruning_reaches_scan(engine):
 
 
 def test_small_dim_join_broadcasts(engine):
-    plan = _formatted(
+    plan = plan_string(
         engine.query(
             "select n_name, count(*) as n from customer "
             "join nation on c_nationkey = n_nationkey group by n_name"
@@ -43,7 +39,7 @@ def test_small_dim_join_broadcasts(engine):
 
 
 def test_orderby_limit_is_topk(engine):
-    plan = _formatted(
+    plan = plan_string(
         engine.query("select o_orderkey from orders order by o_totalprice desc limit 5")
     )
     assert "TakeOrderedAndProject" in plan, plan
@@ -52,7 +48,7 @@ def test_orderby_limit_is_topk(engine):
 
 
 def test_groupby_has_partial_aggregation(engine):
-    plan = _formatted(
+    plan = plan_string(
         engine.query(
             "select l_returnflag, sum(l_quantity) as s from lineitem group by l_returnflag"
         )
@@ -77,7 +73,7 @@ def test_scalar_pipeline_stays_in_codegen(engine):
 def test_dedup_groups_on_hash_not_text(engine):
     from dataframe_sql_spark.operators.dedup import exact_dedup
 
-    plan = _formatted(exact_dedup(engine.spark.table("documents"), ["text"], "doc_id"))
+    plan = plan_string(exact_dedup(engine.spark.table("documents"), ["text"], "doc_id"))
     # the shuffle key is the fixed-width hash, so no exchange partitions on raw text
     exchanges = [l for l in plan.splitlines() if "hashpartitioning(" in l]
     assert exchanges and all("hashpartitioning(text" not in l for l in exchanges), plan
@@ -104,9 +100,7 @@ def test_prefix_filter_pairs_never_broadcasts(engine):
     df = prefix_filter_pairs(
         engine.spark.table("documents"), "doc_id", "text", t_num=7, t_den=10
     )
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "simple"
-    )
+    plan = plan_string(df, "simple")
     assert "BroadcastHashJoin" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert plan.count("SortMergeJoin") >= 3, plan
@@ -124,15 +118,13 @@ def test_prefix_filter_pairs_never_broadcasts(engine):
     ranked = toks.withColumn(
         "freq", F.count("*").over(Window.partitionBy("tok"))
     )
-    rplan = ranked._sc._jvm.PythonSQLUtils.explainString(
-        ranked._jdf.queryExecution(), "simple"
-    )
+    rplan = plan_string(ranked, "simple")
     assert "Window" in rplan and "Join" not in rplan, rplan
     assert rplan.count("Exchange hashpartitioning(tok") == 1, rplan
 
 
 def test_constant_folding(engine):
-    plan = _formatted(engine.query("select 1 + 2 * 3 as x from nation"))
+    plan = plan_string(engine.query("select 1 + 2 * 3 as x from nation"))
     assert "7 AS x" in plan  # Catalyst folded the literal math
 
 
@@ -143,7 +135,7 @@ def test_partition_pruning_on_partitioned_write(engine, tmp_path):
     path = str(tmp_path / "ev_part")
     engine.spark.table("events").write.partitionBy("event_type").parquet(path)
     df = engine.spark.read.parquet(path).filter("event_type = 'click'")
-    plan = _formatted(df)
+    plan = plan_string(df)
     pf = next(l for l in plan.splitlines() if "PartitionFilters" in l)
     assert "event_type" in pf, plan
     assert df.count() == engine.spark.table("events").filter("event_type = 'click'").count()
@@ -235,7 +227,7 @@ def test_exists_decorrelates_to_semi_join(engine):
     """tpch_q4: correlated EXISTS must plan as one LeftSemi join, never a
     per-row subquery or nested loop — at 100 TB the semi-join is a single
     (broadcastable) pass over orders."""
-    plan = _formatted(_tpch(engine, "tpch_q4_priority"))
+    plan = plan_string(_tpch(engine, "tpch_q4_priority"))
     assert "LeftSemi" in plan, plan
     assert "NestedLoop" not in plan
 
@@ -243,7 +235,7 @@ def test_exists_decorrelates_to_semi_join(engine):
 def test_not_exists_decorrelates_to_anti_join(engine):
     """tpch_q22: NOT EXISTS -> LeftAnti, and the uncorrelated scalar
     threshold is pushed all the way into the parquet scan as a filter."""
-    plan = _formatted(_tpch(engine, "tpch_q22_idle_custs"))
+    plan = plan_string(_tpch(engine, "tpch_q22_idle_custs"))
     assert "LeftAnti" in plan, plan
     assert "GreaterThan(c_acctbal,ScalarSubquery" in plan, plan
 
@@ -252,7 +244,7 @@ def test_correlated_agg_subquery_decorrelates(engine):
     """tpch_q17: the per-part AVG threshold must decorrelate to one
     aggregate over lineitem joined back on l_partkey (two scans total),
     not a subquery per outer row."""
-    plan = _formatted(_tpch(engine, "tpch_q17_small_qty"))
+    plan = plan_string(_tpch(engine, "tpch_q17_small_qty"))
     assert "NestedLoop" not in plan, plan
     # the decorrelated aggregate computes sum/count of l_quantity
     assert "sum(l_quantity" in plan, plan
@@ -262,7 +254,7 @@ def test_disjunctive_predicate_splits_and_pushes(engine):
     """tpch_q19: from the OR-of-ANDs, Catalyst must derive per-side
     residuals and push them into BOTH parquet scans — the lineitem scan
     skips row groups on l_quantity, the part scan on brand/size."""
-    plan = _formatted(_tpch(engine, "tpch_q19_disjunctive"))
+    plan = plan_string(_tpch(engine, "tpch_q19_disjunctive"))
     pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
     assert any("l_quantity" in l and "Or(" in l for l in pushed), plan
     assert any("p_brand" in l and "Or(" in l for l in pushed), plan
@@ -278,7 +270,7 @@ def test_persist_reuses_inmemory_scan(engine):
     df.persist()
     try:
         df.count()  # materialize the cache
-        plan = _formatted(df.filter("s > 0"))
+        plan = plan_string(df.filter("s > 0"))
         assert "InMemoryTableScan" in plan, plan
     finally:
         df.unpersist()
@@ -341,9 +333,7 @@ def test_dataset_mix_filter_is_map_side(engine):
         docs, "doc_id", "lang",
         {"en": 0.4, "de": 0.15, "es": 0.15, "fr": 0.15, "zh": 0.15},
     )
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
-    )
+    plan = plan_string(out)
     # no KEYED exchange: the selection stays a map-side filter. The
     # r14 adaptive scan fan-out may insert one round-robin repartition
     # of the raw scan (no-op at scale) — deliberately permitted, and
@@ -376,9 +366,7 @@ def test_winnow_fingerprint_single_exchange(engine):
         "from documents) g) h) w "
         "where pos >= least(16, m)"
     )
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = plan_string(df)
     assert plan.count("Exchange hashpartitioning") <= 2, plan
     assert "Generate" in plan  # explode is a Generate, not a join
 
@@ -388,9 +376,7 @@ def test_quantize_is_single_projection(engine):
     from dataframe_sql_spark.registry import CATALOG
 
     df = engine.query(CATALOG["emb_quantize_int8"].engine_sql)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = plan_string(df)
     # projection-only apart from the adaptive scan fan-out's possible
     # round-robin repartition (no-op at scale): no keyed exchange.
     assert "hashpartitioning" not in plan, plan
@@ -406,9 +392,7 @@ def test_global_shuffle_avoids_global_sort(engine):
 
     docs = engine.spark.table("documents").select("doc_id")
     out = global_shuffle(docs, "doc_id")
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
-    )
+    plan = plan_string(out)
     assert "hashpartitioning(_gs_b" in plan, plan
     assert "BroadcastHashJoin" in plan, plan
     # The fact-side window partitions by bucket; the only global
@@ -432,12 +416,12 @@ def test_global_rank_has_no_single_partition_window(engine):
 
     li = engine.spark.table("lineitem")
     out = global_rank(li, [("l_quantity", False)], out_col="rnk")
-    plan = _formatted(out)
+    plan = plan_string(out)
     assert "SinglePartition" not in plan, plan
     assert "Window" in plan, plan
 
     dense = global_rank(li, [("l_quantity", False)], dense=True, out_col="drnk")
-    plan_d = _formatted(dense)
+    plan_d = plan_string(dense)
     assert "SinglePartition" not in plan_d, plan_d
 
 
@@ -484,15 +468,11 @@ def test_relevance_family_vocab_joins_broadcast(spark):
     qs = entrymod.queries()
     for name in ("txt_tfidf", "txt_bm25", "dd_lines"):
         df = qs[name](spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = plan_string(df)
         assert "SortMergeJoin" not in plan, f"{name} fell back to SMJ"
         assert "BroadcastHashJoin" in plan, f"{name} lost its broadcasts"
     df = qs["txt_lm_score"](spark, SF_DIR)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = plan_string(df)
     assert "SortMergeJoin" in plan, "lm_score bigram join lost its merge hint"
     assert "BroadcastHashJoin" in plan, "lm_score unigram join lost broadcast"
 
@@ -508,9 +488,7 @@ def test_range_and_linkage_joins_are_hash_joins(spark):
     qs = entrymod.queries()
     for name in ("j_range_incidents", "j_interval_overlap", "x_record_linkage"):
         df = qs[name](spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = plan_string(df)
         assert "BroadcastNestedLoopJoin" not in plan, f"{name} planned BNLJ"
         assert "CartesianProduct" not in plan, f"{name} planned cartesian"
 
@@ -524,9 +502,7 @@ def test_bloom_prefilter_filters_before_exchange(spark):
     from tests.conftest import SF_DIR
 
     df = entrymod.queries()["j_bloom_prefilter"](spark, SF_DIR)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "simple"
-    )
+    plan = plan_string(df, "simple")
     lines = plan.splitlines()
     # the bit-test (shiftright over the broadcast word array) must sit
     # directly on the probe scan path: between the operator evaluating
@@ -593,7 +569,7 @@ def test_simhash_probed_window_rides_join_sort(spark):
     from tests.conftest import SF_DIR
 
     df = entrymod.queries()["dd_simhash_probed"](spark, SF_DIR)
-    plan = _formatted(df)
+    plan = plan_string(df)
     tree = plan.split("\n\n(", 1)[0]
 
     import re

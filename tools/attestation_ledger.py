@@ -3,17 +3,18 @@
 Reads every CORRECTNESS_r*.json the driver has produced and emits one
 markdown table row per catalog entry: which rounds gave it a green
 driver row (hash-green, or rows-only-green for entries without an
-oracle), and where it sits in the rotation plan (registry.py PRIORITY
-comment). Run from the repo root:
+oracle), and whether it is in the scored window (the first 50 names
+of registry.py's PRIORITY list). Run from the repo root:
 
     python tools/attestation_ledger.py          # print the table
     python tools/attestation_ledger.py --write  # splice into COVERAGE.md
     python tools/attestation_ledger.py --propose-window [--assume-current-green]
-        # emit the next round's OLDEST-FIRST window as a pasteable
-        # Python block (8 anchors + the 42 stalest attestations; ties
-        # broken by catalog order). --assume-current-green treats the
+        # print the next PRIORITY literal for registry.py: the 8
+        # anchors, the 42 stalest attestations (the next OLDEST-FIRST
+        # window; ties broken by the current order), then the rest of
+        # the current PRIORITY. --assume-current-green treats the
         # current 50-entry window as green at latest_round+1 — use it
-        # when staging the NEXT block before the driver has written
+        # when staging the next window before the driver has written
         # this round's CORRECTNESS file.
 
 The table lives between the BEGIN/END ledger markers in COVERAGE.md.
@@ -76,20 +77,26 @@ def _row_green(row: dict) -> bool:
     return bool(ok)
 
 
-def build_table() -> str:
-    from dataframe_sql_spark.registry import CATALOG
-    from dataframe_sql_spark import registry
-
-    names = registry._ordered_names()
+def _read_green() -> tuple[dict[str, list[int]], list[int]]:
+    """(entry -> rounds with a driver-green row, every round on file),
+    from the CORRECTNESS_r*.json files in round order."""
     green: dict[str, list[int]] = {}
     rounds: list[int] = []
     for path in sorted(REPO_ROOT.glob("CORRECTNESS_r*.json")):
         rnum = int(re.search(r"r(\d+)", path.name).group(1))
         rounds.append(rnum)
-        data = json.loads(path.read_text())
-        for entry, row in data.items():
+        for entry, row in json.loads(path.read_text()).items():
             if _row_green(row):
                 green.setdefault(entry, []).append(rnum)
+    return green, rounds
+
+
+def build_table() -> str:
+    from dataframe_sql_spark.registry import CATALOG
+    from dataframe_sql_spark import registry
+
+    names = registry._ordered_names()
+    green, rounds = _read_green()
 
     window = set(names[:50])
     lines = [
@@ -100,8 +107,8 @@ def build_table() -> str:
         f"Per-entry driver-green CORRECTNESS rows across rounds {min(rounds)}-"
         f"{max(rounds)} (green = no error, row counts match, and the value "
         "hash matches when the entry is oracled). \"in current window\" "
-        "marks the 50 entries the driver scores next round; the rotation "
-        "plan for the rest is the PRIORITY comment in `registry.py`.",
+        "marks the 50 entries the driver scores next round: the head of "
+        "`PRIORITY` in `registry.py`.",
         "",
         "| entry | oracle | driver-green rounds | age (rounds) | in current window | hash coverage via |",
         "|---|---|---|---|---|---|",
@@ -166,53 +173,36 @@ def build_table() -> str:
     return "\n".join(lines)
 
 
-def _green_rounds(assume_current: bool) -> tuple[list[str], dict[str, list[int]], int]:
-    """(ordered catalog names, entry -> green rounds, latest round)."""
-    from dataframe_sql_spark import registry
+def propose_window(assume_current: bool) -> str:
+    """The next PRIORITY literal: the anchors, then the OLDEST-FIRST
+    window — the 42 entries whose latest driver attestation is stalest
+    (never-attested first, then by ascending latest-green round; ties
+    broken by the current order, so the proposal is deterministic for a
+    given set of CORRECTNESS files) — then the rest of the current
+    PRIORITY in its order. Pasteable over the literal in registry.py."""
+    from dataframe_sql_spark.registry import _ANCHORS, PRIORITY, _ordered_names
 
-    names = registry._ordered_names()
-    green: dict[str, list[int]] = {}
-    latest = 0
-    for path in sorted(REPO_ROOT.glob("CORRECTNESS_r*.json")):
-        rnum = int(re.search(r"r(\d+)", path.name).group(1))
-        latest = max(latest, rnum)
-        data = json.loads(path.read_text())
-        for entry, row in data.items():
-            if _row_green(row):
-                green.setdefault(entry, []).append(rnum)
+    names = _ordered_names()
+    green, rounds = _read_green()
+    latest = max(rounds, default=0)
     if assume_current:
         latest += 1
         for n in names[:50]:
             green.setdefault(n, []).append(latest)
-    return names, green, latest
-
-
-def propose_window(assume_current: bool) -> str:
-    """OLDEST-FIRST next window: 8 anchors + the 42 entries whose
-    latest driver attestation is stalest (never-attested first, then
-    by ascending latest-green round; ties broken by catalog order, so
-    the proposal is deterministic for a given set of CORRECTNESS
-    files). Emitted as a pasteable block for registry.py."""
-    from dataframe_sql_spark.registry import _ANCHORS
-
-    names, green, latest = _green_rounds(assume_current)
     pool = [n for n in names if n not in set(_ANCHORS)]
     order = {n: i for i, n in enumerate(names)}
     # never-attested sorts before everything (latest green = -inf)
     pool.sort(key=lambda n: (max(green.get(n, [-(10**9)])), order[n]))
-    pick = pool[: 50 - len(_ANCHORS)]
+    head = _ANCHORS + pool[: 50 - len(_ANCHORS)]
+    taken = set(head)
+    new = head + [n for n in PRIORITY if n not in taken]
     lines = [
         f"# Oldest-first window proposal (latest round considered: r{latest}"
         f"{', current window assumed green' if assume_current else ''}).",
-        "# Stalest latest-attestation first; paste as the next _R*_BLOCK",
-        "# and move it ahead of the previous block in PRIORITY.",
-        "[",
+        "PRIORITY: list[str] = [",
+        *(f'    "{n}",' for n in new),
+        "]",
     ]
-    for n in pick:
-        gs = green.get(n, [])
-        tag = f"r{max(gs)}" if gs else "never"
-        lines.append(f'    "{n}",  # last green: {tag}')
-    lines.append("]")
     return "\n".join(lines)
 
 

@@ -25,6 +25,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from dataframe_sql_spark.engine import plan_string  # noqa: E402
 from dataframe_sql_spark.registry import engine_for, spark_queries  # noqa: E402
 from dataframe_sql_spark.session import get_spark  # noqa: E402
 
@@ -68,12 +69,7 @@ def noop(name: str, n: int = 5) -> float:
 
 
 def e(name: str) -> None:
-    d = df(name)
-    print(
-        d._sc._jvm.PythonSQLUtils.explainString(
-            d._jdf.queryExecution(), "formatted"
-        )
-    )
+    print(plan_string(df(name)))
 
 
 def h(name: str) -> str:

@@ -38,6 +38,7 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 from bench import PIPELINE_OPS, QUERIES, TPCH_SHAPES  # noqa: E402
+from dataframe_sql_spark.engine import plan_string  # noqa: E402
 from dataframe_sql_spark.registry import engine_for, spark_queries  # noqa: E402
 from dataframe_sql_spark.session import get_spark  # noqa: E402
 
@@ -94,12 +95,6 @@ HEADLINERS: dict[str, str] = {
 }
 
 
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def _git_provenance() -> str:
     def git(*args: str) -> str:
         return subprocess.run(
@@ -121,7 +116,7 @@ def dump_round(spark, out_dir: Path, tag: str, only: set[str]) -> None:
         if tag == "before" and target.exists():
             print(f"REFUSING to overwrite existing before-plan {target}")
             return
-        target.write_text(provenance + _plan(df))
+        target.write_text(provenance + plan_string(df))
 
     for name, sql in QUERIES.items():
         if not only or name in only:
@@ -152,7 +147,7 @@ def dump_headliners(spark, out: Path) -> None:
         "",
     ]
     for name, note in HEADLINERS.items():
-        plan = _plan(qs[name](spark, SF_DIR))
+        plan = plan_string(qs[name](spark, SF_DIR))
         lines += [f"## {name}", "", f"*{note}*", "", "```", plan.rstrip(), "```", ""]
     out.write_text("\n".join(lines))
     print(f"wrote {out} ({len(HEADLINERS)} plans)")
