@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .text import words
+
 __all__ = ["learn_bpe", "bpe_tokenize_col", "bpe_token_count_col"]
 
 
@@ -42,7 +44,7 @@ def learn_bpe(
     """
     counts = (
         df.select(
-            F.explode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("w")
+            F.explode(words(F.col(text_col))).alias("w")
         )
         .filter(F.col("w") != "")
         .groupBy("w")

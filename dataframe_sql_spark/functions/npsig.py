@@ -1,14 +1,16 @@
 """Arrow-vectorized signature kernels for the dedup family.
 
 The MinHash/SimHash signature math is integer arithmetic over a
-per-document ``array<long>`` of feature hashes. The pure-expression
-formulations in ``operators/dedup.py`` (64 higher-order ``aggregate``
-passes for SimHash, 64 ``filter``+``array_min`` lanes + a rotation
-densify for OPH) are correct and shuffle-free, but Spark evaluates
-lambda-bearing expressions interpreted, one element at a time — at
-sf0.1 the signature projection alone costs ~1.4 s (SimHash) / ~2.0 s
-(OPH) of the dedup pipelines' wall time, and the cost is per-element
-CPU that scales linearly with corpus size on every executor.
+per-document ``array<long>`` of feature hashes. These kernels are its
+only library implementation. The pure-expression formulations (64
+higher-order ``aggregate`` passes for SimHash, 64 ``filter`` +
+``array_min`` lanes + a rotation densify for OPH) live in
+``tests/sim_reference.py`` as parity references: correct and
+shuffle-free, but Spark evaluates lambda-bearing expressions
+interpreted, one element at a time — at sf0.1 that signature
+projection alone costs ~1.4 s (SimHash) / ~2.0 s (OPH) of the dedup
+pipelines' wall time, and the cost is per-element CPU that scales
+linearly with corpus size on every executor.
 
 These kernels move the same math across the Arrow boundary once per
 batch (spark_optimization_guide §4.2: hand whole batches to vectorized
@@ -70,8 +72,8 @@ def _segments(arrs) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
 
 def simhash_np(arrs) -> np.ndarray:
     """64-bit SimHash per input array — bit b of the signature is 1 iff
-    more elements have bit b set than unset (strict majority), exactly
-    :func:`..operators.dedup.simhash_bits`. Empty/None input → 0."""
+    more elements have bit b set than unset (strict majority). Empty/None
+    input → 0."""
     flat, lens, starts = _segments(arrs)
     n = len(lens)
     if flat.size == 0:
@@ -98,8 +100,11 @@ def oph_densified_np(arrs, num_hashes: int = 64, value_bits: int = 64) -> list:
     """Densified OPH signature per input array: lane = top
     ``log2(num_hashes)`` bits of the (``value_bits``-wide) hash, lane
     keeps its int64 minimum, empty lanes borrow the nearest occupied
-    lane to the right (circular) — exactly ``oph_raw_lanes`` +
-    ``oph_densify_rotation``. All-empty input → all-None signature."""
+    lane to the right (circular; Shrivastava & Li 2014). Borrowing a
+    lane-local value, not a fill from the global minimum, keeps the
+    densified lanes of two near-duplicates agreeing wherever the
+    borrowed lane agrees, so banding still works on short documents.
+    All-empty input → all-None signature."""
     assert num_hashes & (num_hashes - 1) == 0 and num_hashes > 0
     shift = np.uint64(value_bits - (num_hashes - 1).bit_length())
     flat, lens, _ = _segments(arrs)

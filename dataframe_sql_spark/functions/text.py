@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from ..operators.scalars import const_array
 
 __all__ = [
+    "words",
     "token_count",
     "bpe_token_estimate",
     "quality_features",
@@ -37,7 +38,11 @@ _STOPWORDS = {
 }
 
 
-def _words(text: Column) -> Column:
+def words(text: Column) -> Column:
+    """Lowercased whitespace tokens of ``text``: the one word
+    tokenization every text and dedup operator shares, so corpus
+    statistics, shingles and the DuckDB oracles' ``string_split_regex``
+    agree. A blank string gives ``[""]``."""
     return F.split(F.trim(F.lower(text)), r"\s+")
 
 
@@ -68,12 +73,12 @@ def quality_features(text: Column) -> dict[str, Column]:
     """Raw quality signals as named columns."""
     t = F.trim(text)
     chars = F.length(t).cast("double")
-    words = _words(t)
-    n_words = F.size(words).cast("double")
+    ws = words(t)
+    n_words = F.size(ws).cast("double")
     stop_arr = const_array(_STOPWORDS["en"], "string")
     return {
         "n_chars": F.length(t).cast("bigint"),
-        "n_words": F.size(words).cast("bigint"),
+        "n_words": F.size(ws).cast("bigint"),
         "mean_word_len": F.when(n_words > 0, chars / n_words).otherwise(F.lit(0.0)),
         "punct_ratio": F.when(
             chars > 0,
@@ -81,7 +86,7 @@ def quality_features(text: Column) -> dict[str, Column]:
         ).otherwise(F.lit(0.0)),
         "stopword_ratio": F.when(
             n_words > 0,
-            F.size(F.filter(words, lambda w: F.array_contains(stop_arr, w))).cast("double")
+            F.size(F.filter(ws, lambda w: F.array_contains(stop_arr, w))).cast("double")
             / n_words,
         ).otherwise(F.lit(0.0)),
         "upper_ratio": F.when(
@@ -142,26 +147,26 @@ def repetition_features(text: Column) -> dict[str, Column]:
     Ratios are IEEE divisions of exact integer counts, so they hash
     identically cross-engine.
     """
-    words = _words(text)
-    n = F.size(words)
+    ws = words(text)
+    n = F.size(ws)
     bigrams = F.when(
         n >= 2,
         F.transform(
             F.sequence(F.lit(0), n - 2),
             lambda i: F.concat_ws(
-                " ", F.element_at(words, i + 1), F.element_at(words, i + 2)
+                " ", F.element_at(ws, i + 1), F.element_at(ws, i + 2)
             ),
         ),
     ).otherwise(F.array().cast("array<string>"))
     nd = n.cast("double")
     return {
         "n_words": n.cast("bigint"),
-        "dup_word_ratio": (nd - F.size(F.array_distinct(words))) / nd,
-        "top_word_ratio": _max_run(F.array_sort(words)).cast("double") / nd,
+        "dup_word_ratio": (nd - F.size(F.array_distinct(ws))) / nd,
+        "top_word_ratio": _max_run(F.array_sort(ws)).cast("double") / nd,
         "top_bigram_ratio": F.when(
             n >= 2, _max_run(F.array_sort(bigrams)).cast("double") / (nd - 1)
         ).otherwise(F.lit(0.0)),
-        "max_run": _max_run(words).cast("bigint"),
+        "max_run": _max_run(ws).cast("bigint"),
     }
 
 
@@ -183,8 +188,8 @@ def repetition_features_frame(
     over words up to an in-document xxhash64 collision (~n²/2⁶⁴ per
     doc ≈ 1e-13 — the oracle would catch one). Still zero shuffle.
     """
-    words = df.select(*id_cols, _words(F.col(text_col)).alias("__w"))
-    hashed = words.select(
+    tokens = df.select(*id_cols, words(F.col(text_col)).alias("__w"))
+    hashed = tokens.select(
         *id_cols,
         F.size("__w").alias("__n"),
         F.transform("__w", lambda w: F.xxhash64(w)).alias("__h"),
@@ -233,13 +238,13 @@ def fingerprint(text: Column) -> Column:
 def lang_id(text: Column) -> Column:
     """Stopword-hit language ID over {en,de,fr,es}; 'und' (undetermined)
     when nothing matches. One projection, no shuffle."""
-    words = _words(text)
+    ws = words(text)
     def hit_counter(sw: list[str]):
         arr = const_array(sw, "string")
         return lambda w: F.array_contains(arr, w)
 
     hits = {
-        lang: F.size(F.filter(words, hit_counter(sw))) for lang, sw in _STOPWORDS.items()
+        lang: F.size(F.filter(ws, hit_counter(sw))) for lang, sw in _STOPWORDS.items()
     }
     best = F.greatest(*hits.values())
     expr = F.lit("und")

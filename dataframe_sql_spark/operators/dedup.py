@@ -5,8 +5,10 @@ DISTINCT, pandas_sql_functionality_test.py:108-118); these are the
 north-star extensions from BASELINE.json, designed Spark-first for
 100 TB:
 
-- signatures (minhash / simhash) are computed map-side with built-in
-  JVM expressions — no shuffle, no Python, no driver involvement;
+- signatures (minhash / simhash) are computed map-side: gram hashes
+  with built-in JVM expressions, the signature math in one
+  Arrow-batched numpy kernel per batch (``functions/npsig.py``) — no
+  shuffle, no driver involvement;
 - candidate generation shuffles on *fixed-width hash keys* (band
   buckets), never on raw text;
 - pair verification happens only within buckets (LSH guarantees the
@@ -22,23 +24,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.npsig import oph_signature_vec, simhash_bits_vec
+from ..functions.text import words
 from .lineage import truncate_lineage
 
 __all__ = [
     "exact_dedup",
-    "word_shingles",
     "shingle_frame",
     "hashed_shingle_frame",
     "md5_shingle_frame",
-    "minhash_signature",
-    "minhash_signature_oph",
-    "oph_raw_lanes",
-    "oph_densify_rotation",
     "minhash_candidate_pairs",
     "minhash_dedup",
     "minhash_band_index",
     "incremental_minhash_dedup",
-    "simhash_bits",
     "simhash_candidate_pairs",
     "simhash_dedup",
     "kgram_positions",
@@ -80,10 +78,28 @@ def exact_dedup(df: DataFrame, cols: list[str], id_col: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _shingles_of_words(words: Column, k: int) -> Column:
+def _gram_starts(n: Column, k: int) -> Column:
+    """1-based start positions of the k-grams over ``n`` tokens — at
+    least one, so a document shorter than k words still yields one
+    (clamped) gram and participates."""
+    return F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1)))
+
+
+def _gram_window(ws: Column, k: int, combine) -> Column:
+    """``combine(*tokens)`` per gram start over a materialized token
+    array: the k tokens from the start on, positions past the end
+    clamped to the last token."""
+    n = F.size(ws)
+    return F.transform(
+        _gram_starts(n, k),
+        lambda i: combine(*[F.element_at(ws, F.least(i + off, n)) for off in range(k)]),
+    )
+
+
+def _shingles_of_words(ws: Column, k: int) -> Column:
     """Shingle array from an already-materialized words array.
 
-    ``words`` must be an attribute reference (a column produced by a
+    ``ws`` must be an attribute reference (a column produced by a
     previous projection) or a lambda variable — NOT the raw
     ``split(...)`` expression. Lambda-bearing expressions are excluded
     from Catalyst's common-subexpression elimination, so referencing a
@@ -91,33 +107,11 @@ def _shingles_of_words(words: Column, k: int) -> Column:
     once per shingle position — O(words²) per document (measured 6×
     on sf0.1 documents).
     """
-    n = F.size(words)
     return F.array_distinct(
         F.transform(
-            F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(words, i, k)),
+            _gram_starts(F.size(ws), k),
+            lambda i: F.concat_ws(" ", F.slice(ws, i, k)),
         )
-    )
-
-
-def word_shingles(text: Column, k: int = 3) -> Column:
-    """k-word shingles as an array<string>, JVM-side.
-
-    Short documents (< k words) get their whole text as one shingle so
-    they still participate.
-
-    The split result is bound to a lambda variable via a one-element
-    ``transform`` so it is evaluated once per row even inside this
-    single expression (see :func:`_shingles_of_words`). Callers doing
-    heavy work should still prefer :func:`shingle_frame`, which puts
-    the regex tokenization in its own codegen'd projection.
-    """
-    return F.element_at(
-        F.transform(
-            F.array(F.split(F.trim(F.lower(text)), r"\s+")),
-            lambda words: _shingles_of_words(words, k),
-        ),
-        1,
     )
 
 
@@ -137,30 +131,30 @@ def shingle_frame(
     measured 6× faster than shingling straight off the text column
     at sf0.1.
     """
-    words = df.select(
-        F.col(id_col),
-        *[F.col(c) for c in extra_cols],
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("__words"),
-    )
-    return words.select(
-        F.col(id_col),
-        *[F.col(c) for c in extra_cols],
-        _shingles_of_words(F.col("__words"), k).alias(out_col),
+    keep = [F.col(id_col), *[F.col(c) for c in extra_cols]]
+    tokens = df.select(*keep, words(F.col(text_col)).alias("__words"))
+    return tokens.select(
+        *keep, _shingles_of_words(F.col("__words"), k).alias(out_col)
     )
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature: array of ``num_hashes`` 64-bit minima.
-
-    Each permutation is ``xxhash64(shingle, seed_i)`` — computed in one
-    codegen'd projection per row, no shuffle, no UDF.
-    """
-    def perm(i: int):
-        return lambda s: F.xxhash64(s, F.lit(i))
-
-    return F.array(
-        *[F.array_min(F.transform(shingles, perm(i))) for i in range(num_hashes)]
+def _xx_grams(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    k: int,
+    extra_cols: tuple[str, ...] = (),
+) -> tuple[DataFrame, Column]:
+    """(id, *extra_cols, ``__hw`` word-hash array) frame, and the
+    per-position gram-hash column over it: ``xxhash64`` of the k word
+    hashes at each gram start. The word hashes are their own projection
+    so the gram lambda reads a materialized attribute (see
+    :func:`_shingles_of_words`)."""
+    keep = [F.col(id_col), *[F.col(c) for c in extra_cols]]
+    hashed = df.select(*keep, words(F.col(text_col)).alias("__words")).select(
+        *keep, F.transform(F.col("__words"), lambda w: F.xxhash64(w)).alias("__hw")
     )
+    return hashed, _gram_window(F.col("__hw"), k, F.xxhash64)
 
 
 def hashed_shingle_frame(
@@ -188,33 +182,16 @@ def hashed_shingle_frame(
     Known divergence from the string path: the clamp hashes the word
     REPEATED to k positions, so a 1-word doc "w" and a doc of k
     repeated "w"s produce the same gram hash — degenerate docs collapse
-    into one candidate class here, while :func:`word_shingles` keeps
+    into one candidate class here, while :func:`shingle_frame` keeps
     them distinct. Harmless for candidate generation (verify with exact
     Jaccard downstream, as :func:`ngram_jaccard_pairs` does); use the
     string path when sub-k-word docs must stay distinguishable.
     """
-    words = df.select(
-        F.col(id_col),
-        *[F.col(c) for c in extra_cols],
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("__words"),
-    )
-    hashed = words.select(
-        F.col(id_col),
-        *[F.col(c) for c in extra_cols],
-        F.transform(F.col("__words"), lambda w: F.xxhash64(w)).alias("__hw"),
-    )
-    hw = F.col("__hw")
-    n = F.size(hw)
-    gram = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1))),
-            lambda i: F.xxhash64(
-                *[F.element_at(hw, F.least(i + off, n)) for off in range(k)]
-            ),
-        )
-    )
+    hashed, grams = _xx_grams(df, id_col, text_col, k, extra_cols)
     return hashed.select(
-        F.col(id_col), *[F.col(c) for c in extra_cols], gram.alias(out_col)
+        F.col(id_col),
+        *[F.col(c) for c in extra_cols],
+        F.array_distinct(grams).alias(out_col),
     )
 
 
@@ -241,127 +218,48 @@ def md5_shingle_frame(
     mix per gram beats an md5 digest + hex decode — this exists for
     replay certificates (`dd_simhash_probed_verified`).
     """
-    words = df.select(
-        F.col(id_col),
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("__words"),
+    tokens = df.select(F.col(id_col), words(F.col(text_col)).alias("__words"))
+    gram = _gram_window(
+        F.col("__words"),
+        k,
+        lambda *ws: F.conv(
+            F.substring(F.md5(F.concat_ws("\x1f", *ws)), 1, 15), 16, 10
+        ).cast("long"),
     )
-    w = F.col("__words")
-    n = F.size(w)
-    gram = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1))),
-            lambda i: F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "\x1f",
-                            *[
-                                F.element_at(w, F.least(i + off, n))
-                                for off in range(k)
-                            ],
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long"),
+    return tokens.select(F.col(id_col), F.array_distinct(gram).alias(out_col))
+
+
+# feature_hash → (gram-hash frame builder, hash width in bits, band-bucket
+# hash). "xx" is production; "md5" is the engine-portable form a SQL
+# oracle replays — same signature, banding and verify code either way.
+_FEATURE_HASHES = {
+    "xx": (hashed_shingle_frame, 64, F.xxhash64),
+    "md5": (md5_shingle_frame, 60, F.md5),
+}
+
+
+def _feature_hash(name: str) -> tuple:
+    """The :data:`_FEATURE_HASHES` row for a ``feature_hash`` option;
+    ``ValueError`` naming the value for anything else."""
+    if name not in _FEATURE_HASHES:
+        raise ValueError(
+            f"feature_hash must be one of {sorted(_FEATURE_HASHES)}, got {name!r}"
         )
+    return _FEATURE_HASHES[name]
+
+
+def _oph_signatures(
+    shingled: DataFrame, id_col: str, num_hashes: int, value_bits: int
+) -> DataFrame:
+    """(id, ``__sig``): the densified-OPH signature of a gram-hash
+    frame's ``__h`` column, via the Arrow-vectorized numpy kernel
+    (functions/npsig.py) that replaced the interpreted 64-lane-filter +
+    densify projections (~2 s of the sf0.1 pipeline; guide §4.2,
+    OPTIMIZATION_r14.md)."""
+    return shingled.select(
+        F.col(id_col),
+        oph_signature_vec(F.col("__h"), num_hashes, value_bits).alias("__sig"),
     )
-    return words.select(F.col(id_col), gram.alias(out_col))
-
-
-def oph_raw_lanes(
-    hashes: Column, num_hashes: int = 64, value_bits: int = 64
-) -> Column:
-    """OPH lane minima (array<long> with NULL for empty lanes).
-
-    Classic MinHash costs ``num_hashes`` hash evaluations per shingle
-    (one per lane). OPH (Li, Owen & Zhang 2012) pays ONE hash per
-    shingle: the hash's top bits pick the lane (here the top 6 bits →
-    64 lanes) and the lane keeps its minimum. Measured ~2× faster than
-    the per-lane path at sf0.1 (the per-lane work drops from a 64-bit
-    hash to a shift + compare). Single map-side projection, no shuffle.
-
-    ``num_hashes`` must be a power of two: the lane index is the top
-    ``log2(num_hashes)`` bits of the shingle hash, so a non-power-of-two
-    count would silently drop shingles whose top bits exceed the lane
-    range (asserted loudly instead).
-
-    ``value_bits`` is the width of the hash values (64 for xxhash64;
-    60 for the md5 replay-certificate hashes, whose top 4 bits are
-    always zero — the lane must come from the top OCCUPIED bits or
-    every shingle would land in lane 0).
-    """
-    assert num_hashes & (num_hashes - 1) == 0 and num_hashes > 0, (
-        f"num_hashes must be a power of two, got {num_hashes}"
-    )
-    shift = value_bits - (num_hashes - 1).bit_length()  # top bits → lane index
-    return F.array(
-        *[
-            F.array_min(
-                F.filter(hashes, lambda h: F.shiftrightunsigned(h, shift) == F.lit(i))
-            )
-            for i in range(num_hashes)
-        ]
-    )
-
-
-def oph_densify_rotation(lanes: Column, num_hashes: int = 64) -> Column:
-    """Fill empty OPH lanes by borrowing the nearest occupied lane to
-    the right (circular) — "densified OPH via rotation" (Shrivastava &
-    Li 2014).
-
-    Why not the simpler ``xxhash64(global_min, lane)`` fill this repo
-    originally used: under band-LSH the global-min fill fails in a
-    CORRELATED way. A short doc occupies only a few of the 64 lanes, so
-    ~50+ lanes are densified; if the two docs of a near-dup pair differ
-    in their global minimum (probability 1-J — one unshared shingle can
-    be the min), every densified lane diverges at once and the pair
-    cannot share any band that touches a densified lane. Band-miss
-    probability degrades from (1-J^r)^b to ~(1-J), and the
-    ``dd_minhash_verified`` certificate caught exactly that: a 16-word
-    pair with Jaccard 13/14 ≈ 0.93 missed by LSH. Rotation borrows a
-    lane-local value instead, so densified lanes of similar docs agree
-    wherever the borrowed source lane agrees — errors stay local and
-    the banding arithmetic holds for short docs too (the dominant shape
-    in web corpora at 100 TB).
-
-    ``lanes`` should be a MATERIALIZED column (select the raw lanes in
-    a prior projection): it is referenced several times here, and
-    lambda-bearing expressions are excluded from Catalyst's
-    subexpression elimination, so inlining ``oph_raw_lanes`` directly
-    would recompute the 64 lane filters per reference. All-null input
-    (impossible for non-empty shingle sets) yields an all-null
-    signature rather than an error.
-    """
-    idx = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    occ = F.filter(idx, lambda i: F.element_at(lanes, i + 1).isNotNull())
-    return F.transform(
-        idx,
-        lambda i: F.coalesce(
-            F.element_at(lanes, i + 1),
-            F.element_at(
-                lanes,
-                F.element_at(F.concat(F.filter(occ, lambda j: j >= i), occ), 1) + 1,
-            ),
-        ),
-    )
-
-
-def minhash_signature_oph(hashes: Column, num_hashes: int = 64) -> Column:
-    """OPH signature with rotation densification, as one Column.
-
-    Composition of :func:`oph_raw_lanes` and
-    :func:`oph_densify_rotation` — convenient for tests and one-off
-    frames, but in hot paths select the raw lanes into a column first
-    and densify in a second projection (see
-    :func:`minhash_candidate_pairs`): inlined, the lane array is
-    recomputed per densify reference (no subexpression elimination for
-    lambda-bearing expressions).
-    """
-    return oph_densify_rotation(oph_raw_lanes(hashes, num_hashes), num_hashes)
 
 
 def _banded(
@@ -369,21 +267,20 @@ def _banded(
     id_col: str,
     num_hashes: int,
     bands: int,
-    bucket_hash: str = "xx",
+    bucket_hash,
 ) -> DataFrame:
     """Explode a signature into (band, bucket_hash, id) rows.
 
-    ``bucket_hash="md5"`` keys buckets by the md5 hex of the same
-    comma-joined slot string instead of xxhash64 — identical grouping
-    semantics (both are injective-modulo-collision over the slot
-    tuple), but SQL-replayable for the banding replay certificate."""
+    ``bucket_hash`` (a :data:`_FEATURE_HASHES` entry) keys each band by
+    its comma-joined slot string: xxhash64, or md5 hex for the banding
+    replay certificate — identical grouping semantics (both are
+    injective-modulo-collision over the slot tuple)."""
     rows = num_hashes // bands
 
     def _bucket(b: int) -> Column:
-        slots = F.concat_ws(
-            ",", *[F.col("__sig")[b * rows + r] for r in range(rows)]
+        return bucket_hash(
+            F.concat_ws(",", *[F.col("__sig")[b * rows + r] for r in range(rows)])
         )
-        return F.md5(slots) if bucket_hash == "md5" else F.xxhash64(slots)
 
     band_cols = F.array(
         *[
@@ -409,13 +306,11 @@ def minhash_candidate_pairs(
 ) -> DataFrame:
     """LSH candidate pairs (id_a < id_b) from banded minhash.
 
-    Pipeline: materialize shingles → materialize signature → explode
-    bands → groupBy bucket → explode pairs. The two explicit
-    ``select`` stages matter: lambda-bearing expressions are excluded
-    from Catalyst's subexpression elimination, so computing all 64
-    hash lanes directly over ``word_shingles(text)`` re-tokenizes the
-    text 64× — materializing the array column first makes each lane
-    read the same array.
+    Pipeline: materialize gram hashes → materialize signature →
+    explode bands → groupBy bucket → explode pairs. The gram hashes are
+    their own projection because lambda-bearing expressions are
+    excluded from Catalyst's subexpression elimination: a gram lambda
+    over the raw ``split(text)`` would re-tokenize per reference.
 
     Pair generation is a single shuffle (groupBy band+bucket →
     collect_list → quadratic explode within the bucket) instead of a
@@ -425,8 +320,8 @@ def minhash_candidate_pairs(
     buckets are near-identical and exact dedup already catches them).
 
     Signatures go through the string-free hashed-shingle + OPH path
-    (:func:`hashed_shingle_frame`, :func:`minhash_signature_oph`) —
-    ~2× the throughput of per-lane hashing of shingle strings.
+    (:func:`hashed_shingle_frame`, :func:`_oph_signatures`) — ~2× the
+    throughput of per-lane hashing of shingle strings.
 
     ``feature_hash="md5"`` swaps shingle hashing to the 60-bit
     engine-portable md5 form and the band-bucket hash to md5, so a
@@ -442,6 +337,7 @@ def minhash_candidate_pairs(
     needs no lineage cut of its own (its parent is materialized and it
     feeds a single consumer chain).
     """
+    build, value_bits, bucket_hash = _feature_hash(feature_hash)
     if pre_shingled is not None:
         # public-API argument contract: ValueError, not assert — under
         # `python -O` an assert vanishes and a mismatched caller would
@@ -452,24 +348,10 @@ def minhash_candidate_pairs(
                 "pre_shingled shares the xxhash64 path; got "
                 f"feature_hash={feature_hash!r}"
             )
-        shingled, value_bits, bucket_hash = pre_shingled, 64, "xx"
-    elif feature_hash == "md5":
-        shingled = md5_shingle_frame(df, id_col, text_col, shingle_k)
-        value_bits, bucket_hash = 60, "md5"
+        shingled = pre_shingled
     else:
-        shingled = hashed_shingle_frame(df, id_col, text_col, shingle_k)
-        value_bits, bucket_hash = 64, "xx"
-    # OPH lanes + rotation densify via the Arrow-vectorized kernel
-    # (functions/npsig.py): bit-exact vs the oph_raw_lanes/
-    # oph_densify_rotation expression pair (pytest-asserted), replacing
-    # the interpreted 64-lane-filter + densify projections that were
-    # ~2 s of the sf0.1 pipeline (guide §4.2; OPTIMIZATION_r14.md).
-    from ..functions.npsig import oph_signature_vec
-
-    sig = shingled.select(
-        F.col(id_col),
-        oph_signature_vec(F.col("__h"), num_hashes, value_bits).alias("__sig"),
-    )
+        shingled = build(df, id_col, text_col, shingle_k)
+    sig = _oph_signatures(shingled, id_col, num_hashes, value_bits)
     if pre_shingled is None:
         # materialize the signature table once (truncate_lineage —
         # guide §8's "decide with small rows": id + 64 longs per doc,
@@ -516,7 +398,10 @@ def ngram_jaccard_pairs(
     (~n²/2⁶⁴ ≈ 1e-13) and ~5× cheaper to tokenize; the production
     default for LSH pipelines. Keep strings where bit-exact parity
     with a string-based oracle matters (``dd_minhash_verified``).
+    ``feature_hash`` picks the gram hash of the hashed form
+    (:data:`_FEATURE_HASHES`).
     """
+    build = _feature_hash(feature_hash)[0]
     if pre_shingled is not None:
         # r14: a shared ALREADY-MATERIALIZED gram frame (e.g. the one
         # the LSH candidate generator signed) — rename to the verify
@@ -529,12 +414,8 @@ def ngram_jaccard_pairs(
             )
         sh = pre_shingled.withColumnRenamed("__h", "__sh")
     else:
-        if hashed and feature_hash == "md5":
-            sh = md5_shingle_frame(df, id_col, text_col, shingle_k, out_col="__sh")
-        elif hashed:
-            sh = hashed_shingle_frame(
-                df, id_col, text_col, shingle_k, out_col="__sh"
-            )
+        if hashed:
+            sh = build(df, id_col, text_col, shingle_k, out_col="__sh")
         else:
             sh = shingle_frame(df, id_col, text_col, shingle_k)
         # r14: materialize the shingle-set frame once — it feeds BOTH
@@ -678,28 +559,10 @@ def kgram_positions(
     ~n_words rows per doc but stays partition-local (no shuffle until
     the caller aggregates).
     """
-    words = df.select(
-        F.col(id_col),
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("__words"),
-    )
-    hashed = words.select(
-        F.col(id_col),
-        F.transform(F.col("__words"), lambda w: F.xxhash64(w)).alias("__hw"),
-    )
-    hw = F.col("__hw")
-    n = F.size(hw)
-    grams = hashed.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1))),
-                lambda i: F.xxhash64(
-                    *[F.element_at(hw, F.least(i + off, n)) for off in range(k)]
-                ),
-            )
-        ).alias("__p0", "gh"),
-    )
-    return grams.select(F.col(id_col), (F.col("__p0") + 1).alias("pos"), "gh")
+    hashed, grams = _xx_grams(df, id_col, text_col, k)
+    return hashed.select(
+        F.col(id_col), F.posexplode(grams).alias("__p0", "gh")
+    ).select(F.col(id_col), (F.col("__p0") + 1).alias("pos"), "gh")
 
 
 def substring_span_stats(
@@ -751,7 +614,7 @@ def substring_span_stats(
     )
     n_tok = df.select(
         F.col(id_col),
-        F.size(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("n_tokens"),
+        F.size(words(F.col(text_col))).alias("n_tokens"),
     )
     return n_tok.join(covered, on=id_col, how="left").select(
         id_col,
@@ -809,13 +672,11 @@ def substring_span_remove(
         F.col(id_col),
         F.explode(F.sequence(F.col("pos"), F.col("pos") + (k - 1))).alias("p"),
     ).distinct()
-    words = df.select(
+    tokens = df.select(
         F.col(id_col),
-        F.posexplode(
-            F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-        ).alias("__p0", "__w"),
+        F.posexplode(words(F.col(text_col))).alias("__p0", "__w"),
     ).select(F.col(id_col), (F.col("__p0") + 1).alias("p"), "__w")
-    kept = words.join(covered, on=[id_col, "p"], how="left_anti")
+    kept = tokens.join(covered, on=[id_col, "p"], how="left_anti")
     rebuilt = kept.groupBy(id_col).agg(
         F.array_join(
             F.transform(
@@ -836,45 +697,6 @@ def substring_span_remove(
 # --------------------------------------------------------------------------
 # simhash
 # --------------------------------------------------------------------------
-
-
-def simhash_bits(hashes_col: str, bits: int = 64) -> Column:
-    """64-bit SimHash over a *materialized* array<long> column of
-    feature hashes, fully JVM-side.
-
-    Signature bit b is 1 iff more features have bit b set than unset.
-    Implemented as ``bits`` flat integer aggregates (one per bit) over
-    the long array plus a constant-folded packing sum. Each aggregate
-    is allocation-free scalar arithmetic; the previous single-pass
-    array<int>-accumulator version allocated a 64-int array per
-    element (zip_with + transform) and measured ~1.5× slower at sf0.1
-    despite traversing the array once — per-element allocation costs
-    more than extra traversals of an on-heap long array.
-
-    Two more formulations were measured and rejected (sf0.1, warm,
-    identical output checksums): packing 4 16-bit counters per long to
-    cut the passes to 16 (1.43 s vs 1.16 s — the fatter lambda body
-    costs more than the saved traversals), and exploding features into
-    rows with 64 codegen'd SUMs under groupBy(id) (12.5 s — the
-    explode+shuffle of ~300 rows/doc dwarfs every lambda cost).
-    """
-    n = F.size(F.col(hashes_col))
-
-    def bit_count(b: int) -> Column:
-        return F.aggregate(
-            F.col(hashes_col),
-            F.lit(0),
-            lambda acc, h: acc + F.shiftright(h, b).bitwiseAND(F.lit(1)).cast("int"),
-        )
-
-    packed: Column | None = None
-    for b in range(bits):
-        term = F.when(
-            bit_count(b) * 2 > n, F.shiftleft(F.lit(1).cast("long"), b)
-        ).otherwise(F.lit(0).cast("long"))
-        packed = term if packed is None else packed + term
-    assert packed is not None
-    return packed
 
 
 def simhash_candidate_pairs(
@@ -926,16 +748,13 @@ def simhash_candidate_pairs(
     """
     width = 64 // chunks
     mask = (1 << width) - 1
-    hasher = {"xx": hashed_shingle_frame, "md5": md5_shingle_frame}[feature_hash]
-    hashed = hasher(df, id_col, text_col, feature_k).withColumnRenamed(
+    build = _feature_hash(feature_hash)[0]
+    hashed = build(df, id_col, text_col, feature_k).withColumnRenamed(
         "__h", "__th"
     )
-    # signature via the Arrow-vectorized kernel (functions/npsig.py):
-    # bit-exact vs simhash_bits (pytest-asserted) at ~1/25th the CPU —
-    # the interpreted 64-aggregate projection was the pipeline's
-    # dominant cost (guide §4.2; OPTIMIZATION_r14.md).
-    from ..functions.npsig import simhash_bits_vec
-
+    # signature via the Arrow-vectorized kernel (functions/npsig.py) at
+    # ~1/25th the CPU of the interpreted 64-aggregate projection, which
+    # was the pipeline's dominant cost (guide §4.2; OPTIMIZATION_r14.md).
     # The isNotNull pair is a runtime no-op (ids and signatures are
     # never null) but load-bearing for the probed self-join's exchange
     # reuse: the `a.id < b.id` predicate infers the same constraints and
@@ -1197,22 +1016,9 @@ def minhash_band_index(
     join is a pruned scan, not a full-index shuffle:
     ``write_bucketed(index, "minhash_index", ["band", "bucket"])``.
     """
-    if feature_hash == "md5":
-        shingled = md5_shingle_frame(df, id_col, text_col, shingle_k)
-        value_bits, bucket_hash = 60, "md5"
-    else:
-        shingled = hashed_shingle_frame(df, id_col, text_col, shingle_k)
-        value_bits, bucket_hash = 64, "xx"
-    # OPH lanes + rotation densify via the Arrow-vectorized kernel
-    # (functions/npsig.py): bit-exact vs the oph_raw_lanes/
-    # oph_densify_rotation expression pair (pytest-asserted), replacing
-    # the interpreted 64-lane-filter + densify projections that were
-    # ~2 s of the sf0.1 pipeline (guide §4.2; OPTIMIZATION_r14.md).
-    from ..functions.npsig import oph_signature_vec
-
-    sig = shingled.select(
-        F.col(id_col),
-        oph_signature_vec(F.col("__h"), num_hashes, value_bits).alias("__sig"),
+    build, value_bits, bucket_hash = _feature_hash(feature_hash)
+    sig = _oph_signatures(
+        build(df, id_col, text_col, shingle_k), id_col, num_hashes, value_bits
     )
     return _banded(sig, id_col, num_hashes, bands, bucket_hash)
 

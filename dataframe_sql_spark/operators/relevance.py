@@ -32,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.text import words
+from .dedup import _feature_hash
 from .lineage import truncate_lineage
 from .scalars import broadcast_attach
 
@@ -53,9 +55,7 @@ def doc_words(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """
     return df.select(
         F.col(id_col),
-        F.posexplode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias(
-            "pos", "word"
-        ),
+        F.posexplode(words(F.col(text_col))).alias("pos", "word"),
     ).filter(F.col("word") != "")
 
 
@@ -181,12 +181,12 @@ def _bigram_frame(
     (round 9, for :func:`dsir_weights`) carries additional per-doc
     columns through without a post-hoc doc-keyed join."""
     extra = list(extra_cols or [])
-    words = df.select(
+    tokens = df.select(
         F.col(id_col),
         *[F.col(c) for c in extra],
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("ws"),
+        words(F.col(text_col)).alias("ws"),
     )
-    bigrams = words.select(
+    bigrams = tokens.select(
         F.col(id_col),
         *[F.col(c) for c in extra],
         F.explode(
@@ -254,6 +254,9 @@ def dsir_weights(
     one xxhash64 mix per bigram. Docs with zero bigrams (empty/1-word)
     have no features and are absent from the output by definition.
     """
+    # the option's accepted set is the dedup family's; DSIR keeps its
+    # own 32-bit bigram hash for "md5", so this only validates
+    _feature_hash(feature_hash)
     bg = _bigram_frame(
         df.select(id_col, text_col, F.col(target_col).alias("__tf")),
         id_col,

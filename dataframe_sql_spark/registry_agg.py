@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from .functions.text import words
 from .registry import engine_for
 
 from .registry_common import (  # noqa: F401
@@ -497,9 +498,7 @@ def _a_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = truncate_lineage(
         docs.select(
             "source",
-            F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias(
-                "word"
-            ),
+            F.explode(words(F.col("text"))).alias("word"),
         )
         .filter(F.col("word") != "")
         .groupBy("source", "word")

@@ -11,7 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.text import fingerprint
+from .functions.npsig import oph_signature_vec
+from .functions.text import fingerprint, words
 from .operators.dedup import (
     blocked_ngram_jaccard,
     embedding_dedup,
@@ -20,8 +21,6 @@ from .operators.dedup import (
     minhash_candidate_pairs,
     minhash_dedup,
     ngram_jaccard_pairs,
-    oph_densify_rotation,
-    oph_raw_lanes,
     shingle_frame,
     simhash_dedup,
 )
@@ -367,7 +366,7 @@ _reg(
     "dd_simhash_probed_verified",
     # Replay certificate for the probed simhash pipeline (the last
     # expensive rows-only family without one): same production code
-    # path — simhash_bits majority signature, 4x16-bit pigeonhole
+    # path — majority-bit simhash signature, 4x16-bit pigeonhole
     # chunks, 1-bit multi-probe, exact-bucket cap 1000, hamming<=7
     # verify, min-id survivorship — with ONLY the per-gram feature
     # hash swapped to the engine-portable 60-bit md5 form
@@ -871,7 +870,7 @@ def _dd_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import line_dedup
 
     docs = _docs(spark, sf_dir)
-    ws = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    ws = words(F.col("text"))
     nl = docs.select(
         "doc_id",
         F.array_join(
@@ -978,9 +977,7 @@ def _dd_bloom_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.sketches import bloom_build, bloom_probe
 
     docs = _docs(spark, sf_dir)
-    key = F.array_join(
-        F.slice(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), 1, 5), " "
-    )
+    key = F.array_join(F.slice(words(F.col("text")), 1, 5), " ")
     keyed = docs.select("doc_id", key.alias("k"))
     ref = keyed.filter(F.col("doc_id") % 2 == 0)
     probe = keyed.filter(F.col("doc_id") % 2 == 1)
@@ -1085,7 +1082,8 @@ def _dd_minhash_est_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ``dd_minhash_verified`` certifies LSH *recall*; this entry certifies
     the other half of the minhash contract — that lane agreement of the
-    production OPH signature estimates Jaccard. Over every pair with
+    production OPH signature (the ``oph_signature_vec`` numpy kernel
+    the LSH pipelines run) estimates Jaccard. Over every pair with
     exact word-shingle Jaccard >= 0.5 (the complete shingle-sharing
     candidate superset, same certificate-only generator as
     dd_clusters_verified), the 64-lane agreement fraction must sit
@@ -1104,10 +1102,8 @@ def _dd_minhash_est_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = ngram_jaccard_pairs(
         docs, _shingle_sharing_candidates(docs), "doc_id", "text", threshold=0.5
     )
-    h = hashed_shingle_frame(docs, "doc_id", "text")
-    raw = h.select("doc_id", oph_raw_lanes(F.col("__h"), 64).alias("__raw"))
-    sig = raw.select(
-        "doc_id", oph_densify_rotation(F.col("__raw"), 64).alias("sig")
+    sig = hashed_shingle_frame(docs, "doc_id", "text").select(
+        "doc_id", oph_signature_vec(F.col("__h"), 64).alias("sig")
     )
     # merge hints: the signature sides carry 64-slot arrays whose width
     # the estimator can't see (broadcast_audit class — never broadcast

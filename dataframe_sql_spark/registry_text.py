@@ -15,6 +15,7 @@ from .functions.text import (
     bpe_token_estimate,
     lang_id,
     token_count,
+    words,
 )
 
 from .registry_common import (  # noqa: F401
@@ -271,7 +272,7 @@ def _txt_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         bpe_tokenize_col(F.col("text"), merges).alias("toks"),
     )
     detok = F.trim(F.regexp_replace(F.concat_ws("", "toks"), "</w>", " "))
-    norm = F.concat_ws(" ", F.split(F.trim(F.lower(F.col("text"))), r"\s+"))
+    norm = F.concat_ws(" ", words(F.col("text")))
     return toks.select((detok == norm).alias("ok")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.min("ok").alias("all_roundtrip"),
@@ -402,14 +403,11 @@ def _txt_word_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the words stream shuffles at its own groupBy immediately, and the
     fan-out exchange measured 1.44x slower in a clean single-key A/B
     at sf0.1 (driver r14 concurred: 0.37->0.60 s)."""
-    words = _docs(spark, sf_dir, fan_out=False).select(
-        "doc_id",
-        F.explode(
-            F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-        ).alias("w"),
+    tokens = _docs(spark, sf_dir, fan_out=False).select(
+        "doc_id", F.explode(words(F.col("text"))).alias("w")
     )
-    freq = words.groupBy("w").agg(F.count("*").alias("c"))
-    return words.join(freq, "w").groupBy("doc_id").agg(
+    freq = tokens.groupBy("w").agg(F.count("*").alias("c"))
+    return tokens.join(freq, "w").groupBy("doc_id").agg(
         F.count("*").alias("n_words"),
         # BIGINT cast on freq_sum: DuckDB sum(BIGINT) widens to
         # HUGEINT -> pandas float64 -> driver value-hash mismatch

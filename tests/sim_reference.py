@@ -1,13 +1,15 @@
-"""Expression-form references for the numpy vector kernels in
-``operators/similarity.py`` and ``operators/dedup.py``.
+"""Expression-form references for the numpy kernels in
+``operators/similarity.py``, ``operators/dedup.py`` and
+``functions/npsig.py``.
 
 Each function here is the pure Spark-expression formulation of a
 library kernel — the same math the DuckDB replay certificates mirror
 in SQL (``round(list_inner_product(...), 8)`` cell scores,
-first-match argmax, seeded PQ folds, self-join cosine). The parity
-tests in ``test_ann_index.py``, ``test_dedup.py`` and
-``test_operators.py`` compare the library's output against these
-bit-for-bit; nothing in the library calls them.
+first-match argmax, seeded PQ folds, self-join cosine, OPH lanes with
+rotation densify, majority-bit SimHash). The parity tests in
+``test_ann_index.py``, ``test_dedup.py`` and ``test_operators.py``
+compare the library's output against these bit-for-bit; nothing in
+the library calls them.
 """
 
 from __future__ import annotations
@@ -285,3 +287,70 @@ def embedding_cosine_pairs_expr(
         )
         .filter(F.col("cosine").isNull() | (F.col("cosine") >= threshold))
     )
+
+
+def oph_raw_lanes(hashes: Column, num_hashes: int = 64, value_bits: int = 64) -> Column:
+    """Reference for the lane step of ``npsig.oph_densified_np``: OPH
+    lane minima (array<long>, NULL for an empty lane). The top
+    ``log2(num_hashes)`` of the ``value_bits``-wide hash pick the lane
+    (60 for the md5 feature hash, whose top 4 bits are always zero),
+    and each lane keeps its minimum — one ``filter`` + ``array_min``
+    per lane."""
+    assert num_hashes & (num_hashes - 1) == 0 and num_hashes > 0, (
+        f"num_hashes must be a power of two, got {num_hashes}"
+    )
+    shift = value_bits - (num_hashes - 1).bit_length()  # top bits → lane index
+    return F.array(
+        *[
+            F.array_min(
+                F.filter(hashes, lambda h: F.shiftrightunsigned(h, shift) == F.lit(i))
+            )
+            for i in range(num_hashes)
+        ]
+    )
+
+
+def oph_densify_rotation(lanes: Column, num_hashes: int = 64) -> Column:
+    """Reference for the densify step of ``npsig.oph_densified_np``:
+    an empty lane borrows the nearest occupied lane to the right
+    (circular). ``lanes`` should be a materialized column (select
+    :func:`oph_raw_lanes` in a prior projection): it is referenced
+    several times here, and lambda-bearing expressions are excluded
+    from subexpression elimination. All-null input yields an all-null
+    signature."""
+    idx = F.sequence(F.lit(0), F.lit(num_hashes - 1))
+    occ = F.filter(idx, lambda i: F.element_at(lanes, i + 1).isNotNull())
+    return F.transform(
+        idx,
+        lambda i: F.coalesce(
+            F.element_at(lanes, i + 1),
+            F.element_at(
+                lanes,
+                F.element_at(F.concat(F.filter(occ, lambda j: j >= i), occ), 1) + 1,
+            ),
+        ),
+    )
+
+
+def simhash_bits(hashes_col: str, bits: int = 64) -> Column:
+    """Reference for ``npsig.simhash_np`` over a materialized
+    array<long> column: signature bit b is 1 iff more features have
+    bit b set than unset — one ``aggregate`` per bit plus a packing
+    sum."""
+    n = F.size(F.col(hashes_col))
+
+    def bit_count(b: int) -> Column:
+        return F.aggregate(
+            F.col(hashes_col),
+            F.lit(0),
+            lambda acc, h: acc + F.shiftright(h, b).bitwiseAND(F.lit(1)).cast("int"),
+        )
+
+    packed: Column | None = None
+    for b in range(bits):
+        term = F.when(
+            bit_count(b) * 2 > n, F.shiftleft(F.lit(1).cast("long"), b)
+        ).otherwise(F.lit(0).cast("long"))
+        packed = term if packed is None else packed + term
+    assert packed is not None
+    return packed

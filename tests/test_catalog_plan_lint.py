@@ -263,3 +263,19 @@ def test_no_unused_imports():
                 if (a.asname or a.name).split(".")[0] not in used
             ]
     assert hits == [], "\n".join(hits)
+
+
+def test_word_tokenizer_spelled_once():
+    """Source lint: the lowercased whitespace tokenization
+    ``F.split(F.trim(F.lower(...)), ...)`` is spelled only in
+    ``functions/text.py`` (``words``); every other operator calls it,
+    so all text operators and their oracles share one tokenizer."""
+    pkg = Path(__file__).resolve().parent.parent / "dataframe_sql_spark"
+    hits = [
+        f"{p.relative_to(pkg.parent)}:{i}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p != pkg / "functions" / "text.py"
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if "F.split(F.trim(F.lower(" in line
+    ]
+    assert hits == [], "\n".join(hits)

@@ -1,3 +1,4 @@
+import pytest
 
 
 def test_incremental_dedup_against_index(spark, engine):
@@ -111,10 +112,10 @@ def test_simhash_multiprobe_radius_complete(spark):
 
     from dataframe_sql_spark.operators.dedup import (
         hashed_shingle_frame,
-        simhash_bits,
         simhash_candidate_pairs,
     )
     from tests.conftest import SF_DIR
+    from tests.sim_reference import simhash_bits
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(300)
     got = {
@@ -204,6 +205,7 @@ def test_vectorized_signatures_match_expressions(spark):
     feature-hash spaces, including the short-doc/degenerate rows. This
     is what lets the oracle-replayed certificates keep hash-matching
     through the vectorized path."""
+    import pandas as pd
     from pyspark.sql import functions as F
 
     from dataframe_sql_spark.functions.npsig import (
@@ -213,51 +215,82 @@ def test_vectorized_signatures_match_expressions(spark):
     from dataframe_sql_spark.operators.dedup import (
         hashed_shingle_frame,
         md5_shingle_frame,
+    )
+    from tests.conftest import SF_DIR
+    from tests.sim_reference import (
         oph_densify_rotation,
         oph_raw_lanes,
         simhash_bits,
     )
-    from tests.conftest import SF_DIR
 
     # bounded doc set, and the expression/vectorized sides are collected
     # as SEPARATE plans (one combined compare plan makes the optimizer
     # chew on the interpreted signature trees for minutes)
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(400)
-    for hasher, value_bits in ((hashed_shingle_frame, 64), (md5_shingle_frame, 60)):
-        h2 = hasher(docs, "doc_id", "text", 2).withColumnRenamed("__h", "__th")
-        ref = {
-            r.doc_id: r.s
-            for r in h2.select(
-                "doc_id", simhash_bits("__th").alias("s")
-            ).collect()
-        }
-        vec = {
-            r.doc_id: r.s
-            for r in h2.select(
-                "doc_id", simhash_bits_vec(F.col("__th")).alias("s")
-            ).collect()
-        }
-        assert ref == vec, value_bits
-        h3 = hasher(docs, "doc_id", "text", 3)
-        oref = {
-            r.doc_id: tuple(r.s)
-            for r in h3.select(
-                "doc_id",
-                oph_raw_lanes(F.col("__h"), 64, value_bits).alias("__lanes"),
-            )
-            .select(
-                "doc_id", oph_densify_rotation(F.col("__lanes"), 64).alias("s")
-            )
-            .collect()
-        }
-        ovec = {
-            r.doc_id: tuple(r.s)
-            for r in h3.select(
-                "doc_id",
-                oph_signature_vec(F.col("__h"), 64, value_bits).alias("s"),
-            ).collect()
-        }
-        assert oref == ovec, value_bits
+    # degenerate inputs: blank, one word, one repeated word, unicode-only
+    # (few grams, so most lanes are densified), NULL, and a long document
+    edge = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "doc_id": list(range(7)),
+                "text": [
+                    "",
+                    "   ",
+                    "a",
+                    "a a a",
+                    "ü ö ä ß 日本 語 ∑ π",
+                    None,
+                    " ".join(f"w{i * 7919 % 211}" for i in range(500)),
+                ],
+            }
+        ),
+        "doc_id long, text string",
+    )
+    # (frame, (simhash k, OPH k, OPH lane count) combinations)
+    cases = (
+        (docs, [(2, 3, 64)]),
+        (edge, [(k, k, lanes) for k in (2, 3) for lanes in (16, 64)]),
+    )
+    for frame, combos in cases:
+        for hasher, value_bits in ((hashed_shingle_frame, 64), (md5_shingle_frame, 60)):
+            for sim_k, oph_k, lanes in combos:
+                h2 = hasher(frame, "doc_id", "text", sim_k).withColumnRenamed(
+                    "__h", "__th"
+                )
+                ref = {
+                    r.doc_id: r.s
+                    for r in h2.select(
+                        "doc_id", simhash_bits("__th").alias("s")
+                    ).collect()
+                }
+                vec = {
+                    r.doc_id: r.s
+                    for r in h2.select(
+                        "doc_id", simhash_bits_vec(F.col("__th")).alias("s")
+                    ).collect()
+                }
+                assert ref == vec, (value_bits, sim_k)
+                h3 = hasher(frame, "doc_id", "text", oph_k)
+                oref = {
+                    r.doc_id: tuple(r.s)
+                    for r in h3.select(
+                        "doc_id",
+                        oph_raw_lanes(F.col("__h"), lanes, value_bits).alias("__lanes"),
+                    )
+                    .select(
+                        "doc_id",
+                        oph_densify_rotation(F.col("__lanes"), lanes).alias("s"),
+                    )
+                    .collect()
+                }
+                ovec = {
+                    r.doc_id: tuple(r.s)
+                    for r in h3.select(
+                        "doc_id",
+                        oph_signature_vec(F.col("__h"), lanes, value_bits).alias("s"),
+                    ).collect()
+                }
+                assert oref == ovec, (value_bits, oph_k, lanes)
 
 
 def _pair_bits(df) -> list[tuple]:
@@ -340,3 +373,50 @@ def test_embedding_cosine_pairs_rejects_non_integral_ids(spark):
     )
     with pytest.raises(TypeError, match="doc_key"):
         embedding_cosine_pairs(df, "doc_key", "embedding", "blk")
+
+
+@pytest.mark.parametrize(
+    "entry",
+    [
+        "minhash_candidate_pairs",
+        "minhash_band_index",
+        "ngram_jaccard_pairs",
+        "simhash_candidate_pairs",
+        "dsir_weights",
+    ],
+)
+def test_unknown_feature_hash_raises(spark, entry):
+    """A ``feature_hash`` outside {"xx", "md5"} (here a case typo) is a
+    ValueError naming the value and the accepted set, never a silent
+    fall-back to the xxhash64 path."""
+    import pandas as pd
+
+    from dataframe_sql_spark.operators import dedup, relevance
+
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            {"doc_id": [1, 2], "text": ["a b c d", "a b c e"], "tgt": [True, False]}
+        )
+    )
+    pairs = spark.createDataFrame(pd.DataFrame({"id_a": [1], "id_b": [2]}))
+    calls = {
+        "minhash_candidate_pairs": lambda fh: dedup.minhash_candidate_pairs(
+            df, "doc_id", "text", feature_hash=fh
+        ),
+        "minhash_band_index": lambda fh: dedup.minhash_band_index(
+            df, "doc_id", "text", feature_hash=fh
+        ),
+        "ngram_jaccard_pairs": lambda fh: dedup.ngram_jaccard_pairs(
+            df, pairs, "doc_id", "text", hashed=True, feature_hash=fh
+        ),
+        "simhash_candidate_pairs": lambda fh: dedup.simhash_candidate_pairs(
+            df, "doc_id", "text", feature_hash=fh
+        ),
+        "dsir_weights": lambda fh: relevance.dsir_weights(
+            df, "doc_id", "text", "tgt", feature_hash=fh
+        ),
+    }
+    with pytest.raises(
+        ValueError, match=r"feature_hash must be one of \['md5', 'xx'\], got 'MD5'"
+    ):
+        calls[entry]("MD5")
