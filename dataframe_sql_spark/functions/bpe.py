@@ -19,6 +19,8 @@ the real thing, shaped the way production tokenizer training is:
 
 from __future__ import annotations
 
+from itertools import chain
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -116,51 +118,50 @@ def _encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
 _BPE_CACHE_MAX = 1 << 20
 
 
-def bpe_tokenize_col(text: Column, merges: list[tuple[str, str]]) -> Column:
-    """array<string> of BPE tokens — Arrow-batched pandas UDF applying
-    the learned merges (broadcast as a closure constant)."""
+def _bpe_words(merges: list[tuple[str, str]]):
+    """The one learned-BPE encoder: maps a batch's text Series to each
+    row's list of per-word token lists, with one word cache per batch
+    (capped at :data:`_BPE_CACHE_MAX` words)."""
     ranks = {pair: i for i, pair in enumerate(merges)}
 
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def tok(s: pd.Series) -> pd.Series:
+    def encode(s: pd.Series) -> pd.Series:
         cache: dict[str, list[str]] = {}
 
-        def enc(t: str) -> list[str]:
-            out: list[str] = []
+        def enc(t: str) -> list[list[str]]:
+            out: list[list[str]] = []
             for w in (t or "").strip().lower().split():
                 v = cache.get(w)
                 if v is None:
                     v = _encode_word(w, ranks)
                     if len(cache) < _BPE_CACHE_MAX:
                         cache[w] = v
-                out.extend(v)
+                out.append(v)
             return out
 
         return s.map(enc)
+
+    return encode
+
+
+def bpe_tokenize_col(text: Column, merges: list[tuple[str, str]]) -> Column:
+    """array<string> of BPE tokens — Arrow-batched pandas UDF applying
+    the learned merges (broadcast as a closure constant)."""
+    encode = _bpe_words(merges)
+
+    @F.pandas_udf(T.ArrayType(T.StringType()))
+    def tok(s: pd.Series) -> pd.Series:
+        return encode(s).map(lambda ws: list(chain.from_iterable(ws)))
 
     return tok(text)
 
 
 def bpe_token_count_col(text: Column, merges: list[tuple[str, str]]) -> Column:
-    """BIGINT learned-BPE token count per row (same UDF, count only —
+    """BIGINT learned-BPE token count per row (same encoder, count only —
     cheaper to transfer than the token arrays)."""
-    ranks = {pair: i for i, pair in enumerate(merges)}
+    encode = _bpe_words(merges)
 
     @F.pandas_udf(T.LongType())
     def cnt(s: pd.Series) -> pd.Series:
-        cache: dict[str, int] = {}
-
-        def n(t: str) -> int:
-            total = 0
-            for w in (t or "").strip().lower().split():
-                v = cache.get(w)
-                if v is None:
-                    v = len(_encode_word(w, ranks))
-                    if len(cache) < _BPE_CACHE_MAX:
-                        cache[w] = v
-                total += v
-            return total
-
-        return s.map(n)
+        return encode(s).map(lambda ws: sum(map(len, ws)))
 
     return cnt(text)

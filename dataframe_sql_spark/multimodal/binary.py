@@ -4,24 +4,30 @@ columns with typed metadata (north-star extension, BASELINE.json).
 The Spark-side plumbing — schemas, partition-friendly batch shapes,
 Arrow-batched UDF signatures — is real and tested. The actual media
 decode is STUBBED: codec libraries (Pillow/ffmpeg/librosa) are not in
-this container, so ``decode_*`` raise ``NotImplementedError`` unless
-``fake=True``, which substitutes a deterministic header-parse fake so
-the downstream pipeline shape can be exercised end-to-end.
+this container. ``decode_image_batch`` and ``chunk_audio`` have real
+dependency-free paths (image headers, RIFF/WAVE); the feature and
+frame stubs raise ``NotImplementedError`` at call time unless
+``fake=True``. ``fake=True`` substitutes a deterministic byte-derived
+fake everywhere, so the downstream pipeline shape can be exercised
+end-to-end.
 
-Scale notes: every stage here is ``mapInPandas``/expression map-side
-work over binary blobs — no shuffle; blobs never pass through the
+Scale notes: every stage here is ``mapInPandas``
+(``operators.scalars.map_batches``) or expression map-side work over
+binary blobs — no shuffle; blobs never pass through the
 driver; Arrow moves them zero-copy between JVM and Python workers.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..operators.scalars import _fan_out, map_batches
 
 __all__ = [
     "MEDIA_META_SCHEMA",
@@ -138,6 +144,18 @@ def _pil_decode(b: bytes) -> tuple[int, int, int] | None:
         return None
 
 
+@functools.cache
+def _image_decoder():
+    """The real image decode of this worker: Pillow when importable,
+    else the pure-Python header parse (probed once per process)."""
+    try:
+        import PIL.Image  # noqa: F401
+
+        return _pil_decode
+    except ImportError:
+        return _parse_image_header
+
+
 def decode_image_batch(
     df: DataFrame, blob_col: str, fake: bool = False
 ) -> DataFrame:
@@ -156,35 +174,17 @@ def decode_image_batch(
     through in Arrow record batches partition-by-partition; output
     schema = input schema + the three ints.
     """
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("channels", T.IntegerType()),
-        ]
-    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if fake:
-            decode = lambda b: _fake_decode(b)  # noqa: E731
-        else:
-            try:
-                import PIL.Image  # noqa: F401
+    def dims(pdf):
+        decode = _fake_decode if fake else _image_decoder()
+        decoded = pdf[blob_col].map(lambda b: decode(b or b"") or (None,) * 3)
+        return pdf.assign(
+            width=decoded.map(lambda t: t[0]).astype("Int32"),
+            height=decoded.map(lambda t: t[1]).astype("Int32"),
+            channels=decoded.map(lambda t: t[2]).astype("Int32"),
+        )
 
-                decode = _pil_decode
-            except ImportError:
-                decode = _parse_image_header
-        for pdf in it:
-            decoded = pdf[blob_col].map(lambda b: decode(b or b"") or (None,) * 3)
-            pdf = pdf.assign(
-                width=decoded.map(lambda t: t[0]).astype("Int32"),
-                height=decoded.map(lambda t: t[1]).astype("Int32"),
-                channels=decoded.map(lambda t: t[2]).astype("Int32"),
-            )
-            yield pdf
-
-    return df.mapInPandas(batches, schema=out_schema)
+    return map_batches(df, "`width` int,`height` int,`channels` int", dims)
 
 
 def extract_image_features(
@@ -193,28 +193,22 @@ def extract_image_features(
     """Feature-extract blobs → array<float> embedding via mapInPandas.
     Stub: deterministic byte-histogram features when ``fake=True``;
     real model inference is out of scope for this container."""
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField("features", T.ArrayType(T.FloatType()))]
+    if not fake:
+        raise NotImplementedError(
+            "real feature extraction needs a vision model; pass fake=True"
+        )
+
+    def feat(b: bytes | None) -> list[float]:
+        b = b or b""
+        hist = [0] * dim
+        for byte in b[:4096]:
+            hist[byte % dim] += 1
+        total = float(sum(hist)) or 1.0
+        return [h / total for h in hist]
+
+    return map_batches(
+        df, "`features` array<float>", lambda pdf: pdf.assign(features=pdf[blob_col].map(feat))
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not fake:
-                raise NotImplementedError(
-                    "real feature extraction needs a vision model; pass fake=True"
-                )
-
-            def feat(b: bytes | None) -> list[float]:
-                b = b or b""
-                hist = [0] * dim
-                for byte in b[:4096]:
-                    hist[byte % dim] += 1
-                total = float(sum(hist)) or 1.0
-                return [h / total for h in hist]
-
-            yield pdf.assign(features=pdf[blob_col].map(feat))
-
-    return df.mapInPandas(batches, schema=out_schema)
 
 
 def _wav_chunks(b: bytes, chunk_seconds: float) -> list[bytes] | None:
@@ -241,6 +235,20 @@ def _wav_chunks(b: bytes, chunk_seconds: float) -> list[bytes] | None:
         return None
 
 
+def _byte_windows(pdf, blob_col: str, width: int, n_windows):
+    """The stub fan-out: each row repeated once per ``width``-byte
+    window of its blob (``n_windows`` maps the blob lengths to window
+    counts; a NULL blob is empty). Returns the rows, each copy's window
+    index and the window bytes — only the slicing stays Python."""
+    blobs = pdf[blob_col].map(lambda b: b or b"")
+    counts = n_windows(blobs.map(len))
+    out, idx = _fan_out(pdf, counts)
+    windows = [
+        b[i * width : (i + 1) * width] for b, c in zip(blobs, counts.to_numpy()) for i in range(c)
+    ]
+    return out, idx, windows
+
+
 def chunk_audio(
     df: DataFrame,
     blob_col: str,
@@ -263,65 +271,40 @@ def chunk_audio(
     Same fan-out caveat as frame sampling: one row becomes
     ceil(duration/chunk_seconds) rows before any shuffle.
     """
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField("chunk_idx", T.IntegerType()),
-            T.StructField("chunk_start_s", T.DoubleType()),
-            T.StructField("chunk_blob", T.BinaryType()),
-        ]
-    )
     step = int(chunk_seconds * bytes_per_second)
 
-    def real_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in out_schema.fields]
-        for pdf in it:
-            if len(pdf) == 0:
-                yield pd.DataFrame(columns=cols)
-                continue
-            chunk_lists = pdf[blob_col].map(
-                lambda b: _wav_chunks(b or b"", chunk_seconds)
-            )
-            counts = chunk_lists.map(lambda L: len(L) if L else 1)
-            out = pdf.loc[pdf.index.repeat(counts)].reset_index(drop=True)
-            idx = np.concatenate(
-                [np.arange(c) for c in counts.to_numpy()]
-            ).astype("float64")
-            nulls = np.concatenate(
-                [np.full(c, L is None) for L, c in zip(chunk_lists, counts)]
-            )
-            out["chunk_idx"] = pd.array(
-                np.where(nulls, np.nan, idx), dtype="Int32"
-            )
-            out["chunk_start_s"] = np.where(nulls, np.nan, idx * chunk_seconds)
-            out["chunk_blob"] = [
-                c for L in chunk_lists for c in (L if L else [None])
-            ]
-            yield out[cols]
+    def real_chunks(pdf):
+        chunk_lists = pdf[blob_col].map(
+            lambda b: _wav_chunks(b or b"", chunk_seconds)
+        )
+        counts = chunk_lists.map(lambda L: len(L) if L else 1)
+        out, idx = _fan_out(pdf, counts)
+        idx = idx.astype("float64")
+        nulls = np.concatenate(
+            [np.full(c, L is None) for L, c in zip(chunk_lists, counts)]
+        )
+        out["chunk_idx"] = pd.array(
+            np.where(nulls, np.nan, idx), dtype="Int32"
+        )
+        out["chunk_start_s"] = np.where(nulls, np.nan, idx * chunk_seconds)
+        out["chunk_blob"] = [
+            c for L in chunk_lists for c in (L if L else [None])
+        ]
+        return out
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                yield pd.DataFrame(columns=[f.name for f in out_schema.fields])
-                continue
-            # Vectorized fan-out: repeat each row by its chunk count,
-            # then derive per-chunk index/offset with array arithmetic.
-            # Only the byte-slice itself stays Python (blobs are opaque
-            # objects); no iterrows / per-row dict building.
-            blobs = pdf[blob_col].map(lambda b: b or b"")
-            counts = blobs.map(len).floordiv(-1 * step).mul(-1).clip(lower=1)  # ceil, ≥1
-            out = pdf.loc[pdf.index.repeat(counts)].reset_index(drop=True)
-            idx = np.concatenate([np.arange(c) for c in counts.to_numpy()])
-            out["chunk_idx"] = idx.astype("int32")
-            out["chunk_start_s"] = idx * chunk_seconds
-            out["chunk_blob"] = [
-                b[i * step : (i + 1) * step]
-                for b, c in zip(blobs, counts.to_numpy())
-                for i in range(c)
-            ]
-            yield out[[f.name for f in out_schema.fields]]
+    def fake_chunks(pdf):
+        out, idx, windows = _byte_windows(
+            pdf, blob_col, step, lambda n: n.floordiv(-step).mul(-1).clip(lower=1)  # ceil, ≥1
+        )
+        return out.assign(
+            chunk_idx=idx.astype("int32"), chunk_start_s=idx * chunk_seconds, chunk_blob=windows
+        )
 
-    return df.mapInPandas(batches if fake else real_batches, schema=out_schema)
+    return map_batches(
+        df,
+        "`chunk_idx` int,`chunk_start_s` double,`chunk_blob` binary",
+        fake_chunks if fake else real_chunks,
+    )
 
 
 def sample_video_frames(
@@ -332,31 +315,16 @@ def sample_video_frames(
     (real path: ffmpeg). One input row fans out to ≤ max_frames rows —
     partition sizes grow by that factor, which is why this runs before
     any shuffle stage in a real pipeline."""
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("frame_blob", T.BinaryType()),
-        ]
-    )
+    if not fake:
+        raise NotImplementedError("real frame sampling needs ffmpeg; pass fake=True")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not fake:
-                raise NotImplementedError("real frame sampling needs ffmpeg; pass fake=True")
-            if len(pdf) == 0:
-                yield pd.DataFrame(columns=[f.name for f in out_schema.fields])
-                continue
-            blobs = pdf[blob_col].map(lambda b: b or b"")
-            counts = blobs.map(len).floordiv(every_n_bytes).clip(lower=1, upper=max_frames)
-            out = pdf.loc[pdf.index.repeat(counts)].reset_index(drop=True)
-            idx = np.concatenate([np.arange(c) for c in counts.to_numpy()])
-            out["frame_idx"] = idx.astype("int32")
-            out["frame_blob"] = [
-                b[i * every_n_bytes : (i + 1) * every_n_bytes]
-                for b, c in zip(blobs, counts.to_numpy())
-                for i in range(c)
-            ]
-            yield out[[f.name for f in out_schema.fields]]
+    def frames(pdf):
+        out, idx, windows = _byte_windows(
+            pdf,
+            blob_col,
+            every_n_bytes,
+            lambda n: n.floordiv(every_n_bytes).clip(lower=1, upper=max_frames),
+        )
+        return out.assign(frame_idx=idx.astype("int32"), frame_blob=windows)
 
-    return df.mapInPandas(batches, schema=out_schema)
+    return map_batches(df, "`frame_idx` int,`frame_blob` binary", frames)

@@ -925,16 +925,16 @@ def embedding_cosine_pairs(
     interpreted cosine fold per pair (measured 11-12 s of the sf0.1
     funnel wall; the kernel form is ~1 s). Vectors cross the Arrow
     boundary once per block (n rows, not n² pairs); scores replicate
-    the expression fold BIT-FOR-BIT (:func:`~.similarity._fold_dots`
-    over :func:`~.similarity._fold_norms`, same division order —
-    pytest-asserted against the self-join form kept in tests/), and
+    the expression fold BIT-FOR-BIT (:func:`~.similarity._cosine_blocks`
+    — pytest-asserted against the self-join form kept in tests/), and
     only pairs that pass the threshold leave the kernel.
     """
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import IntegralType
 
-    from .similarity import _fold_dots, _fold_norms, _row_blocks
+    from .scalars import _stack_vectors
+    from .similarity import _cosine_blocks
 
     base = df.select(
         F.col(id_col),
@@ -943,7 +943,7 @@ def embedding_cosine_pairs(
     ).filter(
         F.col(id_col).isNotNull() & (F.size("__v") > 0) & F.col("__blk").isNotNull()
     )
-    id_type = dict(zip(base.schema.names, base.schema))[id_col].dataType
+    id_type = base.schema[id_col].dataType
     if not isinstance(id_type, IntegralType):
         raise TypeError(
             f"embedding_cosine_pairs: id column {id_col!r} is "
@@ -957,12 +957,10 @@ def embedding_cosine_pairs(
         ids = pdf[id_col].to_numpy()
         order = np.argsort(ids, kind="stable")
         ids = ids[order]
-        V = np.stack([np.asarray(v, np.float64) for v in pdf["__v"].to_numpy()[order]])
-        nrm = _fold_norms(V)
+        V = _stack_vectors(pdf["__v"].to_numpy()[order])
         pos = np.arange(n)
         outs = []
-        for rows in _row_blocks(n, V):
-            cos = _fold_dots(V[rows], V) / (nrm[rows, None] * nrm[None, :])
+        for rows, cos in _cosine_blocks(V, V):
             # upper triangle by id order: row r pairs with every column
             # c > r — id uniqueness makes sorted index order the id
             # order. ~(cos < t), not (cos >= t): NaN (zero-norm

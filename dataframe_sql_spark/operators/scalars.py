@@ -20,6 +20,9 @@ cross product, still hash-planned.
 
 :func:`const_array` is the one way the package puts a driver-side list
 (query vector, LUTs, centroids, stopwords, salt buckets) into a plan.
+
+:func:`map_batches` is the package's one ``mapInPandas`` crossing,
+used by every row-batch kernel (vector and media).
 """
 
 from __future__ import annotations
@@ -27,9 +30,10 @@ from __future__ import annotations
 import json
 import numbers
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-__all__ = ["broadcast_attach", "const_array"]
+__all__ = ["broadcast_attach", "const_array", "map_batches"]
 
 _KEY = "__attach_key"
 
@@ -118,3 +122,34 @@ def const_array(values, elem: str) -> Column:
     mistyped or out-of-range value into a NULL array."""
     ddl = f"array<{elem}>"
     return F.from_json(F.lit(json.dumps(_checked(values, ddl))), ddl)
+
+
+def _stack_vectors(values) -> np.ndarray:
+    """An iterable of equal-length number arrays (an Arrow batch's
+    ``array<…>`` column) as one (n, dim) float64 matrix."""
+    return np.stack([np.asarray(v, np.float64) for v in values])
+
+
+def _fan_out(pdf, counts):
+    """``pdf``'s rows with row i repeated ``counts[i]`` times (a scalar
+    repeats every row), and each copy's number, counted from 0."""
+    counts = np.broadcast_to(np.asarray(counts, np.int64), (len(pdf),))
+    start = np.cumsum(counts) - counts
+    copy = np.arange(counts.sum()) - np.repeat(start, counts)
+    return pdf.iloc[np.repeat(np.arange(len(pdf)), counts)].reset_index(drop=True), copy
+
+
+def map_batches(df: DataFrame, added: str, fn, vec_col: str | None = None) -> DataFrame:
+    """The ``mapInPandas`` scaffold: ``fn(pdf)`` gets each non-empty
+    Arrow batch and returns its output batch — the input columns
+    followed by the ``added`` ones (a DDL column list). With
+    ``vec_col``, ``fn(pdf, V)`` also gets that column stacked as an
+    (n, dim) float64 matrix (:func:`_stack_vectors`)."""
+
+    def kernel(batches):
+        for pdf in batches:
+            if len(pdf):
+                yield fn(pdf) if vec_col is None else fn(pdf, _stack_vectors(pdf[vec_col]))
+
+    cols = ",".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
+    return df.mapInPandas(kernel, schema=f"{cols},{added}")

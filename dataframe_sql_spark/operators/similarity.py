@@ -21,11 +21,12 @@ Scale design:
 Every numpy kernel here replicates the interpreted expression fold
 bit-for-bit through one helper per idiom: :func:`_fold_dots` (dot
 products), :func:`_fold_norms` (row norms), :func:`_row_blocks`
-(~32 MB product blocks), :func:`_md5_sample` (the seedless build
-sample) and :func:`_lloyd_means` (one distributed Lloyd update);
-the expression side is :func:`_dot_col` / :func:`_norm_col` /
-:func:`_cosine_cols`. ``operators/dedup.py``'s pair kernel reuses
-them.
+(~32 MB product blocks), :func:`_cosine_blocks` (blocked pairwise
+cosines), :func:`_md5_sample` (the seedless build sample) and
+:func:`_lloyd_means` (one distributed Lloyd update); the expression
+side is :func:`_dot_col` / :func:`_norm_col` / :func:`_cosine_cols`.
+``operators/dedup.py``'s pair kernel reuses them. Row-batch kernels
+cross Arrow through ``scalars.map_batches``.
 """
 
 from __future__ import annotations
@@ -40,7 +41,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F, types as T
 
 from ..functions.npsig import round_half_up_np
-from .scalars import const_array
+from .scalars import _fan_out, _stack_vectors, const_array, map_batches
 
 __all__ = [
     "cosine_col",
@@ -431,6 +432,17 @@ def _row_blocks(n: int, M):
         yield slice(s, s + step)
 
 
+def _cosine_blocks(A, B):
+    """``(rows, cos)`` per :func:`_row_blocks` slice of ``A``: the
+    cosines of those rows with every row of ``B``, replicating the
+    interpreted cosine fold bit-for-bit — :func:`_fold_dots` divided
+    by the product of the :func:`_fold_norms` of both sides."""
+    an = _fold_norms(A)
+    bn = _fold_norms(B)
+    for rows in _row_blocks(len(A), B):
+        yield rows, _fold_dots(A[rows], B) / (an[rows, None] * bn[None, :])
+
+
 def _score_blocks(V, M, reduce, digits: int | None = None, seed=None):
     """The one rule by which a vector is scored against a centroid or
     codebook matrix: :func:`_fold_dots`, HALF_UP-rounded to ``digits``
@@ -442,22 +454,6 @@ def _score_blocks(V, M, reduce, digits: int | None = None, seed=None):
         S = _fold_dots(V[rows], M, seed)
         out.append(reduce(S if digits is None else round_half_up_np(S, digits)))
     return np.concatenate(out)
-
-
-def _map_vectors(df: DataFrame, vec_col: str, added: str, fn) -> DataFrame:
-    """``mapInPandas`` scaffold of the vector kernels: ``fn(pdf, V)``
-    gets each non-empty Arrow batch with its ``vec_col`` stacked as an
-    (n, dim) float64 matrix, and returns the output batch — the input
-    columns followed by the ``added`` ones (a DDL column list)."""
-
-    def kernel(batches):
-        for pdf in batches:
-            if len(pdf):
-                V = np.stack([np.asarray(v, np.float64) for v in pdf[vec_col]])
-                yield fn(pdf, V)
-
-    cols = ",".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
-    return df.mapInPandas(kernel, schema=f"{cols},{added}")
 
 
 def ivf_assign_cells(
@@ -485,7 +481,7 @@ def ivf_assign_cells(
         cell = _score_blocks(V, cn, _argmax, CELL_SCORE_DECIMALS)
         return pdf.assign(**{cell_col: cell.astype(np.int32)})
 
-    return _map_vectors(df, vec_col, f"`{cell_col}` int", assign)
+    return map_batches(df, f"`{cell_col}` int", assign, vec_col)
 
 
 def ivf_probe_cells(
@@ -514,10 +510,10 @@ def ivf_probe_cells(
 
     def probe(pdf, V):
         cells = _score_blocks(V, cn, top_cells, CELL_SCORE_DECIMALS)
-        rep = pdf.loc[pdf.index.repeat(keep)].reset_index(drop=True)
+        rep, _ = _fan_out(pdf, keep)
         return rep.assign(**{cell_col: cells.reshape(-1).astype(np.int32)})
 
-    return _map_vectors(df, vec_col, f"`{cell_col}` int", probe)
+    return map_batches(df, f"`{cell_col}` int", probe, vec_col)
 
 
 def ivf_assign_cells_2level(
@@ -734,9 +730,9 @@ def knn_join_cells_cogrouped(
     1M pairs ≈ 1 GB through any downstream operator): every vector
     crosses the boundary ONCE per cell (nl + nr rows, not nl × nr),
     the "move heavy bytes once" shape. Scores replicate the
-    interpreted cosine fold BIT-FOR-BIT (:func:`_fold_dots`, sqrt,
-    same division — pytest-asserted against the expression join form
-    kept in tests/), so ranking and the oracle hash match the SQL
+    interpreted cosine fold BIT-FOR-BIT (:func:`_cosine_blocks` —
+    pytest-asserted against the expression join form kept in
+    tests/), so ranking and the oracle hash match the SQL
     replay. Both sides exchange on the bounded cell key; the per-left
     top-k window shuffles (id, id, score) rows. Memory is bounded by
     chunking the probe side so each products block stays ~32 MB
@@ -748,15 +744,15 @@ def knn_join_cells_cogrouped(
     """
     import pandas as pd
 
-    a_type = dict(zip(lv.schema.names, lv.schema))[left_id].dataType.simpleString()
-    b_type = dict(zip(rv.schema.names, rv.schema))[right_id].dataType.simpleString()
+    a_type = lv.schema[left_id].dataType.simpleString()
+    b_type = rv.schema[right_id].dataType.simpleString()
     schema = f"`{left_id}` {a_type}, `{right_id}` {b_type}, score double"
 
     def score_cell(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if not len(left) or not len(right):
             return pd.DataFrame({left_id: [], right_id: [], "score": []})
-        A = np.stack([np.asarray(v, np.float64) for v in left["__lv"]])
-        B = np.stack([np.asarray(v, np.float64) for v in right["__rv"]])
+        A = _stack_vectors(left["__lv"])
+        B = _stack_vectors(right["__rv"])
         ids_a = left[left_id].to_numpy()
         ids_b = right[right_id].to_numpy()
         # r14: pre-truncate to the k best per (left row, cell) INSIDE
@@ -772,13 +768,9 @@ def knn_join_cells_cogrouped(
         # it without overflow) is exactly (score desc, id_b asc).
         border = np.argsort(ids_b, kind="stable")
         B, ids_b = B[border], ids_b[border]
-        ln = _fold_norms(A)
-        rn = _fold_norms(B)
         kk = min(k, len(B))
         outs = []
-        for rows in _row_blocks(len(A), B):
-            As = A[rows]
-            score = _fold_dots(As, B) / (ln[rows, None] * rn[None, :])
+        for rows, score in _cosine_blocks(A, B):
             okey = _f64_order_key(score)
             if exclude_self:
                 # self rows sink below every real candidate and are
@@ -790,7 +782,7 @@ def knn_join_cells_cogrouped(
                     okey,
                 )
             sel = np.argsort(~okey, axis=1, kind="stable")[:, :kk]
-            srows = np.arange(len(As))[:, None]
+            srows = np.arange(len(score))[:, None]
             ia = np.repeat(ids_a[rows], kk)
             ib = ids_b[sel].ravel()
             sc = score[srows, sel].ravel()
@@ -945,7 +937,7 @@ def pq_encode(
     def add_codes(pdf, V):
         return pdf.assign(**{code_col: list(encode(V))})
 
-    return _map_vectors(df, vec_col, f"`{code_col}` array<int>", add_codes)
+    return map_batches(df, f"`{code_col}` array<int>", add_codes, vec_col)
 
 
 def pq_topk(
@@ -1319,7 +1311,7 @@ def kmeans_assign(
                 cl[rows] = ids[np.argmin(d2, axis=1)]
             return pdf.assign(**{out_col: cl})
 
-        return _map_vectors(frame, vec_col, f"`{out_col}` int", nearest)
+        return map_batches(frame, f"`{out_col}` int", nearest, vec_col)
 
     for _ in range(n_iters - 1):
         # the update pass needs only (cluster, vec): pruning the
@@ -1429,7 +1421,7 @@ def _ivfpq_build(
 
     cell_ddl = "" if two_level else "`__cell` int,"
     added = f"`__vn` array<double>,{cell_ddl}`__pq` array<int>"
-    encoded = _map_vectors(src, vec_col, added, assign_encode)
+    encoded = map_batches(src, added, assign_encode, vec_col)
     if two_level:
         # the 2-level cells arrive as an input column: restore the flat
         # build's column order

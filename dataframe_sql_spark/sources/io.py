@@ -34,6 +34,7 @@ __all__ = [
     "read_json",
     "scan_fan_out",
     "write_parquet",
+    "rewrite_parquet",
     "merge_upsert",
 ]
 
@@ -55,6 +56,9 @@ __all__ = [
 # whose first exchange arrives immediately opt out per consumer via
 # `_docs(..., fan_out=False)` (registry_common).
 FAN_OUT_TABLES = ("documents",)
+# scan_fan_out leaves inputs above this size alone: a full-table
+# shuffle would cost more than the under-split scan it fixes
+FAN_OUT_MAX_BYTES = 4 * 1024**3
 
 
 def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
@@ -112,8 +116,7 @@ def scan_fan_out(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
         return df
     target = spark.sparkContext.defaultParallelism
     mpb = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 * 1024**2)
-    cap = _conf_bytes(spark, "spark.dataframe_sql_spark.fanOut.maxBytes", 4 * 1024**3)
-    if n_bytes // mpb >= target or n_bytes > cap:
+    if n_bytes // mpb >= target or n_bytes > FAN_OUT_MAX_BYTES:
         return df
     return df.repartition(target)
 
@@ -185,6 +188,36 @@ def write_parquet(
     writer.parquet(path)
 
 
+def rewrite_parquet(spark: SparkSession, target_path: str, merge) -> None:
+    """Replace the parquet directory ``target_path`` with
+    ``merge(current)`` (``current``: its DataFrame, or None if absent).
+
+    Spark cannot safely overwrite a path it is still reading, so the
+    result is written to ``.__staging__`` and swapped in with two
+    renames (target→``.__old__``, staging→target), then ``.__old__``
+    is removed. The swap is NOT atomic: concurrent readers can hit
+    ENOENT. A crash between the renames leaves the previous data at
+    ``.__old__`` and no target; the next call moves it back first.
+    """
+    import os
+    import shutil
+
+    target = target_path.rstrip("/")
+    staging, old = target + ".__staging__", target + ".__old__"
+    if not os.path.exists(target) and os.path.exists(old):
+        os.rename(old, target)
+    current = spark.read.parquet(target) if os.path.exists(target) else None
+    merge(current).write.mode("overwrite").parquet(staging)
+    if os.path.exists(old):
+        shutil.rmtree(old)
+    had_target = os.path.exists(target)
+    if had_target:
+        os.rename(target, old)
+    os.rename(staging, target)
+    if had_target:
+        shutil.rmtree(old)
+
+
 def merge_upsert(
     spark: SparkSession,
     target_path: str,
@@ -194,42 +227,20 @@ def merge_upsert(
     """Key-based upsert into a parquet directory: rows whose keys
     appear in ``updates`` are replaced, everything else is kept.
 
-    Spark cannot safely overwrite a path it is still reading, so the
-    merge writes to a staging directory and swaps it in with two
-    renames (target→old, staging→target, delete old). The swap is NOT
-    atomic: between the two renames the target path is briefly absent,
-    so concurrent readers are unsupported (they can hit ENOENT), and a
-    crash in that window leaves no live target — the previous data
-    stays recoverable at ``.__old__`` but must be moved back manually.
-    This is the
-    plain-parquet stand-in for what a table format (Delta/Iceberg
-    MERGE) does atomically with metadata at 100 TB. The merge itself
-    is one left-anti join (current minus updated keys) + union — the
-    anti join broadcasts when the update batch is small, which is the
-    common CDC shape.
-
-    ``updates`` must hold one row per key (dedup upstream — e.g. keep
-    max-version per key — before calling); duplicate update keys are
-    written as-is.
+    One left-anti join (current minus updated keys) + union, swapped
+    in by :func:`rewrite_parquet` — the plain-parquet stand-in for a
+    table format's atomic MERGE (Delta/Iceberg) at 100 TB. The anti
+    join broadcasts when the update batch is small, the common CDC
+    shape. ``updates`` must hold one row per key (dedup upstream —
+    e.g. keep max-version per key); duplicate update keys are written
+    as-is.
     """
-    import os
-    import shutil
 
-    if os.path.exists(target_path):
-        current = spark.read.parquet(target_path)
-        merged = current.join(
+    def merged(current: DataFrame | None) -> DataFrame:
+        if current is None:
+            return updates
+        return current.join(
             updates.select(*key_cols).distinct(), on=key_cols, how="left_anti"
         ).unionByName(updates)
-    else:
-        merged = updates
-    staging = target_path.rstrip("/") + ".__staging__"
-    old = target_path.rstrip("/") + ".__old__"
-    merged.write.mode("overwrite").parquet(staging)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    had_target = os.path.exists(target_path)
-    if had_target:
-        os.rename(target_path, old)
-    os.rename(staging, target_path)
-    if had_target:
-        shutil.rmtree(old)
+
+    rewrite_parquet(spark, target_path, merged)

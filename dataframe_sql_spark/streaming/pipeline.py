@@ -276,20 +276,25 @@ def purchase_attribution(
     )
 
 
+def _drain(query) -> None:
+    """Block, unbounded, until an availableNow query has drained and
+    stopped (a bound would return partial output); failures raise."""
+    query.awaitTermination()
+
+
 def run_stream_to_memory(
     df: DataFrame, name: str, spark: SparkSession, output_mode: str = "complete"
 ):
     """Drive a streaming DataFrame into an in-memory table with the
     availableNow trigger (process-everything-then-stop) and block until
     done. Returns the materialized batch DataFrame."""
-    q = (
+    _drain(
         df.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
     return spark.table(name)
 
 
@@ -304,7 +309,7 @@ def run_stream_to_parquet(
     consumed, so a restart with the same checkpoint resumes after the
     last commit instead of reprocessing — end-to-end exactly-once for
     file→file pipelines. Blocks until the availableNow run drains."""
-    q = (
+    _drain(
         df.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
@@ -312,7 +317,6 @@ def run_stream_to_parquet(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
 
 
 def run_stream_foreach_batch(
@@ -324,13 +328,12 @@ def run_stream_foreach_batch(
     fan-out) works from a stream. batch_fn must be idempotent per
     batch_id — Spark may re-run a batch after failure; the
     (checkpoint, batch_id) pair is the dedup key."""
-    q = (
+    _drain(
         df.writeStream.foreachBatch(batch_fn)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
 
 
 def idempotent_parquet_batch_sink(out_path: str):
@@ -439,9 +442,8 @@ def streaming_cms_heavy_hitters(
     point at web vocabulary sizes. Point queries / top-k probes read
     the table with :func:`...functions.sketches.cms_estimate`.
     """
-    import os
-
     from ..functions.sketches import cms_merge, cms_partials
+    from ..sources.io import rewrite_parquet
 
     def batch_fn(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
@@ -453,26 +455,12 @@ def streaming_cms_heavy_hitters(
             depth=depth,
             width=width,
         )
-        merged = cms_merge(part)
-        if os.path.exists(counters_path):
-            prior = batch.sparkSession.read.parquet(counters_path)
-            merged = cms_merge(merged.unionByName(prior.select("d", "idx", "n")))
-        staging = counters_path.rstrip("/") + ".__staging__"
-        merged.write.mode("overwrite").parquet(staging)
-        old = counters_path.rstrip("/") + ".__old__"
-        if os.path.exists(counters_path):
-            if os.path.exists(old):
-                import shutil
 
-                shutil.rmtree(old)
-            os.rename(counters_path, old)
-        os.rename(staging, counters_path)
+        def merged(prior: DataFrame | None) -> DataFrame:
+            if prior is None:
+                return cms_merge(part)
+            return cms_merge(cms_merge(part).unionByName(prior.select("d", "idx", "n")))
 
-    (
-        words_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(batch_fn)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+        rewrite_parquet(batch.sparkSession, counters_path, merged)
+
+    run_stream_foreach_batch(words_stream, batch_fn, checkpoint)

@@ -279,3 +279,28 @@ def test_word_tokenizer_spelled_once():
         if "F.split(F.trim(F.lower(" in line
     ]
     assert hits == [], "\n".join(hits)
+
+
+def test_map_in_pandas_spelled_once():
+    """Source lint: ``.mapInPandas(`` appears in the package only
+    inside ``operators/scalars.py``'s ``map_batches``, so every
+    row-batch kernel crosses Arrow through one scaffold."""
+    pkg = Path(__file__).resolve().parent.parent / "dataframe_sql_spark"
+    hits = []
+    for p in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(p.read_text())
+        inside = {
+            id(n)
+            for f in ast.walk(tree)
+            if isinstance(f, ast.FunctionDef) and f.name == "map_batches"
+            for n in ast.walk(f)
+        }
+        hits += [
+            f"{p.relative_to(pkg.parent)}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Attribute)
+            and n.attr == "mapInPandas"
+            and id(n) not in inside
+        ]
+    assert hits == [], "\n".join(hits)
+

@@ -333,6 +333,15 @@ def test_video_frame_sampling_stub(spark):
     assert out[0].frame_blob == bytes(range(256)) * 4
 
 
+@pytest.mark.parametrize("stub", [extract_image_features, sample_video_frames])
+def test_stub_only_media_paths_raise_at_call_time(spark, stub):
+    # no real path exists: the call itself raises, before any plan is
+    # built, even on an empty frame (no batch would ever reach a worker)
+    empty = spark.createDataFrame([], "i int, blob binary")
+    with pytest.raises(NotImplementedError, match="pass fake=True"):
+        stub(empty, "blob", fake=False)
+
+
 def test_winnowing_guarantee_shared_substring(engine):
     # Winnowing guarantee: two documents sharing a substring of length
     # >= w + k - 1 (= 16 + 8 - 1 = 23 chars) must share at least one

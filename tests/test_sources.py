@@ -78,6 +78,22 @@ def test_merge_upsert_latest_wins(spark, tmp_path):
     assert got == {(1, "a", 1), (2, "B", 2), (3, "c", 1), (4, "d", 2)}
 
 
+def test_merge_upsert_recovers_from_crash_between_renames(spark, tmp_path):
+    # a crash after target→.__old__ but before staging→target leaves
+    # only .__old__; the next upsert must merge into that copy, not
+    # write the updates alone and delete the only surviving data
+    from dataframe_sql_spark.sources.io import merge_upsert
+
+    path = str(tmp_path / "target")
+    base = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], ["k", "v"])
+    merge_upsert(spark, path, base, ["k"])
+    os.rename(path, path + ".__old__")
+    merge_upsert(spark, path, spark.createDataFrame([(2, "B")], ["k", "v"]), ["k"])
+    got = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
+    assert got == {(1, "a"), (2, "B"), (3, "c")}
+    assert not os.path.exists(path + ".__old__")
+
+
 def test_synthetic_source_partition_parallel_and_deterministic(spark):
     """Custom Python DataSource (Spark 4 API): generated partitions are
     executor-side (no driver materialization), count is exact, and the
@@ -177,12 +193,13 @@ def test_register_table_function_udtf(engine):
         assert [w for _, w in sorted(got[did])] == words
 
 
-def test_scan_fan_out_widens_small_single_file_scan(spark):
+def test_scan_fan_out_widens_small_single_file_scan(spark, monkeypatch):
     """r14 scale-adaptive fan-out: a small single-row-group parquet
     scans as one task; scan_fan_out must widen it to the session's
     default parallelism WITHOUT changing the rows, and must leave the
     frame alone when the input is estimated to scan wide enough or is
     too big to shuffle cheaply."""
+    from dataframe_sql_spark.sources import io as sources_io
     from dataframe_sql_spark.sources.io import scan_fan_out
 
     sf_dir = "/root/testdata/sf0.001"
@@ -200,10 +217,7 @@ def test_scan_fan_out_widens_small_single_file_scan(spark):
     assert a == b
 
     # no-op when the byte cap says the shuffle would be too expensive
-    spark.conf.set("spark.dataframe_sql_spark.fanOut.maxBytes", "1")
-    try:
-        assert scan_fan_out(spark, base, path) is base
-    finally:
-        spark.conf.unset("spark.dataframe_sql_spark.fanOut.maxBytes")
+    monkeypatch.setattr(sources_io, "FAN_OUT_MAX_BYTES", 1)
+    assert scan_fan_out(spark, base, path) is base
     # no-op on a path that cannot be stat'ed (remote / vanished)
     assert scan_fan_out(spark, base, "/no/such/path.parquet") is base

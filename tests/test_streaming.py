@@ -5,6 +5,8 @@ catalog) and streaming mode."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from dataframe_sql_spark.streaming.pipeline import (
@@ -303,6 +305,8 @@ def test_streaming_cms_accumulates_across_batches(spark, tmp_path):
         for r in cms_merge(cms_partials(ref_df, "seg", "word")).collect()
     }
     assert got == want
+    # the swap removes the previous counter table after each batch
+    assert not os.path.exists(counters_path + ".__old__")
     est = {
         r.word: r.cms_est
         for r in cms_estimate(
