@@ -151,5 +151,23 @@ def map_batches(df: DataFrame, added: str, fn, vec_col: str | None = None) -> Da
             if len(pdf):
                 yield fn(pdf) if vec_col is None else fn(pdf, _stack_vectors(pdf[vec_col]))
 
-    cols = ",".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
+    cols = ",".join(f"{_quoted(f.name)} {_ddl(f.dataType)}" for f in df.schema.fields)
     return df.mapInPandas(kernel, schema=f"{cols},{added}")
+
+
+def _quoted(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _ddl(dt: T.DataType) -> str:
+    """``dt`` as a DDL type with every struct field name quoted
+    (``simpleString`` leaves nested names bare, and a name such as
+    ``a b`` then fails to parse). Like any DDL type, it parses back
+    with every field, element and value nullable."""
+    if isinstance(dt, T.StructType):
+        return f"struct<{','.join(f'{_quoted(f.name)}:{_ddl(f.dataType)}' for f in dt.fields)}>"
+    if isinstance(dt, T.ArrayType):
+        return f"array<{_ddl(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"map<{_ddl(dt.keyType)},{_ddl(dt.valueType)}>"
+    return dt.simpleString()

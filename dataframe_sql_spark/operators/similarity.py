@@ -27,6 +27,11 @@ cosines), :func:`_md5_sample` (the seedless build sample) and
 side is :func:`_dot_col` / :func:`_norm_col` / :func:`_cosine_cols`.
 ``operators/dedup.py``'s pair kernel reuses them. Row-batch kernels
 cross Arrow through ``scalars.map_batches``.
+
+ANN queries share one helper per step: the exact rerank
+:func:`cosine_topk`, the probe set :func:`_rank_cells`, the kNN probe
+side :func:`_probe_side`, and an index's side files
+(:func:`_write_index` / :func:`_read_meta`).
 """
 
 from __future__ import annotations
@@ -178,11 +183,7 @@ def lsh_topk(
         .orderBy(F.asc("__ham"), F.asc(id_col))
         .limit(rerank)
     )
-    return (
-        candidates.select(F.col(id_col), cosine_col(F.col(vec_col), query).alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    return cosine_topk(candidates, vec_col, query, k, id_col)
 
 
 # Rows per cell the default sizing aims for. 128 balances the two cost
@@ -234,6 +235,24 @@ def _cos_py(q: list[float], c: list[float]) -> float:
     nq = math.sqrt(sum(a * a for a in q)) or 1.0
     nc = math.sqrt(sum(b * b for b in c)) or 1.0
     return round(dot / (nq * nc), CELL_SCORE_DECIMALS)
+
+
+def _rank_cells(query: list[float], centroids: list[list[float]], n_probe: int) -> list[int]:
+    """The ``n_probe`` cells nearest a constant query: driver-side
+    ranking by the pinned rounded cosine (:func:`_cos_py`), ties to
+    the lowest cell. The probe set of every IVF query."""
+    return sorted(
+        range(len(centroids)), key=lambda i: (-_cos_py(query, centroids[i]), i)
+    )[:n_probe]
+
+
+def _probe_topk(cells, cell_col, centroids, vec_col, query, k, id_col, n_probe) -> DataFrame:
+    """IVF top-k over a frame whose rows carry their cell in
+    ``cell_col`` (assigned in the plan or read from an index): keep the
+    :func:`_rank_cells` probe set — a codegen predicate, and a
+    partition filter on an index — then the exact :func:`cosine_topk`."""
+    probe = _rank_cells(query, centroids, n_probe)
+    return cosine_topk(cells.filter(F.col(cell_col).isin(probe)), vec_col, query, k, id_col)
 
 
 def _ivf_centroids(
@@ -363,21 +382,6 @@ def _lloyd_means(
     for r in upd:
         by_cell.setdefault(r[0], {})[r[1]] = r[2]
     return {c: [m[d] for d in range(len(m))] for c, m in by_cell.items()}
-
-
-def _train_centroids(
-    df: DataFrame, vec_col: str, id_col: str, n_cells: int, method: str
-) -> list[list[float]]:
-    """Centroid training dispatch for the index builders:
-    ``"sample"`` = deterministic md5 pick (cheap, oracle-replayable —
-    the default every replay certificate pins); ``"kmeans"`` =
-    :func:`ivf_kmeans_centroids` Lloyd refinement (tighter cells, the
-    recommended build at real scale)."""
-    if method == "sample":
-        return _ivf_centroids(df, vec_col, id_col, n_cells)
-    if method == "kmeans":
-        return ivf_kmeans_centroids(df, vec_col, id_col, n_cells)
-    raise ValueError(f"unknown centroid method {method!r} (sample|kmeans)")
 
 
 def _normed(c: list[float]) -> list[float]:
@@ -618,24 +622,15 @@ def ivf_topk(
     whose scan cost stays ~n_probe·occupancy per query at any scale
     (a hand-fixed cell count silently degrades toward a full scan as
     the corpus grows). With ``n_probe == n_cells`` this degenerates to
-    exact brute force (the pytest recall gate exploits that). The cell
-    filter is a codegen predicate (and a partition-pruning one once
-    the cell column is persisted). Probe-cell ranking uses the pinned
-    rounded cosine (ties → lowest cell), matching the in-plan scoring.
+    exact brute force (the pytest recall gate exploits that). The probe
+    and rerank are :func:`_probe_topk` over the assigned frame, the
+    same query :func:`ivf_topk_indexed` runs over a persisted index.
     """
     if n_cells is None:
         n_cells = ivf_default_cells(df.count())
     centroids = _ivf_centroids(df, vec_col, id_col, n_cells)
-    probe = sorted(
-        range(len(centroids)), key=lambda i: (-_cos_py(query, centroids[i]), i)
-    )[:n_probe]
     assigned = ivf_assign_cells(df, vec_col, centroids)
-    return (
-        assigned.filter(F.col("__cell").isin(probe))
-        .select(F.col(id_col), cosine_col(F.col(vec_col), query).alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    return _probe_topk(assigned, "__cell", centroids, vec_col, query, k, id_col, n_probe)
 
 
 def knn_join_ivf(
@@ -692,16 +687,23 @@ def knn_join_ivf(
         "__rv",
         centroids,
     )
-    lv = ivf_probe_cells(
-        left.select(
-            F.col(left_id), F.col(vec_col).cast("array<double>").alias("__lv")
-        ),
+    lv = _probe_side(left, left_id, vec_col, centroids, n_probe)
+    return knn_join_cells_cogrouped(
+        lv, rv, k, left_id, right_id, exclude_self=exclude_self
+    )
+
+
+def _probe_side(
+    left: DataFrame, left_id: str, vec_col: str, centroids: list[list[float]], n_probe: int
+) -> DataFrame:
+    """The probe side of a cell-keyed kNN join: ``left`` projected to
+    (``left_id``, ``__lv`` = the vector as array<double>) and exploded
+    onto its ``n_probe`` nearest cells (:func:`ivf_probe_cells`)."""
+    return ivf_probe_cells(
+        left.select(F.col(left_id), F.col(vec_col).cast("array<double>").alias("__lv")),
         "__lv",
         centroids,
         n_probe,
-    )
-    return knn_join_cells_cogrouped(
-        lv, rv, k, left_id, right_id, exclude_self=exclude_self
     )
 
 
@@ -990,11 +992,7 @@ def pq_topk(
         .orderBy(F.desc("__adc"), F.asc(id_col))
         .limit(rerank)
     )
-    return (
-        candidates.select(F.col(id_col), cosine_col(F.col(vec_col), query).alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    return cosine_topk(candidates, vec_col, query, k, id_col)
 
 
 def ivf_index_write(
@@ -1011,7 +1009,9 @@ def ivf_index_write(
     the centroid matrix stored alongside (``_centroids.json`` — the
     leading underscore keeps Spark's reader from treating it as data)
     and the read schema in ``_schema.json``, so probes skip schema
-    inference (:func:`_write_index`).
+    inference (both written by :func:`_write_index`, read back by
+    :func:`_read_meta`). ``centroids`` and ``assign`` are checked
+    before the first job (:func:`_check_build_options`).
 
     This is the deployment shape for ANN at scale: the expensive
     assignment pass runs once, and every probe afterwards reads only
@@ -1025,11 +1025,12 @@ def ivf_index_write(
 
     ``centroids="kmeans"`` trains the cell centers with the
     distributed Lloyd refinement (:func:`ivf_kmeans_centroids`)
-    instead of the raw md5 sample — tighter, better-balanced cells at
-    the cost of ``n_iters - 1`` extra assignment+reduce passes at
-    build time. Probe-side code is identical either way (the trained
-    matrix is what lands in ``_centroids.json``), and full-probe
-    results are centroid-independent (pytest-gated).
+    instead of the raw md5 sample (``"sample"``, the default) —
+    tighter, better-balanced cells at the cost of ``n_iters - 1``
+    extra assignment+reduce passes at build time. Probe-side code is
+    identical either way (the trained matrix is what lands in
+    ``_centroids.json``), and full-probe results are
+    centroid-independent (pytest-gated).
 
     ``assign="2level"`` routes the corpus assignment pass through the
     hierarchical coarse quantizer (:func:`ivf_assign_cells_2level`) —
@@ -1038,27 +1039,48 @@ def ivf_index_write(
     Cell-boundary rows may land in a near-best cell (partial-probe
     recall trade); full probe stays exact.
     """
+    _check_build_options(centroids, assign)
     if n_cells is None:
         n_cells = ivf_default_cells(df.count())
-    cents = _train_centroids(df, vec_col, id_col, n_cells, centroids)
-    assigner = {
-        "flat": ivf_assign_cells,
-        "2level": ivf_assign_cells_2level,
-    }[assign]
-    _write_index(assigner(df, vec_col, cents, cell_col="cell"), path)
-    with open(os.path.join(path, "_centroids.json"), "w") as f:
-        json.dump(cents, f)
+    cents = _CENTROID_TRAINERS[centroids](df, vec_col, id_col, n_cells)
+    _write_index(
+        _ASSIGNERS[assign](df, vec_col, cents, cell_col="cell"), path, _CENTROIDS, cents
+    )
     return cents
 
 
-# Read schema of a cell-partitioned index, written beside its data by
-# _write_index (the leading underscore keeps Spark's reader off it).
+# The index builders' ``centroids`` and ``assign`` options: "sample"
+# is the deterministic md5 pick (the default every replay certificate
+# pins), "kmeans" the Lloyd refinement; "flat" scores every cell,
+# "2level" the hierarchical quantizer.
+_CENTROID_TRAINERS = {"sample": _ivf_centroids, "kmeans": ivf_kmeans_centroids}
+_ASSIGNERS = {"flat": ivf_assign_cells, "2level": ivf_assign_cells_2level}
+
+
+def _check_build_options(centroids: str, assign: str) -> None:
+    """Reject an unknown ``centroids`` or ``assign`` value before the
+    build runs its first job."""
+    for name, value, table in (
+        ("centroid method", centroids, _CENTROID_TRAINERS),
+        ("assign", assign, _ASSIGNERS),
+    ):
+        if value not in table:
+            raise ValueError(f"unknown {name} {value!r} ({'|'.join(table)})")
+
+
+# Side files of an index directory (the leading underscore keeps
+# Spark's reader off them): the read schema, and the IVF centroids or
+# the IVF-PQ centroids + codebooks.
 _INDEX_SCHEMA = "_schema.json"
+_CENTROIDS = "_centroids.json"
+_IVFPQ_META = "_ivfpq_meta.json"
 
 
-def _write_index(out: DataFrame, path: str) -> None:
+def _write_index(out: DataFrame, path: str, meta_name: str, meta) -> None:
     """Write ``out`` as a parquet index PARTITIONED BY its ``cell``
-    column, with its read schema in ``_schema.json``.
+    column, then its side files: the read schema in ``_schema.json``
+    and ``meta`` as JSON in ``meta_name`` (read back by
+    :func:`_read_meta`).
 
     r14: shuffle by cell BEFORE the partitioned write (guide §6).
     Without it every map task writes a file into every cell directory
@@ -1080,8 +1102,15 @@ def _write_index(out: DataFrame, path: str) -> None:
         [f for f in out.schema.fields if f.name != "cell"]
         + [T.StructField("cell", T.IntegerType())]
     )
-    with open(os.path.join(path, _INDEX_SCHEMA), "w") as f:
-        f.write(schema.json())
+    for name, text in ((_INDEX_SCHEMA, schema.json()), (meta_name, json.dumps(meta))):
+        with open(os.path.join(path, name), "w") as f:
+            f.write(text)
+
+
+def _read_meta(path: str, name: str):
+    """The JSON side file ``name`` of the index at ``path``."""
+    with open(os.path.join(path, name)) as f:
+        return json.load(f)
 
 
 def _read_index(spark, path: str) -> DataFrame:
@@ -1089,8 +1118,8 @@ def _read_index(spark, path: str) -> DataFrame:
     recorded schema: no schema-inference job, which a plain
     ``spark.read.parquet`` runs on every call. The ``cell`` partition
     filters of the probes still prune directories at planning time."""
-    with open(os.path.join(path, _INDEX_SCHEMA)) as f:
-        return spark.read.schema(T.StructType.fromJson(json.load(f))).parquet(path)
+    schema = T.StructType.fromJson(_read_meta(path, _INDEX_SCHEMA))
+    return spark.read.schema(schema).parquet(path)
 
 
 def knn_join_indexed(
@@ -1114,20 +1143,10 @@ def knn_join_indexed(
     and probe count (pytest-gated in test_ann_index.py)."""
     from .lineage import truncate_lineage
 
-    with open(os.path.join(path, "_centroids.json")) as f:
-        centroids = json.load(f)
+    centroids = _read_meta(path, _CENTROIDS)
     # probe assignment materialized once — it feeds both the
     # probed-cell listing and the scoring cogroup below.
-    lv = truncate_lineage(
-        ivf_probe_cells(
-            left.select(
-                F.col(left_id), F.col(vec_col).cast("array<double>").alias("__lv")
-            ),
-            "__lv",
-            centroids,
-            n_probe,
-        )
-    )
+    lv = truncate_lineage(_probe_side(left, left_id, vec_col, centroids, n_probe))
     # r14: STATIC partition pruning + cogrouped scoring, replacing the
     # cell equi-join + per-candidate Arrow dot. The join form relied on
     # runtime DPP to skip unprobed cell directories, but its scoring
@@ -1167,20 +1186,12 @@ def ivf_topk_indexed(
 ) -> DataFrame:
     """Query a persisted IVF index: rank cells by centroid similarity
     driver-side (n_cells dot products), scan ONLY the probed cell
-    partitions, exact-cosine rerank. The ``cell`` filter is a partition
-    filter, so unprobed cells never leave the file listing."""
-    with open(os.path.join(path, "_centroids.json")) as f:
-        centroids = json.load(f)
-
-    probe = sorted(
-        range(len(centroids)), key=lambda i: (-_cos_py(query, centroids[i]), i)
-    )[:n_probe]
-    return (
-        _read_index(spark, path)
-        .filter(F.col("cell").isin(probe))
-        .select(F.col(id_col), cosine_col(F.col(vec_col), query).alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
+    partitions, exact-cosine rerank (:func:`_probe_topk` over the
+    index). The ``cell`` filter is a partition filter, so unprobed
+    cells never leave the file listing."""
+    centroids = _read_meta(path, _CENTROIDS)
+    return _probe_topk(
+        _read_index(spark, path), "cell", centroids, vec_col, query, k, id_col, n_probe
     )
 
 
@@ -1198,19 +1209,11 @@ def ivf_index_health(spark, path: str, vec_col: str = "embedding") -> DataFrame:
     (index-wide, or per appended batch via :func:`ivf_batch_drift`)
     is the re-train trigger; occupancy skew is the partition-size
     alarm. One scan of the index, one n_cells-row aggregate."""
-    with open(os.path.join(path, "_centroids.json")) as f:
-        centroids = json.load(f)
-    cents_lit = const_array(centroids, "array<double>")
-    df = _read_index(spark, path)
-    own = F.element_at(cents_lit, F.col("cell").cast("int") + 1)
+    own_cos = _own_cell_cosine(vec_col, "cell", _read_meta(path, _CENTROIDS))
     return (
-        df.groupBy("cell")
-        .agg(
-            F.count("*").alias("n"),
-            F.avg(
-                _cosine_cols(F.col(vec_col).cast("array<double>"), own)
-            ).alias("mean_cos"),
-        )
+        _read_index(spark, path)
+        .groupBy("cell")
+        .agg(F.count("*").alias("n"), F.avg(own_cos).alias("mean_cos"))
         .orderBy("cell")
     )
 
@@ -1227,14 +1230,14 @@ def ivf_batch_drift(
     (``centroids="kmeans"`` rebuild) rather than letting partial-probe
     recall decay silently."""
     assigned = ivf_assign_cells(batch_df.select(vec_col), vec_col, centroids)
-    cents_lit = const_array(centroids, "array<double>")
-    own = F.element_at(cents_lit, F.col("__cell").cast("int") + 1)
-    row = assigned.agg(
-        F.avg(
-            _cosine_cols(F.col(vec_col).cast("array<double>"), own)
-        ).alias("m")
-    ).collect()[0]
-    return float(row.m)
+    own_cos = _own_cell_cosine(vec_col, "__cell", centroids)
+    return float(assigned.agg(F.avg(own_cos).alias("m")).collect()[0].m)
+
+
+def _own_cell_cosine(vec_col: str, cell_col: str, centroids: list[list[float]]) -> Column:
+    """Cosine of each row's vector to the centroid of its own cell."""
+    own = F.element_at(const_array(centroids, "array<double>"), F.col(cell_col).cast("int") + 1)
+    return _cosine_cols(F.col(vec_col).cast("array<double>"), own)
 
 
 # --------------------------------------------------------------------------
@@ -1368,8 +1371,7 @@ def _ivfpq_build(
     the same kernel. ``pq_round_digits`` / ``score_digits`` are the
     replay pins of :func:`pq_train` / :func:`pq_encode`.
     """
-    if assign not in ("flat", "2level"):
-        raise ValueError(f"unknown assign {assign!r} (flat|2level)")
+    _check_build_options(centroid_method, assign)
     two_level = assign == "2level"
     src, cents = df, None
     if centroid_method != "sample" or two_level:
@@ -1378,7 +1380,7 @@ def _ivfpq_build(
         v = F.col(vec_col).cast("array<double>")
         nrm = _norm_col(v)
         df_n = df.withColumn("__vn", F.transform(v, lambda x: x / nrm))
-        cents = _train_centroids(df_n, "__vn", id_col, n_cells, centroid_method)
+        cents = _CENTROID_TRAINERS[centroid_method](df_n, "__vn", id_col, n_cells)
         if two_level:
             src = ivf_assign_cells_2level(df_n, "__vn", cents).drop("__vn")
     rows = _md5_sample(
@@ -1443,9 +1445,10 @@ def _ivfpq_scan(
     code_col: str = "__pq",
     score_digits: int | None = None,
 ) -> DataFrame:
-    """Shared IVF-PQ probe: rank cells driver-side, ADC-score the
-    probed cells against per-cell residual LUTs (one nested literal),
-    exact-cosine rerank of the best ``rerank`` candidates.
+    """Shared IVF-PQ probe: rank cells driver-side for the normalized
+    query (:func:`_rank_cells`), ADC-score the probed cells against
+    per-cell residual LUTs (one nested literal), exact-cosine rerank
+    of the best ``rerank`` candidates (:func:`cosine_topk`).
 
     ``score_digits`` pins the ADC rerank cut to a fixed decimal grid
     (replay-certificate discipline, see :func:`pq_topk`); production
@@ -1453,12 +1456,8 @@ def _ivfpq_scan(
     dim = len(query)
     n_sub = len(books)
     sub = dim // n_sub
-    q_nrm = math.sqrt(sum(x * x for x in query)) or 1.0
-    qn = [x / q_nrm for x in query]
-
-    probe = sorted(
-        range(len(centroids)), key=lambda i: (-_cos_py(qn, centroids[i]), i)
-    )[:n_probe]
+    qn = _normed(query)
+    probe = _rank_cells(qn, centroids, n_probe)
     luts = []
     for c in probe:
         qr = [q - cc for q, cc in zip(qn, centroids[c])]
@@ -1486,18 +1485,12 @@ def _ivfpq_scan(
     if score_digits is not None:
         approx = F.round(approx, score_digits)
     candidates = (
-        encoded.filter(F.col(cell_col).isin([int(c) for c in probe]))
+        encoded.filter(F.col(cell_col).isin(probe))
         .withColumn("__adc", approx)
         .orderBy(F.asc("__adc"), F.asc(id_col))
         .limit(rerank)
     )
-    return (
-        candidates.select(
-            F.col(id_col), cosine_col(F.col(vec_col), query).alias("score")
-        )
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    return cosine_topk(candidates, vec_col, query, k, id_col)
 
 
 def ivfpq_topk(
@@ -1557,7 +1550,9 @@ def ivfpq_index_write(
     """Build and persist the IVF-PQ index: PQ codes + unit vectors
     written parquet PARTITIONED BY cell, centroids and codebooks in
     ``_ivfpq_meta.json`` alongside (underscore-prefixed so Spark's
-    reader skips it), the read schema in ``_schema.json``.
+    reader skips it), the read schema in ``_schema.json`` (both
+    written by :func:`_write_index`). ``centroids`` and ``assign``
+    are :func:`ivf_index_write`'s, checked before the first job.
 
     Build-once/probe-many: the expensive parts (assignment pass,
     codebook training, encode) run once; every later query is a
@@ -1576,9 +1571,9 @@ def ivfpq_index_write(
     _write_index(
         encoded.withColumnRenamed("__cell", "cell").withColumnRenamed("__pq", "pq"),
         path,
+        _IVFPQ_META,
+        {"centroids": cents, "codebooks": books},
     )
-    with open(os.path.join(path, "_ivfpq_meta.json"), "w") as f:
-        json.dump({"centroids": cents, "codebooks": books}, f)
     return cents, books
 
 
@@ -1596,11 +1591,9 @@ def ivfpq_topk_indexed(
     the stored centroids, ONLY the probed cell partitions scanned
     (partition filter — unprobed cells never leave the file listing),
     ADC over stored codes, exact rerank over the stored vectors."""
-    with open(os.path.join(path, "_ivfpq_meta.json")) as f:
-        meta = json.load(f)
-    encoded = _read_index(spark, path)
+    meta = _read_meta(path, _IVFPQ_META)
     return _ivfpq_scan(
-        encoded,
+        _read_index(spark, path),
         meta["centroids"],
         meta["codebooks"],
         query,

@@ -18,7 +18,7 @@ from .registry_common import (  # noqa: F401
     _docs,
     _events,
     _reg,
-    _reg_sql,
+    _sql,
 )
 
 
@@ -26,7 +26,7 @@ from .registry_common import (  # noqa: F401
 # grouped aggregates: SQL percentile + applyInPandas grouped-map
 # --------------------------------------------------------------------------
 
-_reg_sql(
+_sql(
     "a_percentile",
     "select l_returnflag, round(percentile(l_quantity, 0.5), 4) as med, "
     "round(percentile(l_quantity, 0.9), 4) as p90 from lineitem "
@@ -70,7 +70,7 @@ _reg(
 )
 
 
-_reg_sql(
+_sql(
     "a_stats_agg",
     "select l_returnflag, round(stddev_samp(l_quantity), 6) as sd, "
     "round(var_samp(l_quantity), 6) as vr, "
@@ -86,7 +86,7 @@ _reg_sql(
 )
 
 
-_reg_sql(
+_sql(
     "a_groupby_all",
     "select l_returnflag, l_linestatus, sum(l_quantity) as s from lineitem "
     "group by all",
@@ -95,7 +95,7 @@ _reg_sql(
 )
 
 
-_reg_sql(
+_sql(
     "a_listagg",
     "select l_returnflag, listagg(l_linestatus, ',') "
     "within group (order by l_linestatus) as statuses "
@@ -286,7 +286,7 @@ _reg(
     "persisted per-source sketches alone",
 )
 
-_reg_sql(
+_sql(
     "a_maxby_minby",
     "select event_type, "
     "max_by(user_id, event_id) as last_user, "
@@ -309,7 +309,7 @@ _reg_sql(
 # analytics patterns: grouping-id, per-group top-k, gap-fill, PII scrub
 # --------------------------------------------------------------------------
 
-_reg_sql(
+_sql(
     "a_grouping_fn",
     "select l_returnflag, l_linestatus, "
     "grouping(l_returnflag) as g_rf, grouping(l_linestatus) as g_ls, "
@@ -325,7 +325,7 @@ _reg_sql(
 
 
 
-_reg_sql(
+_sql(
     "a_percentile_within",
     "select l_returnflag, "
     "percentile_cont(0.25) within group (order by l_quantity) as q1, "
@@ -340,7 +340,7 @@ _reg_sql(
 )
 
 
-_reg_sql(
+_sql(
     "a_benford_digits",
     # Benford first-digit audit — the classic tamper/synthetic-data
     # screen: natural multi-scale magnitudes follow log10(1+1/d);
@@ -374,7 +374,7 @@ _reg_sql(
 
 
 
-_reg_sql(
+_sql(
     "a_bool_aggs",
     "select l_returnflag, "
     # BIGINT cast: DuckDB's count_if widens to HUGEINT, which pandas
@@ -556,7 +556,7 @@ _reg(
 )
 
 
-_reg_sql(
+_sql(
     "a_partial_rollup_merge",
     # Mergeable-partial certificate for PLAIN aggregates — the
     # incremental-ETL shape at 100 TB: per-partition partials
@@ -589,7 +589,7 @@ _reg_sql(
 )
 
 
-_reg_sql(
+_sql(
     "a_mode",
     # MODE aggregate with a deterministic tiebreak (max count, then
     # min value) via ranked counting - engines disagree on native

@@ -37,7 +37,7 @@ from .registry_common import (  # noqa: F401
     _emb,
     _events,
     _reg,
-    _reg_sql,
+    _sql,
     _verified_edges,
 )
 
@@ -222,7 +222,7 @@ _reg(
     "(one window cumsum, engine-portable determinism)",
 )
 
-_reg_sql(
+_sql(
     "x_topk_per_group",
     "select o_orderpriority, o_orderkey, o_totalprice from ("
     "select o_orderpriority, o_orderkey, o_totalprice, "
@@ -317,7 +317,7 @@ _reg(
 )
 
 
-_reg_sql(
+_sql(
     "x_topk_with_ties",
     # Per-group top-k WITH TIES (rank, not row_number): the "keep
     # every row tied with the k-th" semantics ANSI spells FETCH FIRST
@@ -335,7 +335,7 @@ _reg_sql(
 )
 
 
-_reg_sql(
+_sql(
     "x_scd2_intervals",
     "select user_id, event_type, event_id, ts as valid_from, "
     "lead(ts) over (partition by user_id order by ts, event_id) as valid_to, "
@@ -352,7 +352,7 @@ _reg_sql(
 
 
 
-_reg_sql(
+_sql(
     "x_sessionize",
     # gap-based sessionization: a >30-min silence starts a new session.
     # One shuffle on user_id shared by both windows; session ids are
@@ -378,7 +378,7 @@ _reg_sql(
 )
 
 
-_reg_sql(
+_sql(
     "x_cohort_retention",
     # Classic cohort-retention matrix: users grouped by first-seen
     # week, distinct-active counts at each week offset. Both engines
@@ -414,7 +414,7 @@ _reg_sql(
 )
 
 
-_reg_sql(
+_sql(
     "x_funnel",
     # ordered-funnel analysis: earliest view -> first later click ->
     # first later purchase per user. Each stage is a grouped min over
@@ -587,7 +587,7 @@ _reg(
 # embedding whitening, length histograms, curriculum ordering
 # --------------------------------------------------------------------------
 
-_reg_sql(
+_sql(
     "x_quality_topq",
     # FineWeb-style per-domain quality-quantile filter: rank documents
     # within each source by a quality proxy (token count here; swap in
@@ -777,7 +777,7 @@ _reg(
 
 
 
-_reg_sql(
+_sql(
     "x_weighted_sample",
     # Quality-weighted deterministic sampling: each doc keeps with
     # probability proportional to its length share (stand-in for any
@@ -863,7 +863,7 @@ _reg(
 
 
 
-_reg_sql(
+_sql(
     "x_bottomk_sample",
     # Bottom-k sketch: the k smallest md5(fingerprint) values form a
     # uniform sample of DISTINCT texts that is MERGEABLE (union two
@@ -930,7 +930,7 @@ _reg(
 )
 
 
-_reg_sql(
+_sql(
     "x_score_calibration",
     # Cross-source score calibration: replace a raw quality score with
     # its within-source quantile (percent_rank) so a global threshold
@@ -950,7 +950,7 @@ _reg_sql(
 )
 
 
-_reg_sql(
+_sql(
     "x_source_cap",
     # Per-source volume cap: keep at most N docs per source,
     # deterministically chosen by the md5 coin (not arrival order, so
@@ -1104,7 +1104,7 @@ _reg(
 )
 
 
-_reg_sql(
+_sql(
     "x_snapshot_diff",
     # CDC snapshot diff: classify every key as added / removed /
     # changed / unchanged between two table versions via one full
@@ -1140,7 +1140,7 @@ _reg_sql(
 )
 
 
-_reg_sql(
+_sql(
     "x_winsorize",
     # Winsorization (outlier clamping to per-group percentile fences) —
     # the standard pre-normalization step before quality/length features
@@ -1217,7 +1217,7 @@ _reg(
 )
 
 
-_reg_sql(
+_sql(
     "x_skew_report",
     # Key-skew diagnostics: the distribution of per-key group sizes as a
     # log2 histogram (bucket = bit length of the count — integer-exact in

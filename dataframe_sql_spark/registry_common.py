@@ -1,4 +1,4 @@
-"""Shared helpers for the domain registry modules: table readers, the _reg/_reg_sql registrars, the constant ANN query vector, and SQL/py support used by more than one domain.
+"""Shared helpers for the domain registry modules: table readers, the _reg registrar (SQL entries use registry._sql, re-exported here), the constant ANN query vector, and SQL/py support used by more than one domain.
 
 Split from the former single-file registry_ext.py (round 5); entries
 register into dataframe_sql_spark.registry.CATALOG on import via the
@@ -14,7 +14,7 @@ from .operators.dedup import (
     ngram_jaccard_pairs,
     shingle_frame,
 )
-from .registry import CATALOG, QuerySpec, engine_for
+from .registry import CATALOG, QuerySpec, _sql, engine_for  # noqa: F401  (_sql re-exported)
 
 
 __all__: list[str] = []
@@ -146,10 +146,6 @@ _SH_CTE = (
     r"  i -> array_to_string(ws[i:i+2], ' ')) AS s FROM w)"
 )
 
-
-
-def _reg_sql(name: str, engine_sql: str, oracle: str | None, doc: str) -> None:
-    CATALOG[name] = QuerySpec(engine_sql=engine_sql, oracle=oracle or engine_sql, doc=doc)
 
 
 # --------------------------------------------------------------------------

@@ -32,7 +32,7 @@ from .registry_common import (  # noqa: F401
     _docs,
     _emb,
     _reg,
-    _reg_sql,
+    _sql,
     _shingle_sharing_candidates,
     _verified_edges,
 )
@@ -530,7 +530,7 @@ _reg(
 )
 
 
-_reg_sql(
+_sql(
     "dd_url_dedup",
     # Dedup-by-URL: group on the canonicalized URL (tracking params and
     # fragments collapse URL variants of one page) and keep the min-id

@@ -26,7 +26,6 @@ from .registry_common import (  # noqa: F401  (re-export for compat)
     _emb,
     _events,
     _reg,
-    _reg_sql,
 )
 
 # Import order = catalog registration order for the 51+ tier (the

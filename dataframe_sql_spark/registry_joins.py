@@ -20,7 +20,7 @@ from .registry import engine_for
 from .registry_common import (  # noqa: F401
     _events,
     _reg,
-    _reg_sql,
+    _sql,
 )
 
 
@@ -54,7 +54,7 @@ _reg(
 
 
 
-_reg_sql(
+_sql(
     "q_recursive_cte",
     "WITH RECURSIVE m(n) AS ("
     " SELECT 1 UNION ALL SELECT n + 1 FROM m WHERE n < 12) "
@@ -66,7 +66,7 @@ _reg_sql(
 )
 
 
-_reg_sql(
+_sql(
     "j_semi",
     "select c_custkey, c_name from customer left semi join orders "
     "on c_custkey = o_custkey",
@@ -75,7 +75,7 @@ _reg_sql(
     "J8 semi join (extension; absent from reference grammar)",
 )
 
-_reg_sql(
+_sql(
     "j_anti",
     # anti-join vs HIGH-VALUE orders, not all orders: in the synthetic
     # corpus every customer has at least one order, so the plain form
@@ -141,7 +141,7 @@ _reg(
 # modern-dialect aggregation surface (GROUP BY ALL, ordered string/array agg)
 # --------------------------------------------------------------------------
 
-_reg_sql(
+_sql(
     "p_null_semantics",
     "select l_orderkey, l_linenumber, nullif(l_tax, 0.0) as t, "
     "coalesce(nullif(l_tax, 0.0), -1.0) as t_filled, "
@@ -158,7 +158,7 @@ _reg_sql(
 )
 
 
-_reg_sql(
+_sql(
     "w_time_range",
     "select event_id, user_id, "
     "round(sum(value) over (partition by user_id order by ts "
@@ -173,7 +173,7 @@ _reg_sql(
 )
 
 
-_reg_sql(
+_sql(
     "j_hint_broadcast",
     "select /*+ BROADCAST(nation) */ n_name, count(*) as n "
     "from customer join nation on c_nationkey = n_nationkey group by n_name",
@@ -214,7 +214,7 @@ _reg(
 # forward fill + file-metadata lineage
 # --------------------------------------------------------------------------
 
-_reg_sql(
+_sql(
     "w_ffill",
     "select event_id, user_id, ts, "
     "last_value(case when event_type <> 'error' then value end) ignore nulls "

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from .registry_common import (  # noqa: F401
     _events,
     _reg,
-    _reg_sql,
+    _sql,
 )
 
 
@@ -21,7 +21,7 @@ from .registry_common import (  # noqa: F401
 # scalar function surface (extension; reference has none, SURVEY §2.3)
 # --------------------------------------------------------------------------
 
-_reg_sql(
+_sql(
     "f_string_funcs",
     "select o_orderkey, upper(o_orderpriority) as up, lower(o_orderstatus) as lo, "
     "substr(o_orderpriority, 1, 3) as sub, length(o_orderpriority) as len, "
@@ -32,7 +32,7 @@ _reg_sql(
     "string scalar functions (identical semantics in DuckDB)",
 )
 
-_reg_sql(
+_sql(
     "f_math_funcs",
     # floor/ceil: BIGINT in Spark but DOUBLE in DuckDB — explicit cast
     # makes the value bits identical under the driver's exact hash.
@@ -47,7 +47,7 @@ _reg_sql(
     "math/conditional scalar functions",
 )
 
-_reg_sql(
+_sql(
     "f_date_funcs",
     "select o_orderkey, year(o_orderdate) as y, month(o_orderdate) as m, "
     "day(o_orderdate) as d, hour(o_orderdate) as h, "
@@ -77,7 +77,7 @@ _reg(
 )
 
 
-_reg_sql(
+_sql(
     "f_regex_funcs",
     r"select doc_id, regexp_extract(text, '([a-z]+)', 1) as first_word, "
     r"regexp_replace(text, 'data', 'DATA') as rep from documents",
@@ -87,7 +87,7 @@ _reg_sql(
 )
 
 
-_reg_sql(
+_sql(
     "f_bitwise",
     "select l_orderkey, l_orderkey & 255 as lo, l_orderkey | 15 as orr, "
     "l_orderkey ^ l_linenumber as xr, shiftleft(l_linenumber, 3) as shl, "
@@ -99,7 +99,7 @@ _reg_sql(
 )
 
 
-_reg_sql(
+_sql(
     "f_explode",
     r"select doc_id, word from documents "
     r"lateral view explode(split(trim(lower(text)), '\\s+')) t as word "
@@ -111,7 +111,7 @@ _reg_sql(
 )
 
 
-_reg_sql(
+_sql(
     "f_array_agg",
     "select l_orderkey, array_join(sort_array(collect_list(l_linenumber)), ',') "
     "as lines from lineitem group by l_orderkey",
@@ -128,7 +128,7 @@ _reg_sql(
 # reference has no scalar functions beyond dates, SURVEY.md §2.3)
 # --------------------------------------------------------------------------
 
-_reg_sql(
+_sql(
     "f_higher_order",
     "select vec_id, "
     "size(filter(embedding, x -> x > 0)) as n_pos, "
@@ -152,7 +152,7 @@ _reg_sql(
     "last-ulp formatting)",
 )
 
-_reg_sql(
+_sql(
     "f_map_funcs",
     "select event_id, event_type, "
     "element_at(map('click', 1, 'view', 2, 'purchase', 3, "
@@ -169,7 +169,7 @@ _reg_sql(
     "surface — reference has no nested types, SURVEY.md §1)",
 )
 
-_reg_sql(
+_sql(
     "f_try_cast",
     "select doc_id, "
     "try_cast(lang as int) as bad_int, "
@@ -187,7 +187,7 @@ _reg_sql(
 
 
 
-_reg_sql(
+_sql(
     "f_array_setops",
     # The set-algebra results are serialized to sorted CSV strings
     # rather than returned as raw array columns: the driver's
@@ -222,7 +222,7 @@ _reg_sql(
     "with distinct+concat); serialized to CSV for driver hashability",
 )
 
-_reg_sql(
+_sql(
     "f_url_funcs",
     "select doc_id, "
     "parse_url(concat('https://', source, '.example.com/docs/', "
@@ -242,7 +242,7 @@ _reg_sql(
     "componentwise from the synthesized URL",
 )
 
-_reg_sql(
+_sql(
     "f_url_canonicalize",
     # Crawl-URL canonicalization — the normalization pass before
     # dedup-by-URL: drop the fragment, strip utm_* tracking params
@@ -284,7 +284,7 @@ _reg_sql(
 )
 
 
-_reg_sql(
+_sql(
     "f_variant_json",
     "select event_id, "
     "variant_get(parse_json(props), '$.k', 'int') as k_val, "
@@ -301,7 +301,7 @@ _reg_sql(
 
 
 
-_reg_sql(
+_sql(
     "f_timezone",
     "select event_id, "
     "from_utc_timestamp(ts, 'America/New_York') as ny, "
@@ -319,7 +319,7 @@ _reg_sql(
 )
 
 
-_reg_sql(
+_sql(
     "f_edit_distance",
     # Edit-distance function surface over adjacent-id doc pairs (the
     # fuzzy-matching primitive for record linkage); truncated to 25

@@ -18,7 +18,7 @@ from .registry_common import (  # noqa: F401
     _QUERY_VEC_SQL,
     _emb,
     _reg,
-    _reg_sql,
+    _sql,
 )
 
 
@@ -38,6 +38,16 @@ _reg(
 )
 
 
+def _knn_sides(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The two sides of the kNN-join entries: queries (``label == 0``,
+    as ``id_a``) and corpus (``label != 0``, as ``id_b``)."""
+    emb = _emb(spark, sf_dir)
+    return (
+        emb.filter(F.col("label") == 0).select(F.col("vec_id").alias("id_a"), "embedding"),
+        emb.filter(F.col("label") != 0).select(F.col("vec_id").alias("id_b"), "embedding"),
+    )
+
+
 _reg(
     "sim_knn_join",
     # cell-keyed kNN join (knn_join_ivf): candidates come from an IVF
@@ -48,12 +58,7 @@ _reg(
     # DuckDB oracle below certifies it; partial-probe recall is
     # pytest-gated (test_operators.py::test_knn_join_ivf_partial_probe).
     lambda spark, sf_dir: knn_join_ivf(
-        _emb(spark, sf_dir).filter(F.col("label") == 0).select(
-            F.col("vec_id").alias("id_a"), "embedding"
-        ),
-        _emb(spark, sf_dir).filter(F.col("label") != 0).select(
-            F.col("vec_id").alias("id_b"), "embedding"
-        ),
+        *_knn_sides(spark, sf_dir),
         k=3,
         n_cells=16,
     ).select("id_a", "id_b", F.round("score", 8).alias("score")),
@@ -102,12 +107,7 @@ _reg(
     # few-ulp gap between the two engines' float folds cannot flip the
     # probe set.
     lambda spark, sf_dir: knn_join_ivf(
-        _emb(spark, sf_dir).filter(F.col("label") == 0).select(
-            F.col("vec_id").alias("id_a"), "embedding"
-        ),
-        _emb(spark, sf_dir).filter(F.col("label") != 0).select(
-            F.col("vec_id").alias("id_b"), "embedding"
-        ),
+        *_knn_sides(spark, sf_dir),
         k=3,
         n_cells=16,
         n_probe=4,
@@ -233,27 +233,16 @@ def _sim_2level_probed(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the exact-cosine rerank — so a hash match certifies the
     hierarchical assignment bit-for-bit, not just its full-probe
     degenerate."""
-    from .operators.similarity import (
-        _cos_py,
-        _ivf_centroids,
-        cosine_col,
-        ivf_assign_cells_2level,
-    )
+    from .operators.similarity import _ivf_centroids, _probe_topk, ivf_assign_cells_2level
 
     emb = _emb(spark, sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     cents = _ivf_centroids(emb, "embedding", "vec_id", 16)
-    probe = sorted(range(16), key=lambda i: (-_cos_py(_QUERY_VEC, cents[i]), i))[:4]
     assigned = ivf_assign_cells_2level(emb, "embedding", cents)
-    score = cosine_col(F.col("embedding"), _QUERY_VEC)
-    return (
-        assigned.filter(F.col("__cell").isin(probe))
-        .select("vec_id", F.round(score, 8).alias("score"), score.alias("__s"))
-        .orderBy(F.desc("__s"), F.asc("vec_id"))
-        .limit(10)
-        .drop("__s")
-    )
+    return _probe_topk(
+        assigned, "__cell", cents, "embedding", _QUERY_VEC, 10, "vec_id", 4
+    ).select("vec_id", F.round("score", 8).alias("score"))
 
 
 _reg(
@@ -647,7 +636,7 @@ _reg(
 
 
 
-_reg_sql(
+_sql(
     "emb_quantize_int8",
     # Symmetric per-vector int8 quantization: scale = max |x| (double),
     # q_i = floor(x_i / scale * 127). 4x storage reduction for ANN
@@ -682,7 +671,7 @@ _reg_sql(
 )
 
 
-_reg_sql(
+_sql(
     "emb_standardize",
     # Per-dimension z-score whitening of the embedding corpus — the
     # feature-normalization pass before clustering / ANN training.
@@ -797,12 +786,11 @@ def _ivfpq_oracle_sql(n_cells: int = 16, n_probe: int = 4, n_sub: int = 4,
     |c_s|² (FP association differs from the Python direct sum; the 8dp
     round on the ADC total absorbs it, same accepted grid-boundary
     class as CELL_SCORE_DECIMALS)."""
+    from .operators.similarity import _normed
+
     sub = dim // n_sub
     # the query normalizes exactly: 64 ones -> norm 8.0 -> 0.125/dim
-    import math as _math
-
-    q_nrm = _math.sqrt(sum(x * x for x in _QUERY_VEC)) or 1.0
-    qn_sql = "[" + ", ".join(repr(x / q_nrm) for x in _QUERY_VEC) + "]::DOUBLE[]"
+    qn_sql = "[" + ", ".join(repr(x) for x in _normed(_QUERY_VEC)) + "]::DOUBLE[]"
     head = f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 vn AS (SELECT vec_id, v, list_transform(v, x -> x / n) AS u
        FROM (SELECT vec_id, v, sqrt(list_inner_product(v, v)) AS n FROM e)),

@@ -22,7 +22,7 @@ from .streaming.pipeline import (
 from .registry_common import (  # noqa: F401
     _events,
     _reg,
-    _reg_sql,
+    _sql,
 )
 
 
@@ -105,7 +105,7 @@ _reg(
 # streaming dedup
 # --------------------------------------------------------------------------
 
-_reg_sql(
+_sql(
     "st_rollup_multires",
     "select date_trunc('hour', ts) as b_hour, date_trunc('day', ts) as b_day, "
     "event_type, count(*) as n, round(sum(value), 4) as sum_value "
@@ -146,7 +146,7 @@ _reg(
     "exactly-once event dedup (streaming: dropDuplicatesWithinWatermark)",
 )
 
-_reg_sql(
+_sql(
     "ts_gapfill",
     "with days as (select explode(sequence(cast('2024-01-01' as timestamp), "
     "cast('2024-02-10' as timestamp), interval 1 day)) as day), "
@@ -166,7 +166,7 @@ _reg_sql(
 )
 
 
-_reg_sql(
+_sql(
     "ts_anomaly_mad",
     # Robust (median/MAD) outlier flags — the companion to ts_anomaly's
     # mean/std z-score: median and MAD ignore the outliers themselves,
@@ -200,7 +200,7 @@ _reg_sql(
 )
 
 
-_reg_sql(
+_sql(
     "ts_anomaly",
     # Per-user z-score anomaly flags with EXACT cross-engine bits: the
     # mean/variance come from DECIMAL-exact sums (sum v and sum v²),
@@ -225,7 +225,7 @@ _reg_sql(
 
 
 
-_reg_sql(
+_sql(
     "ts_ohlc_resample",
     # hypertable-style rollup: downsample the raw event stream to
     # hourly OHLC bars per event type. open/close pick the earliest/
@@ -282,7 +282,7 @@ def _ewma_sql(table: str = "events", round4: bool = True, with_ts: bool = True) 
 
 
 
-_reg_sql(
+_sql(
     "ts_ewma",
     _ewma_sql(),
     None,  # identical SQL runs on DuckDB

@@ -22,7 +22,7 @@ from .registry_common import (  # noqa: F401
     _W_CTE,
     _docs,
     _reg,
-    _reg_sql,
+    _sql,
 )
 
 
@@ -161,7 +161,7 @@ _reg(
     "(zero shuffle; oracle uses the explode/window shape)",
 )
 
-_reg_sql(
+_sql(
     "txt_pii_scrub",
     "select doc_id, "
     "regexp_replace(regexp_replace("
@@ -184,7 +184,7 @@ _reg_sql(
 )
 
 
-_reg_sql(
+_sql(
     "txt_char_entropy",
     # Character-level Shannon entropy per doc — the gibberish /
     # base64-blob detector quality signal (natural text sits ~4 bits,
@@ -290,7 +290,7 @@ _reg(
 
 
 
-_reg_sql(
+_sql(
     "txt_chunks",
     "select doc_id, chunk_idx, substr(text, chunk_idx * 80 + 1, 100) as chunk "
     "from (select doc_id, text, "
@@ -324,7 +324,7 @@ _WINNOW_ORACLE = (
 )
 
 
-_reg_sql(
+_sql(
     "txt_winnow_fingerprint",
     # Winnowing (MOSS-style) document fingerprinting — the rolling-hash
     # fingerprint op: hash every k-gram (k=8; md5-hex prefix so both
@@ -358,7 +358,7 @@ _reg_sql(
 )
 
 
-_reg_sql(
+_sql(
     "txt_winnow_maponly",
     # ZERO-SHUFFLE winnowing: identical output to
     # txt_winnow_fingerprint (same oracle), different plan. The k-gram
@@ -438,7 +438,7 @@ _reg(
 )
 
 
-_reg_sql(
+_sql(
     "txt_len_histogram",
     # Token-length histogram with cumulative share — the
     # sequence-packing / batch-shape planning pass (how much of the

@@ -22,11 +22,7 @@ is the identical string — the strongest cross-engine check.
 
 from __future__ import annotations
 
-from .registry import CATALOG, QuerySpec
-
-
-def _sql(name: str, sql: str, doc: str) -> None:
-    CATALOG[name] = QuerySpec(engine_sql=sql, oracle=sql, doc=doc)
+from .registry import _sql
 
 
 def _dsum(expr: str, alias: str, scale: int = 4) -> str:

@@ -281,26 +281,60 @@ def test_word_tokenizer_spelled_once():
     assert hits == [], "\n".join(hits)
 
 
+_PKG = Path(__file__).resolve().parent.parent / "dataframe_sql_spark"
+
+
+def _sites(paths, hit) -> list[tuple[str, str | None]]:
+    """``(file:line, innermost enclosing function)`` of every AST node
+    in ``paths`` that ``hit`` accepts, in source order."""
+    out = []
+
+    def visit(node, fn, p):
+        if hit(node):
+            out.append((f"{p.relative_to(_PKG.parent)}:{node.lineno}", fn))
+        for child in ast.iter_child_nodes(node):
+            visit(child, child.name if isinstance(child, ast.FunctionDef) else fn, p)
+
+    for p in paths:
+        visit(ast.parse(p.read_text()), None, p)
+    return out
+
+
+def _call_to(node, name: str) -> bool:
+    """``node`` calls ``name`` (a bare name or an attribute)."""
+    return isinstance(node, ast.Call) and name in (
+        getattr(node.func, "id", None),
+        getattr(node.func, "attr", None),
+    )
+
+
 def test_map_in_pandas_spelled_once():
     """Source lint: ``.mapInPandas(`` appears in the package only
     inside ``operators/scalars.py``'s ``map_batches``, so every
     row-batch kernel crosses Arrow through one scaffold."""
-    pkg = Path(__file__).resolve().parent.parent / "dataframe_sql_spark"
-    hits = []
-    for p in sorted(pkg.rglob("*.py")):
-        tree = ast.parse(p.read_text())
-        inside = {
-            id(n)
-            for f in ast.walk(tree)
-            if isinstance(f, ast.FunctionDef) and f.name == "map_batches"
-            for n in ast.walk(f)
-        }
-        hits += [
-            f"{p.relative_to(pkg.parent)}:{n.lineno}"
-            for n in ast.walk(tree)
-            if isinstance(n, ast.Attribute)
-            and n.attr == "mapInPandas"
-            and id(n) not in inside
-        ]
-    assert hits == [], "\n".join(hits)
+    sites = _sites(
+        sorted(_PKG.rglob("*.py")),
+        lambda n: isinstance(n, ast.Attribute) and n.attr == "mapInPandas",
+    )
+    assert [fn for _, fn in sites] == ["map_batches"], sites
 
+
+def test_ann_query_steps_spelled_once():
+    """Source lint: each step of an ANN query has one home in the
+    package. The exact rerank score (``cosine_col(...).alias("score")``)
+    is built only in ``cosine_topk``; driver-side cell ranking calls
+    ``_cos_py`` only in ``_rank_cells``; and ``operators/similarity.py``
+    opens files only in the index side-file writer (``_write_index``)
+    and reader (``_read_meta``)."""
+    files = sorted(_PKG.rglob("*.py"))
+    reranks = _sites(
+        files,
+        lambda n: _call_to(n, "alias")
+        and _call_to(getattr(n.func, "value", None), "cosine_col")
+        and [getattr(a, "value", None) for a in n.args] == ["score"],
+    )
+    assert [fn for _, fn in reranks] == ["cosine_topk"], reranks
+    rankings = _sites(files, lambda n: _call_to(n, "_cos_py"))
+    assert [fn for _, fn in rankings] == ["_rank_cells"], rankings
+    opens = _sites([_PKG / "operators" / "similarity.py"], lambda n: _call_to(n, "open"))
+    assert [fn for _, fn in opens] == ["_write_index", "_read_meta"], opens

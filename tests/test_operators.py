@@ -342,6 +342,23 @@ def test_stub_only_media_paths_raise_at_call_time(spark, stub):
         stub(empty, "blob", fake=False)
 
 
+def test_map_batches_takes_nested_names_that_need_quoting(spark):
+    from dataframe_sql_spark.operators.scalars import map_batches
+
+    df = spark.createDataFrame(
+        [(1, (2, [3]), {"k": (4,)})],
+        "id bigint, s struct<`a b`:bigint,`c``d`:array<int>>, m map<string,struct<`x y`:int>>",
+    )
+    out = map_batches(df, "x int", lambda pdf: pdf.assign(x=7))
+    assert out.schema.simpleString() == (
+        "struct<id:bigint,s:struct<a b:bigint,c`d:array<int>>,"
+        "m:map<string,struct<x y:int>>,x:int>"
+    )
+    assert all(f.nullable for f in out.schema.fields + out.schema["s"].dataType.fields)
+    row = out.collect()[0]
+    assert (row.id, row.s["a b"], row.s["c`d"], row.m["k"]["x y"], row.x) == (1, 2, [3], 4, 7)
+
+
 def test_winnowing_guarantee_shared_substring(engine):
     # Winnowing guarantee: two documents sharing a substring of length
     # >= w + k - 1 (= 16 + 8 - 1 = 23 chars) must share at least one

@@ -4,7 +4,8 @@
   as one node that folds to one array literal, bit-exact, and rejects
   values ``from_json`` would silently turn into NULL;
 - an indexed IVF-PQ probe builds its plan without a Spark job (the
-  index's read schema is recorded, not inferred);
+  index's read schema is recorded, not inferred), and an index builder
+  rejects an unknown option before its first job;
 - a repeated probe compiles no new code (the session's codegen cache
   holds it);
 - the per-element literal idiom does not come back into the package;
@@ -157,6 +158,27 @@ def test_indexed_probe_builds_without_jobs(spark, ivfpq_index):
     # the probe itself does run (the check above is not vacuous)
     rows, jobs = _jobs_during(spark, df.collect)
     assert len(rows) == 10 and jobs
+
+
+@pytest.mark.parametrize("option", ["assign", "centroids"])
+@pytest.mark.parametrize("builder", ["ivf_index_write", "ivfpq_index_write"])
+def test_index_builder_rejects_unknown_option_before_any_job(spark, tmp_path, builder, option):
+    from pyspark.sql import functions as F
+
+    from dataframe_sql_spark.operators import similarity
+
+    emb = spark.range(64).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[F.sin(F.col("id") + i) for i in range(64)]).alias("embedding"),
+    )
+    allowed = {"assign": "flat|2level", "centroids": "sample|kmeans"}[option]
+
+    def build():
+        with pytest.raises(ValueError, match=f"'bogus' \\({allowed}\\)"):
+            getattr(similarity, builder)(emb, str(tmp_path / "idx"), **{option: "bogus"})
+
+    _, jobs = _jobs_during(spark, build)
+    assert jobs == []
 
 
 def test_repeated_probe_compiles_nothing(spark, ivfpq_index):

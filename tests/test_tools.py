@@ -183,6 +183,23 @@ def test_vectorized_norm_matches_norm_cell():
         co.STRICT = old
 
 
+def test_rows_digest_ignores_row_order_and_sees_one_cell():
+    """The digest printed for entries without an oracle: the same for
+    any row order (and column order), different after one cell
+    changes."""
+    import pandas as pd
+
+    import tools.check_oracle as co
+
+    pdf = pd.DataFrame({"b": [1, 2, 3], "A": ["x", "y", None], "f": [0.5, -0.0, 2.0]})
+    d = co.rows_digest(pdf)
+    assert co.rows_digest(pdf.iloc[[2, 0, 1]].reset_index(drop=True)) == d
+    assert co.rows_digest(pdf[["f", "A", "b"]]) == d
+    pert = pdf.copy()
+    pert.loc[1, "f"] = 0.25
+    assert co.rows_digest(pert) != d
+
+
 def test_envelope_ledger_current():
     """r14: every oracle_max_sf declaration must carry a structured
     reason AND a scale path, and COVERAGE.md's generated envelope

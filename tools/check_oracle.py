@@ -36,6 +36,7 @@ tuned session; run the vanilla mode before calling a round done.
 from __future__ import annotations
 
 import datetime
+import hashlib
 import math
 import os
 import re
@@ -250,6 +251,20 @@ def row_hashes(pdf: pd.DataFrame, col_order: list[int]) -> np.ndarray:
     return out
 
 
+def col_order(cols) -> list[int]:
+    """Column positions in lower-case name order: the order in which
+    both sides of a compare mix their columns into ``row_hashes``."""
+    return [i for _, i in sorted((c.lower(), i) for i, c in enumerate(cols))]
+
+
+def rows_digest(pdf: pd.DataFrame) -> str:
+    """Short order-insensitive digest of a result's values: sha256 of
+    its sorted ``row_hashes`` (columns in :func:`col_order`). Printed
+    for the entries without an oracle, so two runs can be diffed."""
+    h = np.sort(row_hashes(pdf, col_order(pdf.columns)))
+    return hashlib.sha256(h.tobytes()).hexdigest()[:16]
+
+
 def hash_diff_sample(
     s_hash: np.ndarray,
     d_hash: np.ndarray,
@@ -433,7 +448,8 @@ def main() -> int:
             continue
         if name not in oracles:
             print(
-                f"ok?  {name}: rows-only ({len(spark_pdf)} rows, no oracle) "
+                f"ok?  {name}: rows-only ({len(spark_pdf)} rows, no oracle, "
+                f"digest {rows_digest(spark_pdf)}) "
                 f"[{time.perf_counter() - t_entry:.1f}s]"
             )
             continue
@@ -457,9 +473,8 @@ def main() -> int:
         if sorted(c.lower() for c in spark_cols) != sorted(c.lower() for c in duck_cols):
             problems.append(f"columns spark={spark_cols} duck={duck_cols}")
         else:
-            s_order = [i for _, i in sorted((c.lower(), i) for i, c in enumerate(spark_cols))]
-            d_order = [i for _, i in sorted((c.lower(), i) for i, c in enumerate(duck_cols))]
-            sh, dh = row_hashes(spark_pdf, s_order), row_hashes(duck_pdf, d_order)
+            sh = row_hashes(spark_pdf, col_order(spark_cols))
+            dh = row_hashes(duck_pdf, col_order(duck_cols))
             if not np.array_equal(np.sort(sh), np.sort(dh)):
                 diff = hash_diff_sample(sh, dh, spark_pdf, duck_pdf)
                 problems.append(f"values differ; sample diff: {diff}")
