@@ -102,7 +102,7 @@ PIPELINE_OPS = [
     "x_sessionize",
     "txt_bpe_tokens",
     "txt_repetition",
-    "w_rank",  # two-pass range-partitioned global rank (operators/rank.py)
+    "w_rank",  # bucketed global rank (operators/rank.py)
     # round-3 additions: boilerplate/line dedup, completeness-certified
     # similarity join, k-means clustering, corpus-LM scoring,
     # mergeable sketches, IVF-PQ

@@ -383,26 +383,25 @@ def sorted_neighborhood_pairs(
     volume is exactly ``n * window`` — linear by construction, immune
     to the oversized-block blowup equality blocking risks.
 
-    Scale: the global order comes from the two-pass range-partitioned
-    rank (``operators/rank.py::global_rank`` — no single-partition
-    window), each record explodes onto its next ``window`` positions,
-    and the pairing is a plain equi-join on the position — hash joins
-    end to end. ``id_col`` is appended to the sort key as a tiebreak so
-    positions are unique (rank == row_number) and the neighborhood is
-    deterministic.
+    Scale: the global order comes from the bucketed rank
+    (``operators/rank.py::global_rank`` — no single-partition window,
+    no checkpoint), each record explodes onto its next ``window``
+    positions, and the pairing is a plain equi-join on the position —
+    hash joins end to end. Both join sides read one rank exchange (AQE
+    reuses it), so the source is scanned once. ``id_col`` is appended
+    to the sort key as a tiebreak so positions are unique (rank ==
+    row_number) and the neighborhood is deterministic.
 
     Returns (id_a, id_b, pos_a, pos_b) with pos_a < pos_b; each column
     ``c`` in ``carry_cols`` is carried through the rank table and comes
     back as ``<c>_a`` / ``<c>_b`` — callers that verify pairs on an
     attribute (e.g. edit distance on the sort key itself) get both
-    sides' values without re-joining the source table per side (r15:
-    two broadcast joins + one extra scan dropped from the
-    x_sorted_neighborhood plan). A carry column must not be ``id_col``,
-    start with ``__`` (the operator's own columns), or alias onto an
-    output column (``id``/``pos`` would become ``id_a``…); such names
-    raise ``ValueError`` naming the column.
+    sides' values without re-joining the source table per side. A
+    carry column must not be ``id_col``, start with ``__`` (the
+    operator's own columns), or alias onto an output column
+    (``id``/``pos`` would become ``id_a``…); such names raise
+    ``ValueError`` naming the column.
     """
-    from .lineage import truncate_lineage
     from .rank import global_rank
 
     for c in carry_cols:
@@ -414,17 +413,10 @@ def sorted_neighborhood_pairs(
             )
 
     order = [(c, True) for c in sort_cols] + [(id_col, True)]
-    # r14: materialize the (id, pos) rank table once — it feeds BOTH
-    # sides of the neighborhood join, and without the cut each side
-    # re-ran the whole two-pass rank (Exchange + Sort + Window each;
-    # plans/r14/x_sorted_neighborhood_before.txt). Fixed-width id+pos
-    # plus the caller's carry columns — the §8 "small decision table".
-    ranked = truncate_lineage(
-        global_rank(df, order, out_col="__pos").select(
-            F.col(id_col),
-            *[F.col(c) for c in carry_cols],
-            F.col("__pos"),
-        )
+    ranked = global_rank(df, order, out_col="__pos").select(
+        F.col(id_col),
+        *[F.col(c) for c in carry_cols],
+        F.col("__pos"),
     )
     probes = ranked.select(
         F.col(id_col).alias("id_a"),

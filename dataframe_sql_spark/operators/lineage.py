@@ -1,7 +1,7 @@
 """Lineage truncation for iterative operators — local or reliable.
 
-Iterative DataFrame algorithms (two-pass rank, label propagation,
-PageRank) must break lineage every round: each round references the
+Iterative DataFrame algorithms (label propagation, PageRank) must
+break lineage every round: each round references the
 previous state more than once, so the un-truncated logical plan doubles
 per round and the driver OOMs building it (persist caches data but NOT
 the plan). Two truncation modes:

@@ -271,11 +271,11 @@ def negative_pairs(df: DataFrame, id_col: str, k: int = 4) -> DataFrame:
     engine-portable md5 coin (no RNG — reruns, retries, and a SQL
     oracle agree exactly): partner position = md5(id:neg:j) mod N,
     mapped back to a row through a dense position index built by the
-    two-pass global rank (no SinglePartition window). Self-draws are
+    bucketed global rank (no SinglePartition window). Self-draws are
     dropped rather than redrawn, so the expected negatives per row is
     k·(N-1)/N — the standard accept-reject simplification.
 
-    Plan: rank (two range-partitioned passes) + 1-row count broadcast +
+    Plan: rank (one bucket-keyed window) + 1-row count broadcast +
     one position equi-join. At 100 TB the index build amortizes across
     every epoch's sampling pass.
 

@@ -393,23 +393,17 @@ _sql(
 
 # --- §2.6 window functions ------------------------------------------------
 
-# W1-W3: global (un-partitioned) rank. The naive plan is Exchange
-# SinglePartition + one Window task ranking the whole table — the scale
-# killer SCALE.md used to carry as a caveat. These entries now run the
-# two-pass range-partitioned operator (operators/rank.py): identical
-# results (same DuckDB oracles), no single-partition stage in the plan
-# (gated in test_plan_quality.py).
+# W1-W3: global (un-partitioned) rank. The naive plan ranks the whole
+# table in one task; these entries run operators/rank.py instead (same
+# DuckDB oracles, no single-partition stage, gated in
+# test_plan_quality.py).
 
 
 def _w_rank_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.rank import global_rank
 
-    # r15 (guide §2.3): project BEFORE the rank — global_rank's range
-    # exchange and eager checkpoint materialize whatever columns they
-    # are given, and column pruning cannot reach back through an RDD
-    # boundary, so passing the full 16-column lineitem shuffled and
-    # checkpointed 4× the bytes the query emits. Rank values are a
-    # function of the order columns only — output identical.
+    # project BEFORE the rank: its boundary sample hashes whole rows,
+    # and ranks depend on the order columns only
     li = engine_for(spark, sf_dir).spark.table("lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity"
     )
@@ -446,21 +440,21 @@ CATALOG["w_rank"] = QuerySpec(
     fn=_w_rank_fn,
     oracle="select l_orderkey, l_linenumber, l_quantity, "
     "rank() over (order by l_quantity desc) as rnk from lineitem",
-    doc="W1 rank over order by (:772-786) — xfail in reference; two-pass "
-    "range-partitioned here (no single-partition window)",
+    doc="W1 rank over order by (:772-786) — xfail in reference; bucketed "
+    "here (no single-partition window)",
 )
 CATALOG["w_rank_multi"] = QuerySpec(
     fn=_w_rank_multi_fn,
     oracle="select l_orderkey, l_linenumber, "
     "rank() over (order by l_quantity desc, l_extendedprice asc, l_orderkey) as rnk "
     "from lineitem",
-    doc="W2 multi-key ordered rank (:789-825), two-pass range-partitioned",
+    doc="W2 multi-key ordered rank (:789-825), bucketed global rank",
 )
 CATALOG["w_dense_rank"] = QuerySpec(
     fn=_w_dense_rank_fn,
     oracle="select l_orderkey, l_linenumber, "
     "dense_rank() over (order by l_quantity desc) as drnk from lineitem",
-    doc="W3 dense_rank (:828-863), two-pass range-partitioned",
+    doc="W3 dense_rank (:828-863), bucketed global rank",
 )
 _sql(
     "w_rank_partition",

@@ -620,7 +620,7 @@ _sql(
 def _x_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic curriculum ordering: every document gets a global
     training-sequence position (longest first, doc_id tiebreak) via the
-    scale-safe two-pass rank (operators/rank.py) — a total order over
+    scale-safe bucketed rank (operators/rank.py) — a total order over
     the corpus with NO single-partition sort stage, which is how a
     curriculum schedule stays computable at 100 TB."""
     from .operators.rank import global_rank
@@ -643,7 +643,7 @@ _reg(
     r"length(string_split_regex(trim(text), '\s+')) DESC, doc_id) AS seq "
     r"FROM documents",
     "global curriculum ordering (longest-first, unique tiebreak) via "
-    "the two-pass range-partitioned rank — no SinglePartition stage",
+    "the bucketed global rank — no SinglePartition stage",
 )
 
 
@@ -887,7 +887,7 @@ def _x_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-quartile bucketing WITHOUT a single-partition window:
     a naive ``ntile(4) OVER (ORDER BY ...)`` funnels the whole corpus
     through one task (the pre-round-3 global-rank trap), so this
-    computes the identical tiles from the two-pass range-partitioned
+    computes the identical tiles from the bucketed
     :func:`~dataframe_sql_spark.operators.rank.global_rank` plus the
     closed-form ntile formula (the first ``N mod n`` tiles take
     ``ceil(N/n)`` rows, the rest ``floor(N/n)``) — pure arithmetic on
@@ -925,7 +925,7 @@ _reg(
     "ntile(4) OVER (ORDER BY n_chars, doc_id) AS quality_q "
     "FROM documents",
     "quality-quartile assignment (deterministic tiebreak) via the "
-    "two-pass range-partitioned rank + closed-form ntile arithmetic "
+    "bucketed global rank + closed-form ntile arithmetic "
     "- no SinglePartition window; oracle uses native ntile",
 )
 
@@ -1030,18 +1030,16 @@ _reg(
 def _x_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted-neighborhood candidate generation + levenshtein verify.
 
-    Rank customers by name (two-pass global rank — no single-partition
+    Rank customers by name (bucketed global rank — no single-partition
     window), pair every record with its next 3 neighbors in sort order,
     keep pairs within edit distance 2. The DuckDB oracle replays the
     same neighborhood with a native row_number window and a position
     band join.
     """
     cust = engine_for(spark, sf_dir).spark.table("customer")
-    # r15: the verify attribute (c_name) rides THROUGH the rank table
-    # (carry_cols) instead of re-joining customer once per pair side —
-    # two broadcast joins and one extra customer scan gone from the
-    # plan; projecting the input to (id, name) also shrinks the rank
-    # checkpoint from all 8 customer columns to the two used.
+    # the verify attribute (c_name) rides THROUGH the rank table
+    # (carry_cols), so customer is not re-joined once per pair side;
+    # the rank exchange carries only the two columns used.
     pairs = sorted_neighborhood_pairs(
         cust.select("c_custkey", "c_name"),
         ["c_name"],

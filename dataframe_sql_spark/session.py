@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import logging
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -128,6 +129,8 @@ def get_spark(app_name: str = "dataframe_sql_spark") -> SparkSession:
         "spark.default.parallelism": cpus,
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
         "spark.ui.enabled": "false",
+        # the "\r" progress bar glues onto redirected output lines
+        "spark.ui.showConsoleProgress": str(sys.stderr.isatty()).lower(),
         # The lineage-truncation operators (operators/lineage.py) eagerly
         # localCheckpoint intermediate frames; their blocks are freed by
         # the ContextCleaner only after a JVM GC collects the RDD object

@@ -144,14 +144,13 @@ def test_curation_pipeline_shape(plans):
 
 def test_w_rank_no_single_partition_window(plans):
     plan = plans["w_rank"]
-    # the two-pass range-partitioned global rank (operators/rank.py):
-    # a regression to Spark's default global-ORDER window would show
-    # up as an Exchange SinglePartition feeding the Window
+    # the bucketed global rank (operators/rank.py): the Window is fed by
+    # a hash exchange on the key's bucket; a regression to Spark's
+    # default global-ORDER window would show up as an Exchange
+    # SinglePartition feeding the Window
     assert "Window" in plan, plan
     assert "Exchange SinglePartition" not in plan, plan
-    assert "Exchange hashpartitioning" in plan or (
-        "Exchange rangepartitioning" in plan
-    ), plan
+    assert "Exchange hashpartitioning" in plan, plan
 
 
 # ---------------------------------------------------------------------------

@@ -27,7 +27,7 @@ from tests.conftest import SF_DIR
 # assertion reads this set); keep it current so a slow lint build has
 # a named explanation.
 _RUNS_JOBS = {
-    "x_sorted_neighborhood",  # global_rank: eager checkpoint + offsets collect
+    "x_sorted_neighborhood",  # global_rank: sample + per-bucket count collects
     "w_rank",
     "w_rank_multi",
     "w_dense_rank",
@@ -338,3 +338,38 @@ def test_ann_query_steps_spelled_once():
     assert [fn for _, fn in rankings] == ["_rank_cells"], rankings
     opens = _sites([_PKG / "operators" / "similarity.py"], lambda n: _call_to(n, "open"))
     assert [fn for _, fn in opens] == ["_write_index", "_read_meta"], opens
+
+
+# Functions allowed an eager lineage cut (``truncate_lineage``): the
+# iterative graph operators, whose plan would otherwise double every
+# round, and the featurize-once cuts of the dedup, relevance, ANN and
+# pipeline entries. A global rank places rows by a pure function of the
+# sort key, so neither it nor its callers need a cut.
+_LINEAGE_CUT_OK = {
+    "connected_components",
+    "pagerank",
+    "minhash_candidate_pairs",
+    "simhash_candidate_pairs",
+    "ngram_jaccard_pairs",
+    "prefix_filter_pairs",
+    "dsir_weights",
+    "pmi_bigrams",
+    "knn_join_indexed",
+    "_a_cms_heavy_hitters",
+    "_dd_minhash_pairs",
+    "_pipe_dedup_funnel",
+}
+
+
+def test_row_placement_is_not_sampled_and_lineage_cuts_are_named():
+    """Source lint: no operator places rows by Spark's sampled range
+    partitioner or reads ``spark_partition_id`` (both change from one
+    run to the next), except the parquet layout writers, which only
+    choose file boundaries; and ``truncate_lineage`` is called only
+    from ``_LINEAGE_CUT_OK``."""
+    files = sorted(_PKG.rglob("*.py"))
+    ranged = _sites(files, lambda n: _call_to(n, "repartitionByRange"))
+    assert {fn for _, fn in ranged} <= {"write_clustered", "compact_small_files"}, ranged
+    assert _sites(files, lambda n: _call_to(n, "spark_partition_id")) == []
+    cuts = _sites(files, lambda n: _call_to(n, "truncate_lineage"))
+    assert {fn for _, fn in cuts} <= _LINEAGE_CUT_OK, cuts

@@ -107,7 +107,8 @@ def test_triangle_list_ignores_direction_dupes_and_self_loops(spark):
 def test_reliable_checkpoint_components_and_rank(spark, tmp_path):
     """With a checkpoint dir configured, iterative operators switch to
     reliable checkpoint() (state survives executor loss on a cluster)
-    and produce identical results; the dir actually receives state."""
+    and produce identical results; the dir actually receives state. The
+    global rank takes no checkpoint and ranks the same under the dir."""
     import os
 
     from dataframe_sql_spark.operators.rank import global_rank
@@ -130,9 +131,7 @@ def test_reliable_checkpoint_components_and_rank(spark, tmp_path):
         )
         ranked = {
             r.id: r.rnk
-            for r in global_rank(
-                df, [("v", True), ("id", True)], reliable=True
-            ).collect()
+            for r in global_rank(df, [("v", True), ("id", True)]).collect()
         }
         assert len(ranked) == 100 and ranked[0] == 1
         # v cycles 0..6: ids with v=0 (0,7,...,98 -> 15 rows) rank first

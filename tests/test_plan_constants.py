@@ -8,6 +8,8 @@
   rejects an unknown option before its first job;
 - a repeated probe compiles no new code (the session's codegen cache
   holds it);
+- a global rank builds the same plan every time, with at most three
+  bounded jobs;
 - the per-element literal idiom does not come back into the package;
 - session confs that do not take are reported, not swallowed.
 """
@@ -16,6 +18,7 @@ from __future__ import annotations
 
 import logging
 import math
+import re
 import struct
 import uuid
 from functools import reduce
@@ -24,6 +27,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import DataFrame
 
+from dataframe_sql_spark.engine import plan_string
 from dataframe_sql_spark.operators.scalars import const_array
 from tests.conftest import SF_DIR
 
@@ -160,6 +164,39 @@ def test_indexed_probe_builds_without_jobs(spark, ivfpq_index):
     assert len(rows) == 10 and jobs
 
 
+def _normalized_plan(df) -> str:
+    """``plan_string`` with expression ids and plan/codegen ids blanked."""
+    return re.sub(r"#\d+|plan_id=\d+|\(\d+\)", "#", plan_string(df))
+
+
+def test_w_rank_entries_build_the_same_plan_twice(spark):
+    # Row placement is a pure function of the sort key and the offsets
+    # come from a deterministic sample, so two builds of one entry in one
+    # session plan identically, and no plan reads a checkpoint RDD.
+    from dataframe_sql_spark.registry import spark_queries
+
+    qs = spark_queries()
+    for name in ("w_rank", "w_rank_multi", "w_dense_rank"):
+        first, second = (qs[name](spark, SF_DIR) for _ in range(2))
+        assert _normalized_plan(first) == _normalized_plan(second), name
+        extended = plan_string(first, "extended")
+        assert "LogicalRDD" not in extended and "ExistingRDD" not in extended, name
+
+
+def test_global_rank_builds_with_at_most_three_jobs(spark):
+    # One sample collect and one per-bucket count collect (a shuffle-map
+    # job plus its result job under AQE): no checkpoint and no
+    # range-partitioner sampling job.
+    from dataframe_sql_spark.operators.rank import global_rank
+    from dataframe_sql_spark.registry import engine_for
+
+    li = engine_for(spark, SF_DIR).spark.table("lineitem").select(
+        "l_orderkey", "l_linenumber", "l_quantity"
+    )
+    _, jobs = _jobs_during(spark, lambda: global_rank(li, [("l_quantity", False)]))
+    assert 0 < len(jobs) <= 3, jobs
+
+
 @pytest.mark.parametrize("option", ["assign", "centroids"])
 @pytest.mark.parametrize("builder", ["ivf_index_write", "ivfpq_index_write"])
 def test_index_builder_rejects_unknown_option_before_any_job(spark, tmp_path, builder, option):
@@ -219,6 +256,13 @@ def test_no_per_element_literal_idiom():
 
 def test_session_codegen_cache_holds_the_working_set(spark):
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+
+
+def test_session_progress_bar_off_when_stderr_is_not_a_terminal(spark):
+    """Spark's console progress bar redraws with a carriage return, so in
+    redirected output it glues onto result lines; the test session's
+    stderr is captured, not a terminal, so the bar is off."""
+    assert spark.sparkContext.getConf().get("spark.ui.showConsoleProgress") == "false"
 
 
 def test_tune_session_reports_confs_it_cannot_set(caplog):

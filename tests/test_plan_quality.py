@@ -425,31 +425,83 @@ def test_global_rank_has_no_single_partition_window(engine):
     assert "SinglePartition" not in plan_d, plan_d
 
 
+# Hand-built degenerate inputs for the global rank: (rows, DDL schema,
+# order). Each row's first field is its unique ``id``.
+_NAN, _INF = float("nan"), float("inf")
+_RANK_EDGE_CASES = {
+    "nulls_asc_and_desc": (
+        [(i, None if i % 3 == 0 else float(i % 5), None if i % 4 == 0 else f"s{i % 3}")
+         for i in range(40)],
+        "id int, a double, b string",
+        [("a", True), ("b", False)],
+    ),
+    "nan_and_signed_zero_asc": (
+        [(i, v) for i, v in enumerate([_NAN, -0.0, 0.0, 1.0, -1.0, _INF, -_INF, None] * 5)],
+        "id int, a double",
+        [("a", True)],
+    ),
+    "nan_and_signed_zero_desc": (
+        [(i, v) for i, v in enumerate([0.0, _NAN, -0.0, None, 2.5, -_INF] * 6)],
+        "id int, a double",
+        [("a", False)],
+    ),
+    "one_hot_key": (
+        [(i, 7 if i % 10 else i) for i in range(60)],
+        "id int, a int",
+        [("a", True)],
+    ),
+    "string_keys": (
+        [(i, s) for i, s in enumerate(["", "a", "B", "b", "ä", "z", "é", "aa", "日本", "A"] * 3)],
+        "id int, a string",
+        [("a", False)],
+    ),
+    "single_row": ([(0, 1.5)], "id int, a double", [("a", True)]),
+    "empty": ([], "id int, a double", [("a", True)]),
+}
+
+
 def test_global_rank_matches_sql_window(engine):
-    # Differential: the distributed two-pass rank must equal the naive
-    # single-partition SQL window bit-for-bit, ties included.
+    # Differential: the distributed rank must equal the naive
+    # single-partition SQL window bit-for-bit, ties included — on
+    # lineitem and on hand-built degenerate inputs (nulls either way,
+    # NaN and signed zeros, a hot key, strings, one row, no rows), for
+    # rank and dense_rank. The hand-built cases run at 8 shuffle
+    # partitions so small inputs still span several buckets.
+    from pyspark.sql import Window
+
     from dataframe_sql_spark.operators.rank import global_rank
 
-    li = engine.spark.table("lineitem")
-    got = {
-        (r.l_orderkey, r.l_linenumber, r.rnk)
-        for r in global_rank(
-            li,
-            [("l_quantity", False), ("l_extendedprice", True), ("l_orderkey", True)],
-            out_col="rnk",
-        )
-        .select("l_orderkey", "l_linenumber", "rnk")
-        .collect()
-    }
-    want = {
-        (r.l_orderkey, r.l_linenumber, r.rnk)
-        for r in engine.spark.sql(
-            "select l_orderkey, l_linenumber, "
-            "rank() over (order by l_quantity desc, l_extendedprice, l_orderkey) "
-            "as rnk from lineitem"
-        ).collect()
-    }
-    assert got == want
+    spark = engine.spark
+
+    def check(df, order, ids, label):
+        sort = [F.col(c).asc() if asc else F.col(c).desc() for c, asc in order]
+        for dense, fn in ((False, F.rank), (True, F.dense_rank)):
+            got = {
+                tuple(r)
+                for r in global_rank(df, order, dense=dense, out_col="r")
+                .select(*ids, "r")
+                .collect()
+            }
+            want = {
+                tuple(r)
+                for r in df.select(*ids, fn().over(Window.orderBy(*sort)).alias("r")).collect()
+            }
+            assert got == want, (label, dense)
+
+    check(
+        spark.table("lineitem"),
+        [("l_quantity", False), ("l_extendedprice", True), ("l_orderkey", True)],
+        ["l_orderkey", "l_linenumber"],
+        "lineitem",
+    )
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    try:
+        for label, (rows, schema, order) in _RANK_EDGE_CASES.items():
+            check(spark.createDataFrame(rows, schema), order, ["id"], label)
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_relevance_family_vocab_joins_broadcast(spark):

@@ -74,8 +74,9 @@ HEADLINERS: dict[str, str] = {
     "window over <= bins rows per group; quantile list broadcast",
     "a_cms_heavy_hitters": "counter-grid shuffle bounded by "
     "segments x depth x width; probe joins broadcast the sketch",
-    "w_rank": "two-pass global rank: RangePartitioning exchange, NO "
-    "SinglePartition window over scan output",
+    "w_rank": "bucketed global rank: hashpartitioning on a CASE bucket "
+    "of the sort key, per-bucket Window, literal offsets; NO "
+    "SinglePartition window over scan output, no checkpoint",
     "x_profile": "ALL per-column aggregates in ONE scan + one "
     "partial/final HashAggregate; constant-width explode",
     "j_range_incidents": "bucketed range-join rewrite: interval explode "
