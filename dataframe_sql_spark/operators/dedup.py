@@ -355,11 +355,12 @@ def minhash_candidate_pairs(
     if pre_shingled is None:
         # materialize the signature table once (truncate_lineage —
         # guide §8's "decide with small rows": id + 64 longs per doc,
-        # ~0.5 KB/row vs the multi-KB text). The nondeterministic Arrow
-        # kernel defeats Catalyst's subtree canonicalization, so WITHOUT
-        # this cut every downstream branch re-runs tokenize→gram-hash→OPH
-        # from the raw scan (measured: 6 parquet scans / 2 ArrowEvalPython
-        # in the dd_minhash_pairs plan, 0 ReusedExchange).
+        # ~0.5 KB/row vs the multi-KB text); without the cut the
+        # banding consumers re-run tokenize→gram-hash→OPH. Measured
+        # with the verifier's shingle cut (dd_minhash, sf0.1,
+        # local[2], construct+execute CPU of the process tree, 3
+        # interleaved fresh-JVM pairs): 11.4 s median with the cuts,
+        # 12.3 s without, execute CPU 4.4-5.3 s → 8.5-9.7 s, same rows.
         sig = truncate_lineage(sig)
     banded = _banded(sig, id_col, num_hashes, bands, bucket_hash)
     buckets = (
@@ -390,7 +391,8 @@ def ngram_jaccard_pairs(
 
     Joins the shingle sets back onto the (small) candidate pair table
     and computes |∩|/|∪| with built-in array functions. Returns pairs
-    with ``jaccard >= threshold``.
+    with ``jaccard >= threshold`` as (id_a, id_b, jaccard, inter, uni),
+    the last two the integer set sizes the ratio is taken of.
 
     ``hashed=True`` verifies over the 8-byte gram-hash sets
     (:func:`hashed_shingle_frame`) instead of shingle strings —
@@ -419,10 +421,9 @@ def ngram_jaccard_pairs(
         else:
             sh = shingle_frame(df, id_col, text_col, shingle_k)
         # r14: materialize the shingle-set frame once — it feeds BOTH
-        # join sides below, and the lambda-bearing gram projection
-        # defeats subtree canonicalization, so without the cut the
-        # corpus is tokenized twice (guide §8: compute the fingerprint
-        # pass once, then attach decisions to it).
+        # join sides below, and without the cut the corpus is
+        # tokenized for each (cost measured with the signature cut in
+        # minhash_candidate_pairs, entry dd_minhash).
         sh = truncate_lineage(sh)
     # merge hints: the shingle-set sides carry a per-doc array column,
     # which Catalyst's width estimator counts as ONE element
@@ -439,6 +440,7 @@ def ngram_jaccard_pairs(
     # Same int/int division, bit-identical jaccard, half the per-pair
     # array CPU of computing intersect AND union.
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    uni = F.size("sh_a") + F.size("sh_b") - inter
     j = (
         pairs.join(
             sh.withColumnRenamed(id_col, "id_a")
@@ -452,11 +454,13 @@ def ngram_jaccard_pairs(
             .hint("merge"),
             "id_b",
         )
-        .withColumn(
-            "jaccard",
-            inter / (F.size("sh_a") + F.size("sh_b") - inter),
+        .select(
+            "id_a",
+            "id_b",
+            (inter / uni).alias("jaccard"),
+            inter.cast("bigint").alias("inter"),
+            uni.cast("bigint").alias("uni"),
         )
-        .select("id_a", "id_b", "jaccard")
     )
     return j.filter(F.col("jaccard") >= threshold)
 
@@ -820,15 +824,13 @@ def simhash_candidate_pairs(
                 )
             ).alias("p"),
         ).select("item", F.col("p.chunk").alias("chunk"), F.col("p.piece").alias("piece"))
-        # r14: materialize the exploded key frame once. The intended
-        # one-Exchange + ReusedExchange self-join never planned once
-        # the signature moved to the nondeterministic Arrow kernel
-        # (nondeterministic expressions are never sameResult, so the
-        # two sides each re-ran featurize→sign→explode from the raw
-        # scan — 6 scans in the HEAD plan). The key frame is small
-        # fixed-width rows ((id, sim) struct + chunk + piece); after
-        # the cut both join sides and the bucket-cap window scan the
-        # same materialized RDD.
+        # r14: materialize the exploded key frame once: both join
+        # sides and the bucket-cap window scan it, and without the cut
+        # each re-runs featurize→sign→explode. Measured (dd_simhash,
+        # sf0.1, local[2], median construct+execute CPU of the process
+        # tree): 2.2 s with the cut, 2.6 s without, same rows. The key
+        # frame is small fixed-width rows ((id, sim) struct + chunk +
+        # piece).
         allk = truncate_lineage(allk)
         is_exact = F.expr(
             f"piece = (shiftright(item.sim, chunk * {width}) & {mask})"
@@ -1212,9 +1214,12 @@ def prefix_filter_pairs(
     """
     # r14: materialize the shingle frame once — it feeds the token
     # stream (frequency + ranked branches) AND both verification sides,
-    # and lambda-bearing projections defeat subtree canonicalization:
-    # the un-cut plan re-ran the full tokenize+shingle featurization
-    # SIX times from the raw scan (plans/r14/dd_prefix_pairs_before).
+    # which ask for different exchanges, so without the cut each
+    # re-runs the tokenize+shingle featurization. Measured with this
+    # cut and the prefix-table cut below (dd_prefix_pairs, sf0.1,
+    # local[2], median construct+execute CPU of the process tree):
+    # 11.2 s with the cuts, 12.1 s without, and 6 → 10 execute jobs,
+    # same rows.
     sh = truncate_lineage(shingle_frame(df, id_col, text_col, shingle_k))
     toks = sh.select(
         F.col(id_col), F.explode(F.array_distinct(F.col("__sh"))).alias("tok")
@@ -1264,8 +1269,9 @@ def prefix_filter_pairs(
     ).select(id_col, "sz", F.xxhash64(F.col("p.tok")).alias("tok"))
     # r14: materialize the prefix table before the self-join — the two
     # sides otherwise each recompute the whole freq+rank+prefix subtree
-    # (two more shuffles and a collect_list groupBy EACH). (id, sz,
-    # tok) rows only; both sides then scan the same RDD.
+    # (two more shuffles and a collect_list groupBy EACH; cost measured
+    # with the shingle cut above). (id, sz, tok) rows only; both sides
+    # then scan the same RDD.
     prefix = truncate_lineage(prefix)
     a = prefix.select(
         F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"), "tok"

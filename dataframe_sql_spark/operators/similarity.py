@@ -460,6 +460,58 @@ def _score_blocks(V, M, reduce, digits: int | None = None, seed=None):
     return np.concatenate(out)
 
 
+def _flat_cells(centroids: list[list[float]]):
+    """The flat quantizer as a row-batch kernel: ``V`` → each row's
+    best cell by the rounded normalized-centroid dot
+    (:func:`_score_blocks`), ties to the lowest cell."""
+    cn = np.array([_normed(c) for c in centroids], np.float64)
+    return lambda V: _score_blocks(V, cn, _argmax, CELL_SCORE_DECIMALS)
+
+
+def _two_level_cells(centroids: list[list[float]]):
+    """The two-level quantizer as a row-batch kernel (see
+    :func:`ivf_assign_cells_2level`): ``V`` → each row's best child
+    cell of its best super-cell, every level scored by
+    :func:`_score_blocks`."""
+    n_cells = len(centroids)
+    n_super = max(1, math.isqrt(n_cells))
+    # deterministic super-centroid pick: smallest md5("s:<cell idx>")
+    order = sorted(
+        range(n_cells), key=lambda i: hashlib.md5(f"s:{i}".encode()).hexdigest()
+    )
+    super_ids = sorted(order[:n_super])
+    cn = np.array([_normed(c) for c in centroids], np.float64)
+    supers = cn[super_ids]
+    route = _score_blocks(cn, supers, _argmax, CELL_SCORE_DECIMALS)
+    # a super-cell no cell routes to keeps its own seed cell as its one
+    # child, so every super-cell resolves (the seed stays reachable via
+    # its true super too — duplicate membership only widens the search)
+    children = [np.flatnonzero(route == s) for s in range(n_super)]
+    children = [k if len(k) else np.array([super_ids[s]]) for s, k in enumerate(children)]
+
+    def cells(V):
+        sup = _score_blocks(V, supers, _argmax, CELL_SCORE_DECIMALS)
+        out = np.empty(len(V), np.int64)
+        for s, kids in enumerate(children):
+            rows = np.flatnonzero(sup == s)
+            if len(rows):
+                out[rows] = kids[_score_blocks(V[rows], cn[kids], _argmax, CELL_SCORE_DECIMALS)]
+        return out
+
+    return cells
+
+
+def _with_cells(df: DataFrame, vec_col: str, cells, cell_col: str) -> DataFrame:
+    """``df`` plus ``cell_col``: the cell kernel ``cells``
+    (:func:`_flat_cells` / :func:`_two_level_cells`) over each Arrow
+    batch of ``vec_col`` — one numpy pass, no shuffle."""
+
+    def assign(pdf, V):
+        return pdf.assign(**{cell_col: cells(V).astype(np.int32)})
+
+    return map_batches(df, f"`{cell_col}` int", assign, vec_col)
+
+
 def ivf_assign_cells(
     df: DataFrame, vec_col: str, centroids: list[list[float]], cell_col: str = "__cell"
 ) -> DataFrame:
@@ -479,13 +531,7 @@ def ivf_assign_cells(
     centroid in SQL), so near-ulp float divergence between the two
     engines cannot flip a near-tie assignment; rounded ties break to
     the lowest cell on both sides (scoring rule: :func:`_score_blocks`)."""
-    cn = np.array([_normed(c) for c in centroids], np.float64)
-
-    def assign(pdf, V):
-        cell = _score_blocks(V, cn, _argmax, CELL_SCORE_DECIMALS)
-        return pdf.assign(**{cell_col: cell.astype(np.int32)})
-
-    return map_batches(df, f"`{cell_col}` int", assign, vec_col)
+    return _with_cells(df, vec_col, _flat_cells(centroids), cell_col)
 
 
 def ivf_probe_cells(
@@ -535,17 +581,21 @@ def ivf_assign_cells_2level(
     everywhere (slope ~1.5 pre-cap, 32× fewer dot products per row at
     the cap).
 
-    Construction (all driver-side over the ≤4096·dim centroid matrix,
-    then pure codegen per row — no UDF, no shuffle):
+    Construction (driver-side over the ≤4096·dim centroid matrix, then
+    one numpy pass per row batch — no shuffle):
 
     - √C super-centroids picked deterministically from the cell
       centroids (smallest md5 of the cell index — the same seedless
       discipline as `_ivf_centroids`), then each CELL is routed to its
       nearest super-centroid, giving a children table
-      ``super → [cell ids]`` (driver math over C·dim floats);
+      ``super → [cell ids]``;
     - per row: argmax rounded-dot over the √C super-centroids, then
-      argmax rounded-dot over that super-cell's children only — two
-      nested-literal lookups, ties to the lowest index at both levels.
+      argmax rounded-dot over that super-cell's children only, ties to
+      the lowest index at both levels.
+
+    Every level, the routing included, is scored by
+    :func:`_score_blocks` — the HALF_UP rule of the oracle's
+    ``round(list_inner_product(...), 8)``, as flat assignment is.
 
     The assignment is APPROXIMATE at cell boundaries (a row whose true
     nearest cell hangs under a different super-cell lands in its best
@@ -556,51 +606,7 @@ def ivf_assign_cells_2level(
     like the k-means build). Deterministic: pure function of the
     centroid matrix, so reruns and incremental appends agree.
     """
-    n_cells = len(centroids)
-    n_super = max(1, math.isqrt(n_cells))
-    # deterministic super-centroid pick: smallest md5("s:<cell idx>")
-    order = sorted(
-        range(n_cells), key=lambda i: hashlib.md5(f"s:{i}".encode()).hexdigest()
-    )
-    super_ids = sorted(order[:n_super])
-    normed = [_normed(c) for c in centroids]
-    supers = [normed[i] for i in super_ids]
-
-    def _dot(a: list[float], b: list[float]) -> float:
-        return round(sum(x * y for x, y in zip(a, b)), CELL_SCORE_DECIMALS)
-
-    children: list[list[int]] = [[] for _ in range(n_super)]
-    for cell in range(n_cells):
-        best = max(
-            range(n_super), key=lambda s: (_dot(normed[cell], supers[s]), -s)
-        )
-        children[best].append(cell)
-    # an empty super-cell would make element_at return an empty array
-    # and the row a null cell; give it its own seed cell so every
-    # super-cell resolves (the seed stays reachable via its true super
-    # too — duplicate membership only widens the search)
-    for s, kids in enumerate(children):
-        if not kids:
-            kids.append(super_ids[s])
-
-    v = F.col(vec_col).cast("array<double>")
-    supers_lit = const_array(supers, "array<double>")
-    kids_ids_lit = const_array(children, "array<int>")
-    kids_cents_lit = const_array(
-        [[normed[c] for c in kids] for kids in children], "array<array<double>>"
-    )
-
-    def scores(cands: Column) -> Column:
-        return F.transform(cands, lambda c: F.round(_dot_col(v, c), CELL_SCORE_DECIMALS))
-
-    s_scores = scores(supers_lit)
-    s_pos = F.array_position(s_scores, F.array_max(s_scores)).cast("int")
-    kid_cents = F.element_at(kids_cents_lit, s_pos)
-    k_scores = scores(kid_cents)
-    k_pos = F.array_position(k_scores, F.array_max(k_scores)).cast("int")
-    return df.withColumn(
-        cell_col, F.element_at(F.element_at(kids_ids_lit, s_pos), k_pos).cast("int")
-    )
+    return _with_cells(df, vec_col, _two_level_cells(centroids), cell_col)
 
 
 def ivf_topk(
@@ -1044,7 +1050,7 @@ def ivf_index_write(
         n_cells = ivf_default_cells(df.count())
     cents = _CENTROID_TRAINERS[centroids](df, vec_col, id_col, n_cells)
     _write_index(
-        _ASSIGNERS[assign](df, vec_col, cents, cell_col="cell"), path, _CENTROIDS, cents
+        _with_cells(df, vec_col, _ASSIGNERS[assign](cents), "cell"), path, _CENTROIDS, cents
     )
     return cents
 
@@ -1052,9 +1058,10 @@ def ivf_index_write(
 # The index builders' ``centroids`` and ``assign`` options: "sample"
 # is the deterministic md5 pick (the default every replay certificate
 # pins), "kmeans" the Lloyd refinement; "flat" scores every cell,
-# "2level" the hierarchical quantizer.
+# "2level" the hierarchical quantizer (each a centroids → cell-kernel
+# factory, shared by the IVF and IVF-PQ builds).
 _CENTROID_TRAINERS = {"sample": _ivf_centroids, "kmeans": ivf_kmeans_centroids}
-_ASSIGNERS = {"flat": ivf_assign_cells, "2level": ivf_assign_cells_2level}
+_ASSIGNERS = {"flat": _flat_cells, "2level": _two_level_cells}
 
 
 def _check_build_options(centroids: str, assign: str) -> None:
@@ -1351,44 +1358,34 @@ def _ivfpq_build(
     candidates drop cosine-top rows (measured recall 0.8 → 1.0 at
     full probe on the bench corpus).
 
-    The default build (sample centroids, flat assignment) is ONE
-    bounded collect and ONE corpus pass: a single
-    md5-ordered TakeOrdered returns max(n_cells, PQ_TRAIN_SAMPLE) rows
-    — the first n_cells are the :func:`_ivf_centroids` pick, the first
-    PQ_TRAIN_SAMPLE are :func:`pq_train`'s sample (the md5 order is on
-    the id, which assignment carries through unchanged). The sample's
-    residuals and the codebooks are computed driver-side with the same
-    per-row numpy math the executor kernel applies (chunking and
-    batching cannot change any value), and normalize + assign +
-    residual + encode fuse into one ``mapInPandas`` crossing. Residual
-    = unit vector minus the RAW centroid.
+    With sample centroids the build is ONE bounded collect and ONE
+    corpus pass: a single md5-ordered TakeOrdered returns
+    max(n_cells, PQ_TRAIN_SAMPLE) rows — the first n_cells are the
+    :func:`_ivf_centroids` pick, the first PQ_TRAIN_SAMPLE are
+    :func:`pq_train`'s sample. The sample's cells, residuals and the
+    codebooks are computed driver-side with the same per-row numpy
+    math the executor kernel applies (chunking and batching cannot
+    change any value), and normalize + assign + residual + encode fuse
+    into one ``mapInPandas`` crossing, flat or ``assign="2level"``
+    alike (:data:`_ASSIGNERS`). Residual = unit vector minus the RAW
+    centroid.
 
     ``centroid_method="kmeans"`` trains the centroids with
     :func:`ivf_kmeans_centroids` on the unit vectors (see
-    :func:`ivf_index_write`); ``assign="2level"`` takes each row's cell
-    from :func:`ivf_assign_cells_2level`, and the training sample is
-    then collected from the assigned frame, cells included. Both feed
-    the same kernel. ``pq_round_digits`` / ``score_digits`` are the
-    replay pins of :func:`pq_train` / :func:`pq_encode`.
+    :func:`ivf_index_write`) before the sample collect.
+    ``pq_round_digits`` / ``score_digits`` are the replay pins of
+    :func:`pq_train` / :func:`pq_encode`.
     """
     _check_build_options(centroid_method, assign)
-    two_level = assign == "2level"
-    src, cents = df, None
-    if centroid_method != "sample" or two_level:
-        # k-means training and the 2-level assigner read the unit
-        # vectors as a column
+    cents = None
+    if centroid_method != "sample":
+        # k-means training reads the unit vectors as a column
         v = F.col(vec_col).cast("array<double>")
         nrm = _norm_col(v)
         df_n = df.withColumn("__vn", F.transform(v, lambda x: x / nrm))
         cents = _CENTROID_TRAINERS[centroid_method](df_n, "__vn", id_col, n_cells)
-        if two_level:
-            src = ivf_assign_cells_2level(df_n, "__vn", cents).drop("__vn")
     rows = _md5_sample(
-        src,
-        vec_col,
-        id_col,
-        max(n_cells, PQ_TRAIN_SAMPLE) if cents is None else PQ_TRAIN_SAMPLE,
-        *(["__cell"] if two_level else []),
+        df, vec_col, id_col, max(n_cells, PQ_TRAIN_SAMPLE) if cents is None else PQ_TRAIN_SAMPLE
     )
 
     def unit(V):
@@ -1397,38 +1394,28 @@ def _ivfpq_build(
     X = np.array([r.v for r in rows], np.float64)
     if cents is None:
         cents = unit(X[:n_cells]).tolist()
-    cn = np.array([_normed(c) for c in cents], np.float64)
+    cells = _ASSIGNERS[assign](cents)
     craw = np.array(cents, np.float64)
 
-    def residuals(V, cell):
-        """unit vectors, cells (flat-assigned when not given), residuals
-        — the per-row math shared by the kernel and the sample."""
+    def residuals(V):
+        """unit vectors, cells, residuals — the per-row math shared by
+        the kernel and the sample."""
         VN = unit(V)
-        if cell is None:
-            cell = _score_blocks(VN, cn, _argmax, CELL_SCORE_DECIMALS)
+        cell = cells(VN)
         return VN, cell, VN - craw[cell]
 
-    _, _, res = residuals(
-        X[:PQ_TRAIN_SAMPLE],
-        np.array([r["__cell"] for r in rows]) if two_level else None,
-    )
+    _, _, res = residuals(X[:PQ_TRAIN_SAMPLE])
     books = _pq_train_np(res, dim, n_sub, n_codes, round_digits=pq_round_digits)
     encode = _pq_coder(books, score_digits)
 
     def assign_encode(pdf, V):
-        VN, cell, res = residuals(V, pdf["__cell"].to_numpy() if two_level else None)
+        VN, cell, res = residuals(V)
         return pdf.assign(
             __vn=list(VN), __cell=cell.astype(np.int32), __pq=list(encode(res))
         )
 
-    cell_ddl = "" if two_level else "`__cell` int,"
-    added = f"`__vn` array<double>,{cell_ddl}`__pq` array<int>"
-    encoded = map_batches(src, added, assign_encode, vec_col)
-    if two_level:
-        # the 2-level cells arrive as an input column: restore the flat
-        # build's column order
-        encoded = encoded.select(*df.columns, "__vn", "__cell", "__pq")
-    return encoded, cents, books
+    added = "`__vn` array<double>,`__cell` int,`__pq` array<int>"
+    return map_batches(df, added, assign_encode, vec_col), cents, books
 
 
 def _ivfpq_scan(

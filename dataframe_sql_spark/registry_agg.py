@@ -481,21 +481,19 @@ def _a_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from .functions.sketches import cms_estimate, cms_merge, cms_partials
-    from .operators.lineage import truncate_lineage
 
-    # fan_out=False (r15): the one corpus pass lands in the
-    # materialized vocab table whose groupBy exchange parallelizes
-    # downstream; the fan-out exchange measured 1.3-1.6x slower at
-    # sf0.1 (interleaved A/B)
+    # fan_out=False (r15): the corpus pass goes straight into the
+    # vocab table's groupBy exchange, which parallelizes downstream;
+    # the fan-out exchange measured 1.3-1.6x slower at sf0.1
+    # (interleaved A/B)
     docs = _docs(spark, sf_dir, fan_out=False)
-    # r14: materialize the vocab-sized (source, word, n) table once —
-    # its three consumers (partials, exact counts, and the top-10
-    # probe's second reference) otherwise each re-run the corpus
-    # tokenize+count from the raw scan (3 parquet scans in the plan;
-    # TakeOrderedAndProject subtrees have no exchange for Catalyst to
-    # reuse). Same guide-§8 boundary as the LM/PMI count tables:
-    # only the Heaps-bounded aggregate is stored, never the stream.
-    base = truncate_lineage(
+    # The vocab-sized (source, word, n) table is NOT materialized: its
+    # consumers re-run the corpus tokenize+count, yet an eager cut
+    # cost more than it saved — construct+execute CPU of the process
+    # tree at sf0.1, local[2], 5 interleaved fresh-JVM pairs: 7.45 s
+    # median with the cut, 7.31 s without (no-cut ahead in 4 of 5),
+    # same rows.
+    base = (
         docs.select(
             "source",
             F.explode(words(F.col("text"))).alias("word"),

@@ -393,6 +393,7 @@ def streaming_near_dedup(
         minhash_band_index,
         minhash_dedup,
     )
+    from ..operators.lineage import truncate_lineage
 
     def batch_fn(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
@@ -408,7 +409,7 @@ def streaming_near_dedup(
                 batch, id_col, text_col,
                 num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
             )
-        kept = kept.localCheckpoint()  # compute once; two sinks below
+        kept = truncate_lineage(kept)  # compute once; two sinks below
         kept.write.mode("append").parquet(out_path)
         minhash_band_index(kept, id_col, text_col, num_hashes, bands, shingle_k) \
             .write.mode("append").parquet(index_path)

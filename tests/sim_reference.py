@@ -4,9 +4,10 @@
 
 Each function here is the pure Spark-expression formulation of a
 library kernel — the same math the DuckDB replay certificates mirror
-in SQL (``round(list_inner_product(...), 8)`` cell scores,
-first-match argmax, seeded PQ folds, self-join cosine, OPH lanes with
-rotation densify, majority-bit SimHash). The parity tests in
+in SQL (``round(list_inner_product(...), 8)`` cell scores for the flat
+and the two-level quantizer, first-match argmax, seeded PQ folds,
+self-join cosine, OPH lanes with rotation densify, majority-bit
+SimHash). The parity tests in
 ``test_ann_index.py``, ``test_dedup.py`` and ``test_operators.py``
 compare the library's output against these bit-for-bit; nothing in
 the library calls them.
@@ -14,9 +15,13 @@ the library calls them.
 
 from __future__ import annotations
 
+import hashlib
+import math
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from dataframe_sql_spark.operators.scalars import const_array
 from dataframe_sql_spark.operators.similarity import (
     CELL_SCORE_DECIMALS,
     _cosine_cols,
@@ -25,7 +30,6 @@ from dataframe_sql_spark.operators.similarity import (
     _lloyd_means,
     _norm_col,
     _normed,
-    ivf_assign_cells_2level,
     pq_train,
 )
 
@@ -46,6 +50,61 @@ def ivf_assign_cells_expr(
     sims = _cell_sims(vec_col, centroids)
     return df.withColumn(
         cell_col, (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
+    )
+
+
+def ivf_assign_cells_2level_expr(
+    df: DataFrame,
+    vec_col: str,
+    centroids: list[list[float]],
+    cell_col: str = "__cell",
+) -> DataFrame:
+    """Reference for ``ivf_assign_cells_2level``: the same md5
+    super-centroid pick, each cell routed driver-side to its best
+    super-centroid by a Python rounded dot (lowest super on ties), an
+    unrouted super-cell given its own seed cell, then per row two
+    nested-literal argmaxes of rounded dots — super-cell, then that
+    super-cell's children (lowest list position, i.e. lowest cell, on
+    ties)."""
+    n_cells = len(centroids)
+    n_super = max(1, math.isqrt(n_cells))
+    order = sorted(
+        range(n_cells), key=lambda i: hashlib.md5(f"s:{i}".encode()).hexdigest()
+    )
+    super_ids = sorted(order[:n_super])
+    normed = [_normed(c) for c in centroids]
+    supers = [normed[i] for i in super_ids]
+
+    def _dot(a: list[float], b: list[float]) -> float:
+        return round(sum(x * y for x, y in zip(a, b)), CELL_SCORE_DECIMALS)
+
+    children: list[list[int]] = [[] for _ in range(n_super)]
+    for cell in range(n_cells):
+        best = max(
+            range(n_super), key=lambda s: (_dot(normed[cell], supers[s]), -s)
+        )
+        children[best].append(cell)
+    for s, kids in enumerate(children):
+        if not kids:
+            kids.append(super_ids[s])
+
+    v = F.col(vec_col).cast("array<double>")
+    supers_lit = const_array(supers, "array<double>")
+    kids_ids_lit = const_array(children, "array<int>")
+    kids_cents_lit = const_array(
+        [[normed[c] for c in kids] for kids in children], "array<array<double>>"
+    )
+
+    def scores(cands: Column) -> Column:
+        return F.transform(cands, lambda c: F.round(_dot_col(v, c), CELL_SCORE_DECIMALS))
+
+    s_scores = scores(supers_lit)
+    s_pos = F.array_position(s_scores, F.array_max(s_scores)).cast("int")
+    kid_cents = F.element_at(kids_cents_lit, s_pos)
+    k_scores = scores(kid_cents)
+    k_pos = F.array_position(k_scores, F.array_max(k_scores)).cast("int")
+    return df.withColumn(
+        cell_col, F.element_at(F.element_at(kids_ids_lit, s_pos), k_pos).cast("int")
     )
 
 
@@ -170,9 +229,8 @@ def ivfpq_build_expr(
     training (:func:`ivf_kmeans_centroids_expr` for ``"kmeans"``),
     assignment, residual, ``pq_train`` over the residual column and
     :func:`pq_encode_expr`. Returns (encoded_df, centroids, codebooks)
-    with the same columns in the same order. The md5 sample pick, the
-    2-level assigner and ``pq_train`` have no numpy twin and are the
-    library's own."""
+    with the same columns in the same order. The md5 sample pick and
+    ``pq_train`` have no numpy twin and are the library's own."""
     v_raw = F.col(vec_col).cast("array<double>")
     nrm = _norm_col(v_raw)
     df_n = df.withColumn("__vn", F.transform(v_raw, lambda x: x / nrm))
@@ -180,7 +238,7 @@ def ivfpq_build_expr(
         centroid_method
     ]
     centroids = trainer(df_n, "__vn", id_col, n_cells)
-    assigner = {"flat": ivf_assign_cells_expr, "2level": ivf_assign_cells_2level}[
+    assigner = {"flat": ivf_assign_cells_expr, "2level": ivf_assign_cells_2level_expr}[
         assign
     ]
     assigned = assigner(df_n, "__vn", centroids)

@@ -408,19 +408,52 @@ def test_2level_assignment_deterministic_valid_and_mostly_flat(spark):
     assert agree >= 0.5, f"2-level agreement with flat argmax only {agree:.2f}"
 
 
-def test_2level_no_udf_in_plan(spark):
-    """The whole two-level assignment must stay in codegen: no
-    BatchEvalPython / ArrowEvalPython node anywhere in the plan."""
+def test_2level_numpy_matches_expressions(spark):
+    """ivf_assign_cells_2level (one numpy kernel over _score_blocks)
+    must give EXACTLY the expression reference's cell, row for row, at
+    16, 64 and 256 md5-sample cells, and on 4 hand-built cells whose
+    second super-centroid (cell 2) is a near-copy of the first: cell 2
+    scores 1.0 against both after rounding, routes to the lower super,
+    and leaves its own super-cell with no routed child — so a row
+    nearest that super (e2) can only reach a cell through the
+    seed-cell fallback."""
+    import math
+
     from dataframe_sql_spark.operators.similarity import (
         _ivf_centroids,
         ivf_assign_cells_2level,
     )
+    from tests.sim_reference import ivf_assign_cells_2level_expr
 
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    cents = _ivf_centroids(emb, "embedding", "vec_id", n_cells=16)
-    df = ivf_assign_cells_2level(emb, "embedding", cents, cell_col="c")
-    plan = plan_string(df)
-    assert "EvalPython" not in plan
+    def cells(fn, df, cents):
+        return {
+            r["vec_id"]: r["__cell"]
+            for r in fn(df, "v", cents).select("vec_id", "__cell").collect()
+        }
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+    for n_cells in (16, 64, 256):
+        cents = _ivf_centroids(emb, "v", "vec_id", n_cells)
+        a, b = (cells(fn, emb, cents) for fn in (ivf_assign_cells_2level_expr, ivf_assign_cells_2level))
+        assert len(a) == 500 and a == b, n_cells
+        assert len(set(b.values())) > 1, n_cells
+
+    t = 5e-5
+    cents = [[1.0, 0.0, 0.0, 0.0], [0.0, 0.0, 1.0, 0.0], [math.cos(t), math.sin(t), 0.0, 0.0], [0.0, 0.0, 0.0, 1.0]]
+    rows = [
+        (0, [0.0, 1.0, 0.0, 0.0]),
+        (1, [0.0, 0.0, 1.0, 0.0]),
+        (2, [0.2, 0.9, 0.1, 0.0]),
+        (3, [0.5, 0.0, 0.1, 0.9]),
+        (4, [1.0, 0.0, 0.0, 0.0]),
+        (5, [0.0, 0.0, 0.0, 0.0]),
+    ]
+    tiny = spark.createDataFrame(rows, "vec_id int, v array<double>")
+    a, b = (cells(fn, tiny, cents) for fn in (ivf_assign_cells_2level_expr, ivf_assign_cells_2level))
+    assert a == b
+    assert b == {0: 2, 1: 1, 2: 2, 3: 3, 4: 0, 5: 0}
 
 
 def test_ivfpq_2level_build_full_probe_recall(spark, tmp_path):
@@ -633,7 +666,7 @@ def test_ivfpq_numpy_build_matches_expressions(spark):
     configuration sim_ann_ivfpq_verified replays (pq_round_digits=4,
     score_digits=8), k-means centroids (the reference runs its own
     Lloyd loop on the expression assigner) and 2-level assignment
-    (ivf_assign_cells_2level has no twin, so both sides share it)."""
+    (against its expression twin, ivf_assign_cells_2level_expr)."""
     import numpy as np
 
     from dataframe_sql_spark.operators.similarity import (

@@ -342,8 +342,9 @@ def test_ann_query_steps_spelled_once():
 
 # Functions allowed an eager lineage cut (``truncate_lineage``): the
 # iterative graph operators, whose plan would otherwise double every
-# round, and the featurize-once cuts of the dedup, relevance, ANN and
-# pipeline entries. A global rank places rows by a pure function of the
+# round, the featurize-once cuts of the dedup, relevance, ANN and
+# pipeline entries, and the streaming dedup's micro-batch, which feeds
+# two sinks. A global rank places rows by a pure function of the
 # sort key, so neither it nor its callers need a cut.
 _LINEAGE_CUT_OK = {
     "connected_components",
@@ -355,9 +356,9 @@ _LINEAGE_CUT_OK = {
     "dsir_weights",
     "pmi_bigrams",
     "knn_join_indexed",
-    "_a_cms_heavy_hitters",
     "_dd_minhash_pairs",
     "_pipe_dedup_funnel",
+    "batch_fn",
 }
 
 
@@ -366,10 +367,32 @@ def test_row_placement_is_not_sampled_and_lineage_cuts_are_named():
     partitioner or reads ``spark_partition_id`` (both change from one
     run to the next), except the parquet layout writers, which only
     choose file boundaries; and ``truncate_lineage`` is called only
-    from ``_LINEAGE_CUT_OK``."""
+    from ``_LINEAGE_CUT_OK``, and Spark's checkpoints only inside it
+    (``operators/lineage.py``), so a configured checkpoint directory
+    makes every cut reliable."""
     files = sorted(_PKG.rglob("*.py"))
     ranged = _sites(files, lambda n: _call_to(n, "repartitionByRange"))
     assert {fn for _, fn in ranged} <= {"write_clustered", "compact_small_files"}, ranged
     assert _sites(files, lambda n: _call_to(n, "spark_partition_id")) == []
     cuts = _sites(files, lambda n: _call_to(n, "truncate_lineage"))
     assert {fn for _, fn in cuts} <= _LINEAGE_CUT_OK, cuts
+    direct = _sites(
+        [p for p in files if p != _PKG / "operators" / "lineage.py"],
+        lambda n: _call_to(n, "localCheckpoint") or _call_to(n, "checkpoint"),
+    )
+    assert direct == [], direct
+
+
+def test_cell_scores_only_in_score_blocks():
+    """Source lint: IVF cell scores are computed only by
+    ``_score_blocks``. No ``round(…, CELL_SCORE_DECIMALS)`` outside
+    ``_cos_py``'s constant-query ranking, and no Python ``_dot``."""
+    sites = _sites(
+        sorted(_PKG.rglob("*.py")),
+        lambda n: (isinstance(n, ast.FunctionDef) and n.name == "_dot")
+        or (
+            _call_to(n, "round")
+            and any(getattr(a, "id", None) == "CELL_SCORE_DECIMALS" for a in n.args)
+        ),
+    )
+    assert [fn for _, fn in sites] == ["_cos_py"], sites

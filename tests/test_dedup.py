@@ -420,3 +420,36 @@ def test_unknown_feature_hash_raises(spark, entry):
         ValueError, match=r"feature_hash must be one of \['md5', 'xx'\], got 'MD5'"
     ):
         calls[entry]("MD5")
+
+
+def test_ngram_jaccard_pairs_returns_set_sizes(spark):
+    """The verifier returns |A∩B| and |A∪B| of each pair's 3-gram sets
+    as integers beside the ratio it filters on: hand-built documents
+    with repeated, shared, disjoint and too-short texts, checked
+    against Python set arithmetic over the same shingle sets, string
+    and hashed."""
+    import pandas as pd
+
+    from dataframe_sql_spark.operators.dedup import ngram_jaccard_pairs, shingle_frame
+
+    texts = {
+        1: "the cat sat on the mat",
+        2: "the cat sat on the mat today",
+        3: "a dog ran and a dog ran and a dog ran",
+        4: "the cat sat on a dog ran",
+        5: "nothing shared here at all",
+        6: "two words",
+    }
+    docs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": list(texts), "text": list(texts.values())})
+    )
+    cand = [(1, 2), (1, 4), (3, 4), (1, 5), (2, 6), (3, 5)]
+    pairs = spark.createDataFrame(pd.DataFrame(cand, columns=["id_a", "id_b"]))
+    sets = {r["doc_id"]: set(r["__sh"]) for r in shingle_frame(docs, "doc_id", "text").collect()}
+    want = {(a, b): (len(sets[a] & sets[b]), len(sets[a] | sets[b])) for a, b in cand}
+    for hashed in (False, True):
+        got = ngram_jaccard_pairs(docs, pairs, "doc_id", "text", threshold=0.0, hashed=hashed)
+        assert dict(got.dtypes)["inter"] == "bigint" and dict(got.dtypes)["uni"] == "bigint"
+        rows = {(r.id_a, r.id_b): r for r in got.collect()}
+        assert {p: (r.inter, r.uni) for p, r in rows.items()} == want, hashed
+        assert all(r.jaccard == r.inter / r.uni for r in rows.values()), hashed

@@ -20,6 +20,11 @@ contained the change was once committed as evidence):
   before-plan with an after-plan under the wrong name). Delete the
   file explicitly if a re-capture at the right commit is intended.
 
+Round dumps go through :func:`normalize_plan`, which blanks the ids
+and call sites that change from one build to the next, so two dumps of
+an unchanged plan are byte-identical and a before/after diff shows
+only real plan changes.
+
 Headline plans: ``--headliners OUT.md`` writes the curated set below
 (at sf0.001) as one markdown file with a reading guide per plan — the
 form of the committed PLANS.md:
@@ -30,6 +35,7 @@ form of the committed PLANS.md:
 from __future__ import annotations
 
 import argparse
+import re
 import subprocess
 import sys
 from pathlib import Path
@@ -96,6 +102,17 @@ HEADLINERS: dict[str, str] = {
 }
 
 
+def normalize_plan(plan: str) -> str:
+    """``plan`` with what differs between two builds of one plan
+    blanked: expression ids (``#12``), ``plan_id=``, operator and
+    codegen ids (``(3)``, ``*(2)``), RDD ids (a lineage cut's
+    ``MapPartitionsRDD[163]``) and its call site, which py4j reports as
+    ``NativeMethodAccessorImpl.java:0`` or ``<unknown>:0``."""
+    plan = re.sub(r"#\d+|plan_id=\d+|\(\d+\)", "#", plan)
+    plan = re.sub(r"RDD\[\d+\]", "RDD[#]", plan)
+    return re.sub(r"\bat [\w$.<>]+:\d+", "at <call site>", plan)
+
+
 def _git_provenance() -> str:
     def git(*args: str) -> str:
         return subprocess.run(
@@ -106,10 +123,12 @@ def _git_provenance() -> str:
     return f"-- dumped at git {git('rev-parse', '--short', 'HEAD')}{dirty}\n"
 
 
-def dump_round(spark, out_dir: Path, tag: str, only: set[str]) -> None:
+def dump_round(
+    spark, out_dir: Path, tag: str, only: set[str], sf_dir: str = ROUND_SF_DIR
+) -> None:
     out_dir.mkdir(parents=True, exist_ok=True)
     provenance = _git_provenance()
-    eng = engine_for(spark, ROUND_SF_DIR)
+    eng = engine_for(spark, sf_dir)
     qs = spark_queries()
 
     def dump(name: str, df) -> None:
@@ -117,19 +136,19 @@ def dump_round(spark, out_dir: Path, tag: str, only: set[str]) -> None:
         if tag == "before" and target.exists():
             print(f"REFUSING to overwrite existing before-plan {target}")
             return
-        target.write_text(provenance + plan_string(df))
+        target.write_text(provenance + normalize_plan(plan_string(df)))
 
     for name, sql in QUERIES.items():
         if not only or name in only:
             dump(name, eng.query(sql))
     for name in TPCH_SHAPES + PIPELINE_OPS:
         if not only or name in only:
-            dump(name, qs[name](spark, ROUND_SF_DIR))
+            dump(name, qs[name](spark, sf_dir))
     # names outside the bench dicts (catalog-only entries) are accepted
     # explicitly
     for name in sorted(only - set(QUERIES) - set(TPCH_SHAPES) - set(PIPELINE_OPS)):
         if name in qs:
-            dump(name, qs[name](spark, ROUND_SF_DIR))
+            dump(name, qs[name](spark, sf_dir))
         else:
             print(f"unknown query name {name!r}", file=sys.stderr)
     print(f"wrote {out_dir}/*_{tag}.txt")
