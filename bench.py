@@ -225,76 +225,48 @@ def _write_scaled_dir(spark, sf_dir: str, r: int, kind: str = "docs") -> str:
     return out
 
 
-def _duckdb_ab_mode(factor: int = 10) -> None:
-    """`bench.py --duckdb-ab[=FACTOR]`: same-host Spark-vs-DuckDB A/B
-    at a FACTOR× expansion of sf0.1 (default 10 → sf1-equivalent: 6M
-    lineitem / 1.5M orders) for the 14 BASELINE.md queries + the 8
-    TPC-H shapes (r11 verdict item 4). Converts the standing "the
-    sub-second sf0.1 queries are fixed-overhead-dominated and invert
-    at scale" adjudication from a slope argument into a recorded
-    same-host measurement — BASELINE.md's second scale point.
+def _duckdb_ab(metric: str, kind: str, factor: int, jobs, **extra) -> None:
+    """Shared body of the `--duckdb-ab` modes: same-host Spark-vs-DuckDB
+    A/B over a FACTOR× expansion of sf0.1 (factor=1 reads sf0.1 in
+    place).
 
     Methodology: both engines read the SAME Spark-written parquet dir
     (multi-file; DuckDB views glob it), both materialize the full
     result into a pandas DataFrame (`toPandas()` vs `.df()` — the
     driver's own hash path), one untimed warm-up per query per engine
-    then median of N_RUNS. Prints one JSON line with per-query
-    spark/duckdb/ratio plus the env stamp."""
+    then the median of n runs. ``jobs(spark, d, sf)`` returns
+    (name, spark_run, oracle_sql, n) tuples. Prints one JSON line with
+    per-query spark/duckdb/ratio, ``extra`` and the env stamp."""
     import shutil as _sh
     import statistics
 
     import duckdb
 
-    from dataframe_sql_spark.registry import CATALOG, spark_queries
     from dataframe_sql_spark.sources.io import TESTDATA_TABLES
 
     env_start = _env_stamp()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("bench_ab")
-    d = _write_scaled_dir(spark, sf_dir, factor, kind="tpch")
+    spark = get_spark("bench_" + metric.removeprefix("duckdb_"))
+    d = _write_scaled_dir(spark, sf_dir, factor, kind) if factor > 1 else sf_dir
     try:
-        eng = engine_for(spark, d)
         con = duckdb.connect()
         for t in TESTDATA_TABLES:
             p = Path(d) / f"{t}.parquet"
             src = f"{p}/*.parquet" if p.is_dir() else str(p)
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')"
-            )
-
-        def med(run, n: int = N_RUNS) -> float:
-            run()  # warm-up: page cache, plan, JVM/codegen or duckdb JIT
-            return round(
-                statistics.median(
-                    _timeit(run) for _ in range(n)
-                ),
-                4,
-            )
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
 
         def _timeit(run) -> float:
             t0 = time.perf_counter()
             run()
             return time.perf_counter() - t0
 
-        qs = spark_queries()
+        def med(run, n: int) -> float:
+            run()  # warm-up: page cache, plan, JVM/codegen or duckdb JIT
+            return round(statistics.median(_timeit(run) for _ in range(n)), 4)
+
+        sf = round(0.1 * factor, 4)
         per: dict[str, dict] = {}
-        # the BASELINE set's actions are 0.1-0.7 s — exactly the range
-        # the module's N_RUNS_BASELINE rationale says needs 5 samples
-        # for a stable median (r12 advisor note); the heavier TPC-H
-        # shapes keep N_RUNS
-        jobs: list[tuple[str, object, str, int]] = [
-            (name, (lambda s=sql: eng.query(s).toPandas()), sql, N_RUNS_BASELINE)
-            for name, sql in QUERIES.items()
-        ] + [
-            (
-                name,
-                (lambda n=name: qs[n](spark, d).toPandas()),
-                CATALOG[name].oracle,
-                N_RUNS,
-            )
-            for name in TPCH_SHAPES
-        ]
-        for name, spark_run, oracle_sql, n in jobs:
+        for name, spark_run, oracle_sql, n in jobs(spark, d, sf):
             s = med(spark_run, n)
             k = med(lambda: con.execute(oracle_sql).df(), n)
             per[name] = {
@@ -302,23 +274,21 @@ def _duckdb_ab_mode(factor: int = 10) -> None:
                 "duckdb": k,
                 "ratio": round(s / k, 2) if k > 0 else None,
             }
-            print(f"# {name}: spark={s}s duckdb={k}s ratio={per[name]['ratio']}", file=sys.stderr, flush=True)
+            print(
+                f"# {name}: spark={s}s duckdb={k}s ratio={per[name]['ratio']}",
+                file=sys.stderr,
+                flush=True,
+            )
         over = [n for n, v in per.items() if v["ratio"] and v["ratio"] > 2.0]
         print(
             json.dumps(
                 {
-                    "metric": "duckdb_ab",
+                    "metric": metric,
                     "unit": "sec",
-                    "sf": round(0.1 * factor, 4),
+                    "sf": sf,
                     "factor": factor,
-                    # scalar for cross-round consumers (r13 advisor:
-                    # the r13 type change int -> object breaks diffing
-                    # against earlier rounds); per-set detail alongside
                     "n_runs": N_RUNS,
-                    "n_runs_per_set": {
-                        "baseline_set": N_RUNS_BASELINE,
-                        "tpch_shapes": N_RUNS,
-                    },
+                    **extra,
                     "queries": per,
                     "spark_total": round(sum(v["spark"] for v in per.values()), 4),
                     "duckdb_total": round(sum(v["duckdb"] for v in per.values()), 4),
@@ -329,7 +299,42 @@ def _duckdb_ab_mode(factor: int = 10) -> None:
             flush=True,
         )
     finally:
-        _sh.rmtree(d, ignore_errors=True)
+        if d != sf_dir:
+            _sh.rmtree(d, ignore_errors=True)
+
+
+def _duckdb_ab_mode(factor: int = 10) -> None:
+    """`bench.py --duckdb-ab[=FACTOR]`: the A/B at a FACTOR× expansion
+    of sf0.1 (default 10 → sf1-equivalent: 6M lineitem / 1.5M orders)
+    for the 14 BASELINE.md queries + the 8 TPC-H shapes (r11 verdict
+    item 4). Converts the standing "the sub-second sf0.1 queries are
+    fixed-overhead-dominated and invert at scale" adjudication from a
+    slope argument into a recorded same-host measurement —
+    BASELINE.md's second scale point."""
+    from dataframe_sql_spark.registry import CATALOG, spark_queries
+
+    def jobs(spark, d: str, sf: float) -> list:
+        eng = engine_for(spark, d)
+        qs = spark_queries()
+        # the BASELINE set's actions are 0.1-0.7 s — exactly the range
+        # the module's N_RUNS_BASELINE rationale says needs 5 samples
+        # for a stable median (r12 advisor note); the heavier TPC-H
+        # shapes keep N_RUNS
+        return [
+            (name, (lambda s=sql: eng.query(s).toPandas()), sql, N_RUNS_BASELINE)
+            for name, sql in QUERIES.items()
+        ] + [
+            (name, (lambda n=name: qs[n](spark, d).toPandas()), CATALOG[name].oracle, N_RUNS)
+            for name in TPCH_SHAPES
+        ]
+
+    # n_runs stays a scalar for cross-round consumers (r13 advisor: the
+    # r13 type change int -> object breaks diffing against earlier
+    # rounds); per-set detail alongside
+    _duckdb_ab(
+        "duckdb_ab", "tpch", factor, jobs,
+        n_runs_per_set={"baseline_set": N_RUNS_BASELINE, "tpch_shapes": N_RUNS},
+    )
 
 
 # Docs-axis A/B keys (r12 brief item 5, executed r14): the
@@ -354,84 +359,23 @@ DOCS_AB_KEYS = [
 
 
 def _duckdb_ab_docs_mode(factor: int = 10) -> None:
-    """`bench.py --duckdb-ab-docs[=FACTOR]`: same-host Spark-vs-DuckDB
-    A/B for the linear-oracle docs/pipeline keys at a FACTOR×
-    expansion of sf0.1 (factor=1 reads sf0.1 in place). Same
-    methodology as `--duckdb-ab`: both engines read the same parquet,
-    both materialize full results through pandas, one untimed warm-up
-    then median of N_RUNS."""
-    import shutil as _sh
-    import statistics
-
-    import duckdb
-
+    """`bench.py --duckdb-ab-docs[=FACTOR]`: the A/B for the
+    linear-oracle docs/pipeline keys, N_RUNS per side."""
     from dataframe_sql_spark.registry import CATALOG, spark_queries
-    from dataframe_sql_spark.sources.io import TESTDATA_TABLES
 
-    env_start = _env_stamp()
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("bench_ab_docs")
-    d = _write_scaled_dir(spark, sf_dir, factor, kind="docs") if factor > 1 else sf_dir
-    try:
-        con = duckdb.connect()
-        for t in TESTDATA_TABLES:
-            p = Path(d) / f"{t}.parquet"
-            src = f"{p}/*.parquet" if p.is_dir() else str(p)
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')"
-            )
-
-        def _timeit(run) -> float:
-            t0 = time.perf_counter()
-            run()
-            return time.perf_counter() - t0
-
-        def med(run, n: int = N_RUNS) -> float:
-            run()  # warm-up: page cache, plan, JVM/codegen or duckdb JIT
-            return round(statistics.median(_timeit(run) for _ in range(n)), 4)
-
+    def jobs(spark, d: str, sf: float) -> list:
         qs = spark_queries()
-        sf = round(0.1 * factor, 4)
-        per: dict[str, dict] = {}
+        out = []
         for name in DOCS_AB_KEYS:
             spec = CATALOG[name]
             assert spec.oracle is not None, f"{name} has no oracle"
             assert spec.oracle_max_sf is None or spec.oracle_max_sf >= sf, (
                 f"{name} oracle envelope ({spec.oracle_max_sf}) below sf{sf}"
             )
-            s = med(lambda n=name: qs[n](spark, d).toPandas())
-            k = med(lambda o=spec.oracle: con.execute(o).df())
-            per[name] = {
-                "spark": s,
-                "duckdb": k,
-                "ratio": round(s / k, 2) if k > 0 else None,
-            }
-            print(
-                f"# {name}: spark={s}s duckdb={k}s ratio={per[name]['ratio']}",
-                file=sys.stderr,
-                flush=True,
-            )
-        over = [n for n, v in per.items() if v["ratio"] and v["ratio"] > 2.0]
-        print(
-            json.dumps(
-                {
-                    "metric": "duckdb_ab_docs",
-                    "unit": "sec",
-                    "sf": sf,
-                    "factor": factor,
-                    "n_runs": N_RUNS,
-                    "queries": per,
-                    "spark_total": round(sum(v["spark"] for v in per.values()), 4),
-                    "duckdb_total": round(sum(v["duckdb"] for v in per.values()), 4),
-                    "over_2x": over,
-                    "env": {"start": env_start, "end": _env_stamp()},
-                }
-            ),
-            flush=True,
-        )
-    finally:
-        if d != sf_dir:
-            _sh.rmtree(d, ignore_errors=True)
+            out.append((name, (lambda n=name: qs[n](spark, d).toPandas()), spec.oracle, N_RUNS))
+        return out
+
+    _duckdb_ab("duckdb_ab_docs", "docs", factor, jobs)
 
 
 def _scale_mode(r: int, kind: str = "docs") -> None:

@@ -12,7 +12,9 @@ north-star extensions from BASELINE.json, designed Spark-first for
 - candidate generation shuffles on *fixed-width hash keys* (band
   buckets), never on raw text;
 - pair verification happens only within buckets (LSH guarantees the
-  candidate set is tiny relative to the cross product);
+  candidate set is tiny relative to the cross product), over the same
+  gram frame the signatures came from: a MinHash pipeline featurizes
+  once and cuts lineage once (:func:`minhash_pairs`);
 - survivors are chosen deterministically (min id per group) so reruns
   and oracle comparisons are stable.
 
@@ -34,6 +36,7 @@ __all__ = [
     "hashed_shingle_frame",
     "md5_shingle_frame",
     "minhash_candidate_pairs",
+    "minhash_pairs",
     "minhash_dedup",
     "minhash_band_index",
     "incremental_minhash_dedup",
@@ -47,6 +50,13 @@ __all__ = [
     "line_dedup",
     "prefix_filter_pairs",
 ]
+
+
+# Largest LSH bucket (MinHash band bucket, simhash chunk bucket) that
+# pairs are generated from. Boilerplate at web scale produces
+# million-doc buckets with quadratic pair expansion; capped buckets are
+# near-identical and exact dedup already catches them.
+MAX_BUCKET = 1000
 
 
 # --------------------------------------------------------------------------
@@ -121,9 +131,8 @@ def shingle_frame(
     text_col: str,
     k: int = 3,
     extra_cols: tuple[str, ...] = (),
-    out_col: str = "__sh",
 ) -> DataFrame:
-    """(id, *extra_cols, shingle-array) frame via two projections.
+    """(id, *extra_cols, ``__sh`` shingle-array) frame via two projections.
 
     The two-step shape matters for throughput: tokenization (regex
     split) runs in a codegen'd projection, and the interpreted shingle
@@ -134,38 +143,28 @@ def shingle_frame(
     keep = [F.col(id_col), *[F.col(c) for c in extra_cols]]
     tokens = df.select(*keep, words(F.col(text_col)).alias("__words"))
     return tokens.select(
-        *keep, _shingles_of_words(F.col("__words"), k).alias(out_col)
+        *keep, _shingles_of_words(F.col("__words"), k).alias("__sh")
     )
 
 
 def _xx_grams(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int,
-    extra_cols: tuple[str, ...] = (),
+    df: DataFrame, id_col: str, text_col: str, k: int
 ) -> tuple[DataFrame, Column]:
-    """(id, *extra_cols, ``__hw`` word-hash array) frame, and the
-    per-position gram-hash column over it: ``xxhash64`` of the k word
-    hashes at each gram start. The word hashes are their own projection
-    so the gram lambda reads a materialized attribute (see
+    """(id, ``__hw`` word-hash array) frame, and the per-position
+    gram-hash column over it: ``xxhash64`` of the k word hashes at each
+    gram start. The word hashes are their own projection so the gram
+    lambda reads a materialized attribute (see
     :func:`_shingles_of_words`)."""
-    keep = [F.col(id_col), *[F.col(c) for c in extra_cols]]
-    hashed = df.select(*keep, words(F.col(text_col)).alias("__words")).select(
-        *keep, F.transform(F.col("__words"), lambda w: F.xxhash64(w)).alias("__hw")
+    hashed = df.select(F.col(id_col), words(F.col(text_col)).alias("__words")).select(
+        F.col(id_col), F.transform(F.col("__words"), lambda w: F.xxhash64(w)).alias("__hw")
     )
     return hashed, _gram_window(F.col("__hw"), k, F.xxhash64)
 
 
 def hashed_shingle_frame(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    extra_cols: tuple[str, ...] = (),
-    out_col: str = "__h",
+    df: DataFrame, id_col: str, text_col: str, k: int = 3
 ) -> DataFrame:
-    """(id, *extra_cols, k-gram-hash array<long>) frame — the
+    """(id, ``__h`` k-gram-hash array<long>) frame — the
     string-free shingle path for signature algorithms.
 
     Instead of materializing k-word shingle *strings* (concat_ws per
@@ -184,23 +183,15 @@ def hashed_shingle_frame(
     repeated "w"s produce the same gram hash — degenerate docs collapse
     into one candidate class here, while :func:`shingle_frame` keeps
     them distinct. Harmless for candidate generation (verify with exact
-    Jaccard downstream, as :func:`ngram_jaccard_pairs` does); use the
+    Jaccard downstream, as :func:`minhash_pairs` does); use the
     string path when sub-k-word docs must stay distinguishable.
     """
-    hashed, grams = _xx_grams(df, id_col, text_col, k, extra_cols)
-    return hashed.select(
-        F.col(id_col),
-        *[F.col(c) for c in extra_cols],
-        F.array_distinct(grams).alias(out_col),
-    )
+    hashed, grams = _xx_grams(df, id_col, text_col, k)
+    return hashed.select(F.col(id_col), F.array_distinct(grams).alias("__h"))
 
 
 def md5_shingle_frame(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    out_col: str = "__h",
+    df: DataFrame, id_col: str, text_col: str, k: int = 3
 ) -> DataFrame:
     """Engine-portable sibling of :func:`hashed_shingle_frame`: gram
     hash = the top 60 bits of ``md5`` over the k words joined with
@@ -226,7 +217,7 @@ def md5_shingle_frame(
             F.substring(F.md5(F.concat_ws("\x1f", *ws)), 1, 15), 16, 10
         ).cast("long"),
     )
-    return tokens.select(F.col(id_col), F.array_distinct(gram).alias(out_col))
+    return tokens.select(F.col(id_col), F.array_distinct(gram).alias("__h"))
 
 
 # feature_hash → (gram-hash frame builder, hash width in bits, band-bucket
@@ -248,34 +239,26 @@ def _feature_hash(name: str) -> tuple:
     return _FEATURE_HASHES[name]
 
 
-def _oph_signatures(
-    shingled: DataFrame, id_col: str, num_hashes: int, value_bits: int
+def _band_rows(
+    grams: DataFrame, id_col: str, num_hashes: int, bands: int, feature_hash: str
 ) -> DataFrame:
-    """(id, ``__sig``): the densified-OPH signature of a gram-hash
-    frame's ``__h`` column, via the Arrow-vectorized numpy kernel
-    (functions/npsig.py) that replaced the interpreted 64-lane-filter +
-    densify projections (~2 s of the sf0.1 pipeline; guide §4.2,
-    OPTIMIZATION_r14.md)."""
-    return shingled.select(
+    """(id, band, bucket) rows of a gram-hash frame built with
+    ``feature_hash``.
+
+    The densified-OPH signature of the frame's ``__h`` column comes
+    from the Arrow-vectorized numpy kernel (functions/npsig.py) that
+    replaced the interpreted 64-lane-filter + densify projections
+    (~2 s of the sf0.1 pipeline; guide §4.2, OPTIMIZATION_r14.md).
+    Each band is keyed by its comma-joined slot string through the
+    :data:`_FEATURE_HASHES` bucket hash: xxhash64, or md5 hex for the
+    banding replay certificate — identical grouping semantics (both
+    are injective-modulo-collision over the slot tuple)."""
+    _, value_bits, bucket_hash = _feature_hash(feature_hash)
+    rows = num_hashes // bands
+    sig = grams.select(
         F.col(id_col),
         oph_signature_vec(F.col("__h"), num_hashes, value_bits).alias("__sig"),
     )
-
-
-def _banded(
-    sig_df: DataFrame,
-    id_col: str,
-    num_hashes: int,
-    bands: int,
-    bucket_hash,
-) -> DataFrame:
-    """Explode a signature into (band, bucket_hash, id) rows.
-
-    ``bucket_hash`` (a :data:`_FEATURE_HASHES` entry) keys each band by
-    its comma-joined slot string: xxhash64, or md5 hex for the banding
-    replay certificate — identical grouping semantics (both are
-    injective-modulo-collision over the slot tuple)."""
-    rows = num_hashes // bands
 
     def _bucket(b: int) -> Column:
         return bucket_hash(
@@ -288,85 +271,22 @@ def _banded(
             for b in range(bands)
         ]
     )
-    return sig_df.select(F.col(id_col), F.explode(band_cols).alias("bb")).select(
+    return sig.select(F.col(id_col), F.explode(band_cols).alias("bb")).select(
         id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
     )
 
 
-def minhash_candidate_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_k: int = 3,
-    max_bucket: int = 1000,
-    feature_hash: str = "xx",
-    pre_shingled: DataFrame | None = None,
-) -> DataFrame:
-    """LSH candidate pairs (id_a < id_b) from banded minhash.
+def _lsh_candidates(banded: DataFrame, id_col: str) -> DataFrame:
+    """Candidate pairs (id_a < id_b) of docs sharing a (band, bucket).
 
-    Pipeline: materialize gram hashes → materialize signature →
-    explode bands → groupBy bucket → explode pairs. The gram hashes are
-    their own projection because lambda-bearing expressions are
-    excluded from Catalyst's subexpression elimination: a gram lambda
-    over the raw ``split(text)`` would re-tokenize per reference.
-
-    Pair generation is a single shuffle (groupBy band+bucket →
-    collect_list → quadratic explode within the bucket) instead of a
-    self-join, so the signature lineage is computed exactly once.
-    ``max_bucket`` caps pathological buckets (boilerplate at web scale
-    produces million-doc buckets with quadratic pair expansion; capped
-    buckets are near-identical and exact dedup already catches them).
-
-    Signatures go through the string-free hashed-shingle + OPH path
-    (:func:`hashed_shingle_frame`, :func:`_oph_signatures`) — ~2× the
-    throughput of per-lane hashing of shingle strings.
-
-    ``feature_hash="md5"`` swaps shingle hashing to the 60-bit
-    engine-portable md5 form and the band-bucket hash to md5, so a
-    SQL oracle replays lanes, densification, banding, and bucketing
-    verbatim (the `dd_minhash_banded_verified` certificate); the OPH
-    lane math, rotation fill, caps, and pair generation are the same
-    production code either way.
-
-    ``pre_shingled`` (r14): an ALREADY-MATERIALIZED gram-hash frame
-    (``hashed_shingle_frame`` shape, ``__h`` column) shared with a
-    downstream verifier — when given, the tokenize+gram pass is
-    neither re-run nor re-materialized here, and the signature kernel
-    needs no lineage cut of its own (its parent is materialized and it
-    feeds a single consumer chain).
-    """
-    build, value_bits, bucket_hash = _feature_hash(feature_hash)
-    if pre_shingled is not None:
-        # public-API argument contract: ValueError, not assert — under
-        # `python -O` an assert vanishes and a mismatched caller would
-        # silently bucket-hash 60-bit md5 grams with the 64-bit path
-        # (advisor note, r15)
-        if feature_hash != "xx":
-            raise ValueError(
-                "pre_shingled shares the xxhash64 path; got "
-                f"feature_hash={feature_hash!r}"
-            )
-        shingled = pre_shingled
-    else:
-        shingled = build(df, id_col, text_col, shingle_k)
-    sig = _oph_signatures(shingled, id_col, num_hashes, value_bits)
-    if pre_shingled is None:
-        # materialize the signature table once (truncate_lineage —
-        # guide §8's "decide with small rows": id + 64 longs per doc,
-        # ~0.5 KB/row vs the multi-KB text); without the cut the
-        # banding consumers re-run tokenize→gram-hash→OPH. Measured
-        # with the verifier's shingle cut (dd_minhash, sf0.1,
-        # local[2], construct+execute CPU of the process tree, 3
-        # interleaved fresh-JVM pairs): 11.4 s median with the cuts,
-        # 12.3 s without, execute CPU 4.4-5.3 s → 8.5-9.7 s, same rows.
-        sig = truncate_lineage(sig)
-    banded = _banded(sig, id_col, num_hashes, bands, bucket_hash)
+    A single shuffle (groupBy band+bucket → collect_list → quadratic
+    explode within the bucket) instead of a self-join, so the band
+    rows are computed exactly once. Buckets over :data:`MAX_BUCKET`
+    docs are dropped."""
     buckets = (
         banded.groupBy("band", "bucket")
         .agg(F.collect_list(id_col).alias("__ids"))
-        .filter((F.size("__ids") >= 2) & (F.size("__ids") <= max_bucket))
+        .filter((F.size("__ids") >= 2) & (F.size("__ids") <= MAX_BUCKET))
     )
     return (
         buckets.select(F.explode("__ids").alias("id_a"), F.col("__ids"))
@@ -376,57 +296,16 @@ def minhash_candidate_pairs(
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_k: int = 3,
-    threshold: float = 0.7,
-    hashed: bool = False,
-    feature_hash: str = "xx",
-    pre_shingled: DataFrame | None = None,
+def _verify(
+    pairs: DataFrame, sets: DataFrame, id_col: str, set_col: str, threshold: float
 ) -> DataFrame:
-    """Verify candidate (id_a, id_b) pairs with exact shingle Jaccard.
-
-    Joins the shingle sets back onto the (small) candidate pair table
-    and computes |∩|/|∪| with built-in array functions. Returns pairs
-    with ``jaccard >= threshold`` as (id_a, id_b, jaccard, inter, uni),
-    the last two the integer set sizes the ratio is taken of.
-
-    ``hashed=True`` verifies over the 8-byte gram-hash sets
-    (:func:`hashed_shingle_frame`) instead of shingle strings —
-    identical Jaccard up to an in-document xxhash64 collision
-    (~n²/2⁶⁴ ≈ 1e-13) and ~5× cheaper to tokenize; the production
-    default for LSH pipelines. Keep strings where bit-exact parity
-    with a string-based oracle matters (``dd_minhash_verified``).
-    ``feature_hash`` picks the gram hash of the hashed form
-    (:data:`_FEATURE_HASHES`).
-    """
-    build = _feature_hash(feature_hash)[0]
-    if pre_shingled is not None:
-        # r14: a shared ALREADY-MATERIALIZED gram frame (e.g. the one
-        # the LSH candidate generator signed) — rename to the verify
-        # column, skip the second tokenize pass and its second cut.
-        # ValueError, not assert: survives `python -O` (advisor, r15)
-        if not (hashed and feature_hash == "xx"):
-            raise ValueError(
-                "pre_shingled requires hashed=True with the xxhash64 "
-                f"path; got hashed={hashed!r}, feature_hash={feature_hash!r}"
-            )
-        sh = pre_shingled.withColumnRenamed("__h", "__sh")
-    else:
-        if hashed:
-            sh = build(df, id_col, text_col, shingle_k, out_col="__sh")
-        else:
-            sh = shingle_frame(df, id_col, text_col, shingle_k)
-        # r14: materialize the shingle-set frame once — it feeds BOTH
-        # join sides below, and without the cut the corpus is
-        # tokenized for each (cost measured with the signature cut in
-        # minhash_candidate_pairs, entry dd_minhash).
-        sh = truncate_lineage(sh)
-    # merge hints: the shingle-set sides carry a per-doc array column,
-    # which Catalyst's width estimator counts as ONE element
+    """Exact Jaccard of candidate (id_a, id_b) pairs: ``sets`` (one
+    distinct gram or shingle set per id, in ``set_col``) joined onto
+    both pair sides. Returns (id_a, id_b, jaccard, inter, uni) for
+    ``jaccard >= threshold``, the last two the integer set sizes the
+    ratio is taken of."""
+    # merge hints: the set sides carry a per-doc array column, which
+    # Catalyst's width estimator counts as ONE element
     # (ArrayType.defaultSize) — so a corpus-scaled multi-GB side can sit
     # under the broadcast threshold in the mid-scale window and die at
     # the driver collect under memory pressure (the round-10
@@ -434,23 +313,23 @@ def ngram_jaccard_pairs(
     # join at 10× estimates). Sort-merge is the spill-safe shape and
     # the candidate table is already id-keyed, so the exchange is the
     # honest cost.
-    # r14 (guide §2.3): no array_union — every shingle frame emits a
-    # DISTINCT gram set, so |A∪B| = |A| + |B| − |A∩B| exactly
-    # (inclusion-exclusion; F.size is O(1) on the carried arrays).
-    # Same int/int division, bit-identical jaccard, half the per-pair
-    # array CPU of computing intersect AND union.
+    # r14 (guide §2.3): no array_union — every set frame is DISTINCT,
+    # so |A∪B| = |A| + |B| − |A∩B| exactly (inclusion-exclusion;
+    # F.size is O(1) on the carried arrays). Same int/int division,
+    # bit-identical jaccard, half the per-pair array CPU of computing
+    # intersect AND union.
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     uni = F.size("sh_a") + F.size("sh_b") - inter
     j = (
         pairs.join(
-            sh.withColumnRenamed(id_col, "id_a")
-            .withColumnRenamed("__sh", "sh_a")
+            sets.withColumnRenamed(id_col, "id_a")
+            .withColumnRenamed(set_col, "sh_a")
             .hint("merge"),
             "id_a",
         )
         .join(
-            sh.withColumnRenamed(id_col, "id_b")
-            .withColumnRenamed("__sh", "sh_b")
+            sets.withColumnRenamed(id_col, "id_b")
+            .withColumnRenamed(set_col, "sh_b")
             .hint("merge"),
             "id_b",
         )
@@ -463,6 +342,108 @@ def ngram_jaccard_pairs(
         )
     )
     return j.filter(F.col("jaccard") >= threshold)
+
+
+def minhash_candidate_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int = 64,
+    bands: int = 16,
+    shingle_k: int = 3,
+    feature_hash: str = "xx",
+) -> DataFrame:
+    """LSH candidate pairs (id_a < id_b) from banded minhash, for
+    callers that verify over something other than the gram hashes (the
+    string-shingle certificates). :func:`minhash_pairs` is the pipeline
+    that verifies over the same gram frame it signs.
+
+    Pipeline: gram hashes → OPH signature → explode bands → groupBy
+    bucket → explode pairs. The gram hashes are their own projection
+    because lambda-bearing expressions are excluded from Catalyst's
+    subexpression elimination: a gram lambda over the raw
+    ``split(text)`` would re-tokenize per reference.
+
+    Signatures go through the string-free hashed-shingle + OPH path
+    (:func:`hashed_shingle_frame`, :func:`_band_rows`) — ~2× the
+    throughput of per-lane hashing of shingle strings.
+
+    ``feature_hash="md5"`` swaps shingle hashing to the 60-bit
+    engine-portable md5 form and the band-bucket hash to md5, so a
+    SQL oracle replays lanes, densification, banding, and bucketing
+    verbatim (the `dd_minhash_banded_verified` certificate); the OPH
+    lane math, rotation fill, caps, and pair generation are the same
+    production code either way.
+    """
+    # No lineage cut: the gram frame and the signature each have one
+    # consumer chain here. Measured on dd_minhash_verified (sf0.1,
+    # local[2], construct+execute CPU of the process tree, 5
+    # interleaved fresh-JVM rounds, same rows): signature cut 26.0 s
+    # median, gram cut 24.3 s, no cut 25.2 s, no variant ahead of
+    # another in more than 3 of 5 rounds; without a cut the build runs
+    # 2 fewer jobs.
+    grams = _feature_hash(feature_hash)[0](df, id_col, text_col, shingle_k)
+    return _lsh_candidates(_band_rows(grams, id_col, num_hashes, bands, feature_hash), id_col)
+
+
+def minhash_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    threshold: float = 0.7,
+    num_hashes: int = 64,
+    bands: int = 16,
+    shingle_k: int = 3,
+    feature_hash: str = "xx",
+) -> DataFrame:
+    """Near-duplicate pairs: banded-minhash LSH candidates verified by
+    exact gram-set Jaccard. Returns (id_a, id_b, jaccard, inter, uni)
+    for ``jaccard >= threshold`` (the filter-then-verify design, ICDE
+    2022 in PAPERS.md).
+
+    The corpus is featurized once: one gram-hash frame
+    (:data:`_FEATURE_HASHES`) is signed, banded and bucketed
+    (:func:`_lsh_candidates`) and joined onto both sides of the
+    candidates (:func:`_verify`). Verifying over the 8-byte gram hashes
+    instead of shingle strings gives the string Jaccard up to an
+    in-document hash collision (~n²/2⁶⁴ ≈ 1e-13).
+
+    The gram frame is the one lineage cut: it feeds the signature and
+    both verify sides, and without it each re-runs tokenize → gram
+    hash; the signature needs none, as it has one consumer chain.
+    Measured (sf0.1, local[2], median construct+execute CPU of the
+    process tree, interleaved fresh-JVM runs, same rows):
+    dd_minhash_pairs 5.0 s with the cut, 5.1 s without; dd_minhash,
+    which cut the signature AND a second gram frame for the verify
+    before, 23.2 s → 21.0 s over 5 rounds (ahead in 4), its build
+    5 → 3 jobs.
+    """
+    grams = truncate_lineage(_feature_hash(feature_hash)[0](df, id_col, text_col, shingle_k))
+    cands = _lsh_candidates(_band_rows(grams, id_col, num_hashes, bands, feature_hash), id_col)
+    return _verify(cands, grams, id_col, "__h", threshold)
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    pairs: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_k: int = 3,
+    threshold: float = 0.7,
+) -> DataFrame:
+    """Verify candidate (id_a, id_b) pairs with exact word-shingle
+    STRING Jaccard — the verifier of the certificates whose oracle
+    recomputes shingle strings (``dd_minhash_verified``,
+    ``dd_fuzzy_decontaminate``, the graph certificates), where
+    bit-exact parity with a string-based oracle matters. Returns
+    (id_a, id_b, jaccard, inter, uni) for ``jaccard >= threshold``
+    (:func:`_verify`); LSH pipelines verify over their gram hashes
+    through :func:`minhash_pairs` instead.
+    """
+    # r14: materialize the shingle-set frame once — it feeds BOTH join
+    # sides, and without the cut the corpus is tokenized for each
+    sh = truncate_lineage(shingle_frame(df, id_col, text_col, shingle_k))
+    return _verify(pairs, sh, id_col, "__sh", threshold)
 
 
 def blocked_ngram_jaccard(
@@ -528,19 +509,14 @@ def minhash_dedup(
     """Near-duplicate removal: keep a row unless it duplicates a
     smaller-id row (greedy, deterministic).
 
-    Candidate pairs via banded minhash LSH, verified with exact
-    Jaccard. Greedy min-id survivorship (not transitive closure): a
-    doc is dropped iff some verified duplicate has a smaller id —
-    the standard single-pass policy for corpus dedup; full
-    connected-components would need an iterative job.
+    :func:`minhash_pairs` then a min-id anti-join. Greedy min-id
+    survivorship (not transitive closure): a doc is dropped iff some
+    verified duplicate has a smaller id — the standard single-pass
+    policy for corpus dedup; full connected-components would need an
+    iterative job.
     """
-    pairs = minhash_candidate_pairs(
-        df, id_col, text_col, num_hashes, bands, shingle_k,
-        feature_hash=feature_hash,
-    )
-    dups = ngram_jaccard_pairs(
-        df, pairs, id_col, text_col, shingle_k, threshold, hashed=True,
-        feature_hash=feature_hash,
+    dups = minhash_pairs(
+        df, id_col, text_col, threshold, num_hashes, bands, shingle_k, feature_hash
     )
     losers = dups.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(losers, on=id_col, how="left_anti")
@@ -710,7 +686,6 @@ def simhash_candidate_pairs(
     max_hamming: int = 3,
     chunks: int = 4,
     feature_k: int = 2,
-    max_bucket: int = 1000,
     probe_bits: int = 0,
     feature_hash: str = "xx",
 ) -> DataFrame:
@@ -741,8 +716,8 @@ def simhash_candidate_pairs(
     Bucket note: on low-entropy corpora (shared boilerplate/vocabulary)
     the bit majorities converge and single (chunk, piece) buckets can
     hold a large share of the corpus — quadratic candidates.
-    ``max_bucket`` caps those; a pair only needs ONE uncapped shared
-    chunk to surface, so moderate caps cost little recall.
+    :data:`MAX_BUCKET` caps those; a pair only needs ONE uncapped
+    shared chunk to surface, so moderate caps cost little recall.
 
     ``feature_hash="md5"`` swaps the per-gram hash to the
     engine-portable 60-bit md5 form (:func:`md5_shingle_frame`) so a
@@ -750,6 +725,8 @@ def simhash_candidate_pairs(
     function — signature, chunking, probing, caps, verify — runs
     unchanged, which is exactly what the replay certificate certifies.
     """
+    if probe_bits not in (0, 1):
+        raise ValueError(f"probe_bits must be 0 or 1, got {probe_bits!r}")
     width = 64 // chunks
     mask = (1 << width) - 1
     build = _feature_hash(feature_hash)[0]
@@ -787,7 +764,7 @@ def simhash_candidate_pairs(
         buckets = (
             exact.groupBy("chunk", "piece")
             .agg(F.collect_list("item").alias("__items"))
-            .filter((F.size("__items") >= 2) & (F.size("__items") <= max_bucket))
+            .filter((F.size("__items") >= 2) & (F.size("__items") <= MAX_BUCKET))
         )
         pairs = (
             buckets.select(F.explode("__items").alias("a"), F.col("__items"))
@@ -795,7 +772,6 @@ def simhash_candidate_pairs(
             .filter(F.col("a.id") < F.col("b.id"))
         )
     else:
-        assert probe_bits == 1, "only 1-bit probing is implemented"
         # r14 single-signature shape: BOTH join sides derive from ONE
         # exploded key frame (probe keys = exact keys ∪ 1-bit flips),
         # projected to the same (item, chunk, piece) columns, so the
@@ -847,7 +823,7 @@ def simhash_candidate_pairs(
                 "__exn",
                 F.sum(F.when(is_exact, 1).otherwise(0)).over(wb),
             )
-            .filter(is_exact & (F.col("__exn") <= max_bucket))
+            .filter(is_exact & (F.col("__exn") <= MAX_BUCKET))
             .select(F.col("item").alias("b"), "chunk", "piece")
         )
         # merge hint: both probe and exact sides are post-explode
@@ -1016,11 +992,8 @@ def minhash_band_index(
     join is a pruned scan, not a full-index shuffle:
     ``write_bucketed(index, "minhash_index", ["band", "bucket"])``.
     """
-    build, value_bits, bucket_hash = _feature_hash(feature_hash)
-    sig = _oph_signatures(
-        build(df, id_col, text_col, shingle_k), id_col, num_hashes, value_bits
-    )
-    return _banded(sig, id_col, num_hashes, bands, bucket_hash)
+    grams = _feature_hash(feature_hash)[0](df, id_col, text_col, shingle_k)
+    return _band_rows(grams, id_col, num_hashes, bands, feature_hash)
 
 
 def incremental_minhash_dedup(
@@ -1031,7 +1004,6 @@ def incremental_minhash_dedup(
     num_hashes: int = 64,
     bands: int = 16,
     shingle_k: int = 3,
-    max_bucket: int = 1000,
     feature_hash: str = "xx",
 ) -> tuple[DataFrame, DataFrame]:
     """Dedup a NEW batch against an existing corpus band index, without
@@ -1042,35 +1014,35 @@ def incremental_minhash_dedup(
 
     Returns ``(kept, index_delta)``: ``kept`` is the new rows that
     collide with neither the historical index nor an earlier
-    (smaller-id) row of their own batch; ``index_delta`` is the band
-    rows of the kept docs, to be appended to the index for the next
-    batch.
+    (smaller-id) row of their own batch at Jaccard >= 0.7;
+    ``index_delta`` is the band rows of the kept docs (row for row
+    :func:`minhash_band_index` of ``kept``), to be appended to the
+    index for the next batch.
 
-    Plan shape: one signature projection over the batch, one
-    (band, bucket) semi-join against the index (AQE broadcasts the
-    batch side when small — the common case), one within-batch LSH
-    pass. No corpus-sized shuffle anywhere.
+    The batch is featurized once, into one cut gram frame (as in
+    :func:`minhash_pairs`): its band rows feed the (band, bucket)
+    semi-join against the index (AQE broadcasts the batch side when
+    small — the common case); the survivors' band rows, filtered
+    before bucketing so the bucket cap counts survivors only, feed the
+    within-batch LSH; the verify joins the same gram frame; and the
+    delta is the kept docs' band rows. No corpus-sized shuffle anywhere.
     """
-    new_banded = minhash_band_index(
-        new_df, id_col, text_col, num_hashes, bands, shingle_k, feature_hash
-    )
+    grams = truncate_lineage(_feature_hash(feature_hash)[0](new_df, id_col, text_col, shingle_k))
+    banded = _band_rows(grams, id_col, num_hashes, bands, feature_hash)
     # Collide against history on fixed-width (band, bucket) keys.
     hit_ids = (
-        new_banded.join(index, on=["band", "bucket"], how="left_semi")
+        banded.join(index, on=["band", "bucket"], how="left_semi")
         .select(id_col)
         .distinct()
     )
-    survivors = new_df.join(hit_ids, on=id_col, how="left_anti")
     # Batch-internal near-dups among the remaining rows.
-    kept = minhash_dedup(
-        survivors, id_col, text_col,
-        num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
-        feature_hash=feature_hash,
+    survivors = banded.join(hit_ids, on=id_col, how="left_anti")
+    dups = _verify(_lsh_candidates(survivors, id_col), grams, id_col, "__h", 0.7)
+    losers = dups.select(F.col("id_b").alias(id_col)).distinct()
+    kept = new_df.join(hit_ids, on=id_col, how="left_anti").join(
+        losers, on=id_col, how="left_anti"
     )
-    delta = minhash_band_index(
-        kept, id_col, text_col, num_hashes, bands, shingle_k, feature_hash
-    )
-    return kept, delta
+    return kept, banded.join(kept.select(id_col), on=id_col, how="left_semi")
 
 
 # --------------------------------------------------------------------------

@@ -18,7 +18,7 @@ repo's genuinely iterative operator, built the Spark way:
   the driver OOMs building it (persist caches data but NOT the plan).
   The checkpoint is local by default and reliable ``checkpoint()``
   (HDFS/object-store, survives executor loss) when a checkpoint dir is
-  configured or ``reliable=True`` is passed — see :mod:`.lineage`.
+  configured — see :mod:`.lineage`.
 
 GraphX/GraphFrames ship the same algorithm; doing it with stock joins
 keeps the dependency surface at zero and the plan visible.
@@ -45,25 +45,21 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """(id, comp) for every node in ``edges``, where ``comp`` is the
     minimum id reachable from the node. Converges when no label
     changes; raises if ``max_iter`` rounds weren't enough (diameter
     larger than expected — raise the cap, don't trust partial labels).
 
-    ``reliable`` selects the per-round checkpoint mode (None = auto:
-    reliable iff a checkpoint dir is configured — the cluster mode).
+    The per-round checkpoint is reliable iff a checkpoint dir is
+    configured — the cluster mode.
     """
     sym = edges.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
     ).union(edges.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-    sym = truncate_lineage(sym, reliable=reliable)
+    sym = truncate_lineage(sym)
     labels = truncate_lineage(
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("comp", F.col("id")),
-        reliable=reliable,
+        sym.select(F.col("src").alias("id")).distinct().withColumn("comp", F.col("id"))
     )
 
     for _ in range(max_iter):
@@ -79,8 +75,7 @@ def connected_components(
                     F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))
                 ).alias("comp"),
                 F.col("comp").alias("old_comp"),
-            ),
-            reliable=reliable,
+            )
         )
         changed = cur.filter("comp != old_comp").count()
         labels = cur.drop("old_comp")
@@ -96,7 +91,6 @@ def cluster_representatives(
     pairs: DataFrame,
     id_col: str,
     max_iter: int = 20,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Collapse near-dup PAIRS into transitive clusters and keep one
     survivor (the min id) per cluster: rows of ``df`` that are either
@@ -105,7 +99,7 @@ def cluster_representatives(
     This is the correct closure of pairwise dedup — a greedy pair
     filter can keep both A and C of an A~B~C chain; clustering can't.
     """
-    comps = connected_components(pairs, max_iter=max_iter, reliable=reliable)
+    comps = connected_components(pairs, max_iter=max_iter)
     losers = comps.filter(F.col("id") != F.col("comp")).select(
         F.col("id").alias(id_col)
     )
@@ -120,7 +114,6 @@ def pagerank(
     n_iters: int = 2,
     round_digits: int = 6,
     checkpoint_every: int = 0,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """PageRank by unrolled power iteration — fully lazy, no driver
     state at all (contrast :func:`~..similarity.kmeans_assign`, whose
@@ -141,8 +134,8 @@ def pagerank(
     centroid rounding — a SQL oracle can replay it verbatim. With
     ``n_iters`` small the unrolled lazy plan is fine; at 100 TB pass
     ``checkpoint_every`` (e.g. 3) to truncate lineage that often —
-    reliable ``checkpoint()`` when a checkpoint dir is configured /
-    ``reliable=True``, else ``localCheckpoint`` (see :mod:`.lineage`).
+    reliable ``checkpoint()`` when a checkpoint dir is configured, else
+    ``localCheckpoint`` (see :mod:`.lineage`).
     Rounding pins the trajectory, so checkpointing cannot change the
     result — only the plan size and fault-tolerance story.
 
@@ -161,7 +154,7 @@ def pagerank(
     )
     for it in range(n_iters):
         if checkpoint_every and it and it % checkpoint_every == 0:
-            pr = truncate_lineage(pr, reliable=reliable)
+            pr = truncate_lineage(pr)
         ranked = pr.join(out_deg, pr["id"] == out_deg["src"], "left").select(
             pr["id"], "rank", "__deg"
         )

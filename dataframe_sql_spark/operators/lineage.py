@@ -15,10 +15,8 @@ the plan). Two truncation modes:
   100 TB mode — state survives executor loss and the job resumes from
   the last round.
 
-:func:`truncate_lineage` auto-selects: reliable when a checkpoint dir
-is configured, local otherwise; callers can force either with the
-``reliable`` flag (forcing ``True`` without a dir raises rather than
-silently degrading the durability contract).
+:func:`truncate_lineage` selects the mode from the session alone:
+reliable when a checkpoint dir is configured, local otherwise.
 """
 
 from __future__ import annotations
@@ -33,22 +31,10 @@ def checkpoint_dir_configured(df: DataFrame) -> bool:
     return df.sparkSession.sparkContext.getCheckpointDir() is not None
 
 
-def truncate_lineage(df: DataFrame, reliable: bool | None = None) -> DataFrame:
-    """Eagerly materialize ``df`` and cut its lineage.
-
-    ``reliable=None`` (default) picks reliable ``checkpoint()`` when a
-    checkpoint directory is configured on the SparkContext, else
-    ``localCheckpoint()``. ``reliable=True`` requires the directory and
-    raises if it is missing; ``reliable=False`` forces the local form.
-    """
-    if reliable is None:
-        reliable = checkpoint_dir_configured(df)
-    if reliable:
-        if not checkpoint_dir_configured(df):
-            raise ValueError(
-                "reliable checkpoint requested but no checkpoint directory is "
-                "configured — call spark.sparkContext.setCheckpointDir(path) "
-                "(HDFS/object-store on a cluster) first"
-            )
+def truncate_lineage(df: DataFrame) -> DataFrame:
+    """Eagerly materialize ``df`` and cut its lineage: reliable
+    ``checkpoint()`` when a checkpoint directory is configured on the
+    SparkContext, else ``localCheckpoint()``."""
+    if checkpoint_dir_configured(df):
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)

@@ -20,6 +20,7 @@ from .operators.dedup import (
     hashed_shingle_frame,
     minhash_candidate_pairs,
     minhash_dedup,
+    minhash_pairs,
     ngram_jaccard_pairs,
     shingle_frame,
     simhash_dedup,
@@ -94,35 +95,11 @@ _reg(
 )
 
 
-def _dd_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r14: ONE materialized gram-hash pass feeds both the OPH
-    signature path and the Jaccard verifier — the two stages used to
-    tokenize+gram-hash the corpus independently (two identical
-    truncate_lineage materializations of the same frame). The one cut
-    is close to break-even: median construct+execute CPU of the
-    process tree at sf0.1, local[2], 5.0 s with it, 5.1 s without."""
-    from .operators.dedup import hashed_shingle_frame
-    from .operators.lineage import truncate_lineage
-
-    docs = _docs(spark, sf_dir)
-    grams = truncate_lineage(hashed_shingle_frame(docs, "doc_id", "text", 3))
-    cands = minhash_candidate_pairs(
-        docs, "doc_id", "text", pre_shingled=grams
-    )
-    return ngram_jaccard_pairs(
-        docs,
-        cands,
-        "doc_id",
-        "text",
-        threshold=0.5,
-        hashed=True,
-        pre_shingled=grams,
-    ).select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
-
-
 _reg(
     "dd_minhash_pairs",
-    _dd_minhash_pairs,
+    lambda spark, sf_dir: minhash_pairs(
+        _docs(spark, sf_dir), "doc_id", "text", threshold=0.5
+    ).select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard")),
     None,
     "LSH candidate pairs verified by exact shingle Jaccard ≥ 0.5",
 )
@@ -171,14 +148,7 @@ def _dd_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.graph import cluster_representatives
 
     docs = _docs(spark, sf_dir)
-    pairs = ngram_jaccard_pairs(
-        docs,
-        minhash_candidate_pairs(docs, "doc_id", "text"),
-        "doc_id",
-        "text",
-        threshold=0.5,
-        hashed=True,
-    ).select("id_a", "id_b")
+    pairs = minhash_pairs(docs, "doc_id", "text", threshold=0.5).select("id_a", "id_b")
     return cluster_representatives(docs, pairs, "doc_id").select(
         "doc_id", "lang", "source"
     )
@@ -405,7 +375,7 @@ _reg(
     # generation, exact-Jaccard >= 0.7 verify, min-id survivorship —
     # with the per-shingle hash swapped to the engine-portable 60-bit
     # md5 form and the band-bucket hash to md5 (md5_shingle_frame /
-    # _banded(bucket_hash="md5")). The DuckDB oracle recomputes every
+    # _band_rows(feature_hash="md5")). The DuckDB oracle recomputes every
     # stage from raw text: lanes via GROUP BY (doc, h >> 54),
     # densification via arg_min over circular lane distance, buckets
     # via md5 of the comma-joined slot string, the 2..1000 bucket cap,

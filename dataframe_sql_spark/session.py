@@ -21,7 +21,7 @@ import sys
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "tune_session", "tune_for_scale"]
+__all__ = ["get_spark", "tune_session"]
 
 log = logging.getLogger(__name__)
 
@@ -110,7 +110,7 @@ def tune_session(spark: SparkSession) -> list[str]:
             failed.append(key)
     # Local-mode sessions default to 200 shuffle partitions — a 6×
     # slowdown on a 32-core box. Match the core count; real clusters
-    # are handled by tune_for_scale/AQE coalescing instead.
+    # are handled by AQE coalescing instead.
     try:
         if spark.conf.get("spark.master", "").startswith("local"):
             spark.conf.set("spark.sql.shuffle.partitions", _cpus())
@@ -179,13 +179,3 @@ def get_spark(app_name: str = "dataframe_sql_spark") -> SparkSession:
             log.warning("get_spark: %s is %s on this session, not %s", key, got, value)
     return spark
 
-
-def tune_for_scale(spark: SparkSession, target_bytes: int) -> None:
-    """Adjust shuffle parallelism for a known input size.
-
-    Rule of thumb: ~128 MB per shuffle partition post-filter. With AQE
-    coalescing enabled the exact value is forgiving; this sets the upper
-    bound so huge inputs don't funnel through too few partitions.
-    """
-    partitions = max(32, target_bytes // (128 * 1024 * 1024))
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))

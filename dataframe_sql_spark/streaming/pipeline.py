@@ -374,7 +374,11 @@ def streaming_near_dedup(
     *history*, (c) LSH-dedups within itself, then (d) appends kept
     docs to ``out_path`` and their band rows to ``index_path`` — so
     state grows by exactly the kept docs and no historical text is
-    ever re-shingled. This is the streaming face of
+    ever re-shingled. The band rows are the incremental call's delta,
+    read off the batch's one cut gram frame; each sink evaluates the
+    kept verdict from that frame, so no text is tokenized twice. The
+    first batch runs the same path against an empty index. This is
+    the streaming face of
     :func:`...operators.dedup.incremental_minhash_dedup`; watermark
     state stays empty because the "state" lives in the index files,
     which survive restarts with the checkpoint.
@@ -388,31 +392,24 @@ def streaming_near_dedup(
     """
     import os
 
-    from ..operators.dedup import (
-        incremental_minhash_dedup,
-        minhash_band_index,
-        minhash_dedup,
-    )
-    from ..operators.lineage import truncate_lineage
+    from ..operators.dedup import incremental_minhash_dedup
 
     def batch_fn(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        if os.path.exists(index_path):
-            index = batch.sparkSession.read.parquet(index_path)
-            kept, _ = incremental_minhash_dedup(
-                batch, index, id_col, text_col,
-                num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
-            )
-        else:
-            kept = minhash_dedup(
-                batch, id_col, text_col,
-                num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
-            )
-        kept = truncate_lineage(kept)  # compute once; two sinks below
+        spark = batch.sparkSession
+        # the first batch dedups against an empty index
+        index = (
+            spark.read.parquet(index_path)
+            if os.path.exists(index_path)
+            else spark.createDataFrame([], "band int, bucket bigint")
+        )
+        kept, delta = incremental_minhash_dedup(
+            batch, index, id_col, text_col,
+            num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
+        )
         kept.write.mode("append").parquet(out_path)
-        minhash_band_index(kept, id_col, text_col, num_hashes, bands, shingle_k) \
-            .write.mode("append").parquet(index_path)
+        delta.write.mode("append").parquet(index_path)
 
     run_stream_foreach_batch(docs_stream, batch_fn, checkpoint)
 

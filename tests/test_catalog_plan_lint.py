@@ -342,23 +342,23 @@ def test_ann_query_steps_spelled_once():
 
 # Functions allowed an eager lineage cut (``truncate_lineage``): the
 # iterative graph operators, whose plan would otherwise double every
-# round, the featurize-once cuts of the dedup, relevance, ANN and
-# pipeline entries, and the streaming dedup's micro-batch, which feeds
-# two sinks. A global rank places rows by a pure function of the
-# sort key, so neither it nor its callers need a cut.
+# round, and the featurize-once cuts of the dedup, relevance, ANN and
+# pipeline operators (the MinHash family's gram frame is cut only in
+# ``minhash_pairs`` and ``incremental_minhash_dedup``). A global rank
+# places rows by a pure function of the sort key, so neither it nor
+# its callers need a cut.
 _LINEAGE_CUT_OK = {
     "connected_components",
     "pagerank",
-    "minhash_candidate_pairs",
+    "minhash_pairs",
+    "incremental_minhash_dedup",
     "simhash_candidate_pairs",
     "ngram_jaccard_pairs",
     "prefix_filter_pairs",
     "dsir_weights",
     "pmi_bigrams",
     "knn_join_indexed",
-    "_dd_minhash_pairs",
     "_pipe_dedup_funnel",
-    "batch_fn",
 }
 
 

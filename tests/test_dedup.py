@@ -7,6 +7,7 @@ def test_incremental_dedup_against_index(spark, engine):
     # 10 dropped via the index, 12 dropped within-batch.
     import pandas as pd
 
+    from dataframe_sql_spark.engine import plan_string
     from dataframe_sql_spark.operators.dedup import (
         incremental_minhash_dedup,
         minhash_band_index,
@@ -26,16 +27,20 @@ def test_incremental_dedup_against_index(spark, engine):
             }
         )
     )
-    index = minhash_band_index(hist, "doc_id", "text")
-    kept, delta = incremental_minhash_dedup(new, index, "doc_id", "text")
-    kept_ids = sorted(r["doc_id"] for r in kept.select("doc_id").collect())
-    assert 10 not in kept_ids  # caught by the historical index
-    assert 11 in kept_ids and 12 not in kept_ids  # within-batch min-id survives
-    assert 13 in kept_ids
-    # delta covers exactly the kept ids
-    assert sorted(
-        r["doc_id"] for r in delta.select("doc_id").distinct().collect()
-    ) == kept_ids
+    for fh in ("xx", "md5"):
+        index = minhash_band_index(hist, "doc_id", "text", feature_hash=fh)
+        kept, delta = incremental_minhash_dedup(new, index, "doc_id", "text", feature_hash=fh)
+        kept_ids = sorted(r["doc_id"] for r in kept.select("doc_id").collect())
+        assert 10 not in kept_ids, fh  # caught by the historical index
+        assert 11 in kept_ids and 12 not in kept_ids, fh  # within-batch min-id survives
+        assert 13 in kept_ids, fh
+        # the delta is the kept docs' band index, row for row, read off
+        # the batch's one featurization: its plan tokenizes no text
+        assert "split(" not in plan_string(delta, "simple"), fh
+        want = minhash_band_index(kept, "doc_id", "text", feature_hash=fh)
+        assert delta.schema == want.schema, fh
+        assert sorted(delta.collect()) == sorted(want.collect()), fh
+        assert len(want.collect()) == 16 * len(kept_ids), fh
 
 
 def test_substring_span_stats_planted_duplicates(spark):
@@ -380,15 +385,18 @@ def test_embedding_cosine_pairs_rejects_non_integral_ids(spark):
     [
         "minhash_candidate_pairs",
         "minhash_band_index",
-        "ngram_jaccard_pairs",
+        "minhash_pairs",
         "simhash_candidate_pairs",
         "dsir_weights",
+        "simhash_probe_bits",
     ],
 )
 def test_unknown_feature_hash_raises(spark, entry):
     """A ``feature_hash`` outside {"xx", "md5"} (here a case typo) is a
     ValueError naming the value and the accepted set, never a silent
-    fall-back to the xxhash64 path."""
+    fall-back to the xxhash64 path; so is a simhash ``probe_bits``
+    other than 0 or 1, which a bare assert let through under
+    ``python -O`` to the 1-bit path."""
     import pandas as pd
 
     from dataframe_sql_spark.operators import dedup, relevance
@@ -398,39 +406,44 @@ def test_unknown_feature_hash_raises(spark, entry):
             {"doc_id": [1, 2], "text": ["a b c d", "a b c e"], "tgt": [True, False]}
         )
     )
-    pairs = spark.createDataFrame(pd.DataFrame({"id_a": [1], "id_b": [2]}))
+    typo = r"feature_hash must be one of \['md5', 'xx'\], got 'MD5'"
     calls = {
-        "minhash_candidate_pairs": lambda fh: dedup.minhash_candidate_pairs(
-            df, "doc_id", "text", feature_hash=fh
+        "minhash_candidate_pairs": lambda: dedup.minhash_candidate_pairs(
+            df, "doc_id", "text", feature_hash="MD5"
         ),
-        "minhash_band_index": lambda fh: dedup.minhash_band_index(
-            df, "doc_id", "text", feature_hash=fh
+        "minhash_band_index": lambda: dedup.minhash_band_index(
+            df, "doc_id", "text", feature_hash="MD5"
         ),
-        "ngram_jaccard_pairs": lambda fh: dedup.ngram_jaccard_pairs(
-            df, pairs, "doc_id", "text", hashed=True, feature_hash=fh
+        "minhash_pairs": lambda: dedup.minhash_pairs(df, "doc_id", "text", feature_hash="MD5"),
+        "simhash_candidate_pairs": lambda: dedup.simhash_candidate_pairs(
+            df, "doc_id", "text", feature_hash="MD5"
         ),
-        "simhash_candidate_pairs": lambda fh: dedup.simhash_candidate_pairs(
-            df, "doc_id", "text", feature_hash=fh
+        "dsir_weights": lambda: relevance.dsir_weights(
+            df, "doc_id", "text", "tgt", feature_hash="MD5"
         ),
-        "dsir_weights": lambda fh: relevance.dsir_weights(
-            df, "doc_id", "text", "tgt", feature_hash=fh
+        "simhash_probe_bits": lambda: dedup.simhash_candidate_pairs(
+            df, "doc_id", "text", probe_bits=2
         ),
     }
-    with pytest.raises(
-        ValueError, match=r"feature_hash must be one of \['md5', 'xx'\], got 'MD5'"
-    ):
-        calls[entry]("MD5")
+    match = r"probe_bits must be 0 or 1, got 2" if entry == "simhash_probe_bits" else typo
+    with pytest.raises(ValueError, match=match):
+        calls[entry]()
 
 
 def test_ngram_jaccard_pairs_returns_set_sizes(spark):
     """The verifier returns |A∩B| and |A∪B| of each pair's 3-gram sets
     as integers beside the ratio it filters on: hand-built documents
     with repeated, shared, disjoint and too-short texts, checked
-    against Python set arithmetic over the same shingle sets, string
-    and hashed."""
+    against Python set arithmetic over the same shingle sets: the
+    string verifier, and :func:`_verify` over a hashed gram frame."""
     import pandas as pd
 
-    from dataframe_sql_spark.operators.dedup import ngram_jaccard_pairs, shingle_frame
+    from dataframe_sql_spark.operators.dedup import (
+        _verify,
+        hashed_shingle_frame,
+        ngram_jaccard_pairs,
+        shingle_frame,
+    )
 
     texts = {
         1: "the cat sat on the mat",
@@ -447,8 +460,11 @@ def test_ngram_jaccard_pairs_returns_set_sizes(spark):
     pairs = spark.createDataFrame(pd.DataFrame(cand, columns=["id_a", "id_b"]))
     sets = {r["doc_id"]: set(r["__sh"]) for r in shingle_frame(docs, "doc_id", "text").collect()}
     want = {(a, b): (len(sets[a] & sets[b]), len(sets[a] | sets[b])) for a, b in cand}
-    for hashed in (False, True):
-        got = ngram_jaccard_pairs(docs, pairs, "doc_id", "text", threshold=0.0, hashed=hashed)
+    grams = hashed_shingle_frame(docs, "doc_id", "text")
+    for hashed, got in (
+        (False, ngram_jaccard_pairs(docs, pairs, "doc_id", "text", threshold=0.0)),
+        (True, _verify(pairs, grams, "doc_id", "__h", 0.0)),
+    ):
         assert dict(got.dtypes)["inter"] == "bigint" and dict(got.dtypes)["uni"] == "bigint"
         rows = {(r.id_a, r.id_b): r for r in got.collect()}
         assert {p: (r.inter, r.uni) for p, r in rows.items()} == want, hashed

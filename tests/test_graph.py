@@ -120,10 +120,7 @@ def test_reliable_checkpoint_components_and_rank(spark, tmp_path):
         edges = spark.createDataFrame(
             [(1, 2), (2, 3), (3, 4), (10, 11)], ["id_a", "id_b"]
         )
-        comps = {
-            r.id: r.comp
-            for r in connected_components(edges, reliable=True).collect()
-        }
+        comps = {r.id: r.comp for r in connected_components(edges).collect()}
         assert comps == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
         df = spark.createDataFrame(
@@ -146,15 +143,6 @@ def test_reliable_checkpoint_components_and_rank(spark, tmp_path):
         assert files, "no reliable checkpoint files written"
     finally:
         sc.setCheckpointDir(None)
-
-
-def test_reliable_checkpoint_requires_dir(spark):
-    from dataframe_sql_spark.operators.lineage import truncate_lineage
-
-    assert spark.sparkContext.getCheckpointDir() is None
-    df = spark.range(3)
-    with pytest.raises(ValueError, match="checkpoint directory"):
-        truncate_lineage(df, reliable=True)
 
 
 def test_pagerank_checkpoint_every_preserves_trajectory(spark):

@@ -9,7 +9,7 @@
 - a repeated probe compiles no new code (the session's codegen cache
   holds it);
 - a global rank builds the same plan every time, with at most three
-  bounded jobs;
+  bounded jobs, and a MinHash entry with the jobs of one featurization;
 - the per-element literal idiom does not come back into the package;
 - session confs that do not take are reported, not swallowed.
 """
@@ -206,6 +206,21 @@ def test_global_rank_builds_with_at_most_three_jobs(spark):
     )
     _, jobs = _jobs_during(spark, lambda: global_rank(li, [("l_quantity", False)]))
     assert 0 < len(jobs) <= 3, jobs
+
+
+@pytest.mark.parametrize("entry, most", [("dd_minhash", 3), ("dd_incremental", 2)])
+def test_minhash_entries_build_with_one_featurization(spark, entry, most):
+    # The only construction work is the one cut of the batch's gram
+    # frame (one scan and gram-hash pass, a job or three under AQE):
+    # candidates, verification and the index delta all read it. Two
+    # cuts (signature and verify set) took 5 jobs for dd_minhash, and
+    # 14 for dd_incremental, whose cuts re-ran the history semi-join.
+    from dataframe_sql_spark.registry import spark_queries
+
+    build = spark_queries()[entry]
+    build(spark, SF_DIR)
+    _, jobs = _jobs_during(spark, lambda: build(spark, SF_DIR))
+    assert 0 < len(jobs) <= most, jobs
 
 
 @pytest.mark.parametrize("option", ["assign", "centroids"])

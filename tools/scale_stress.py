@@ -108,16 +108,10 @@ def _force(df: DataFrame) -> int:
 
 
 def op_minhash_pairs(spark: SparkSession, r: int) -> int:
-    from dataframe_sql_spark.operators.dedup import (
-        minhash_candidate_pairs,
-        ngram_jaccard_pairs,
-    )
+    from dataframe_sql_spark.operators.dedup import minhash_pairs
 
     docs = scaled_documents(spark, r)
-    pairs = minhash_candidate_pairs(docs, "doc_id", "text")
-    return _force(
-        ngram_jaccard_pairs(docs, pairs, "doc_id", "text", threshold=0.5, hashed=True)
-    )
+    return _force(minhash_pairs(docs, "doc_id", "text", threshold=0.5))
 
 
 def op_simhash(spark: SparkSession, r: int) -> int:
@@ -419,21 +413,11 @@ def op_triangles(spark: SparkSession, r: int) -> int:
     degree-oriented triangle listing (the certificate entry's complete
     shingle-sharing generator is certificate-only — quadratic in shingle
     document frequency, infeasible and unnecessary at stress scale)."""
-    from dataframe_sql_spark.operators.dedup import (
-        minhash_candidate_pairs,
-        ngram_jaccard_pairs,
-    )
+    from dataframe_sql_spark.operators.dedup import minhash_pairs
     from dataframe_sql_spark.operators.graph import triangle_list
 
     docs = scaled_documents(spark, r)
-    edges = ngram_jaccard_pairs(
-        docs,
-        minhash_candidate_pairs(docs, "doc_id", "text"),
-        "doc_id",
-        "text",
-        threshold=0.5,
-        hashed=True,
-    ).select("id_a", "id_b")
+    edges = minhash_pairs(docs, "doc_id", "text", threshold=0.5).select("id_a", "id_b")
     return _force(triangle_list(edges, "id_a", "id_b"))
 
 
@@ -634,10 +618,7 @@ def op_connected_components(spark: SparkSession, r: int) -> int:
         F.col("id").alias("id_a"),
         (F.col("id") - F.col("id") % 5).alias("id_b"),
     ).filter("id_a != id_b")
-    # reliable=False pins the local-checkpoint mode even if a later op
-    # in the same session configured a checkpoint dir (the auto mode
-    # would otherwise silently flip and break run-order comparability)
-    return _force(connected_components(edges, max_iter=8, reliable=False))
+    return _force(connected_components(edges, max_iter=8))
 
 
 def op_connected_components_reliable(spark: SparkSession, r: int) -> int:
@@ -653,15 +634,19 @@ def op_connected_components_reliable(spark: SparkSession, r: int) -> int:
 
     from dataframe_sql_spark.operators.graph import connected_components
 
-    spark.sparkContext.setCheckpointDir(
-        tempfile.mkdtemp(prefix="stress_reliable_ckpt_")
-    )
     ids = scaled_documents(spark, r).select(F.col("doc_id").alias("id"))
     edges = ids.select(
         F.col("id").alias("id_a"),
         (F.col("id") - F.col("id") % 5).alias("id_b"),
     ).filter("id_a != id_b")
-    return _force(connected_components(edges, max_iter=8, reliable=True))
+    # the checkpoint mode follows the session's checkpoint dir: reset it
+    # afterwards so a later dd_clusters run stays on the local mode
+    sc = spark.sparkContext
+    sc.setCheckpointDir(tempfile.mkdtemp(prefix="stress_reliable_ckpt_"))
+    try:
+        return _force(connected_components(edges, max_iter=8))
+    finally:
+        sc.setCheckpointDir(None)
 
 
 def op_pipe_curation(spark: SparkSession, r: int) -> int:
